@@ -10,7 +10,9 @@ Speaks the same public REST subset the reference uses:
   (es_common.py:273-292) — upgraded to the public *sliced* scroll so the
   read parallelizes one-scroll-per-Spark-task (the same parallel-scan
   shape the connector gets from one-partition-per-shard; the reference's
-  single scroll is the 1-slice special case)
+  single scroll is the 1-slice special case). Reads ask only for the
+  ``_source`` fields the schema names, stream one page at a time, and
+  free each scroll context (``DELETE /_search/scroll``) when done
 - range / match queries pushed down in the request body
   (es_common.py:254-271, 303-330)
 - point get merging ``_id``/``_index`` metadata (es_common.py:212-231)
@@ -19,7 +21,8 @@ Speaks the same public REST subset the reference uses:
 
 Distribution discipline: writes run ``df.foreachPartition`` (each task
 bulk-posts its own partition — nothing funnels through the driver); reads
-run ``mapInPandas`` over one row per slice. Auth mirrors
+run ``mapInPandas`` over one slice per partition, as many slices as task
+slots, so the whole source is read in one wave with no shuffle. Auth mirrors
 ``es_common_options``: basic auth or ApiKey header, from the same
 ``ConnectorConfig``.
 """
@@ -31,6 +34,8 @@ import json
 import logging
 import urllib.error
 import urllib.request
+from collections.abc import Iterator
+from itertools import chain
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +49,9 @@ from annotations_ingester_spark.sources.elasticsearch import (
 )
 
 log = logging.getLogger(__name__)
+
+# Elasticsearch's default ``index.max_slices_per_scroll``
+MAX_SLICES_PER_SCROLL = 1024
 
 
 def _headers(conf: ConnectorConfig) -> dict[str, str]:
@@ -80,6 +88,14 @@ def _request(
         resp_headers = {k.lower(): v for k, v in resp.headers.items()}
     parsed = json.loads(payload) if payload else {}
     return (parsed, resp_headers) if with_headers else parsed
+
+
+def _hit_doc(hit: dict[str, Any]) -> dict[str, Any]:
+    """A search hit as its ``_source`` with ``_id``/``_index`` merged in."""
+    doc = dict(hit.get("_source") or {})
+    doc["_id"] = hit.get("_id")
+    doc["_index"] = hit.get("_index")
+    return doc
 
 
 class EsRestClient:
@@ -172,6 +188,65 @@ class EsRestClient:
         return self.count({"match": criteria}, index) > 0
 
     # -- scan ------------------------------------------------------------
+    def scroll_pages(
+        self,
+        slice_id: int,
+        max_slices: int,
+        query: dict[str, Any] | None = None,
+        stored_fields: list[str] | None = None,
+        index: str | None = None,
+        page_size: int = 1000,
+        source: list[str] | None = None,
+    ) -> Iterator[list[dict[str, Any]]]:
+        """One slice of a sliced scroll, yielded page by page: the next
+        page is requested only when the caller asks for it, so a consumer
+        holds at most ``page_size`` docs (the scan-API posture of
+        es_common.py:286-289 — never the first-page-only ``search`` bug of
+        es_common.py:246-252). ``source`` names the ``_source`` fields to
+        fetch (an empty list fetches none); it is ignored when
+        ``stored_fields`` is given. The scroll context is cleared once the
+        slice is exhausted or the generator is closed."""
+        body: dict[str, Any] = {"size": page_size, "query": query or {"match_all": {}}}
+        if stored_fields is not None:
+            body["stored_fields"] = stored_fields
+        elif source is not None:
+            # ES reads an empty include list as "everything"
+            body["_source"] = source or False
+        if max_slices > 1:
+            body["slice"] = {"id": slice_id, "max": max_slices}
+        r = _request(
+            f"{self.url}/{index or self.index}/_search?scroll=1m",
+            self.headers,
+            json.dumps(body).encode(),
+            "POST",
+        )
+        sid = r.get("_scroll_id")
+        try:
+            while hits := r.get("hits", {}).get("hits", []):
+                yield [_hit_doc(h) for h in hits]
+                if not sid:
+                    return
+                r = _request(
+                    f"{self.url}/_search/scroll",
+                    self.headers,
+                    json.dumps({"scroll": "1m", "scroll_id": sid}).encode(),
+                    "POST",
+                )
+                sid = r.get("_scroll_id", sid)
+        finally:
+            if sid:
+                # best-effort: an open context only lingers until its 1m
+                # keep-alive runs out
+                try:
+                    _request(
+                        f"{self.url}/_search/scroll",
+                        self.headers,
+                        json.dumps({"scroll_id": [sid]}).encode(),
+                        "DELETE",
+                    )
+                except (OSError, ValueError) as e:  # HTTPError is an OSError
+                    log.debug("clear scroll %s: %s", sid, e)
+
     def scroll_slice(
         self,
         slice_id: int,
@@ -181,41 +256,14 @@ class EsRestClient:
         index: str | None = None,
         page_size: int = 1000,
     ) -> list[dict[str, Any]]:
-        """One slice of a sliced scroll: the full result set for this slice
-        across however many pages it takes (the scan-API posture of
-        es_common.py:286-289 — never the first-page-only ``search`` bug of
-        es_common.py:246-252)."""
-        body: dict[str, Any] = {"size": page_size, "query": query or {"match_all": {}}}
-        if stored_fields is not None:
-            body["stored_fields"] = stored_fields
-        if max_slices > 1:
-            body["slice"] = {"id": slice_id, "max": max_slices}
-        r = _request(
-            f"{self.url}/{index or self.index}/_search?scroll=1m",
-            self.headers,
-            json.dumps(body).encode(),
-            "POST",
-        )
-        out: list[dict[str, Any]] = []
-        while True:
-            hits = r.get("hits", {}).get("hits", [])
-            if not hits:
-                break
-            for h in hits:
-                doc = dict(h.get("_source") or {})
-                doc["_id"] = h.get("_id")
-                doc["_index"] = h.get("_index")
-                out.append(doc)
-            sid = r.get("_scroll_id")
-            if not sid:
-                break
-            r = _request(
-                f"{self.url}/_search/scroll",
-                self.headers,
-                json.dumps({"scroll": "1m", "scroll_id": sid}).encode(),
-                "POST",
+        """One slice of a sliced scroll, all pages in one list."""
+        return list(
+            chain.from_iterable(
+                self.scroll_pages(
+                    slice_id, max_slices, query, stored_fields, index, page_size
+                )
             )
-        return out
+        )
 
     def search_page(
         self,
@@ -235,13 +283,7 @@ class EsRestClient:
             json.dumps(body).encode(),
             "POST",
         )
-        out = []
-        for h in r.get("hits", {}).get("hits", []):
-            doc = dict(h.get("_source") or {})
-            doc["_id"] = h.get("_id")
-            doc["_index"] = h.get("_index")
-            out.append(doc)
-        return out
+        return [_hit_doc(h) for h in r.get("hits", {}).get("hits", [])]
 
     def scan_doc_ids(
         self, query: dict[str, Any] | None = None, index: str | None = None
@@ -364,14 +406,20 @@ def read_es_rest(
     conf: ConnectorConfig,
     schema: T.StructType | str,
     query: dict[str, Any] | None = None,
-    slices: int = 8,
+    slices: int | None = None,
 ) -> DataFrame:
     """Distributed sliced-scroll read: one Spark task per scroll slice, each
     fetching its slice independently (the REST twin of the connector's
-    partition-per-shard scan). ``schema`` is caller-declared — ES is
-    schemaless, and guessing would make plans data-dependent. ``_id`` and
-    ``_index`` are merged in when the schema asks for them (S4 metadata
-    parity)."""
+    partition-per-shard scan). ``slices`` defaults to the session's task
+    slots (``defaultParallelism``, capped at ES's default
+    ``index.max_slices_per_scroll``), so every slice runs in the first wave
+    of tasks; the slice frame has one slice per partition, so no shuffle
+    precedes the scroll. Each task streams its slice one scroll page at a
+    time (a worker never holds more than a page) and clears its scroll
+    context when done. ``schema`` is caller-declared — ES is schemaless,
+    and guessing would make plans data-dependent; only its fields are
+    fetched from ``_source``. ``_id`` and ``_index`` are merged in when the
+    schema asks for them (S4 metadata parity)."""
     import pandas as pd
 
     from annotations_ingester_spark.pyfiles import ensure_worker_imports
@@ -381,15 +429,18 @@ def read_es_rest(
         schema = T.StructType.fromDDL(schema)
     client = EsRestClient(conf)
     names = [f.name for f in schema.fields]
+    source = [name for name in names if name not in ("_id", "_index")]
+    if slices is None:
+        slices = min(spark.sparkContext.defaultParallelism, MAX_SLICES_PER_SCROLL)
     n = max(1, slices)
 
     def fetch(batches):
         for pdf in batches:
             for sid in pdf["slice_id"]:
-                docs = client.scroll_slice(int(sid), n, query)
-                yield pd.DataFrame(
-                    {name: [d.get(name) for d in docs] for name in names}
-                )
+                for docs in client.scroll_pages(int(sid), n, query, source=source):
+                    yield pd.DataFrame(
+                        {name: [d.get(name) for d in docs] for name in names}
+                    )
 
-    slice_df = spark.range(n).toDF("slice_id").repartition(n, "slice_id")
+    slice_df = spark.range(0, n, 1, n).toDF("slice_id")
     return slice_df.mapInPandas(fetch, schema=schema)

@@ -542,7 +542,9 @@ def per_query_chunks(
     survives a tail-keeping capture is a run of complete, parseable lines
     carrying the heaviest per-query rows — the ones regression analysis
     needs most. Every line repeats the metric name and its part index, so
-    a consumer can tell a partial capture from a full one.
+    a consumer can tell a partial capture from a full one. An entry too
+    long to fit a line alone raises ``ValueError`` rather than emit an
+    over-cap line.
     """
     items = sorted(timings.items(), key=lambda kv: (kv[1], kv[0]))
     groups: list[dict[str, float]] = []
@@ -554,6 +556,10 @@ def per_query_chunks(
     used = envelope
     for name, sec in items:
         entry = len(json.dumps({name: sec})) + 2  # ", " separator slack
+        if envelope + entry > max_line_chars:
+            raise ValueError(
+                f"per-query entry {name!r} cannot fit a {max_line_chars}-char line"
+            )
         if cur and used + entry > max_line_chars:
             groups.append(cur)
             cur, used = {}, envelope

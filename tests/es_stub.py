@@ -1,7 +1,7 @@
 """Minimal in-process Elasticsearch stub speaking the REST subset the
-engine's ES backend uses (bulk ndjson, sliced scroll, count, point get,
-index admin) — stands in for a live cluster so the write→read round trip
-is testable hermetically. Semantics mirror the public ES API surface the
+engine's ES backend uses (bulk ndjson, sliced scroll with ``_source``
+filtering and clear-scroll, count, point get, index admin) — stands in
+for a live cluster so the write→read round trip is testable hermetically. Semantics mirror the public ES API surface the
 reference consumes (ingester/es_common.py:153-330): this is a test double,
 not a copy of any implementation.
 """
@@ -53,10 +53,15 @@ class EsStubState:
         assert mode in ("7", "8")
         self.mode = mode
         self.version = "8.11.0" if mode == "8" else "7.13.4"
-        self.lock = threading.Lock()
+        # re-entrant: _reply takes it to count bytes, and some handlers
+        # reply while holding it
+        self.lock = threading.RLock()
         self.indices: dict[str, dict[str, dict[str, Any]]] = {}
         self.mappings: dict[str, dict[str, Any]] = {}
+        # open scroll contexts: remaining pages by scroll id, dropped by
+        # DELETE /_search/scroll
         self.scrolls: dict[str, list[dict[str, Any]]] = {}
+        self.bytes_sent = 0  # response body bytes, all endpoints
         # observability for assertions: every request's (method, path,
         # auth header, n_bulk_actions)
         self.requests: list[dict[str, Any]] = []
@@ -70,6 +75,8 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _reply(self, obj: dict[str, Any], status: int = 200) -> None:
         body = json.dumps(obj).encode()
+        with self.state.lock:
+            self.state.bytes_sent += len(body)
         self.send_response(status)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -125,6 +132,8 @@ class _Handler(BaseHTTPRequestHandler):
 
     def do_DELETE(self) -> None:
         self._record()
+        if self.path.startswith("/_search/scroll"):
+            return self._clear_scroll(json.loads(self._body() or b"{}"))
         index = self.path.strip("/")
         with self.state.lock:
             if index not in self.state.indices:
@@ -244,6 +253,7 @@ class _Handler(BaseHTTPRequestHandler):
         q = body.get("query")
         sl = body.get("slice")
         stored = body.get("stored_fields")
+        source = body.get("_source", True)
         with self.state.lock:
             docs = sorted(self.state.indices.get(index, {}).items())
         hits = []
@@ -253,9 +263,12 @@ class _Handler(BaseHTTPRequestHandler):
             if not _matches(doc, q):
                 continue
             hit = {"_index": index, "_id": doc_id}
-            if stored is None:
+            # stored_fields: [] → ids only, no _source (es scan projection);
+            # a _source list keeps only the named fields, false drops all
+            if stored is None and source is True:
                 hit["_source"] = doc
-            # stored_fields: [] → ids only, no _source (es scan projection)
+            elif stored is None and source:
+                hit["_source"] = {k: doc[k] for k in source if k in doc}
             hits.append(hit)
         size = int(body.get("size", 10))
         page, rest = hits[:size], hits[size:]
@@ -278,6 +291,13 @@ class _Handler(BaseHTTPRequestHandler):
             pages = self.state.scrolls.get(sid, [])
             page = pages.pop(0) if pages else []
         self._reply({"_scroll_id": sid, "hits": {"hits": page}})
+
+    def _clear_scroll(self, body: dict[str, Any]) -> None:
+        ids = body.get("scroll_id", [])
+        ids = [ids] if isinstance(ids, str) else ids
+        with self.state.lock:
+            freed = sum(self.state.scrolls.pop(i, None) is not None for i in ids)
+        self._reply({"succeeded": True, "num_freed": freed})
 
 
 def start_es_stub(mode: str = "8") -> tuple[ThreadingHTTPServer, EsStubState, str]:

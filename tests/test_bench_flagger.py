@@ -166,6 +166,18 @@ def test_per_query_chunks_tail_window_is_parseable():
         json.loads(line)
 
 
+def test_per_query_chunks_rejects_an_entry_over_the_cap():
+    """An entry that cannot fit under the cap even alone on its line must
+    fail loudly, not emit an over-cap line that breaks the tail window."""
+    import pytest
+
+    mod = _bench_module()
+    ok = mod.per_query_chunks({"q_short": 1.0, "x" * 120: 2.0})
+    assert all(len(line) <= 240 for line in ok)
+    with pytest.raises(ValueError, match="cannot fit"):
+        mod.per_query_chunks({"q_short": 1.0, "x" * 240: 2.0})
+
+
 def test_headline_names_exist_in_registry():
     """A typo'd or renamed HEADLINE entry would crash the round-close
     bench 40 minutes in (run_suite KeyErrors on the first bad name);

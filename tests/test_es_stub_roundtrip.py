@@ -384,3 +384,76 @@ def test_bulk_failure_counting_and_raise(es_stub):
         client.bulk(
             [{"_op_type": "create", "_id": "dup", "v": 9}], raise_on_error=True
         )
+
+
+def test_default_read_is_one_wave_without_shuffle(spark, es_stub):
+    """With no ``slices`` the read has one slice per task slot, one slice
+    per partition, and no Exchange in front of the scroll."""
+    state, url = es_stub
+    conf = _conf(url, "onewave")
+    EsRestClient(conf).bulk([{"_id": f"d{i}", "n": i} for i in range(20)])
+    df = read_es_rest(spark, conf, "n long")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r["n"] for r in df.collect()) == list(range(20))
+
+
+def test_scroll_pages_are_fetched_lazily(es_stub):
+    """The page generator asks for the next page only when the consumer
+    does: after the first page no scroll continuation has been sent."""
+    state, url = es_stub
+    client = EsRestClient(_conf(url, "lazy"))
+    client.bulk([{"_id": f"d{i}", "n": i} for i in range(9)])
+    before = len(state.requests)
+    pages = client.scroll_pages(0, 1, page_size=2)
+    first = next(pages)
+    assert not any(
+        r["path"].startswith("/_search/scroll") for r in state.requests[before:]
+    )
+    rest = list(pages)
+    assert [len(p) for p in [first, *rest]] == [2, 2, 2, 2, 1]
+    assert sorted(d["n"] for p in [first, *rest] for d in p) == list(range(9))
+
+
+def test_read_clears_its_scroll_contexts(spark, es_stub):
+    """Every slice frees its scroll context once done, so a finished read
+    leaves no open context behind (ES caps them at
+    ``search.max_open_scroll_context``)."""
+    state, url = es_stub
+    conf = _conf(url, "cleared")
+    client = EsRestClient(conf)
+    client.bulk([{"_id": f"d{i}", "n": i} for i in range(7)])
+    before = len(state.requests)
+    assert read_es_rest(spark, conf, "n long", slices=3).count() == 7
+    assert client.scroll_slice(0, 1, page_size=2)  # a multi-page scroll
+    assert state.scrolls == {}
+    deletes = [
+        r for r in state.requests[before:]
+        if r["method"] == "DELETE" and r["path"] == "/_search/scroll"
+    ]
+    assert len(deletes) == 4
+
+
+def test_read_fetches_only_the_schema_fields(spark, es_stub):
+    """The scroll asks ``_source`` for the schema's fields only: a
+    one-column read of wide docs carries just that column over the wire."""
+    state, url = es_stub
+    conf = _conf(url, "wide")
+    client = EsRestClient(conf)
+    client.bulk(
+        [{"_id": f"d{i}", "n": i, "pad": "x" * 500, "tag": f"t{i}"} for i in range(10)]
+    )
+    (page,) = client.scroll_pages(0, 1, source=["n"])
+    assert all(set(d) == {"n", "_id", "_index"} for d in page)
+    (ids_only,) = client.scroll_pages(0, 1, source=[])
+    assert all(set(d) == {"_id", "_index"} for d in ids_only)
+
+    b0 = state.bytes_sent
+    narrow = read_es_rest(spark, conf, "n long", slices=2).collect()
+    b1 = state.bytes_sent
+    wide_schema = "n long, pad string, tag string"
+    wide = read_es_rest(spark, conf, wide_schema, slices=2).collect()
+    b2 = state.bytes_sent
+    assert sorted(r["n"] for r in narrow) == list(range(10))
+    assert sorted((r["n"], r["tag"]) for r in wide) == [(i, f"t{i}") for i in range(10)]
+    assert b1 - b0 < (b2 - b1) / 4
