@@ -36,469 +36,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return _registry()["pipeline_w1_flat_medcat"].spark(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate reads the FIRST 50 entries of queries() per
-# round (proven by the round-4 reordering experiment: CORRECTNESS_r04
-# certified exactly the 50 queries emitted first). _OFFICIALLY_COVERED is
-# the static r01–r04 floor; _covered_from_disk() unions in every later
-# CORRECTNESS_r*.json, so the uncovered-first rotation is self-updating.
-# After r05 the union holds 150 names, leaving the 13 _QUEUED_LATE
-# queries (stats ×8, streaming_cdc_apply, dedup_span_islands, eval ×3)
-# as the only uncovered set — they fill the front of the r6 window, with
-# slots left for later additions. tools/parity.py (all queries, asserted
-# in pytest via test_oracle_parity.py) remains the registry-wide
-# compensating control — every registry query hash-matched at sf0.01 on
-# its certifying round's full sweep. (Counts are deliberately not
-# hard-coded here: two rounds running, a hand-typed total drifted from
-# the live registry — test_registry_complete.py now rejects stale
-# numerals in this file and COVERAGE.md.)
-_OFFICIALLY_COVERED = {
-    "a1_doc_count", "a2_filtered_count_exists", "a3_collect_list_per_group",
-    "agg_grouping_sets", "agg_rollup", "agg_statistics", "ann_bucketed_topk",
-    "ann_ivf_topk", "ann_multiprobe_topk", "approx_sketch_certified",
-    "asof_join_clicks_purchases", "b1_tumbling_date_windows",
-    "b1_windowed_pipeline", "bm25_match_ranking", "chunk_documents",
-    "corpus_curation_pipeline", "correlated_above_customer_avg",
-    "cube_lineitem", "dedup_bag_fingerprint", "dedup_corpus_survivors",
-    "dedup_duplicate_clusters", "dedup_duplicate_ngram_spans",
-    "dedup_exact_groups", "dedup_incremental_new_vs_corpus",
-    "embedding_cosine_topk", "events_json_extract", "events_sessionization",
-    "explode_skew_salted", "f1_index_name_normalize", "f2_row_id_synthesis",
-    "f4_substring_by_indices", "f6_date_arithmetic", "f_array_suite",
-    "f_scalar_suite", "grouped_map_pandas_rank", "integrity_table_checksum",
-    "j1_anti_join_skip_processed", "j3_broadcast_dim_join",
-    "layout_zorder_cells", "media_decode_dims", "media_features",
-    "minhash_lsh_pairs", "minhash_signatures", "ngram_jaccard_pairs",
-    "p3_valid_text_filter", "p4_match_predicate", "pipeline_gate_flat",
-    "pipeline_idempotent_rerun", "pipeline_w1_flat_medcat",
-    "pipeline_w2_split_by_type", "pipeline_w3_same_index_merge",
-    "pipeline_w4_nested_per_doc", "pivot_order_status", "q10_returned_items",
-    "q11_important_value", "q12_ship_lag_buckets",
-    "q13_customer_order_counts", "q14_promo_share", "q15_top_supplier",
-    "q16_part_supplier_counts", "q17_small_quantity_revenue",
-    "q18_large_volume_orders", "q1_pricing_summary",
-    "q22_global_sales_opportunity", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority_exists", "q5_nation_revenue",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "q9_product_profit", "range_join_event_pairs", "s1_scan_doc_ids",
-    "s3_range_scan_orders", "s4_point_lookup", "sequence_packing",
-    "session_window_events", "setop_except", "setop_intersect",
-    "simhash_fingerprint", "simhash_near_dup_pairs", "streaming_static_join",
-    "streaming_stream_join", "streaming_tumbling_agg",
-    "streaming_w1_pipeline", "table_profile", "text_lang_id",
-    "text_quality_scores", "text_redaction", "text_token_stats",
-    "tfidf_top_terms", "u1_union_all", "u2_distinct_records",
-    "udaf_pandas_grouped_agg", "window_analytics_suite",
-    "window_running_total", "window_topk_per_customer",
-    "window_tumbling_events", "winnowing_fingerprints",
-}
-
-
-def _covered_from_disk() -> set[str]:
-    """Union of fully-green rows across every CORRECTNESS_r*.json the
-    driver has written into the repo — so the uncovered-first rotation
-    updates ITSELF each round instead of needing a hand-maintained list.
-    The static `_OFFICIALLY_COVERED` set stays as the r01–r04 floor (the
-    r01–r03 files are a frozen 50-query snapshot; the union grows from
-    there). A malformed/missing file contributes nothing."""
-    import json
-    from pathlib import Path
-
-    covered: set[str] = set(_OFFICIALLY_COVERED)
-    for f in sorted(Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json")):
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if (
-                isinstance(r, dict)
-                and r.get("rows_match")
-                and r.get("schema_match")
-                and r.get("hash_match")
-            ):
-                covered.add(name)
-    return covered
-
-
-# Names queued behind round 5's full gate window. Round 6 flips their
-# priority: anything still uncovered from this set goes FIRST (they are
-# the oldest debt — the judge's only remaining asterisks), ahead of any
-# round-6 additions, so a burst of new registrations can never displace
-# them out of the 50-entry window. Once a name gains a green CORRECTNESS
-# row it leaves the uncovered set and this hint becomes a no-op for it.
-_QUEUED_LATE = {
-    "dedup_span_islands", "streaming_cdc_apply",
-    "lm_perplexity_scores", "dsir_importance_weights",
-    "stats_chi_square_independence", "sketch_mergeable_rollup",
-    "cohort_retention_matrix", "events_anomaly_mad",
-    "vocab_zipf_slope", "bpe_pair_merges",
-    "eval_langid_confusion", "eval_lsh_precision_recall", "eval_ann_ndcg",
-}
-
-
-# Round-7 additions made AFTER the 50-entry window filled exactly (38
-# early-r7 names + 12 late-r7 names). Without this, a new registration in
-# an early-imported module (e.g. queries_scale) would sort ahead of the
-# later modules' uncovered names and silently push the window's tail past
-# position 50 mid-round. Deferred names order after all other uncovered
-# names; next round they hold the front of the window (clear this set
-# once they gain green CORRECTNESS rows — it becomes a no-op then anyway,
-# like _QUEUED_LATE).
-_DEFERRED_PAST_WINDOW = {
-    "survival_kaplan_meier",
-    "stats_cuped_adjustment",
-    "stats_spearman_corr",
-    "sketch_minhash_mergeable",
-    "collocation_pmi_pairs",
-    "events_changepoint_cusum",
-    "timeseries_seasonal_decompose",
-    "graph_common_neighbor_scores",
-    "stats_benford_first_digit",
-    "lm_oov_rate_by_vocab_size",
-    "forecast_backtest_mae",
-    "stats_kendall_tau",
-    "text_readability_fk",
-    "orders_pareto_abc",
-    "stats_runs_test",
-    # round-8 additions (the 65 uncovered r7 names already overflow the
-    # window by 15; everything new this round rides behind them)
-    "stats_welch_ttest",
-    "stats_bootstrap_poisson_ci",
-    "stats_gini_lorenz",
-    "stats_diff_in_diff",
-    "graph_k_core_peel",
-    "events_attribution_credit",
-    "events_top_paths",
-    "events_concurrency_profile",
-    "quality_constraint_suite",
-    "eval_matryoshka_truncation",
-    "stats_weighted_median",
-    "stats_ipw_estimate",
-    "er_fellegi_sunter_weights",
-    "events_activity_streaks",
-    "eval_cluster_davies_bouldin",
-    "stats_power_mde",
-    "stats_overdispersion",
-    "eval_join_cardinality_est",
-    "text_rake_keywords",
-    "stats_group_sequential",
-    "streaming_constraint_suite",
-    "eval_embedding_isotropy",
-    "vocab_heaps_law",
-    "quality_value_reconciliation",
-    "stats_mann_kendall",
-    "timeseries_seasonal_strength",
-    "sketch_count_min_certified",
-    "text_code_detect",
-    "streaming_count_min",
-    "stats_sequential_srm",
-    "events_cohort_ltv",
-    "curation_epoch_plan",
-    "lm_domain_kl_divergence",
-    "graph_degree_assortativity",
-    "privacy_redaction_cert",
-    "events_interarrival_stats",
-    "timeseries_cross_correlation",
-}
-
-
-# Round-9 additions: an ABSOLUTE-LAST tier. _DEFERRED_PAST_WINDOW is not
-# enough for these — within that bucket names keep registry (module
-# import) order, and the r9 additions in early-imported modules
-# (queries_analytics, queries_llm) would sort ahead of the r7/r8 debt
-# living in queries_stats/queries_eval, displacing 4 old names out of
-# the 50-slot window (measured before this tier existed). The r8 verdict
-# pins the priority the other way: the 52-name certification debt
-# clears first; ALL 32 round-9 additions ride behind every other
-# uncovered name. After the r9 gate certifies its 50, the r10 window
-# fronts the 2 remaining old names plus these 32 — 34 names, well
-# inside one 50-slot window.
-_ORDER_LAST = {
-    "sketch_bloom_membership_cert",
-    "graph_local_clustering",
-    "stats_hodges_lehmann",
-    "privacy_dp_noisy_counts_cert",
-    "eval_split_leakage_audit",
-    "text_char_entropy",
-    "stats_anova_oneway",
-    "stats_permutation_test",
-    "stats_psi_drift",
-    "eval_conformal_coverage",
-    "eval_label_centroid_sim",
-    "lm_vocab_jaccard_sources",
-    "stats_tukey_hsd",
-    "stats_brown_forsythe",
-    "stats_effect_sizes",
-    "sketch_hll_intersection_cert",
-    "streaming_psi_drift",
-    "eval_pinball_loss",
-    "stats_cramers_v",
-    "stats_negative_binomial_fit",
-    "stats_bh_fdr",
-    "graph_two_hop_reach",
-    "privacy_dp_quantile_release",
-    "lm_subword_fertility",
-    "eval_cohens_kappa",
-    "stats_wilcoxon_signed_rank",
-    "stats_friedman_test",
-    "text_token_burstiness",
-    "stats_kruskal_wallis",
-    "stats_ljung_box",
-    "stats_mood_median_test",
-    "eval_mcc_langid",
-}
-
-
-# Round-10 additions ride behind even the r9 tier: the r10 gate window
-# fronts the 34 uncovered older names (2 r8 stragglers + 32 r9), leaving
-# 16 spare slots — this tier fills those slots in registration order and
-# can never displace the debt (the r9 verdict's item 1 pins that
-# priority). Keep r10 additions ≤16 so the whole round certifies in one
-# window.
-_ORDER_LAST_R10: set[str] = {
-    "dedup_substring_exact",
-    "dedup_substring_survivors",
-    "stats_page_hinkley",
-    "stats_dickey_fuller",
-    "stats_durbin_watson",
-    "stats_bartlett_test",
-    "stats_cochran_q",
-    "stats_jonckheere_terpstra",
-    "eval_mcnemar_models",
-    "eval_dup_capture_recapture",
-    "curation_mixture_waterfill",
-    "lm_self_bleu_proxy",
-    "dedup_lsh_banding_sweep",
-    "media_shot_boundaries",
-    "streaming_page_hinkley",
-    "stats_grubbs_outlier",
-}
-
-
-# Round-11 tier: operators built AFTER the r10 gate window filled
-# exactly (34 debt + 16 r10 = 50). They ride behind every other
-# uncovered name and front the r11 window once the r10 gate certifies
-# its 50. The tier holds EXACTLY 50 names — one full r11 gate window
-# (the 4 late-r10 head-start ops + 46 session-2 additions); any further
-# additions must open an _ORDER_LAST_R12 tier. Every name verified by
-# tools/parity.py (sf0.01) and per-op recompute tests — only the
-# OFFICIAL row waits for r11. (test_registry_complete pins the
-# tier-size-<=-window invariant.)
-_ORDER_LAST_R11: set[str] = {
-    "dedup_substring_cross_split",
-    "stats_cochran_armitage",
-    "events_markov_entropy_rate",
-    "text_mattr_diversity",
-    "survival_nelson_aalen",
-    "survival_log_rank",
-    "eval_ece_mce",
-    "eval_brier_decomposition",
-    "eval_lift_gains_curve",
-    "stats_jarque_bera",
-    "text_yule_k",
-    "text_hapax_legomena",
-    "lm_bigram_cond_entropy",
-    "graph_adamic_adar",
-    "split_group_holdout",
-    "stats_hurst_rs",
-    "stats_ols_two_factor",
-    "stats_granger_lag1",
-    "stats_cronbach_alpha",
-    "sketch_ams_f2_cert",
-    "privacy_randomized_response_cert",
-    "events_peak_detection",
-    "stats_pettitt_test",
-    "stats_variance_ratio_test",
-    "eval_weighted_kappa",
-    "dedup_soft_weights",
-    "events_entropy_trend",
-    "streaming_ams_f2",
-    "timeseries_holt_forecast",
-    "timeseries_pacf",
-    "media_audio_clipping",
-    "corpus_cross_source_overlap",
-    "ann_nprobe_sweep",
-    "stats_cramer_von_mises",
-    "stats_sign_test",
-    "lm_ngram_coverage_curve",
-    "timeseries_holt_winters",
-    "stats_esd_outliers",
-    "stats_page_trend_test",
-    "stats_wilson_ci",
-    "events_dau_wau_stickiness",
-    "stats_poisson_rate_ratio",
-    "events_bot_score",
-    "orders_backlog_aging",
-    "eval_ann_map",
-    "lm_js_divergence_sources",
-    "stats_quade_test",
-    "stats_exponentiality_test",
-    "media_image_entropy",
-    "lm_token_rank_typicality",
-}
-
-
-# Round-12 head start: operators built late in round 11's session, AFTER
-# the r11 tier filled its full 50-slot window. They ride behind every
-# other uncovered name and front the r12 window once the r11 gate
-# certifies its 50. Verified by tools/parity.py (sf0.01) and per-op
-# recompute tests — only the OFFICIAL row waits for r12.
-_ORDER_LAST_R12: set[str] = {
-    "dedup_substring_bpe_k50",
-    "stats_g_test",
-    "stats_mantel_haenszel",
-    "stats_chow_test",
-    "eval_fleiss_kappa",
-    "eval_rank_biased_overlap",
-    "eval_forecast_mase",
-    "media_audio_snr",
-    "graph_jaccard_link_scores",
-    "text_sentence_stats",
-    "timeseries_theta_forecast",
-    "graph_hits_2iter",
-    "split_temporal_holdout",
-    "corpus_dup_quality_association",
-    "stats_eb_shrinkage",
-    "stats_rayleigh_hour_uniformity",
-    "eval_auc_pr",
-    "stats_powerlaw_tail_fit",
-    "graph_modularity_score",
-    "events_return_intervals",
-    "eval_sliced_calibration",
-    "stats_cusum_variance",
-    "stats_seasonal_mann_kendall",
-    "events_hourly_seasonality",
-}
-
-
-# Round-12 session additions: operators built in round 12's session.
-# They ride BEHIND the 24 _ORDER_LAST_R12 names so the r12 gate window
-# fronts the existing debt first (r11 verdict item 1), and the tier is
-# capped so 24 + len(this) <= 50 — everything uncovered fits ONE gate
-# window and official coverage reaches 100% at the r12 gate
-# (test_registry_complete pins the cap). Every name verified by
-# tools/parity.py (sf0.01) and per-op recompute tests before listing.
-_ORDER_LAST_R13: set[str] = {
-    "dedup_substring_bpe_survivors",
-    "dedup_minhash_containment",
-    "dedup_cluster_size_histogram",
-    "sample_weighted_reservoir",
-    "chunk_sentence_packed",
-    "stats_fisher_exact",
-    "stats_anderson_darling",
-    "stats_tost_equivalence",
-    "stats_partial_correlation",
-    "stats_dunn_posthoc",
-    "stats_cooks_distance",
-    "stats_breusch_pagan",
-    "stats_ansari_bradley",
-    "eval_krippendorff_alpha",
-    "eval_reliability_regression",
-    "eval_spiegelhalter_z",
-    "eval_forecast_theil_u",
-    "eval_label_noise_pairs",
-    "timeseries_spectral_peak",
-    "timeseries_drawdown_stats",
-    "events_path_trigrams",
-    "events_burstiness_memory",
-    "lm_unigram_surprisal_quality",
-    "text_ocr_garbage_score",
-    "split_kfold_assign",
-    "curation_skyline_quality",
-}
-
-
-def _ordered():
-    reg = _registry()
-    covered_names = _covered_from_disk()
-    debt = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _QUEUED_LATE
-        and n not in _ORDER_LAST
-        and n not in _ORDER_LAST_R10
-        and n not in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    fresh = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n not in _QUEUED_LATE
-        and n not in _DEFERRED_PAST_WINDOW
-        and n not in _ORDER_LAST
-        and n not in _ORDER_LAST_R10
-        and n not in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    deferred = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _DEFERRED_PAST_WINDOW
-        and n not in _ORDER_LAST
-        and n not in _ORDER_LAST_R10
-        and n not in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    last = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _ORDER_LAST
-        and n not in _ORDER_LAST_R10
-        and n not in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    last10 = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _ORDER_LAST_R10
-        and n not in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    last11 = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _ORDER_LAST_R11
-        and n not in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    last12 = {
-        n: s
-        for n, s in reg.items()
-        if n not in covered_names
-        and n in _ORDER_LAST_R12
-        and n not in _ORDER_LAST_R13
-    }
-    last13 = {
-        n: s for n, s in reg.items() if n not in covered_names and n in _ORDER_LAST_R13
-    }
-    covered = {n: s for n, s in reg.items() if n in covered_names}
-    return {
-        **debt, **fresh, **deferred, **last,
-        **last10, **last11, **last12, **last13, **covered,
-    }
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ north-star).
-    Uncovered-first ordering — see the gate note above."""
-    return {name: spec.spark for name, spec in _ordered().items()}
+    """One entry per implemented operator from SURVEY.md §2 (+ north-star),
+    in registry order — every name holds a fully green row in a committed
+    CORRECTNESS_r*.json (pinned by tests/test_registry_complete.py)."""
+    return {name: spec.spark for name, spec in _registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for every oracle-checkable query."""
     return {
-        name: spec.oracle for name, spec in _ordered().items() if spec.oracle is not None
+        name: spec.oracle
+        for name, spec in _registry().items()
+        if spec.oracle is not None
     }

@@ -92,8 +92,6 @@ def connected_components(
     (singletons need no clustering; a degenerate self-loop ``u—u`` carries
     no clustering information and is likewise ignored — every caller here
     generates ``src < dst`` pairs, so none exist)."""
-    import os
-
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # cycler frees each round's checkpoint blocks once the next round is
     # materialized — ≤2 edge-set generations live instead of max_iterations
@@ -105,75 +103,44 @@ def connected_components(
     # (Kiveris et al., Thm 3) — detect the star directly (every source has
     # one target and no target is itself a source) instead of paying a
     # full extra contraction round to observe e_{n+1} == e_n.
-    fused = os.environ.get("SPARK_GRAFT_CC_PROBE", "fused") == "fused"
     for _ in range(max_iterations):
         rounds += 1
-        if fused:
-            # ONE job per round (r12 verdict item 3): the checkpoint is
-            # lazy and the star-forest flag is ONE full-pass aggregate
-            # over it — every e_new partition is computed (and persisted
-            # by the checkpoint) exactly once inside the flag job, so the
-            # separate eager-materialization job disappears. This is NOT
-            # the r12-negative "lazy ckpt + limit-1 probes" shape: those
-            # legs raced to compute the same partitions and left some
-            # uncached; a global aggregate touches all of them, once.
-            # Flag: a node breaks the star property iff it has >= 2
-            # outgoing edges (multi-target) or appears as both a source
-            # and a target (chain) — same condition as the two probes.
-            e_new = cycler.checkpoint(_small_star(_large_star(e)), eager=False)
-            roles = e_new.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("u").alias("node"), F.lit(1).alias("s")),
-                        F.struct(F.col("v").alias("node"), F.lit(0).alias("s")),
-                    )
-                ).alias("r")
-            )
-            bad = (
-                roles.groupBy(F.col("r.node").alias("node"))
-                .agg(F.sum("r.s").alias("ns"), F.count(F.lit(1)).alias("nt"))
-                .agg(
-                    F.max(
-                        (F.col("ns") >= 2)
-                        | ((F.col("ns") >= 1) & (F.col("nt") > F.col("ns")))
-                    ).alias("bad")
+        # One job per round: the checkpoint is lazy and the star-forest
+        # flag is one full-pass aggregate over it, so every partition of
+        # the new edge set is computed (and persisted by the checkpoint)
+        # exactly once inside the flag job. The flag action must touch
+        # every partition: limit-1 probes over a lazy checkpoint race to
+        # compute the same partitions and leave some uncached (measured
+        # slower in r12).
+        # Flag: a node breaks the star property iff it has >= 2 outgoing
+        # edges (multi-target) or appears as both a source and a target
+        # (chain).
+        e = cycler.checkpoint(_small_star(_large_star(e)), eager=False)
+        roles = e.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("u").alias("node"), F.lit(1).alias("s")),
+                    F.struct(F.col("v").alias("node"), F.lit(0).alias("s")),
                 )
-                .collect()[0]["bad"]
+            ).alias("r")
+        )
+        bad = (
+            roles.groupBy(F.col("r.node").alias("node"))
+            .agg(F.sum("r.s").alias("ns"), F.count(F.lit(1)).alias("nt"))
+            .agg(
+                F.max(
+                    (F.col("ns") >= 2)
+                    | ((F.col("ns") >= 1) & (F.col("nt") > F.col("ns")))
+                ).alias("bad")
             )
-            # e_new is fully materialized by the flag job; the old edge
-            # set has no remaining readers
-            cycler.retire_previous()
-            if not bad:  # None = empty edge set: trivially a star forest
-                converged = True
-                e = e_new
-                break
-            e = e_new
-            continue
-        e_new = cycler.checkpoint(_small_star(_large_star(e)))
-        # e_new is materialized and nothing reads the old edge set again
+            .collect()[0]["bad"]
+        )
+        # e is fully materialized by the flag job; the previous edge set
+        # has no remaining readers
         cycler.retire_previous()
-        # Both probes ride ONE action (limit-1 legs of a union) over the
-        # already-materialized checkpoint — one scheduler round trip per
-        # contraction round, not two (r12: the CC driver loop runs inside
-        # the bench's timed region, so per-round job count is wall time).
-        chain_probe = (
-            e_new.alias("a")
-            .join(e_new.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
-            .select(F.lit(1).alias("_hit"))
-            .limit(1)
-        )
-        multi_probe = (
-            e_new.groupBy("u")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1)
-            .select(F.lit(1).alias("_hit"))
-            .limit(1)
-        )
-        if chain_probe.unionAll(multi_probe).isEmpty():
+        if not bad:  # None = empty edge set: trivially a star forest
             converged = True
-            e = e_new
             break
-        e = e_new
     if not converged:
         raise RuntimeError(
             f"connected_components did not reach a fixpoint in {max_iterations} "

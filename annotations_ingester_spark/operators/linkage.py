@@ -183,19 +183,17 @@ def jaccard_prefix_join(
         F.col("_ma") - F.col("_pa") - 1, F.col("_mb") - F.col("_pb") - 1
     )
     alpha = tau / (F.lit(1.0) + tau) * (F.col("_ma") + F.col("_mb"))
-    cand = a.join(b, "tok").filter(F.col("doc_a") < F.col("doc_b")).filter(
-        (F.col("_mb") <= F.col("_ma") / tau) & (F.col("_ma") <= F.col("_mb") / tau)
+    cand = (
+        a.join(b, "tok")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .filter(
+            (F.col("_mb") <= F.col("_ma") / tau)
+            & (F.col("_ma") <= F.col("_mb") / tau)
+        )
+        .filter(ubound >= alpha - F.lit(1e-9))
+        .select("doc_a", "doc_b", "_sa", "_sb", "_ma", "_mb")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
-    import os
-
-    # A/B hook (same pattern as catalog.ckpt's env pins): results are
-    # IDENTICAL either way — the position filter only prunes candidates
-    # the exact verify would reject.
-    if os.environ.get("SPARK_GRAFT_SSJOIN_POSFILTER", "on") != "off":
-        cand = cand.filter(ubound >= alpha - F.lit(1e-9))
-    cand = cand.select(
-        "doc_a", "doc_b", "_sa", "_sb", "_ma", "_mb"
-    ).dropDuplicates(["doc_a", "doc_b"])
     inter = F.size(F.array_intersect("_sa", "_sb"))
     jac = inter / (F.col("_ma") + F.col("_mb") - inter)
     return (

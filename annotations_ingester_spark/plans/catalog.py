@@ -131,7 +131,7 @@ def _topmost_barriers(df: DataFrame) -> set[str]:
     return found
 
 
-def ckpt(df: DataFrame, site_mode: str | None = None) -> DataFrame:
+def ckpt(df: DataFrame) -> DataFrame:
     """Materialization point for a subtree consumed by several branches of
     one query plan (``df.transform(ckpt)``). Behavior-preserving — a
     localCheckpoint never changes rows — the classification only decides
@@ -161,24 +161,10 @@ def ckpt(df: DataFrame, site_mode: str | None = None) -> DataFrame:
     time: at 100 TB the eager job is a full extra pass over the subtree's
     input, paid once per plan build.
 
-    The verdict is cached per call site; set ``SPARK_GRAFT_CKPT_MODE`` to
-    ``eager``/``lazy`` to pin globally, or ``none`` to drop the
-    checkpoint entirely and rely on ReuseExchange (A/B harness hooks),
-    default ``auto``. ``site_mode`` pins one call site the same way
-    (used where a paired A/B showed a reproducible per-site win that the
-    shape classifier cannot see); the global env override still wins so
-    the A/B harness can sweep the whole catalog.
+    The verdict is cached per call site.
     """
-    import os
     import sys
 
-    mode = os.environ.get("SPARK_GRAFT_CKPT_MODE", "auto")
-    if mode == "auto" and site_mode is not None:
-        mode = site_mode
-    if mode in ("eager", "lazy"):
-        return df.localCheckpoint(eager=(mode == "eager"))
-    if mode == "none":
-        return df
     f = sys._getframe(1)
     while f is not None and "pyspark" in f.f_code.co_filename:
         f = f.f_back

@@ -2899,17 +2899,14 @@ def q_ann_nprobe_sweep(spark: SparkSession, sf: str):
         (F.col("vec_id") % 101 == 0) & (F.col("vec_id") < 2000)
     ).transform(ckpt)
     nq = qs.agg(F.count("*").cast("long").alias("n_queries"))
-    # Site pinned "none": truth's subtree ends in an exchange AQE reuses
+    # No checkpoint on truth: its subtree ends in an exchange AQE reuses
     # across the three probe arms (final executed plan: 6 ReusedExchange,
     # zero extra scans — emb/qs checkpoints above still bound the scan
-    # count). Order-balanced A/B at sf0.1: min 2.07 s pinned vs 2.32 s
-    # auto. Dropping the emb/qs checkpoints too is faster still locally
-    # (1.81 s) but re-scans the un-prunable embeddings table per arm —
-    # wrong trade at 100 TB, deliberately not taken.
-    truth = ckpt(
-        brute_force_topk(emb, qs, k=3).select("q_id", "vec_id"),
-        site_mode="none",
-    )
+    # count). Order-balanced A/B at sf0.1: min 2.07 s uncheckpointed vs
+    # 2.32 s ckpt. Dropping the emb/qs checkpoints too is faster still
+    # locally (1.81 s) but re-scans the un-prunable embeddings table per
+    # arm — wrong trade at 100 TB, deliberately not taken.
+    truth = brute_force_topk(emb, qs, k=3).select("q_id", "vec_id")
     arms = []
     for npb in _SWEEP_NPROBES:
         pred = multiprobe_bucketed_topk(emb, qs, k=3, n_bits=8, n_probes=npb)
@@ -3117,12 +3114,12 @@ def q_dedup_minhash_containment(spark: SparkSession, sf: str):
     sig = minhash_signatures(docs)
     pairs = lsh_candidate_pairs(lsh_band_keys(sig)).select("doc_a", "doc_b")
     # narrow (doc_id, _h) rows feeding THREE legs (sizes + both sides of
-    # the intersection join). Site pinned to "none": the distinct's final
+    # the intersection join). No checkpoint: the distinct's final
     # aggregate sits directly above a reusable exchange, so ReuseExchange
     # serves all three legs from one shuffle — cheaper than any
     # checkpoint here (order-balanced paired A/B at sf0.1: none
     # min 2.04/med 2.33 s vs auto 2.47/2.65 s vs eager 2.34/2.39 s).
-    s = ckpt(shingle_hash_rows(docs).distinct(), site_mode="none")
+    s = shingle_hash_rows(docs).distinct()
     sz = s.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
     sb = s.withColumnRenamed("doc_id", "_db").withColumnRenamed("_h", "_hb")
     inter = (

@@ -22,446 +22,51 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-HEADLINE = [
-    "pipeline_w1_flat_medcat",
-    "pipeline_gate_flat",
-    "b1_windowed_pipeline",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "window_topk_per_customer",
-    "events_sessionization",
-    "dedup_exact_groups",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "simhash_fingerprint",
-    "simhash_near_dup_pairs",
-    "explode_skew_salted",
-    "embedding_cosine_topk",
-    "ann_bucketed_topk",
-    "ann_ivf_topk",
-    "asof_join_clicks_purchases",
-    "range_join_event_pairs",
-    "window_tumbling_events",
-    "text_quality_scores",
-    # r3: heaviest representatives of the post-r1 families, so regressions
-    # in BM25/TF-IDF, decontamination, k-means, clustering, streaming,
-    # Gopher flags, and media decode are visible round-over-round
-    "tfidf_top_terms",
-    "bm25_match_ranking",
-    "decontamination_ngram_overlap",
-    "kmeans_lloyd_step",
-    "dedup_duplicate_clusters",
-    "streaming_tumbling_agg",
-    "text_gopher_quality_flags",
-    "media_decode_dims",
-    "window_sliding_events",
-    # r4: the curation family (newest, previously invisible to the bench)
-    # and the full k-means convergence loop
-    "corpus_curation_pipeline",
-    "corpus_shuffle_order",
-    "weighted_downsample",
-    "kmeans_fit_converged",
-    # r4 additions: streaming joins, layout/integrity/sketch certification,
-    # incremental dedup and funnel analytics
-    "streaming_stream_join",
-    "layout_zorder_cells",
-    "integrity_table_checksum",
-    "approx_sketch_certified",
-    "dedup_incremental_new_vs_corpus",
-    "funnel_conversion_steps",
-    # r5 additions: the streaming twins of funnel + incremental dedup,
-    # the checksum-certified compaction job, and int8 quantization cert
-    "streaming_funnel_conversion",
-    "streaming_incremental_dedup",
-    "layout_compaction_checksum",
-    "embedding_quantized_cosine_cert",
-    # r5 additions: the analytics families' heaviest representatives —
-    # prefix-filtered ssjoin (shingle explode + candidate join), semantic
-    # dedup (N·k assignment + within-cell pairs), graph census/PageRank,
-    # and the two time-series window pipelines
-    "ssjoin_jaccard_prefix",
-    "semantic_dedup_pairs",
-    "graph_triangle_count",
-    "graph_pagerank_2iter",
-    "timeseries_gapfill_locf",
-    "timeseries_zscore_anomalies",
-    "er_entity_clusters",
-    "timeseries_ewma",
-    # r5 surface additions: native recursive CTE + arrow Python UDTF +
-    # multi-format round-trip certification
-    "recursive_cte_blast_radius",
-    "udtf_sentence_split",
-    "format_roundtrip_checksum",
-    # r5 warehouse/change-data family + hybrid retrieval + frame sampling
-    "scd2_dimension_build",
-    "cdc_apply_changelog",
-    "snapshot_table_diff",
-    "market_basket_pairs",
-    "hybrid_rrf_retrieval",
-    "media_frame_sample",
-    # r6 queue: LM-perplexity quality signal, DSIR importance weights,
-    # chi-square independence, mergeable-HLL sketch rollup
-    "lm_perplexity_scores",
-    "dsir_importance_weights",
-    "stats_chi_square_independence",
-    "sketch_mergeable_rollup",
-    "cohort_retention_matrix",
-    "events_anomaly_mad",
-    "vocab_zipf_slope",
-    "bpe_pair_merges",
-    "streaming_cdc_apply",
-    # r6 queue: evaluation-metrics family (eval_lsh_precision_recall is
-    # deliberately NOT a headline row: it composes ssjoin_jaccard_prefix +
-    # minhash_lsh_pairs, both already benchmarked — a regression in it is
-    # visible through its components without double-paying the heavy
-    # exact-join twice per bench pass)
-    "eval_langid_confusion",
-    "eval_ann_ndcg",
-    "dedup_span_islands",
-    # r6: packed-shard export manifest (training-data last mile), its
-    # mergeable streaming twin, and incremental view maintenance
-    "corpus_shard_manifest",
-    "streaming_shard_manifest",
-    "ivm_agg_maintenance",
-    "shard_manifest_delta",
-    "layout_bucketed_join_cert",
-    "embedding_pq_codes",
-    "quantile_disc_certified",
-    "privacy_k_anonymity",
-    "dedup_duplicate_lines",
-    # r6 label-aware family: hard-negative mining + kNN label probe +
-    # the quantization-cost probe (compression priced in accuracy)
-    "ann_hard_negatives",
-    "eval_knn_label_accuracy",
-    "eval_knn_quantized_delta",
-    # r6: asymmetric containment near-dups + robust-metric winsorization
-    "ngram_overlap_pairs",
-    "events_winsorized_stats",
-    # r7: image phash near-dup banding (synth+decode+band end to end),
-    # dynamic-partition-pruning cert, BPE encode + real-token packing
-    # (the histogram is NOT a headline row: it re-runs the same encode
-    # fold as bpe_encode_tokens plus a cheap top-30 — visible through its
-    # component), and temperature mixture resampling
-    "media_phash_near_dup_pairs",
-    "layout_dpp_cert",
-    "bpe_encode_tokens",
-    "bpe_sequence_packing",
-    "mixture_temperature_sample",
-    # r7: classifier inference, KN bigram LM, calibration audit,
-    # tokenizer fertility (packing_efficiency is NOT a headline row: it
-    # re-runs bpe_sequence_packing's window plus two cheap aggregates —
-    # visible through its component)
-    "quality_classifier_scores",
-    "lm_kneser_ney_bigram",
-    "eval_calibration_bins",
-    "tokenizer_fertility_by_lang",
-    # r7: positional phrase search, arena-style BT fit, quality-aware
-    # dedup survivors, sort-for-compression layout cert
-    "search_phrase_positions",
-    "stats_bradley_terry",
-    "dedup_quality_survivors",
-    "layout_sort_compression_cert",
-    # r7: deterministic LPA communities, Markov transition matrix,
-    # l-diversity privacy gate, ANN recall@k tuning curve
-    "graph_label_propagation",
-    "events_markov_transitions",
-    "privacy_l_diversity",
-    "eval_recall_at_k_curve",
-    # r7: blocking-scheme audit + the streaming classifier gate
-    "eval_er_blocking_quality",
-    "streaming_quality_gate",
-    # r7: audio content decode (PCM energy/ZCR) + image near-dup clusters
-    "media_audio_frame_energy",
-    "media_phash_clusters",
-    # r7: Misra-Gries heavy hitters (the custom mapInPandas sketch)
-    "sketch_heavy_hitters_certified",
-    # r7: MRR retrieval summary + two-proportion A/B z-test
-    "eval_ann_mrr",
-    "stats_ab_test_proportions",
-    # r7: streaming MG twin, 2-step BPE merge learning, grouped OLS trend
-    "streaming_heavy_hitters",
-    "bpe_learn_two_merges",
-    "timeseries_linear_trend",
-    # r7: long-context packing manifest, schema-evolution cert, datasheet
-    "context_packing_manifest",
-    "format_schema_evolution_cert",
-    "corpus_datasheet_report",
-    # r7: funnel timing percentiles + MinHash estimator-resolution eval
-    "funnel_time_to_convert",
-    "eval_minhash_estimator",
-    # r7: the composed IVF-ADC retrieval path (coarse cell + PQ lookup)
-    "ann_ivf_adc_topk",
-    # r7: RFM customer-value segmentation
-    "events_rfm_segmentation",
-    # r7: per-gate curation attrition funnel
-    "curation_gate_attrition",
-    # r7: leakage-safe point-in-time dimension lookup
-    "scd2_point_in_time_lookup",
-    # r7: rank-statistics family (shared bounded-domain CDF machinery;
-    # KS and MWU read the same source but exercise different reductions)
-    "stats_ks_test",
-    "stats_mann_whitney",
-    "eval_auc_roc",
-    "lm_good_turing_counts",
-    # r7: time-series ACF + Theil-Sen robust trend
-    "timeseries_acf",
-    "stats_theil_sen_slope",
-    # r7: novelty scoring, domain caps, t-closeness
-    "corpus_ngram_novelty",
-    "curation_domain_caps",
-    "privacy_t_closeness",
-    # r7: sparse lexical cosine + gated-WAV silence islands (distinct
-    # synth/decode from media_audio_frame_energy: 1024-sample gated PCM)
-    # + the three-direction as-of
-    "tf_cosine_doc_pairs",
-    "media_audio_silence_segments",
-    "asof_join_modes",
-    # r7 deferred batch (r8 gate): KM survival, CUPED, Spearman,
-    # mergeable-MinHash cert, PMI collocations
-    "survival_kaplan_meier",
-    "stats_cuped_adjustment",
-    "stats_spearman_corr",
-    "sketch_minhash_mergeable",
-    "collocation_pmi_pairs",
-    # r7 deferred batch 2 (r8 gate): CUSUM changepoint, weekly seasonal
-    # indexes, LSH link prediction, Benford audit, OOV-rate curve
-    "events_changepoint_cusum",
-    "timeseries_seasonal_decompose",
-    "graph_common_neighbor_scores",
-    "stats_benford_first_digit",
-    "lm_oov_rate_by_vocab_size",
-    # r7 deferred batch 3 (r8 gate): forecast backtest, Kendall tau-b,
-    # FK readability
-    "forecast_backtest_mae",
-    "stats_kendall_tau",
-    "text_readability_fk",
-    # r7 deferred batch 4 (r8 gate): Pareto/ABC revenue classes, runs test
-    "orders_pareto_abc",
-    "stats_runs_test",
-    # r8: experiment-analysis quartet — Welch t, the ×100-replicate
-    # Poisson bootstrap (the round's heaviest new row by design), Gini
-    # concentration, and the diff-in-diff A/A harness
-    "stats_welch_ttest",
-    "stats_bootstrap_poisson_ci",
-    "stats_gini_lorenz",
-    "stats_diff_in_diff",
-    # r8: event-journey family (attribution + path mining share the
-    # per-user path window but exercise different reductions) and the
-    # sweep-line concurrency profile; k-core peels the LSH edge graph
-    # (edge construction already benchmarked via graph_triangle_count,
-    # the 4-round peel is the new cost)
-    "graph_k_core_peel",
-    "events_attribution_credit",
-    "events_top_paths",
-    "events_concurrency_profile",
-    # r8: Deequ-style constraint suite, Matryoshka truncation cert,
-    # exact weighted quantiles, IPW A/A estimator, Fellegi-Sunter
-    # linkage weights, gaps-and-islands activity streaks
-    "quality_constraint_suite",
-    "eval_matryoshka_truncation",
-    "stats_weighted_median",
-    "stats_ipw_estimate",
-    "er_fellegi_sunter_weights",
-    "events_activity_streaks",
-    # r8: Davies-Bouldin cluster quality, experiment sizing (MDE),
-    # Poisson overdispersion check, key-sampled join-cardinality cert,
-    # RAKE keyword extraction, O'Brien-Fleming interim monitoring
-    "eval_cluster_davies_bouldin",
-    "stats_power_mde",
-    "stats_overdispersion",
-    "eval_join_cardinality_est",
-    "text_rake_keywords",
-    "stats_group_sequential",
-    # r8: streaming twin of the constraint suite (monoid partial counters
-    # merged across micro-batches)
-    "streaming_constraint_suite",
-    # r8: embedding isotropy diagnostic, Heaps-law vocab growth,
-    # header-vs-lines value reconciliation
-    "eval_embedding_isotropy",
-    "vocab_heaps_law",
-    "quality_value_reconciliation",
-    # r8: Mann-Kendall trend significance + STL seasonal strength
-    "stats_mann_kendall",
-    "timeseries_seasonal_strength",
-    # r8: count-min sketch certification (completes the mergeable-sketch
-    # triad) + code-vs-prose routing heuristic
-    "sketch_count_min_certified",
-    "text_code_detect",
-    # r8: streaming CMS merge proof, sample-ratio-mismatch monitor,
-    # cohort LTV matrix, domain epoch plan
-    "streaming_count_min",
-    "stats_sequential_srm",
-    "events_cohort_ltv",
-    "curation_epoch_plan",
-    # r8: per-domain unigram KL (domain-shift scalar) + LSH-graph
-    # degree assortativity
-    "lm_domain_kl_divergence",
-    "graph_degree_assortativity",
-    # r8: end-to-end redaction certification + inter-arrival CV profile
-    "privacy_redaction_cert",
-    "events_interarrival_stats",
-    # r8: click->purchase lead-lag cross-correlation
-    "timeseries_cross_correlation",
-    # r9: classical-inference completion (ANOVA family, robust location,
-    # effect sizes, permutation/FDR), uncertainty + drift + DP releases,
-    # two more mergeable-sketch certs, LSH-graph local structure,
-    # leakage audit, char entropy, vocab Jaccard, subword fertility
-    "sketch_bloom_membership_cert",
-    "graph_local_clustering",
-    "stats_hodges_lehmann",
-    "privacy_dp_noisy_counts_cert",
-    "eval_split_leakage_audit",
-    "text_char_entropy",
-    "stats_anova_oneway",
-    "stats_permutation_test",
-    "stats_psi_drift",
-    "eval_conformal_coverage",
-    "eval_label_centroid_sim",
-    "lm_vocab_jaccard_sources",
-    "stats_tukey_hsd",
-    "stats_brown_forsythe",
-    "stats_effect_sizes",
-    "sketch_hll_intersection_cert",
-    "streaming_psi_drift",
-    "eval_pinball_loss",
-    "stats_cramers_v",
-    "stats_negative_binomial_fit",
-    "stats_bh_fdr",
-    "graph_two_hop_reach",
-    "privacy_dp_quantile_release",
-    "lm_subword_fertility",
-    "eval_cohens_kappa",
-    "stats_wilcoxon_signed_rank",
-    "stats_friedman_test",
-    "text_token_burstiness",
-    "stats_kruskal_wallis",
-    "stats_ljung_box",
-    "stats_mood_median_test",
-    "eval_mcc_langid",
-    # r10 additions
-    "dedup_substring_exact",
-    "dedup_substring_survivors",
-    "stats_page_hinkley",
-    "stats_dickey_fuller",
-    "stats_durbin_watson",
-    "stats_bartlett_test",
-    "stats_cochran_q",
-    "stats_jonckheere_terpstra",
-    "eval_mcnemar_models",
-    "eval_dup_capture_recapture",
-    "curation_mixture_waterfill",
-    "lm_self_bleu_proxy",
-    "dedup_lsh_banding_sweep",
-    "media_shot_boundaries",
-    "streaming_page_hinkley",
-    "stats_grubbs_outlier",
-    # r11 head-start tier (certifies next round; benchmarked from day one)
-    "dedup_substring_cross_split",
-    "stats_cochran_armitage",
-    "events_markov_entropy_rate",
-    "text_mattr_diversity",
-    # round-11 session-2 additions
-    "survival_nelson_aalen",
-    "survival_log_rank",
-    "eval_ece_mce",
-    "eval_brier_decomposition",
-    "eval_lift_gains_curve",
-    "stats_jarque_bera",
-    "text_yule_k",
-    "text_hapax_legomena",
-    "lm_bigram_cond_entropy",
-    "graph_adamic_adar",
-    "split_group_holdout",
-    "stats_hurst_rs",
-    "stats_ols_two_factor",
-    "stats_granger_lag1",
-    "stats_cronbach_alpha",
-    "sketch_ams_f2_cert",
-    "privacy_randomized_response_cert",
-    "events_peak_detection",
-    "stats_pettitt_test",
-    "stats_variance_ratio_test",
-    "eval_weighted_kappa",
-    "dedup_soft_weights",
-    "events_entropy_trend",
-    "streaming_ams_f2",
-    "timeseries_holt_forecast",
-    "timeseries_pacf",
-    "media_audio_clipping",
-    "corpus_cross_source_overlap",
-    "ann_nprobe_sweep",
-    "stats_cramer_von_mises",
-    "stats_sign_test",
-    "lm_ngram_coverage_curve",
-    "timeseries_holt_winters",
-    "stats_esd_outliers",
-    "stats_page_trend_test",
-    "stats_wilson_ci",
-    "events_dau_wau_stickiness",
-    "stats_poisson_rate_ratio",
-    "events_bot_score",
-    "orders_backlog_aging",
-    "eval_ann_map",
-    "lm_js_divergence_sources",
-    "stats_quade_test",
-    "stats_exponentiality_test",
-    "media_image_entropy",
-    "lm_token_rank_typicality",
-    # round-12 head start
-    "graph_modularity_score",
-    "events_return_intervals",
-    "eval_sliced_calibration",
-    "stats_cusum_variance",
-    "stats_seasonal_mann_kendall",
-    "events_hourly_seasonality",
-    # round-11 session-3 additions (r12 gate tier)
-    "dedup_substring_bpe_k50",
-    "stats_g_test",
-    "stats_mantel_haenszel",
-    "stats_chow_test",
-    "eval_fleiss_kappa",
-    "eval_rank_biased_overlap",
-    "eval_forecast_mase",
-    "media_audio_snr",
-    "graph_jaccard_link_scores",
-    "text_sentence_stats",
-    "timeseries_theta_forecast",
-    "graph_hits_2iter",
-    "split_temporal_holdout",
-    "corpus_dup_quality_association",
-    "stats_eb_shrinkage",
-    "stats_rayleigh_hour_uniformity",
-    "eval_auc_pr",
-    "stats_powerlaw_tail_fit",
-    # round-12 session additions (r13 gate tier)
-    "dedup_substring_bpe_survivors",
-    "dedup_minhash_containment",
-    "dedup_cluster_size_histogram",
-    "sample_weighted_reservoir",
-    "chunk_sentence_packed",
-    "stats_fisher_exact",
-    "stats_anderson_darling",
-    "stats_tost_equivalence",
-    "stats_partial_correlation",
-    "stats_dunn_posthoc",
-    "stats_cooks_distance",
-    "stats_breusch_pagan",
-    "stats_ansari_bradley",
-    "eval_krippendorff_alpha",
-    "eval_reliability_regression",
-    "eval_spiegelhalter_z",
-    "eval_forecast_theil_u",
-    "eval_label_noise_pairs",
-    "timeseries_spectral_peak",
-    "timeseries_drawdown_stats",
-    "events_path_trigrams",
-    "events_burstiness_memory",
-    "lm_unigram_surprisal_quality",
-    "text_ocr_garbage_score",
-    "split_kfold_assign",
-    "curation_skyline_quality",
-]
+from annotations_ingester_spark.plans.queries import REGISTRY  # noqa: E402
+
+#: Registry names the suite does not time; every other name is benched, in
+#: registry order. Moving a name in or out changes what the suite total
+#: measures, so it needs a re-baseline of the committed BENCH_* artifacts.
+UNBENCHED = frozenset({
+    "a1_doc_count", "a2_filtered_count_exists", "a3_collect_list_per_group",
+    "agg_grouping_sets", "agg_rollup", "agg_statistics", "ann_multiprobe_topk",
+    "b1_tumbling_date_windows", "bpe_token_histogram", "chunk_documents",
+    "corpus_mixture_report", "corpus_token_drift",
+    "correlated_above_customer_avg", "cube_lineitem", "dedup_bag_fingerprint",
+    "dedup_corpus_survivors", "dedup_duplicate_ngram_spans",
+    "embedding_near_dup_pairs", "er_blocked_name_matches",
+    "eval_lsh_precision_recall", "events_json_extract",
+    "f1_index_name_normalize", "f2_row_id_synthesis",
+    "f4_substring_by_indices", "f6_date_arithmetic", "f_array_suite",
+    "f_scalar_suite", "full_outer_reconciliation", "grouped_map_pandas_rank",
+    "inverted_index_postings", "j1_anti_join_skip_processed",
+    "j3_broadcast_dim_join", "kmeans_two_round_assign",
+    "label_balanced_sample", "media_features", "ngram_jaccard_pairs",
+    "p3_valid_text_filter", "p4_match_predicate", "packing_efficiency_report",
+    "pii_detection_stats", "pipeline_idempotent_rerun",
+    "pipeline_w2_split_by_type", "pipeline_w3_same_index_merge",
+    "pipeline_w4_nested_per_doc", "pivot_order_status",
+    "profile_histogram_totalprice", "profile_key_skew", "q10_returned_items",
+    "q11_important_value", "q12_ship_lag_buckets", "q13_customer_order_counts",
+    "q14_promo_share", "q15_top_supplier", "q16_part_supplier_counts",
+    "q17_small_quantity_revenue", "q18_large_volume_orders",
+    "q19_disjunctive_revenue", "q20_potential_promotion",
+    "q21_waiting_suppliers", "q22_global_sales_opportunity",
+    "q2_min_cost_supplier", "q4_order_priority_exists", "q6_forecast_revenue",
+    "q7_nation_volume", "q8_market_share", "q9_product_profit",
+    "quality_percentile_filter", "s1_scan_doc_ids", "s3_range_scan_orders",
+    "s4_point_lookup", "sequence_packing", "session_window_events",
+    "setop_except", "setop_intersect", "split_hash_assign",
+    "split_stratified_sample", "streaming_sessionization",
+    "streaming_stateful_totals", "streaming_static_join",
+    "streaming_w1_pipeline", "streaming_watermarked_dedup", "table_profile",
+    "text_lang_id", "text_redaction", "text_repetition_stats",
+    "text_token_stats", "u1_union_all", "u2_distinct_records",
+    "udaf_pandas_grouped_agg", "unpivot_priority_metrics", "vocab_top_terms",
+    "window_analytics_suite", "window_running_total", "winnowing_fingerprints"
+})
+
+HEADLINE = [n for n in REGISTRY if n not in UNBENCHED]
 
 
 def compute_superlinear_flags(
@@ -586,7 +191,6 @@ def main() -> None:
     load_before = (
         round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
     )
-    from annotations_ingester_spark.plans.queries import REGISTRY
     from annotations_ingester_spark.session import get_spark
 
     spark = get_spark("bench")

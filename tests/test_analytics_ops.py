@@ -27,14 +27,8 @@ def _naive_jaccard_pairs(sets: dict[int, set], tau: float):
     return out
 
 
-@pytest.mark.parametrize("tau", [0.5, 0.8])
-def test_prefix_filter_join_equals_naive(spark, tau):
-    """The AllPairs prefix filter is exact: zero false negatives (and the
-    verify step removes all false positives), so the operator must return
-    EXACTLY the naive all-pairs result on random token sets."""
-    from annotations_ingester_spark.operators.linkage import jaccard_prefix_join
-
-    rng = random.Random(42)
+def _random_size_corpus(seed: int):
+    rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(30)]
     rows = []
     for doc_id in range(60):
@@ -44,14 +38,54 @@ def test_prefix_filter_join_equals_naive(spark, tau):
             mut = list(base)
             mut[rng.randrange(len(mut))] = rng.choice(vocab)
             rows.append((1000 + doc_id, " ".join(mut)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return rows
 
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in jaccard_prefix_join(df, threshold=tau).collect()
-    }
-    sets = {doc_id: set(text.split()) for doc_id, text in rows}
-    assert got == _naive_jaccard_pairs(sets, tau)
+
+def _equal_size_corpus(seed: int, m: int):
+    """Every set has exactly m tokens; variants swap 1-3 tokens for unused
+    ones, so sizes stay equal and some pairs sit exactly on the τ
+    boundary."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(30)]
+    rows = []
+    for doc_id in range(40):
+        base = rng.sample(vocab, m)
+        rows.append((doc_id, " ".join(base)))
+        for k in (1, 2, 3):
+            if rng.random() < 0.5:
+                mut = list(base)
+                fresh = rng.sample([w for w in vocab if w not in base], k)
+                for i, w in zip(rng.sample(range(m), k), fresh):
+                    mut[i] = w
+                rows.append((1000 * k + doc_id, " ".join(mut)))
+    return rows
+
+
+#: set size m at which the PPJoin position bound τ/(1+τ)·(m_a+m_b) lands
+#: on an integer for equal-size pairs (4, 3 and 8 overlap tokens)
+_INTEGER_BOUND_SIZE = {0.5: 6, 0.6: 4, 0.8: 9}
+
+
+@pytest.mark.parametrize("tau", [0.5, 0.8, 0.6])
+def test_prefix_filter_join_equals_naive(spark, tau):
+    """The AllPairs prefix filter plus the PPJoin position filter is
+    exact: zero false negatives (and the verify step removes all false
+    positives), so the operator must return EXACTLY the naive all-pairs
+    result — on random token sets from several seeds, and on equal-size
+    sets whose position bound is an exact integer (where float rounding
+    of τ/(1+τ) could wrongly prune a true pair)."""
+    from annotations_ingester_spark.operators.linkage import jaccard_prefix_join
+
+    corpora = [_random_size_corpus(seed) for seed in (42, 7, 2024)]
+    corpora.append(_equal_size_corpus(5, _INTEGER_BOUND_SIZE[tau]))
+    for rows in corpora:
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            (r.doc_a, r.doc_b)
+            for r in jaccard_prefix_join(df, threshold=tau).collect()
+        }
+        sets = {doc_id: set(text.split()) for doc_id, text in rows}
+        assert got == _naive_jaccard_pairs(sets, tau)
 
 
 def test_prefix_filter_jac_values(spark):

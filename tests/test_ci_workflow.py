@@ -38,6 +38,8 @@ def test_workflow_jobs_and_steps():
         s.get("run", "") for s in jobs["test"]["steps"] if isinstance(s, dict)
     )
     assert "pytest tests/" in test_cmds
+    # the only check that drives the real ingest CLI end to end
+    assert "pytest perfbench/test_smoke.py" in test_cmds
     assert "tools/parity.py" in test_cmds
     docker_uses = [
         s.get("uses", "") for s in jobs["docker"]["steps"] if isinstance(s, dict)

@@ -271,29 +271,44 @@ def test_connected_components_chain_converges_in_log_rounds(spark):
     assert rounds <= 10, rounds  # 64-diameter chain in logarithmic rounds
 
 
-def test_connected_components_fused_probe_matches_legacy(spark, monkeypatch):
-    """r13: the fused convergence flag (one full-pass aggregate that also
-    materializes the lazy checkpoint — one job/round) must agree with the
-    legacy two-probe path on labels AND round count, including the
-    chain + multi-target + already-converged shapes."""
+def _union_find_components(rows):
+    """(node, min node id of its component) by plain union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in rows:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {(n, find(n)) for n in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """The one-job-per-round loop (lazy checkpoint materialized by the
+    star-forest flag aggregate) against a pure-Python union-find oracle,
+    over chain, already-a-star, high-diameter and merge-mid-stream
+    shapes. Round counts are pinned: a change to the convergence test
+    that costs or skips a contraction round shows up here."""
     from annotations_ingester_spark.operators.cluster import connected_components
 
     cases = [
-        [(1, 2), (2, 3), (3, 4), (7, 9)],          # chain + separate pair
-        [(1, 2), (1, 3), (1, 4)],                   # already a star
-        [(i, i + 1) for i in range(32)],            # high-diameter chain
-        [(1, 2), (3, 4), (2, 3), (10, 11)],         # merge mid-stream
+        ([(1, 2), (2, 3), (3, 4), (7, 9)], 2),      # chain + separate pair
+        ([(1, 2), (1, 3), (1, 4)], 1),               # already a star
+        ([(i, i + 1) for i in range(32)], 5),        # high-diameter chain
+        ([(1, 2), (3, 4), (2, 3), (10, 11)], 2),     # merge mid-stream
     ]
-    for rows in cases:
+    for rows, want_rounds in cases:
         edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
-        monkeypatch.setenv("SPARK_GRAFT_CC_PROBE", "fused")
-        fused_labels, fused_rounds = connected_components(edges, return_rounds=True)
-        fused = {(r["node"], r["cluster_id"]) for r in fused_labels.collect()}
-        monkeypatch.setenv("SPARK_GRAFT_CC_PROBE", "probe")
-        legacy_labels, legacy_rounds = connected_components(edges, return_rounds=True)
-        legacy = {(r["node"], r["cluster_id"]) for r in legacy_labels.collect()}
-        assert fused == legacy, rows
-        assert fused_rounds == legacy_rounds, rows
+        labels, rounds = connected_components(edges, return_rounds=True)
+        got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
+        assert got == _union_find_components(rows), rows
+        assert rounds == want_rounds, (rows, rounds)
 
 
 def test_connected_components_raises_on_non_convergence(spark):

@@ -44,208 +44,31 @@ def _entry_module():
 def test_entry_point_exposes_full_registry():
     mod = _entry_module()
     qs = mod.queries()
-    assert set(qs) == set(REGISTRY)
+    assert list(qs) == list(REGISTRY)
     oracles = mod.oracle_sql()
-    # every oracle key must be a registered query
-    assert set(oracles) <= set(qs)
+    # every oracle key must be a registered query, in registry order
+    assert list(oracles) == [n for n in REGISTRY if n in oracles]
 
 
-# --- Gate-window contract (r5 lesson made executable, not tribal) ---------
-#
-# The driver certifies only the FIRST 50 entries of queries() per round.
-# These tests pin the rotation mechanics: every queued name must actually
-# exist (a typo in _QUEUED_LATE would silently strand a query forever),
-# and the front of the window must be exactly the not-yet-covered names —
-# oldest debt first — so no registration-order accident can displace a
-# planned certification.
+def test_every_registry_name_has_green_correctness_row():
+    """queries() is plain registry order because no query is left to
+    certify: every registry name holds a fully green row (rows, schema
+    and value hash all match the DuckDB oracle) in some committed
+    CORRECTNESS_r*.json. A new registration without one fails here."""
+    import json
+    from pathlib import Path
 
-GATE_WINDOW = 50
-
-
-def test_queued_late_names_exist_in_registry():
-    mod = _entry_module()
-    stranded = mod._QUEUED_LATE - set(REGISTRY)
-    assert not stranded, f"_QUEUED_LATE names not in registry: {sorted(stranded)}"
-
-
-def test_deferred_names_exist_in_registry():
-    # a typo here would leave the intended query INSIDE the window,
-    # displacing the round's planned certification set — the exact
-    # failure the deferral mechanism exists to prevent
-    mod = _entry_module()
-    stranded = mod._DEFERRED_PAST_WINDOW - set(REGISTRY)
-    assert not stranded, (
-        f"_DEFERRED_PAST_WINDOW names not in registry: {sorted(stranded)}"
+    root = Path(__file__).resolve().parents[1]
+    green: set[str] = set()
+    for f in sorted(root.glob("CORRECTNESS_r*.json")):
+        for name, r in json.loads(f.read_text()).items():
+            if r.get("rows_match") and r.get("schema_match") and r.get("hash_match"):
+                green.add(name)
+    missing = [n for n in REGISTRY if n not in green]
+    assert not missing, (
+        f"{len(missing)} registry names lack a green CORRECTNESS row: "
+        f"{missing[:10]}"
     )
-
-
-def test_order_last_r10_names_exist_in_registry():
-    mod = _entry_module()
-    stranded = mod._ORDER_LAST_R10 - set(REGISTRY)
-    assert not stranded, f"_ORDER_LAST_R10 names not in registry: {sorted(stranded)}"
-
-
-def test_order_last_r11_names_exist_in_registry():
-    mod = _entry_module()
-    stranded = mod._ORDER_LAST_R11 - set(REGISTRY)
-    assert not stranded, f"_ORDER_LAST_R11 names not in registry: {sorted(stranded)}"
-
-
-def test_order_last_r12_names_exist_and_fit_window():
-    mod = _entry_module()
-    stranded = mod._ORDER_LAST_R12 - set(REGISTRY)
-    assert not stranded, f"_ORDER_LAST_R12 names not in registry: {sorted(stranded)}"
-    assert len(mod._ORDER_LAST_R12) <= 50
-
-
-def test_order_last_r13_names_exist_and_debt_fits_one_window():
-    """r11 verdict item 1: r12-session additions are capped so the 24-name
-    r12 tier PLUS everything new fits one 50-slot gate window — official
-    coverage reaches 100% at the r12 gate, with nothing stranded."""
-    mod = _entry_module()
-    stranded = mod._ORDER_LAST_R13 - set(REGISTRY)
-    assert not stranded, f"_ORDER_LAST_R13 names not in registry: {sorted(stranded)}"
-    assert len(mod._ORDER_LAST_R12 | mod._ORDER_LAST_R13) <= GATE_WINDOW, (
-        f"r12 debt ({len(mod._ORDER_LAST_R12)}) + r12-session additions "
-        f"({len(mod._ORDER_LAST_R13)}) exceed the {GATE_WINDOW}-slot window"
-    )
-
-
-def test_all_uncovered_fit_one_gate_window():
-    """The round-12 discipline: EVERY not-yet-officially-covered name must
-    fit one gate window, so the next CORRECTNESS file can close coverage
-    to 100%. Any session adding more names than the window's remainder
-    breaks this loudly instead of silently re-opening a multi-round tail."""
-    mod = _entry_module()
-    covered = mod._covered_from_disk()
-    uncovered = [n for n in REGISTRY if n not in covered]
-    assert len(uncovered) <= GATE_WINDOW, (
-        f"{len(uncovered)} uncovered queries exceed the {GATE_WINDOW}-slot "
-        f"gate window: {sorted(uncovered)[:10]}..."
-    )
-
-
-def test_order_last_r11_fits_one_gate_window():
-    """The r11 tier must certify in ONE 50-slot gate window (its header
-    comment claims exactly 50) — a 51st addition belongs in a new
-    _ORDER_LAST_R12 tier, not here."""
-    mod = _entry_module()
-    assert len(mod._ORDER_LAST_R11) == 50, (
-        f"r11 tier holds {len(mod._ORDER_LAST_R11)} names; the gate window "
-        "certifies 50/round — open an _ORDER_LAST_R12 tier for overflow"
-    )
-
-
-def test_gate_window_fronts_uncovered_debt_then_fresh():
-    mod = _entry_module()
-    covered = mod._covered_from_disk()
-    ordered = list(mod.queries())
-    uncovered = [n for n in REGISTRY if n not in covered]
-    last13 = [n for n in uncovered if n in mod._ORDER_LAST_R13]
-    last12 = [
-        n
-        for n in uncovered
-        if n in mod._ORDER_LAST_R12 and n not in mod._ORDER_LAST_R13
-    ]
-    last11 = [
-        n
-        for n in uncovered
-        if n in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    last10 = [
-        n
-        for n in uncovered
-        if n in mod._ORDER_LAST_R10
-        and n not in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    last = [
-        n
-        for n in uncovered
-        if n in mod._ORDER_LAST
-        and n not in mod._ORDER_LAST_R10
-        and n not in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    debt = [
-        n
-        for n in uncovered
-        if n in mod._QUEUED_LATE
-        and n not in mod._ORDER_LAST
-        and n not in mod._ORDER_LAST_R10
-        and n not in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    deferred = [
-        n
-        for n in uncovered
-        if n in mod._DEFERRED_PAST_WINDOW
-        and n not in mod._QUEUED_LATE
-        and n not in mod._ORDER_LAST
-        and n not in mod._ORDER_LAST_R10
-        and n not in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    fresh = [
-        n
-        for n in uncovered
-        if n not in mod._QUEUED_LATE
-        and n not in mod._DEFERRED_PAST_WINDOW
-        and n not in mod._ORDER_LAST
-        and n not in mod._ORDER_LAST_R10
-        and n not in mod._ORDER_LAST_R11
-        and n not in mod._ORDER_LAST_R12
-        and n not in mod._ORDER_LAST_R13
-    ]
-    # debt first, then fresh additions, then past-window deferrals, then
-    # the absolute-last tiers (r9 then r10), then covered — as sets per
-    # segment
-    n_front = len(debt) + len(fresh)
-    n_unc = len(uncovered)
-    assert set(ordered[: len(debt)]) == set(debt)
-    assert set(ordered[:n_front]) == set(debt) | set(fresh)
-    assert set(ordered[n_front : n_front + len(deferred)]) == set(deferred)
-    n_def = n_front + len(deferred)
-    assert set(ordered[n_def : n_def + len(last)]) == set(last)
-    n_l = n_def + len(last)
-    assert set(ordered[n_l : n_l + len(last10)]) == set(last10)
-    n_l10 = n_l + len(last10)
-    assert set(ordered[n_l10 : n_l10 + len(last11)]) == set(last11)
-    n_l11 = n_l10 + len(last11)
-    assert set(ordered[n_l11 : n_l11 + len(last12)]) == set(last12)
-    assert set(ordered[n_l11 + len(last12) : n_unc]) == set(last13)
-    assert set(ordered[n_unc:]) <= covered
-    # everything except the r11 head-start tier (debt + r9 tier + r10
-    # additions) must fit inside one certification window — the r9
-    # verdict's item 1: all 34 older names certify this round, r10
-    # additions are capped at the spare slots, and late r11-tier builds
-    # ride BEHIND the window (they certify next round)
-    assert n_unc - len(last11) - len(last12) - len(last13) <= GATE_WINDOW, (
-        f"{n_unc - len(last11) - len(last12) - len(last13)} pre-r11 "
-        f"uncovered queries exceed the {GATE_WINDOW}-entry gate window"
-    )
-    # every NON-DEFERRED uncovered name must fit inside the certification
-    # window; overflow means deferring the newest additions (or waiting a
-    # round) — and deferrals must sit OUTSIDE the window so they can never
-    # displace the round's planned certification set
-    assert n_front <= GATE_WINDOW, (
-        f"{n_front} front-of-window queries exceed the {GATE_WINDOW}-entry "
-        f"gate window; defer the newest additions via _DEFERRED_PAST_WINDOW"
-    )
-
-
-def test_covered_from_disk_floor():
-    # The union of green CORRECTNESS rows can only grow; 150 names were
-    # certified through r05. A parsing regression in _covered_from_disk
-    # would resurface certified names into the window and displace debt.
-    mod = _entry_module()
-    assert len(mod._covered_from_disk()) >= 150
 
 
 def test_no_stale_registry_counts_in_docs():
