@@ -24,6 +24,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from annotations_ingester_spark.annotator.service import Annotator
+from annotations_ingester_spark.pyfiles import (
+    ensure_worker_imports,
+    trim_worker_import_cache,
+)
 from annotations_ingester_spark.types import annotated_schema
 
 
@@ -48,8 +52,6 @@ def annotate(
     shuffle is trivially cheap next to per-row Python/HTTP work. Pass an
     int to pin it, or None to keep the scan partitioning.
     """
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
     ensure_worker_imports(df.sparkSession)
     if parallelism == "auto":
         df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -58,6 +60,7 @@ def annotate(
     out_schema = annotated_schema(df.schema, mode=mode)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_worker_import_cache()
         client = annotator_factory()
         for pdf in batches:
             if len(pdf) == 0:

@@ -34,8 +34,8 @@ import json
 import logging
 import urllib.error
 import urllib.request
-from collections.abc import Iterator
-from itertools import chain
+from collections.abc import Iterable, Iterator
+from itertools import chain, islice
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +43,10 @@ from pyspark.sql import types as T
 
 from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.functions.names import format_index_name
+from annotations_ingester_spark.pyfiles import (
+    ensure_worker_imports,
+    trim_worker_import_cache,
+)
 from annotations_ingester_spark.sources.elasticsearch import (
     BULK_CHUNK_SIZE,
     BULK_REQUEST_TIMEOUT_S,
@@ -52,6 +56,17 @@ log = logging.getLogger(__name__)
 
 # Elasticsearch's default ``index.max_slices_per_scroll``
 MAX_SLICES_PER_SCROLL = 1024
+
+
+def chunked(items: Iterable[Any], size: int) -> Iterator[list[Any]]:
+    """Consecutive lists of at most ``size`` items, pulling each item only
+    when its chunk is filled — a consumer that posts each chunk before
+    asking for the next holds at most ``size`` items (the generator
+    consumption of the reference's ``streaming_bulk``,
+    es_common.py:193-210)."""
+    it = iter(items)
+    while chunk := list(islice(it, size)):
+        yield chunk
 
 
 def _headers(conf: ConnectorConfig) -> dict[str, str]:
@@ -311,9 +326,9 @@ class EsRestClient:
         failures counted-and-logged, not raised (reference streaming_bulk
         semantics, es_common.py:193-210)."""
         ok = failed = 0
-        for i in range(0, len(actions), chunk_size):
+        for chunk in chunked(actions, chunk_size):
             lines: list[bytes] = []
-            for a in actions[i : i + chunk_size]:
+            for a in chunk:
                 op = a.get("_op_type", "index")
                 meta: dict[str, Any] = {"_index": a.get("_index", self.index)}
                 if a.get("_id") is not None:
@@ -357,8 +372,9 @@ def write_es_rest(
     chunk_size: int = BULK_CHUNK_SIZE,
 ) -> None:
     """Distributed bulk write: each partition posts its own rows through
-    ``EsRestClient.bulk`` (executor-side HTTP, driver ships only the plan —
-    the reference's thread-pool writers become Spark tasks). Deterministic
+    ``EsRestClient.bulk``, one ``chunk_size`` chunk as soon as it fills
+    (executor-side HTTP, driver ships only the plan — the reference's
+    thread-pool writers become Spark tasks). Deterministic
     ``mapping_id`` gives idempotent re-runs (B2); ``split_suffix_field``
     implements the W2 per-value index routing ``base-{value}`` with F1 name
     normalization (es_common.py:133-151)."""
@@ -366,21 +382,22 @@ def write_es_rest(
     base = client.index
     op = "update" if upsert else "index"
 
+    def action(row) -> dict[str, Any]:
+        d = row.asDict(recursive=True)
+        a: dict[str, Any] = {"_op_type": op}
+        if mapping_id and d.get(mapping_id) is not None:
+            a["_id"] = str(d[mapping_id])
+        if split_suffix_field:
+            a["_index"] = format_index_name(
+                f"{base}-{d.get(split_suffix_field, '')}"
+            )
+        a.update(d)
+        return a
+
     def write_partition(rows) -> None:
-        actions = []
-        for row in rows:
-            d = row.asDict(recursive=True)
-            a: dict[str, Any] = {"_op_type": op}
-            if mapping_id and d.get(mapping_id) is not None:
-                a["_id"] = str(d[mapping_id])
-            if split_suffix_field:
-                a["_index"] = format_index_name(
-                    f"{base}-{d.get(split_suffix_field, '')}"
-                )
-            a.update(d)
-            actions.append(a)
-        if actions:
-            client.bulk(actions, chunk_size=chunk_size)
+        trim_worker_import_cache()
+        for chunk in chunked(map(action, rows), chunk_size):
+            client.bulk(chunk, chunk_size=chunk_size)
 
     df.foreachPartition(write_partition)
 
@@ -422,8 +439,6 @@ def read_es_rest(
     schema asks for them (S4 metadata parity)."""
     import pandas as pd
 
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
     ensure_worker_imports(spark)
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
@@ -435,6 +450,7 @@ def read_es_rest(
     n = max(1, slices)
 
     def fetch(batches):
+        trim_worker_import_cache()
         for pdf in batches:
             for sid in pdf["slice_id"]:
                 for docs in client.scroll_pages(int(sid), n, query, source=source):

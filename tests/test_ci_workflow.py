@@ -51,6 +51,23 @@ def test_workflow_jobs_and_steps():
             assert "uses" in step or "run" in step, f"malformed step: {step}"
 
 
+def test_test_job_sizes_task_slots_before_spark_steps():
+    # the same task slots as the tier-1 command: one per runner CPU, set
+    # before the first step that starts Spark
+    steps = _load()["jobs"]["test"]["steps"]
+    runs = [s.get("run", "") for s in steps]
+    sets = [
+        i
+        for i, r in enumerate(runs)
+        if 'SPARK_GRAFT_CPUS=$(env -u OMP_NUM_THREADS nproc)' in r
+        and "$GITHUB_ENV" in r
+    ]
+    assert sets, "the test job never sets SPARK_GRAFT_CPUS from nproc"
+    for cmd in ("pytest tests/", "pytest perfbench/test_smoke.py", "tools/parity.py"):
+        (at,) = [i for i, r in enumerate(runs) if cmd in r]
+        assert sets[0] < at, f"SPARK_GRAFT_CPUS is set after {cmd!r}"
+
+
 def test_smoke_fixture_matches_driver_tables():
     # The workflow stages tests/fixtures/sf0.001 at /root/testdata/sf0.001;
     # if the fixture drifts from the driver's tables (schema or content),

@@ -11,6 +11,7 @@ import pytest
 from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.sources.es_rest import (
     EsRestClient,
+    chunked,
     read_es_rest,
     write_es_rest,
 )
@@ -53,6 +54,22 @@ def test_bulk_write_scroll_read_roundtrip(spark, es_stub):
         spark, conf, "row_id string, doc string, n long", slices=4
     ).collect()
     assert sorted((r["row_id"], r["doc"], r["n"]) for r in got) == sorted(rows)
+
+
+def test_chunked_pulls_no_more_than_one_chunk_ahead_of_a_post():
+    # the write path posts each chunk before it asks for the next one, so
+    # a task holds at most ``chunk_size`` actions, never its partition
+    pulled = 0
+
+    def rows():
+        nonlocal pulled
+        for i in range(23):
+            pulled += 1
+            yield i
+
+    posts = [(len(chunk), pulled) for chunk in chunked(rows(), 10)]
+    assert posts == [(10, 10), (10, 20), (3, 23)]
+    assert list(chunked(iter(()), 10)) == []
 
 
 def test_upsert_rerun_is_idempotent(spark, es_stub):
