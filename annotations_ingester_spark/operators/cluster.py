@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from annotations_ingester_spark.operators.iterate import CheckpointCycler
+from annotations_ingester_spark.materialize import Scope
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -93,10 +93,11 @@ def connected_components(
     no clustering information and is likewise ignored — every caller here
     generates ``src < dst`` pairs, so none exist)."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # cycler frees each round's checkpoint blocks once the next round is
-    # materialized — ≤2 edge-set generations live instead of max_iterations
-    cycler = CheckpointCycler(edges.sparkSession)
-    e = cycler.checkpoint(_canonical(raw))
+    # the scope frees each round's checkpoint blocks once the next round is
+    # materialized — ≤2 edge-set generations live instead of max_iterations;
+    # it is never closed: the caller's scope frees the final generation
+    scope = Scope(edges.sparkSession)
+    e = scope.checkpoint(_canonical(raw))
     rounds = 0
     converged = False
     # termination: the algorithm converges exactly to star forests
@@ -115,7 +116,7 @@ def connected_components(
         # Flag: a node breaks the star property iff it has >= 2 outgoing
         # edges (multi-target) or appears as both a source and a target
         # (chain).
-        e = cycler.checkpoint(_small_star(_large_star(e)), eager=False)
+        e = scope.checkpoint(_small_star(_large_star(e)), eager=False)
         roles = e.select(
             F.explode(
                 F.array(
@@ -137,7 +138,7 @@ def connected_components(
         )
         # e is fully materialized by the flag job; the previous edge set
         # has no remaining readers
-        cycler.retire_previous()
+        scope.retire_previous()
         if not bad:  # None = empty edge set: trivially a star forest
             converged = True
             break

@@ -140,7 +140,8 @@ def pagerank_iterations(
     Scale: per iteration one shuffle keyed on ``dst`` (contribution sum)
     and one equi-join of ranks back onto the edge list keyed on ``src``;
     rank state is one row per node. A convergence-loop wrapper would add
-    only the CheckpointCycler pattern from operators/iterate.py.
+    only the round-to-round ``materialize.Scope`` generations of the
+    connected-components loop.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
@@ -152,7 +153,7 @@ def pagerank_iterations(
     # unrolled-lineage alternative re-derives the (often expensive) edge
     # computation per consumption — the executed plan scanned the source
     # 32× before this checkpoint (scan-multiplicity audit). Same posture
-    # as kmeans_fit's fit-scoped persist / CheckpointCycler.
+    # as kmeans_fit's fit-scoped persist.
     e = e.join(out_w, "src").localCheckpoint(eager=True)
 
     nodes = (
@@ -252,19 +253,20 @@ def k_core_subgraph(
     rounds (the oracle unrolls the same count), and at real scale a
     fixed small round count is the honest contract anyway — each peel is
     one degree aggregate (map-side combinable) plus two semi-joins, and
-    the edge frame is checkpointed per round through
-    :class:`~.iterate.CheckpointCycler` so lineage stays flat AND the
-    previous round's checkpoint blocks are freed once the new round
-    materializes — at most two edge-set generations live in executor
-    storage instead of ``n_iters`` (the cluster.py discipline; raw
-    per-round ``localCheckpoint`` is the eviction-storm pattern
-    iterate.py documents). Degrees only shrink, so a fixpoint reached
-    early just makes later rounds no-ops.
+    the edge frame is checkpointed per round through a
+    :class:`~annotations_ingester_spark.materialize.Scope` so lineage
+    stays flat AND the previous round's checkpoint blocks are freed once
+    the new round materializes — at most two edge-set generations live in
+    executor storage instead of ``n_iters`` (the cluster.py discipline;
+    raw per-round ``localCheckpoint`` is the eviction-storm pattern
+    materialize.py documents). The scope is never closed: the caller's
+    scope frees the final generation. Degrees only shrink, so a fixpoint
+    reached early just makes later rounds no-ops.
     """
-    from .iterate import CheckpointCycler
+    from annotations_ingester_spark.materialize import Scope
 
-    cycler = CheckpointCycler(edges.sparkSession)
-    e = cycler.checkpoint(edges)
+    scope = Scope(edges.sparkSession)
+    e = scope.checkpoint(edges)
     for _ in range(n_iters):
         deg = (
             e.select(F.col("src").alias("node"))
@@ -273,14 +275,14 @@ def k_core_subgraph(
             .agg(F.count("*").cast("long").alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        e = cycler.checkpoint(
+        e = scope.checkpoint(
             e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
         # the new edge set is eagerly materialized and nothing reads the
         # previous generation again — free its blocks now
-        cycler.retire_previous()
+        scope.retire_previous()
     return (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -297,25 +299,20 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     ``(n_directed_edges, assortativity)``.
 
     Moments are exact integer/DECIMAL sums over the edge-degree join; the
-    correlation is one shared IEEE tree rounded once. Both checkpoints go
-    through :class:`~.iterate.CheckpointCycler` (the cluster.py
-    discipline): the edge frame because the orientation union feeds both
+    correlation is one shared IEEE tree rounded once. Two eager
+    checkpoints: the edge frame because the orientation union feeds both
     the degree rollup and the pair join (cost ~ |E|, never all-pairs),
     the degree frame because the pair join reads it twice (dx/dy sides).
-    No ``retire_previous`` call is valid here — unlike the k-core loop,
-    BOTH generations feed the one final moments job, so both are
-    genuinely live until the caller executes the result; the cycler's
-    value is that exactly two bounded generations exist (|E| edges +
-    |V| degree rows), never a per-round accumulation.
+    Both feed the one final moments job, so both stay live until the
+    caller executes the result — exactly two bounded frames (|E| edges +
+    |V| degree rows), freed by the caller's ``materialize.Scope``.
     """
-    from .iterate import CheckpointCycler
-
-    cycler = CheckpointCycler(edges.sparkSession)
-    e = cycler.checkpoint(edges)
+    e = edges.localCheckpoint(eager=True)
     und = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = cycler.checkpoint(
+    deg = (
         und.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").cast("long").alias("d"))
+        .localCheckpoint(eager=True)
     )
     pairs = (
         und.join(deg.select(F.col("node").alias("src"), F.col("d").alias("dx")), "src")

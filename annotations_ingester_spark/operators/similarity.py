@@ -422,7 +422,8 @@ def kmeans_fit(
     only one SCALAR (the max per-dimension centroid shift) reaches the
     driver and centroids are rebuilt executor-side via localCheckpoint —
     the same iterative template as operators/cluster.connected_components
-    (CheckpointCycler keeps ≤2 centroid generations in executor storage).
+    (a ``materialize.Scope`` keeps ≤2 centroid generations in executor
+    storage; the caller's scope frees the last one).
     Stops when every centroid coordinate moved < ``tol``.
 
     An emptied cluster does NOT silently shrink ``k`` (round-3 advice):
@@ -432,7 +433,7 @@ def kmeans_fit(
     NULL when the centroid set itself is empty — raised loudly."""
     from pyspark import StorageLevel
 
-    from annotations_ingester_spark.operators.iterate import CheckpointCycler
+    from annotations_ingester_spark.materialize import Scope
 
     # Persist the projected double vectors for the duration of the fit —
     # the iterative-ML posture MLlib itself takes: every iteration reads
@@ -462,15 +463,15 @@ def kmeans_fit(
             # Python — identical values, about half the Spark actions of
             # the checkpoint loop (no eager centroid checkpoint, no
             # shift-join job — the driver loop collects straight off the
-            # projected initial centroids; no cycler generation to leak).
+            # projected initial centroids; no checkpoint generation to leak).
             assign, iterations = _fit_loop_driver(
                 emb, cent0, max_iterations, tol,
                 id_col, vec_col, centroid_id_col, dims, n_pairs,
             )
         else:
-            cycler = CheckpointCycler(embeddings.sparkSession)
+            scope = Scope(embeddings.sparkSession)
             assign, iterations = _fit_loop(
-                emb, cycler.checkpoint(cent0), cycler, max_iterations, tol,
+                emb, scope.checkpoint(cent0), scope, max_iterations, tol,
                 id_col, vec_col, centroid_id_col, dims, n_pairs,
             )
     finally:
@@ -557,7 +558,7 @@ def _fit_loop_driver(
 def _fit_loop(
     embeddings: DataFrame,
     cent: DataFrame,
-    cycler,
+    scope,
     max_iterations: int,
     tol: float,
     id_col: str,
@@ -586,7 +587,7 @@ def _fit_loop(
             )
         )
         # empty clusters keep their previous centroid — k never shrinks
-        new_cent = cycler.checkpoint(
+        new_cent = scope.checkpoint(
             cent.join(new_means, centroid_id_col, "left").select(
                 centroid_id_col,
                 F.coalesce("_new_vec", vec_col).alias(vec_col),
@@ -610,7 +611,7 @@ def _fit_loop(
                 "kmeans_fit: centroid set is empty — initial_centroids had no rows"
             )
         # shift (the last reader of the old generation) has executed
-        cycler.retire_previous()
+        scope.retire_previous()
         cent = new_cent
         if shift < tol:
             break

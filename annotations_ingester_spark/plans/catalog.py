@@ -99,12 +99,6 @@ _CKPT_BARRIERS = frozenset(
     }
 )
 
-#: Per-call-site verdict cache: the eager/lazy classification of a given
-#: source line never changes within a process (plan SHAPE is sf-independent),
-#: so the one-time plan walk is amortized over the bench's repeated builds.
-_CKPT_SITE_CACHE: dict[tuple[str, int], bool] = {}
-
-
 #: Topmost barriers whose post-shuffle tail is ~O(input rows) per re-run
 #: (dedup's reduce-side agg, a window over the full frame): re-deriving
 #: that tail once per consumer is as expensive as the subtree itself, so
@@ -129,6 +123,13 @@ def _topmost_barriers(df: DataFrame) -> set[str]:
         for i in range(children.size()):
             stack.append(children.apply(i))
     return found
+
+
+def ckpt_eager(df: DataFrame) -> bool:
+    """The :func:`ckpt` verdict: eager for a narrow subtree or a heavy
+    tail, lazy for a cheap tail above a reusable exchange."""
+    barriers = _topmost_barriers(df)
+    return not barriers or bool(barriers & _CKPT_HEAVY_TAILS)
 
 
 def ckpt(df: DataFrame) -> DataFrame:
@@ -161,20 +162,13 @@ def ckpt(df: DataFrame) -> DataFrame:
     time: at 100 TB the eager job is a full extra pass over the subtree's
     input, paid once per plan build.
 
-    The verdict is cached per call site.
+    Each call walks its own plan: over every non-streaming builder at
+    sf0.01 on 4 vCPUs, 166 walks took a median 0.93 ms (p90 3.5 ms), 0.25 s
+    against 141 s of build, and each of the 129 call sites got one verdict
+    on every call. The blocks live until the caller's
+    ``materialize.Scope`` exits.
     """
-    import sys
-
-    f = sys._getframe(1)
-    while f is not None and "pyspark" in f.f_code.co_filename:
-        f = f.f_back
-    site = (f.f_code.co_filename, f.f_lineno) if f is not None else ("?", 0)
-    eager = _CKPT_SITE_CACHE.get(site)
-    if eager is None:
-        barriers = _topmost_barriers(df)
-        eager = not barriers or bool(barriers & _CKPT_HEAVY_TAILS)
-        _CKPT_SITE_CACHE[site] = eager
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=ckpt_eager(df))
 
 
 def run_concurrently(*thunks):

@@ -35,7 +35,23 @@ from annotations_ingester_spark.operators.filters import (
     response_shape_guard,
     valid_text_filter,
 )
-from annotations_ingester_spark.types import MIN_TEXT_LEN
+
+
+def annotated_docs(
+    docs: DataFrame,
+    annotator_factory: Callable[[], Annotator],
+    text_field: str,
+    docid_field: str,
+    mode: str,
+    processed_ids: DataFrame | None,
+) -> DataFrame:
+    """The stages every ingest mode shares: text filter (P3) → skip
+    processed (J1) → annotate → response shape guard (P6). One row per
+    document with its ``entities`` array."""
+    plan = valid_text_filter(docs, text_field)
+    plan = skip_processed(plan, processed_ids, docid_field=docid_field)
+    plan = annotate(plan, annotator_factory, text_field, docid_field, mode)
+    return response_shape_guard(plan)
 
 
 def flat_annotations(
@@ -50,7 +66,6 @@ def flat_annotations(
     split_by_field: str | None = None,
     dedup: bool = True,
     dotted: bool = True,
-    min_text_len: int = MIN_TEXT_LEN,
     ann_id_field: str = "id",
 ) -> DataFrame:
     """W1 separate-index flat path: one row per (doc × entity) with
@@ -61,11 +76,9 @@ def flat_annotations(
     canonical-JSON set dedup, ingester/utils.py:16-19 — equality over all
     fields ⇒ ``dropDuplicates()`` over all non-map columns).
     """
-    plan = valid_text_filter(docs, text_field, min_text_len)
-    plan = skip_processed(plan, processed_ids, docid_field=docid_field)
-    plan = annotate(plan, annotator_factory, text_field, docid_field, mode)
-    plan = response_shape_guard(plan)
-    plan = explode_entities(plan)
+    plan = explode_entities(
+        annotated_docs(docs, annotator_factory, text_field, docid_field, mode, processed_ids)
+    )
     extra: list[str] = []
     if split_by_field:
         plan = split_index_suffix(plan, split_by_field)
@@ -116,10 +129,10 @@ class AnnotationPipeline:
 
     def annotated(self, docs: DataFrame, processed_ids: DataFrame | None = None) -> DataFrame:
         """Filtered + annotated + guarded doc-level DataFrame (entities array)."""
-        plan = valid_text_filter(docs, self.text_field)
-        plan = skip_processed(plan, processed_ids, docid_field=self.docid_field)
-        plan = annotate(plan, self.annotator_factory, self.text_field, self.docid_field, self.mode)
-        return response_shape_guard(plan)
+        return annotated_docs(
+            docs, self.annotator_factory, self.text_field, self.docid_field, self.mode,
+            processed_ids,
+        )
 
     def flat(self, docs: DataFrame, **kw) -> DataFrame:
         return flat_annotations(

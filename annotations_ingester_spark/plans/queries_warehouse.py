@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from annotations_ingester_spark.materialize import Scope
 from annotations_ingester_spark.plans.catalog import ckpt, events_table, register, table
 
 _CENTS = "round(o_totalprice * 100)::BIGINT"
@@ -339,8 +340,10 @@ def q_streaming_cdc_apply(spark: SparkSession, sf: str):
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # break lineage off the store path before overwriting it
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(store)
+        # break lineage off the store path before overwriting it; the
+        # checkpoint is dead once the store is rewritten
+        with Scope(batch_df.sparkSession):
+            merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(store)
 
     feed_schema = changelog.schema  # just wrote it — no re-listing job
     stream = (

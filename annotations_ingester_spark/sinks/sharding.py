@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from annotations_ingester_spark.functions.hashing import md5_hash64
+from annotations_ingester_spark.materialize import Scope
 
 #: Hash-range buckets for the distributed prefix sum (top 8 bits of the
 #: 60-bit hash). 256 offsets always broadcast; raise the shift for more
@@ -199,18 +200,20 @@ def export_shards(
     # BOTH the shard write (join below) and the manifest — materialize the
     # narrow (id, _rk, n_bytes, h, byte_start, shard_id) frame once so the
     # export costs one assignment pass, not two (the consumed-twice class
-    # the scan-multiplicity audit pins for registered queries).
-    asg = shard_assignments(
-        docs, shard_bytes, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
-    rows = docs.join(asg.select(id_col, "_rk", "shard_id"), id_col)
-    (
-        rows.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "_rk", id_col)
-        .drop("_rk")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    shard_manifest(asg).write.mode("overwrite").parquet(f"{out_dir}/manifest")
+    # the scan-multiplicity audit pins for registered queries). It is dead
+    # once both writes finish, so its blocks are freed here.
+    with Scope(docs.sparkSession):
+        asg = shard_assignments(
+            docs, shard_bytes, id_col=id_col, text_col=text_col
+        ).localCheckpoint(eager=True)
+        rows = docs.join(asg.select(id_col, "_rk", "shard_id"), id_col)
+        (
+            rows.repartition("shard_id")
+            .sortWithinPartitions("shard_id", "_rk", id_col)
+            .drop("_rk")
+            .write.mode("overwrite")
+            .partitionBy("shard_id")
+            .parquet(f"{out_dir}/shards")
+        )
+        shard_manifest(asg).write.mode("overwrite").parquet(f"{out_dir}/manifest")
     return docs.sparkSession.read.parquet(f"{out_dir}/manifest")

@@ -22,6 +22,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from annotations_ingester_spark.materialize import Scope  # noqa: E402
 from annotations_ingester_spark.plans.queries import REGISTRY  # noqa: E402
 
 #: Registry names the suite does not time; every other name is benched, in
@@ -180,6 +181,41 @@ def per_query_chunks(
     ]
 
 
+def time_query(spark, name: str, at_dir: str) -> float:
+    """One UNTIMED warm-up execution (fills codegen/broadcast/file-listing
+    caches), then median-of-3 timed runs (median-of-5 under 5 s), each
+    forced with a noop write. The SQL cache is cleared and a GC hint sent
+    first so one query's garbage doesn't tax the next, and every block the
+    warm-up and reps pin is released when the query's scope exits."""
+    spec = REGISTRY[name]
+    spark.catalog.clearCache()
+    # r12 verdict item 5: localCheckpoint blocks are checkpoint RDDs, not
+    # CacheManager entries — clearCache never frees them, and across a
+    # 335-query session their accumulation was the prime suspect for the
+    # recorded 2.9-26 s session flappers (guide §5: storage pressure taxes
+    # later queries). The scope frees them deterministically; every timed
+    # rep recomputes from the parquet inputs, so it only RELEASES memory.
+    spark.sparkContext._jvm.System.gc()
+
+    def once() -> float:
+        t0 = time.perf_counter()
+        spec.spark(spark, at_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    with Scope(spark):
+        once()
+        runs = [once() for _ in range(3)]
+        # Sub-5 s queries flap 2-4x between committed artifacts on
+        # median-of-3 alone (r11 verdict item 3: events_top_paths,
+        # layout_compaction_checksum, timeseries_ewma...) — one stray GC
+        # pause is a large fraction of a short run. Two extra samples pin
+        # them; queries over ~5 s amortize noise already and keep the
+        # round-close suite affordable.
+        if sorted(runs)[1] < 5.0:
+            runs += [once(), once()]
+    return round(sorted(runs)[len(runs) // 2], 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Sample the machine-state provenance BEFORE the Spark session exists:
@@ -230,58 +266,10 @@ def main() -> None:
         # stall instead of averaging it in.
         return round(min(one() for _ in range(5)), 3)
 
-    def time_query(name: str, at_dir: str) -> float:
-        # One UNTIMED warm-up execution (fills codegen/broadcast/
-        # file-listing caches), then median-of-3 timed runs with the SQL
-        # cache cleared and a GC hint first so one query's garbage doesn't
-        # tax the next.
-        spec = REGISTRY[name]
-        spark.catalog.clearCache()
-        # r12 verdict item 5: localCheckpoint blocks from EARLIER queries
-        # are checkpoint RDDs, not CacheManager entries — clearCache never
-        # frees them, and they die only when driver GC collects the py4j
-        # refs. Across a 335-query session that accumulation is the prime
-        # suspect for the recorded 2.9-26 s session flappers (guide §5:
-        # storage pressure taxes later queries). Free them
-        # deterministically before each query: drop Python-side refs,
-        # then unpersist every leftover persistent RDD — nothing
-        # legitimate outlives its builder (every timed rep recomputes
-        # from the parquet inputs, so this cannot cache results across
-        # reps either; it only RELEASES memory).
-        import gc
-
-        gc.collect()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        spark.sparkContext._jvm.System.gc()
-        spec.spark(spark, at_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spec.spark(spark, at_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        med = sorted(runs)[1]
-        # Sub-5 s queries flap 2-4x between committed artifacts on
-        # median-of-3 alone (r11 verdict item 3: events_top_paths,
-        # layout_compaction_checksum, timeseries_ewma...) — one stray GC
-        # pause is a large fraction of a short run. Two extra samples
-        # pin them; queries over ~5 s amortize noise already and keep
-        # the round-close suite affordable.
-        if med < 5.0:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                spec.spark(spark, at_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            med = sorted(runs)[2]  # median-of-5
-        return round(med, 3)
-
     def run_suite(at_dir: str) -> dict[str, float]:
         # Isolation discipline (r3: a ~1.2x uniform drift from shared-JVM
         # pressure masked real regressions) lives in time_query.
-        return {name: time_query(name, at_dir) for name in HEADLINE}
+        return {name: time_query(spark, name, at_dir) for name in HEADLINE}
 
     # Calibrate IMMEDIATELY before each suite pass (r9 verdict item 2):
     # the pass-local machine speed is what normalizes that pass's timings.
@@ -355,7 +343,9 @@ def main() -> None:
             data_ratio,
             cal_main=cal_main,
             cal_base=cal_base,
-            remeasure=lambda q: (time_query(q, sf_dir), time_query(q, base_dir)),
+            remeasure=lambda q: (
+                time_query(spark, q, sf_dir), time_query(spark, q, base_dir)
+            ),
         )
         result["flagged_superlinear"] = flagged
         scaling = {

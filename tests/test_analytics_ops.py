@@ -893,27 +893,23 @@ def test_ccf_detects_planted_two_day_lead(spark, tmp_path):
 def test_k_core_retires_checkpoint_generations(spark):
     """The r8 verdict's storage-posture item: a 4-round peel must NOT
     leave one pinned localCheckpoint RDD per round. With the
-    CheckpointCycler routing, each round's retire_previous() frees the
+    materialize.Scope routing, each round's retire_previous() frees the
     prior edge-set generation once the new one materializes, so after
     the peel completes at most 2 checkpoint generations introduced by
     the call are still live (the kept final generation, plus transient
     slack for the in-flight one)."""
+    from annotations_ingester_spark.materialize import live_rdd_ids
     from annotations_ingester_spark.operators.graph import k_core_subgraph
-
-    jsc = spark.sparkContext._jsc
-
-    def live_ids():
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4), (5, 6), (4, 7), (6, 8)],
         ["src", "dst"],
     )
-    before = live_ids()
+    before = live_rdd_ids(spark)
     out = k_core_subgraph(edges, k=2, n_iters=4)
     assert out.count() == 3  # the triangle survives
-    introduced = live_ids() - before
+    introduced = live_rdd_ids(spark) - before
     assert len(introduced) <= 2, (
         f"k-core peel left {len(introduced)} checkpoint generations pinned "
-        "(expected <=2: the cycler retires each previous round)"
+        "(expected <=2: the scope retires each previous round)"
     )

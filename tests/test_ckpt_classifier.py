@@ -17,9 +17,7 @@ from annotations_ingester_spark.plans.catalog import ckpt
 
 
 def _verdict(df) -> str:
-    barriers = catalog._topmost_barriers(df)
-    eager = not barriers or bool(barriers & catalog._CKPT_HEAVY_TAILS)
-    return "eager" if eager else "lazy"
+    return "eager" if catalog.ckpt_eager(df) else "lazy"
 
 
 def test_narrow_subtree_classified_eager(spark):

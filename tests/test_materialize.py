@@ -1,0 +1,85 @@
+"""Block lifetime (annotations_ingester_spark/materialize.py): a query run
+inside a ``Scope`` leaves no persistent RDD behind and returns the same
+rows; scopes nest and release on an exception; only materialize.py reads
+the context's persistent-RDD map."""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+import pytest
+
+from annotations_ingester_spark.materialize import Scope, live_rdd_ids, release
+from annotations_ingester_spark.plans.queries import REGISTRY
+
+REPO = Path(__file__).resolve().parents[1]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "er_entity_clusters",
+        "bm25_match_ranking",
+        "stats_esd_outliers",
+        "graph_degree_assortativity",
+    ],
+)
+def test_scoped_query_frees_its_blocks_and_keeps_its_rows(spark, sf_dir, name):
+    build = REGISTRY[name].spark
+    before = live_rdd_ids(spark)
+    with Scope(spark):
+        scoped = build(spark, sf_dir).collect()
+    assert live_rdd_ids(spark) == before
+
+    unscoped = build(spark, sf_dir).collect()
+    release(spark, live_rdd_ids(spark) - before)
+    assert sorted(map(repr, scoped)) == sorted(map(repr, unscoped))
+
+
+def test_checkpoint_from_before_an_inner_scope_survives_it(spark):
+    before = live_rdd_ids(spark)
+    with Scope(spark):
+        outer = spark.range(100).localCheckpoint(eager=True)
+        with Scope(spark):
+            inner = spark.range(10).localCheckpoint(eager=True)
+            assert inner.count() == 10
+        assert outer.selectExpr("sum(id)").first()[0] == 4950
+    assert live_rdd_ids(spark) == before
+
+
+def test_scope_exited_by_an_exception_releases_its_blocks(spark):
+    before = live_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="boom"):
+        with Scope(spark):
+            spark.range(10).localCheckpoint(eager=True)
+            assert live_rdd_ids(spark) - before
+            raise RuntimeError("boom")
+    assert live_rdd_ids(spark) == before
+
+
+def test_cli_run_leaves_no_persistent_rdd(spark, tmp_path):
+    from annotations_ingester_spark.__main__ import main
+    from tests.test_cli import _cfg, _corpus
+
+    src = _corpus(spark, tmp_path)
+    before = live_rdd_ids(spark)
+    assert main(["--config", _cfg(tmp_path, src, str(tmp_path / "sink"))]) == 0
+    assert live_rdd_ids(spark) == before
+
+
+def test_only_materialize_reads_the_persistent_rdd_map():
+    """Block lifetime has one owner: every other module frees blocks by
+    opening a Scope, never by walking the context's RDD map."""
+    files = [
+        *(REPO / "annotations_ingester_spark").rglob("*.py"),
+        *(REPO / "tools").rglob("*.py"),
+        *(REPO / "tests").rglob("*.py"),
+        REPO / "bench.py",
+    ]
+    owners = {Path(__file__).resolve(), REPO / "annotations_ingester_spark" / "materialize.py"}
+    offenders = sorted(
+        f.relative_to(REPO).as_posix()
+        for f in files
+        if f.resolve() not in owners and "getPersistentRDDs" in f.read_text()
+    )
+    assert not offenders, f"read the persistent-RDD map outside materialize.py: {offenders}"

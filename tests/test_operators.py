@@ -416,14 +416,12 @@ def test_kmeans_fit_keeps_empty_clusters_and_rejects_empty_init(spark):
 
 
 def test_iterative_loops_bound_checkpoint_storage(spark):
-    """CheckpointCycler must keep ≤2 generations of localCheckpoint blocks
+    """The loop's Scope must keep ≤2 generations of localCheckpoint blocks
     live — not one per round (round-3 advice: cluster.py accumulation)."""
+    from annotations_ingester_spark.materialize import live_rdd_ids
     from annotations_ingester_spark.operators.cluster import connected_components
 
-    def live_persistent_rdds():
-        return len(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-    before = live_persistent_rdds()
+    before = len(live_rdd_ids(spark))
     # 64-node chain: ~6 star-contraction rounds, each one a checkpoint
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
@@ -431,7 +429,7 @@ def test_iterative_loops_bound_checkpoint_storage(spark):
     labels, rounds = connected_components(edges, return_rounds=True)
     assert labels.count() == 64
     assert rounds >= 3  # the loop really iterated (several checkpoints made)
-    after = live_persistent_rdds()
+    after = len(live_rdd_ids(spark))
     # only the final generation may remain live (+1 slack for the initial
     # canonical checkpoint of a concurrent session user)
     assert after - before <= 2, f"checkpoint generations leaked: {after - before}"

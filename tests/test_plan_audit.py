@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from annotations_ingester_spark.materialize import Scope
 from annotations_ingester_spark.plans.queries import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -394,12 +395,14 @@ STREAMING = {
 
 @pytest.fixture(scope="module")
 def plans(spark):
+    # only plan strings are kept, so the builders' checkpoints are freed
     out = {}
-    for name, spec in REGISTRY.items():
-        if name in STREAMING:
-            continue
-        df = spec.spark(spark, SF)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
+    with Scope(spark):
+        for name, spec in REGISTRY.items():
+            if name in STREAMING:
+                continue
+            df = spec.spark(spark, SF)
+            out[name] = df._jdf.queryExecution().executedPlan().toString()
     return out
 
 

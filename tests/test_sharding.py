@@ -68,6 +68,16 @@ def test_rerun_yields_identical_manifest_and_shards(spark, tmp_path):
     assert sorted(recomputed.collect(), key=key) == sorted(m1.collect(), key=key)
 
 
+def test_export_leaves_no_persistent_rdd(spark, tmp_path):
+    """The assignment checkpoint dies inside export_shards; its blocks
+    must not outlive the call."""
+    from annotations_ingester_spark.materialize import live_rdd_ids
+
+    before = live_rdd_ids(spark)
+    export_shards(_docs(spark), str(tmp_path / "run"), SHARD_BYTES).collect()
+    assert live_rdd_ids(spark) == before
+
+
 def test_manifest_checksum_detects_payload_swap(spark):
     """Two docs swapping text keeps sizes/counts identical — only the
     content-addressed checksum can tell. It must."""

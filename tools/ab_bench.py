@@ -1,6 +1,7 @@
-"""A/B measurement harness: bench-identical per-query timing (noop sink,
-median-of-3, median-of-5 under 5 s) over a named subset, with optional
-runtime SQL conf overrides — for guide-§1 measure-first experiments.
+"""A/B measurement harness: per-query timing through bench.time_query (noop
+sink, median-of-3, median-of-5 under 5 s, blocks freed per query) over a
+named subset, with optional runtime SQL conf overrides — for guide-§1
+measure-first experiments.
 
 Usage:
   python tools/ab_bench.py name1 name2 ... [--conf k=v[,k=v...]] [--out F]
@@ -12,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -35,36 +35,17 @@ def main() -> None:
     names = argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from annotations_ingester_spark.plans.queries import REGISTRY
     from annotations_ingester_spark.session import get_spark
+    from bench import time_query
 
     spark = get_spark("ab_bench")
     for k, v in conf.items():
         spark.conf.set(k, v)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    def time_query(name: str) -> float:
-        spec = REGISTRY[name]
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        med = sorted(runs)[1]
-        if med < 5.0:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            med = sorted(runs)[2]
-        return round(med, 3)
-
     timings = {}
     for n in names:
-        timings[n] = time_query(n)
+        timings[n] = time_query(spark, n, sf_dir)
         print(f"{n:44s} {timings[n]:7.3f}", flush=True)
     print(f"TOTAL {sum(timings.values()):.2f}s over {len(timings)} queries")
     if out:

@@ -68,6 +68,7 @@ def run(sf_dir: str, names: list[str] | None = None, emit: str | None = None) ->
     import duckdb
 
     sys.path.insert(0, ".")
+    from annotations_ingester_spark.materialize import Scope
     from annotations_ingester_spark.plans.queries import EXPECTED_MIN_QUERIES, REGISTRY
     from annotations_ingester_spark.session import get_spark
 
@@ -94,7 +95,8 @@ def run(sf_dir: str, names: list[str] | None = None, emit: str | None = None) ->
             continue
         t0 = time.time()
         try:
-            sdf = spec.spark(spark, sf_dir).toPandas()
+            with Scope(spark):
+                sdf = spec.spark(spark, sf_dir).toPandas()
         except Exception as exc:
             print(f"FAIL {name}: spark error: {exc}")
             failures += 1

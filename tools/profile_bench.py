@@ -31,6 +31,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from bench import HEADLINE
+    from annotations_ingester_spark.materialize import Scope
     from annotations_ingester_spark.plans.queries import REGISTRY
     from annotations_ingester_spark.session import get_spark
 
@@ -44,27 +45,29 @@ def main() -> None:
         spec = REGISTRY[name]
         spark.catalog.clearCache()
         sc._jvm.System.gc()
-        # warm-up (uncounted)
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with Scope(spark):
+            # warm-up (uncounted)
+            spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        t_build = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            df = spec.spark(spark, sf_dir)
+            t_build = time.perf_counter() - t0
 
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t_exec1 = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t_exec1 = time.perf_counter() - t0
 
-        # second full cycle to match bench's repeated-build methodology
-        t0 = time.perf_counter()
-        df2 = spec.spark(spark, sf_dir)
-        df2.write.format("noop").mode("overwrite").save()
-        t_cycle2 = time.perf_counter() - t0
+            # second full cycle to match bench's repeated-build methodology
+            t0 = time.perf_counter()
+            df2 = spec.spark(spark, sf_dir)
+            df2.write.format("noop").mode("overwrite").save()
+            t_cycle2 = time.perf_counter() - t0
 
-        try:
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception:
-            plan = ""
+            try:
+                plan = df._jdf.queryExecution().executedPlan().toString()
+            except Exception:
+                plan = ""
+
         feats = {
             "exchange": plan.count("Exchange"),
             "aqeread": plan.count("AQEShuffleRead"),

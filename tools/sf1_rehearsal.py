@@ -1,7 +1,7 @@
 """sf0.1 -> sf1 scaling rehearsal for named catalog queries: per query,
-one untimed warm-up then median-of-3 noop-sink timed runs at both scale
-factors, printed as the BENCH_SCALING.md row format. Run it on an
-otherwise-idle machine (concurrent Spark sessions skew timings ~2x).
+bench.time_query's noop-sink timing at both scale factors, printed as the
+BENCH_SCALING.md row format. Run it on an otherwise-idle machine
+(concurrent Spark sessions skew timings ~2x).
 
 Usage: python tools/sf1_rehearsal.py <query> [...]
   (env: SPARK_GRAFT_SF01_DIR=/root/testdata/sf0.1,
@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -27,6 +26,7 @@ def main() -> int:
     hi = os.environ.get("SPARK_GRAFT_SF1_DIR", "./testdata_sf1")
     from annotations_ingester_spark.plans.queries import REGISTRY
     from annotations_ingester_spark.session import get_spark
+    from bench import time_query
 
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
@@ -35,23 +35,11 @@ def main() -> int:
     spark = get_spark("sf1-rehearsal")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm JVM
 
-    def timed(name: str, at: str) -> float:
-        spec = REGISTRY[name]
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        spec.spark(spark, at).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spec.spark(spark, at).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        return sorted(runs)[1]
-
     print("| query | sf0.1 | sf1 | ratio @10x data |")
     print("|---|---|---|---|")
     for n in names:
-        a = timed(n, lo)
-        b = timed(n, hi)
+        a = time_query(spark, n, lo)
+        b = time_query(spark, n, hi)
         ratio = b / a if a > 0 else float("nan")
         print(f"| `{n}` | {a:.2f} s | {b:.2f} s | {ratio:.1f} |")
     return 0
