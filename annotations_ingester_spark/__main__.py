@@ -4,8 +4,12 @@ Mirrors the reference's CLI (reference: ingester/__main__.py:34-45 arg
 parsing + config validation; :128-129 ``index_range`` execution) but wires
 a Spark plan instead of a thread pool:
 
-  config → PipelineConfig → source read → AnnotationPipeline.windowed/flat
-         → sink write (parquet or Elasticsearch backend).
+  config → PipelineConfig → source.read → [range_filter]
+         → AnnotationPipeline.flat/nested → sink.write
+
+where ``source`` and ``sink`` are the modules ``sources.BACKENDS`` maps the
+two configured backends to. Batch, ``--segmented`` and ``--stream`` run the
+same plan; they differ only in what feeds it and how often it is written.
 """
 
 from __future__ import annotations
@@ -33,8 +37,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from annotations_ingester_spark.annotator.service import HttpNlpClient
     from annotations_ingester_spark.config import PipelineConfig
+    from annotations_ingester_spark.operators.filters import range_filter
     from annotations_ingester_spark.plans.pipeline import AnnotationPipeline
     from annotations_ingester_spark.session import get_spark
+    from annotations_ingester_spark.sources import BACKENDS, parquet
     from annotations_ingester_spark.utils import check_url_available
 
     cfg = PipelineConfig.from_yaml(args.config)
@@ -53,29 +59,39 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     date_start = args.date_start or cfg.date_start
     date_end = args.date_end or cfg.date_end
+    dated = bool(date_start and date_end)
+    nested = cfg.ingest_mode == "nested"
+    source, sink = BACKENDS[cfg.source.backend], BACKENDS[cfg.sink.backend]
+
+    if nested and (args.segmented or args.stream):
+        # both write flat rows; silently running nested any other way would
+        # betray the flag — refuse loudly (same philosophy as the
+        # date-format refusal above)
+        print(
+            "--segmented and --stream are not supported with ingest-mode=nested; "
+            "run the whole span (the J1 skip-processed anti-join makes reruns "
+            "idempotent)",
+            file=sys.stderr,
+        )
+        return 2
+    if args.stream and source is not parquet:
+        print("--stream requires a file-based (parquet) source backend", file=sys.stderr)
+        return 2
 
     nlp = cfg.nlp
     fake_mode = bool(nlp.endpoints) and nlp.endpoints[0].startswith("fake://")
 
-    # S11 pre-flight: refuse to start against a dead NLP service
+    # S11 pre-flight: refuse to start against a dead NLP service or a dead
+    # (or incompatible) source/sink before the Spark session starts
     if nlp.endpoints and not fake_mode and not check_url_available(nlp.endpoints):
         print("NLP endpoints unavailable", file=sys.stderr)
         return 2
-
-    # S11 pre-flight for the jar-free ES REST backend: the version
-    # handshake (GET / + the 8.x X-Elastic-Product header check) fails
-    # fast on an unreachable, pre-7.x, or lookalike server before any
-    # Spark job is planned — the reference's check_url_available posture
-    # (utils.py:7-14) upgraded to the official client handshake.
-    for end in (cfg.source, cfg.sink):
-        if end.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import EsRestClient
-
-            try:
-                EsRestClient(end).verify_compat()
-            except Exception as exc:
-                print(f"Elasticsearch endpoint check failed: {exc}", file=sys.stderr)
-                return 2
+    for backend, conf in ((source, cfg.source), (sink, cfg.sink)):
+        try:
+            backend.check(conf)
+        except Exception as exc:
+            print(f"{conf.backend} endpoint check failed: {exc}", file=sys.stderr)
+            return 2
 
     spark = get_spark("annotations_ingester_spark")
 
@@ -105,293 +121,91 @@ def main(argv: list[str] | None = None) -> int:
         docid_field=cfg.docid_field,
         persist_fields=cfg.persist_fields,
         mode="gate" if cfg.nlp.mode == "gate-nlp" else "medcat",
-        date_field=cfg.date_field,
         ann_id_field=cfg.annotation_id_field,
     )
+    split = cfg.split_index_by_field or None
 
-    if cfg.source.backend == "elasticsearch":
-        from annotations_ingester_spark.sources.elasticsearch import read_es
+    def scope(docs, start, end):
+        return range_filter(docs, cfg.date_field, start, end) if dated else docs
 
-        docs = read_es(spark, cfg.source)
-    elif cfg.source.backend == "elasticsearch-rest":
-        # jar-free fallback: sliced-scroll parallel read; schema from a
-        # bounded sample (ES dynamic-mapping parity). A configured date
-        # span pushes down into the scroll query (S3 parity,
-        # es_common.py:303-330) — out-of-range docs never leave the
-        # cluster; segmented runs re-filter Spark-side within the span
-        from annotations_ingester_spark.sources.es_rest import (
-            infer_es_rest_schema,
-            read_es_rest,
+    def write(out) -> None:
+        sink.write(
+            out,
+            cfg.sink,
+            mapping_id="ann_doc_id" if nested else "row_id",
+            # a W4 doc row replaces the stored one (the merge happened
+            # engine-side); W3 same-index upserts the flat rows
+            upsert=nested or cfg.ingest_mode == "same-index",
+            split_suffix_field="index_suffix" if split and not nested else None,
         )
 
-        rng = None
-        if date_start and date_end:
-            rng = {
-                "range": {
-                    cfg.date_field: {
-                        "gte": date_start,
-                        "lte": date_end,
-                        "format": "yyyy-MM-dd",
-                    }
-                }
+    # a configured span is also pushed down into sources that take a query
+    # (S3 parity, es_common.py:303-330); range_filter re-applies it, so
+    # segments and query-less sources are scoped the same way
+    span = None
+    if dated:
+        span = {
+            "range": {
+                cfg.date_field: {"gte": date_start, "lte": date_end, "format": "yyyy-MM-dd"}
             }
-        docs = read_es_rest(
-            spark, cfg.source, infer_es_rest_schema(spark, cfg.source), query=rng
-        )
-    else:
-        docs = spark.read.parquet(cfg.source.index_name)
-
-    def sink_processed_ids():
-        """J1 resume (reference skip-processed-doc-check, config.yml:68 /
-        annotations_indexer.py:309-324): distinct already-written doc ids
-        read back from the sink; None on first run. The anti-join
-        broadcasts when small, shuffles both sides keyed on the id
-        otherwise — never a driver-side id list."""
-        if not cfg.skip_processed_doc_check:
-            return None
-        from pyspark.sql import functions as Fn
-
-        from annotations_ingester_spark.sinks.writers import _is_path_missing
-
-        try:
-            if cfg.sink.backend == "elasticsearch":
-                from annotations_ingester_spark.sources.elasticsearch import read_es as _r
-
-                written = _r(spark, cfg.sink)
-            elif cfg.sink.backend == "elasticsearch-rest":
-                from pyspark.sql import types as T
-
-                from annotations_ingester_spark.sources.es_rest import (
-                    EsRestClient,
-                    read_es_rest,
-                )
-
-                # resume needs ONLY the id column: a 1-doc sample picks the
-                # column name and type, then a narrow sliced-scroll read
-                # fetches just that field (no full-schema inference — the
-                # annotation rows carry map-typed fields that don't need to
-                # round-trip here)
-                sample = EsRestClient(cfg.sink).search_page(size=1)
-                if not sample:
-                    return None  # absent or empty sink index — first run
-                for done_col in (f"meta.{cfg.docid_field}", cfg.docid_field):
-                    if done_col in sample[0]:
-                        typ = (
-                            T.LongType()
-                            if isinstance(sample[0][done_col], int)
-                            else T.StringType()
-                        )
-                        written = read_es_rest(
-                            spark,
-                            cfg.sink,
-                            T.StructType([T.StructField(done_col, typ)]),
-                        )
-                        return written.select(
-                            Fn.col(f"`{done_col}`").alias(cfg.docid_field)
-                        ).distinct()
-                return None
-            else:
-                written = spark.read.parquet(cfg.sink.index_name)
-        except Exception as exc:
-            # ONLY sink-never-written counts as first run; a corrupt or
-            # unreadable sink must propagate — treating it as first-run
-            # would silently reprocess (and, on parquet append, duplicate)
-            # the whole corpus
-            # an absent or empty REST sink index is equally a first run
-            if (
-                _is_path_missing(exc)
-                or "index_not_found" in str(exc)
-                or "returned no documents" in str(exc)
-            ):
-                return None
-            raise
-        # flat sinks carry the doc id as meta.<docid>; the W4 nested sink
-        # keeps the bare docid groupBy key
-        for done_col in (f"meta.{cfg.docid_field}", cfg.docid_field):
-            if done_col in written.columns:
-                return written.select(
-                    Fn.col(f"`{done_col}`").alias(cfg.docid_field)
-                ).distinct()
-        return None
-
-    def write_out(out) -> None:
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import write_es
-
-            write_es(
-                out,
-                cfg.sink,
-                split_suffix_field="index_suffix" if cfg.split_index_by_field else None,
-                upsert=cfg.ingest_mode == "same-index",
-            )
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            write_es_rest(
-                out,
-                cfg.sink,
-                split_suffix_field="index_suffix" if cfg.split_index_by_field else None,
-                upsert=cfg.ingest_mode == "same-index",
-            )
-        elif cfg.split_index_by_field:
-            from annotations_ingester_spark.sinks.writers import write_partitioned
-
-            write_partitioned(out, cfg.sink.index_name)  # W2 physical partitioning
-        else:
-            out.write.mode("append").parquet(cfg.sink.index_name)
+        }
+    docs = source.read(spark, cfg.source, query=span)
 
     if args.stream:
-        # S7: the same flat plan as a checkpointed availableNow stream —
-        # deterministic row ids make micro-batch replay an idempotent upsert
+        # S7: the batch flat plan over a checkpointed availableNow file
+        # stream. The checkpoint is the stream's resume ledger (no J1
+        # read); deterministic row ids make micro-batch replay an
+        # idempotent upsert.
+        from annotations_ingester_spark.functions.names import format_index_name
         from annotations_ingester_spark.streaming.pipeline import (
+            file_stream,
             run_stream_foreach_batch,
-            stream_annotations,
         )
 
-        if cfg.source.backend == "elasticsearch":
-            print("--stream requires a file-based source backend", file=sys.stderr)
-            return 2
-        schema = spark.read.parquet(cfg.source.index_name).schema
-        out = stream_annotations(
-            spark,
-            cfg.source.index_name,
-            schema,
-            annotator,
-            text_field=cfg.text_field,
-            docid_field=cfg.docid_field,
-            mode="gate" if nlp.mode == "gate-nlp" else "medcat",
-        )
+        stream = file_stream(spark, cfg.source.index_name, docs.schema)
+        out = pipe.flat(scope(stream, date_start, date_end), split_by_field=split, dedup=False)
         if args.dry_run:
             out.explain("formatted")
             return 0
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import es_foreach_batch
-
-            batch_fn = es_foreach_batch(cfg.sink, upsert=cfg.ingest_mode == "same-index")
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            def batch_fn(batch, epoch_id):
-                # deterministic row ids make micro-batch replay idempotent
-                write_es_rest(batch, cfg.sink, upsert=cfg.ingest_mode == "same-index")
-        else:
-
-            def batch_fn(batch, epoch_id):
-                batch.write.mode("append").parquet(cfg.sink.index_name)
-
-        # checkpoint placement: path-backed sinks keep it beside the sink;
-        # ES sinks have no filesystem path, so anchor it beside the SOURCE
-        # path (always file-based in stream mode), tagged with the
-        # normalized index name so two streams into different indices
-        # never share offsets
-        if cfg.sink.backend.startswith("elasticsearch"):
-            from annotations_ingester_spark.functions.names import format_index_name
-
-            ckpt = (
-                cfg.source.index_name.rstrip("/")
-                + "_ckpt_"
-                + format_index_name(cfg.sink.index_name)
-            )
-        else:
-            ckpt = cfg.sink.index_name.rstrip("/") + "_ckpt"
-        run_stream_foreach_batch(out, batch_fn, ckpt)
-        return 0
-
-    if cfg.ingest_mode == "nested":
-        # W4: one row per document with an annotations array (reference
-        # doc_{id}_annotations docs, annotations_indexer.py:166-200)
-        from annotations_ingester_spark.operators.filters import range_filter
-
-        if args.segmented:
-            # the segment loop writes flat columns and tracks flat overlap
-            # semantics; silently running nested un-segmented would betray
-            # the flag — refuse loudly (same philosophy as the date-format
-            # refusal above)
-            print(
-                "--segmented is not supported with ingest-mode=nested; "
-                "run the whole span (the J1 skip-processed anti-join "
-                "makes reruns idempotent)",
-                file=sys.stderr,
-            )
-            return 2
-        scoped = (
-            range_filter(docs, cfg.date_field, date_start, date_end)
-            if date_start and date_end
-            else docs
+        # beside the (file) source, tagged with the normalized sink name so
+        # two streams into different sinks never share offsets
+        ckpt = (
+            cfg.source.index_name.rstrip("/")
+            + "_ckpt_"
+            + format_index_name(cfg.sink.index_name)
         )
-        out = pipe.nested(scoped, processed_ids=sink_processed_ids())
-        if args.dry_run:
-            out.explain("formatted")
-            return 0
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import write_es
-
-            write_es(out, cfg.sink, mapping_id="ann_doc_id", scripted_upsert=True)
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            # doc_as_upsert update replaces the annotations array like the
-            # scripted upsert (merge already happened engine-side, W4)
-            write_es_rest(out, cfg.sink, mapping_id="ann_doc_id", upsert=True)
-        else:
-            from annotations_ingester_spark.sinks.writers import write_nested
-
-            write_nested(out, cfg.sink.index_name)
+        run_stream_foreach_batch(out, lambda batch, epoch_id: write(batch), ckpt)
         return 0
 
-    if args.segmented and date_start and date_end:
-        # reference driver-loop parity: one inclusive range scan per
-        # segment; consecutive segments share their boundary date, and the
-        # J1 anti-join against already-written ids absorbs the overlap —
-        # so segmented == whole-span (certified in tests/test_cli.py)
-        from annotations_ingester_spark.operators.filters import range_filter
+    processed = (
+        sink.done_ids(spark, cfg.sink, cfg.docid_field)
+        if cfg.skip_processed_doc_check
+        else None
+    )
+    segments = [(date_start, date_end)]
+    if args.segmented and dated:
+        # B1 reference driver-loop parity (annotations_indexer.py:847-861):
+        # one inclusive range scan per segment
         from annotations_ingester_spark.operators.windows import date_windows
 
-        processed = sink_processed_ids()
-        for seg_start, seg_end in date_windows(
-            date_start, date_end, cfg.batch_interval_days
-        ):
-            scoped = range_filter(docs, cfg.date_field, seg_start, seg_end)
-            seg_out = pipe.flat(
-                scoped,
-                split_by_field=cfg.split_index_by_field or None,
-                processed_ids=processed,
-            )
-            if args.dry_run:
-                seg_out.explain("formatted")
-                return 0
-            write_out(seg_out)
-            # everything up to this segment's end is now in the sink; only
-            # the shared boundary date overlaps the next segment
-            processed = range_filter(docs, cfg.date_field, date_start, seg_end).select(
-                cfg.docid_field
-            )
-        return 0
-
-    if date_start and date_end:
-        # same column surface as the --segmented loop: a dated whole-span run
-        # with split-index-by-field configured must also carry index_suffix,
-        # or write_out crashes on the missing partition column
-        out = pipe.windowed(
-            docs,
-            date_start,
-            date_end,
-            cfg.batch_interval_days,
-            split_by_field=cfg.split_index_by_field or None,
-            processed_ids=sink_processed_ids(),
-        )
-    else:
-        out = pipe.flat(
-            docs,
-            split_by_field=cfg.split_index_by_field or None,
-            processed_ids=sink_processed_ids(),
-        )
-
-    if args.dry_run:
-        out.explain("formatted")
-        return 0
-
-    write_out(out)
+        segments = date_windows(date_start, date_end, cfg.batch_interval_days)
+    for seg_start, seg_end in segments:
+        scoped = scope(docs, seg_start, seg_end)
+        if nested:
+            # W4: one row per document with an annotations array (reference
+            # doc_{id}_annotations docs, annotations_indexer.py:166-200)
+            out = pipe.nested(scoped, processed_ids=processed)
+        else:
+            out = pipe.flat(scoped, split_by_field=split, processed_ids=processed)
+        if args.dry_run:
+            out.explain("formatted")
+            return 0
+        write(out)
+        # everything up to this segment's end is now in the sink; only the
+        # shared boundary date overlaps the next segment, and the J1
+        # anti-join absorbs it — so segmented == whole-span (certified in
+        # tests/test_cli.py)
+        processed = scope(docs, date_start, seg_end).select(cfg.docid_field)
     return 0
 
 

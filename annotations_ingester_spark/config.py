@@ -24,12 +24,12 @@ REQUIRED_TOP_LEVEL = ("source", "nlp-service", "sink", "mapping")
 class ConnectorConfig:
     """Source/sink connector options (reference: ingester/es_common.py:14-43).
 
-    ``backend`` selects parquet (tests/local) or elasticsearch (production);
-    both implement the same reader/writer interface in ``sources``/``sinks``.
+    ``backend`` is a key of ``sources.BACKENDS``, the table that maps each
+    name to its module: parquet (tests/local), elasticsearch (the connector
+    jar) or elasticsearch-rest (the jar-free stdlib REST fallback). Every
+    module has the same ``check``/``read``/``done_ids``/``write``.
     """
 
-    # "parquet" | "elasticsearch" (connector jar) | "elasticsearch-rest"
-    # (jar-free stdlib REST fallback, sources/es_rest.py)
     backend: str = "parquet"
     hosts: list[str] = field(default_factory=list)
     index_name: str = ""  # ES index or parquet path
@@ -100,12 +100,20 @@ class PipelineConfig:
         batch = src_map.get("batch", {}) or {}
         nlp = params.get("nlp-service", {}) or {}
 
+        # imported here: the backend modules import this one
+        from annotations_ingester_spark.sources import BACKENDS
+
         def conn(section: dict[str, Any]) -> ConnectorConfig:
             """Accepts BOTH the reference's canonical config.yml shape
             (``es.credentials`` / ``es.extra-params`` — config/config.yml:1-33)
             and this engine's flattened ``security`` block, so a reference
             config file loads unchanged."""
             sec = section or {}
+            backend = sec.get("backend", "elasticsearch" if "es" in sec else "parquet")
+            if backend not in BACKENDS:
+                raise ValueError(
+                    f"unknown backend {backend!r}; expected one of {sorted(BACKENDS)}"
+                )
             es = sec.get("es", sec)
             security = es.get("security", {}) or {}
             creds = es.get("credentials", {}) or {}
@@ -114,7 +122,7 @@ class PipelineConfig:
             if not creds.get("use-api-key", True):
                 api_key = None  # reference flag: basic auth wins
             return ConnectorConfig(
-                backend=sec.get("backend", "elasticsearch" if "es" in sec else "parquet"),
+                backend=backend,
                 hosts=es.get("hosts", []) or [],
                 index_name=es.get("index-name", es.get("path", "")) or "",
                 username=creds.get("username") or security.get("elastic-user"),

@@ -54,3 +54,14 @@ def skip_processed(
         if probe <= broadcast_threshold_rows:
             keys = F.broadcast(keys)
     return source.join(keys, on=docid_field, how="left_anti")
+
+
+def sink_doc_ids(written: DataFrame, docid_field: str) -> DataFrame | None:
+    """The J1 processed-id set of a sink frame: its distinct doc ids under
+    ``docid_field``, or None when it carries no id column. Flat sinks carry
+    the id as ``meta.<docid>``; the W4 nested sink keeps the bare docid
+    groupBy key."""
+    for col in (f"meta.{docid_field}", docid_field):
+        if col in written.columns:
+            return written.select(F.col(f"`{col}`").alias(docid_field)).distinct()
+    return None

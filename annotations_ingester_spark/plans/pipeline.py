@@ -31,7 +31,6 @@ from annotations_ingester_spark.operators.explode import (
     split_index_suffix,
 )
 from annotations_ingester_spark.operators.filters import (
-    range_filter,
     response_shape_guard,
     valid_text_filter,
 )
@@ -116,7 +115,6 @@ class AnnotationPipeline:
         docid_field: str = "doc_id",
         persist_fields: list[str] | None = None,
         mode: str = "medcat",
-        date_field: str | None = None,
         ann_id_field: str = "id",
     ) -> None:
         self.annotator_factory = annotator_factory
@@ -124,7 +122,6 @@ class AnnotationPipeline:
         self.docid_field = docid_field
         self.persist_fields = persist_fields or [docid_field]
         self.mode = mode
-        self.date_field = date_field
         self.ann_id_field = ann_id_field
 
     def annotated(self, docs: DataFrame, processed_ids: DataFrame | None = None) -> DataFrame:
@@ -145,27 +142,6 @@ class AnnotationPipeline:
             ann_id_field=self.ann_id_field,
             **kw,
         )
-
-    def windowed(
-        self,
-        docs: DataFrame,
-        date_start: str,
-        date_end: str,
-        interval_days: int = 30,
-        **kw,
-    ) -> DataFrame:
-        """B1-scoped run: restrict the corpus to the window range first
-        (pushes to the scan), then annotate. One plan, no driver loop.
-
-        ``**kw`` (e.g. ``split_by_field``) is forwarded to :meth:`flat` so a
-        dated whole-span run produces the same columns as the segmented
-        driver loop — without it, split-index-by-field plus a date range
-        crashed in write_out on the missing ``index_suffix`` column.
-        """
-        if not self.date_field:
-            raise ValueError("date_field not configured")
-        scoped = range_filter(docs, self.date_field, date_start, date_end)
-        return self.flat(scoped, **kw)
 
     def nested(
         self, docs: DataFrame, processed_ids: DataFrame | None = None

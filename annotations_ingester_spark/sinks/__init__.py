@@ -1,10 +1,6 @@
-"""Sink-side operators (SURVEY §2.8, W1-W4): writers with semantics."""
+"""Sink-side merge operators (SURVEY §2.8, W3/W4); plain writes are each
+backend's ``write`` in ``sources``."""
 
-from annotations_ingester_spark.sinks.writers import (
-    merge_annotation_sets,
-    write_flat,
-    write_nested,
-    write_partitioned,
-)
+from annotations_ingester_spark.sinks.writers import merge_annotation_sets
 
-__all__ = ["write_flat", "write_partitioned", "write_nested", "merge_annotation_sets"]
+__all__ = ["merge_annotation_sets"]

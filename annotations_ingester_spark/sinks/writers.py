@@ -1,19 +1,15 @@
-"""Sink writers W1-W4 (SURVEY §2.8) over the parquet backend.
+"""Sink-side merge semantics (SURVEY §2.8) that go beyond one backend
+write.
 
-Elasticsearch equivalents (the production backend) are option-mapped in
-``sources.elasticsearch``; these writers implement identical semantics on
-parquet so the whole pipeline is testable hermetically:
+The plain W1/W2/W4 writes are each backend's ``write`` in ``sources``
+(``sources.BACKENDS``): parquet appends (``partitionBy`` for a W2 split
+sink), the connector and the REST fallback bulk-index with deterministic
+ids. This module keeps the merges a parquet append cannot express:
 
-- W1 flat append       → plain parquet append (deterministic row_id ⇒
-  idempotent rewrite, reference: annotations_indexer.py:201-227).
-- W2 split-by-field    → ``partitionBy(index_suffix)`` (reference derives a
-  per-entity index suffix, annotations_indexer.py:214-218).
-- W4 nested per-doc    → one row per doc with an annotations array
-  (reference: doc_{id}_annotations, annotations_indexer.py:166-200).
-- W3 same-index merge  → read-modify-write union+dedup of annotation sets
-  (reference: painless scripted upsert, annotations_indexer.py:148-165);
-  here a deterministic merge helper used by batch rewrites and
-  streaming ``foreachBatch``.
+- ``merge_annotation_sets`` → read-modify-write union+dedup of annotation
+  sets (reference: painless scripted upsert, annotations_indexer.py:148-165);
+- ``upsert_nested_foreach_batch`` → the W4 per-doc upsert of a streaming
+  ``foreachBatch`` on a bucketed parquet sink.
 """
 
 from __future__ import annotations
@@ -21,26 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def write_flat(df: DataFrame, path: str, mode: str = "append") -> None:
-    """W1: flat annotation rows. At 100 TB: writers scale with tasks; no
-    shuffle is introduced by the write itself."""
-    df.write.mode(mode).parquet(path)
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_col: str = "index_suffix", mode: str = "append"
-) -> None:
-    """W2: per-type physical partitioning — the parquet twin of the ES
-    dynamic resource pattern ``sink-{type}``. Readers of one type prune
-    all other partitions (partition pruning replaces the reference's
-    ``base-*`` wildcard search, es_common.py:141-142)."""
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def write_nested(df: DataFrame, path: str, mode: str = "append") -> None:
-    """W4: per-doc combined rows (annotations array column)."""
-    df.write.mode(mode).parquet(path)
+from annotations_ingester_spark.sources.parquet import _is_path_missing
 
 
 def merge_annotation_sets(
@@ -60,15 +37,6 @@ def merge_annotation_sets(
 
 
 NUM_UPSERT_BUCKETS = 64
-
-
-def _is_path_missing(exc: Exception) -> bool:
-    """True only for the 'sink has never been written' AnalysisException.
-    Anything else (corrupt footer, FS hiccup, permission error) must
-    propagate — treating it as first-batch would silently replace the whole
-    sink with the current micro-batch."""
-    msg = str(exc)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
 
 
 def upsert_nested_foreach_batch(

@@ -1,11 +1,21 @@
-"""Source connectors (SURVEY §2.1) behind one reader interface."""
+"""Source/sink backends (SURVEY §2.1), one module per
+``ConnectorConfig.backend`` value. Each module has the same functions,
+with the same signatures:
 
-from annotations_ingester_spark.sources.parquet import read_table
-from annotations_ingester_spark.sources.elasticsearch import (
-    es_read_options,
-    es_write_options,
-    read_es,
-    write_es,
-)
+- ``check(conf)``: reach the endpoint before the Spark session starts;
+- ``read(spark, conf, query=None)``: the source frame;
+- ``done_ids(spark, conf, docid_field)``: the distinct doc ids already in
+  the sink, or None on a first run (each backend decides what "never
+  written" looks like);
+- ``write(df, conf, *, mapping_id, upsert, split_suffix_field)``.
+"""
 
-__all__ = ["read_table", "es_read_options", "es_write_options", "read_es", "write_es"]
+from annotations_ingester_spark.sources import elasticsearch, es_rest, parquet
+
+BACKENDS = {
+    "parquet": parquet,
+    "elasticsearch": elasticsearch,  # the connector jar
+    "elasticsearch-rest": es_rest,  # the jar-free stdlib REST fallback
+}
+
+__all__ = ["BACKENDS"]

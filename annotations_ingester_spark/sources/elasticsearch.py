@@ -15,16 +15,20 @@ ES client wiring, ingester/es_common.py:49-85) onto the public
 - W2 split sink     → dynamic resource pattern ``{index}-{suffix_field}``
 - W3 same-index     → ``es.write.operation=upsert``
 
-The connector jar is not bundled in this environment; ``read_es``/``write_es``
-raise a clear error when the format is unavailable, and everything above
-them (option construction) is plain-Python tested.
+The connector jar is not bundled in this environment; ``read``/``done_ids``/
+``write`` raise a clear error when the format is unavailable, and everything
+below them (option construction) is plain-Python tested.
 """
 
 from __future__ import annotations
 
+import json
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 
 from annotations_ingester_spark.config import ConnectorConfig
+from annotations_ingester_spark.operators.antijoin import sink_doc_ids
 
 ES_FORMAT = "org.elasticsearch.spark.sql"
 BULK_CHUNK_SIZE = 10_000  # reference: es_common.py:98
@@ -137,29 +141,53 @@ def _require_format(spark: SparkSession) -> None:
         )
 
 
-def read_es(spark: SparkSession, conf: ConnectorConfig, query: str | None = None) -> DataFrame:
+def check(conf: ConnectorConfig) -> None:
+    """Nothing to reach before the session: the jar probe needs one, and
+    the connector's own first request reports an unreachable cluster."""
+
+
+def read(
+    spark: SparkSession, conf: ConnectorConfig, query: dict[str, Any] | None = None
+) -> DataFrame:
+    """Scroll scan of ``conf.index_name``; ``query`` (a query DSL clause)
+    is pushed down as ``es.query``."""
     _require_format(spark)
-    return spark.read.format(ES_FORMAT).options(**es_read_options(conf, query)).load()
+    es_query = json.dumps({"query": query}) if query else None
+    return spark.read.format(ES_FORMAT).options(**es_read_options(conf, es_query)).load()
 
 
-def write_es(
+def done_ids(spark: SparkSession, conf: ConnectorConfig, docid_field: str) -> DataFrame | None:
+    """Distinct doc ids already in the sink index; None when the index was
+    never written (the connector reads a missing index as an empty,
+    column-less frame)."""
+    _require_format(spark)
+    written = (
+        spark.read.format(ES_FORMAT)
+        .options(**es_read_options(conf))
+        .option("es.index.read.missing.as.empty", "true")
+        .load()
+    )
+    return sink_doc_ids(written, docid_field)
+
+
+def write(
     df: DataFrame,
     conf: ConnectorConfig,
-    mode: str = "append",
-    **kw,
+    *,
+    mapping_id: str | None,
+    upsert: bool,
+    split_suffix_field: str | None,
 ) -> None:
+    """Bulk append through ``es_write_options``. An upsert of W4 doc rows
+    (the ones carrying an ``annotations`` array) runs the painless script
+    that replaces the stored array; any other upsert is a plain
+    ``es.write.operation=upsert``."""
     _require_format(df.sparkSession)
-    df.write.format(ES_FORMAT).options(**es_write_options(conf, **kw)).mode(mode).save()
-
-
-def es_foreach_batch(conf: ConnectorConfig, **kw):
-    """S7 streaming bulk sink: a ``foreachBatch`` function bulk-writing each
-    micro-batch through the same option surface as ``write_es`` (batch size
-    10000 / 30 s timeout parity with the reference's streaming_bulk,
-    es_common.py:98-99,191-210). Deterministic ``es.mapping.id`` makes
-    micro-batch replay after failure an idempotent upsert (B2)."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        write_es(batch, conf, **kw)
-
-    return apply
+    opts = es_write_options(
+        conf,
+        mapping_id=mapping_id,
+        upsert=upsert,
+        split_suffix_field=split_suffix_field,
+        scripted_upsert=upsert and "annotations" in df.columns,
+    )
+    df.write.format(ES_FORMAT).options(**opts).mode("append").save()

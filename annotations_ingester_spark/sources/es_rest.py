@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.functions.names import format_index_name
+from annotations_ingester_spark.operators.antijoin import sink_doc_ids
 from annotations_ingester_spark.pyfiles import (
     ensure_worker_imports,
     trim_worker_import_cache,
@@ -460,3 +461,59 @@ def read_es_rest(
 
     slice_df = spark.range(0, n, 1, n).toDF("slice_id")
     return slice_df.mapInPandas(fetch, schema=schema)
+
+
+def check(conf: ConnectorConfig) -> None:
+    """The version handshake (``EsRestClient.verify_compat``): an
+    unreachable, pre-7.x or lookalike server fails before any Spark job is
+    planned — the reference's ``check_url_available`` posture (utils.py:7-14)
+    upgraded to the official client handshake."""
+    EsRestClient(conf).verify_compat()
+
+
+def read(
+    spark: SparkSession, conf: ConnectorConfig, query: dict[str, Any] | None = None
+) -> DataFrame:
+    """Sliced-scroll read of ``conf.index_name`` with the schema inferred
+    from a bounded sample (ES dynamic-mapping parity); ``query`` is pushed
+    down into the scroll body (S3 parity, es_common.py:303-330), so
+    out-of-range docs never leave the cluster."""
+    return read_es_rest(spark, conf, infer_es_rest_schema(spark, conf), query=query)
+
+
+def done_ids(spark: SparkSession, conf: ConnectorConfig, docid_field: str) -> DataFrame | None:
+    """Distinct doc ids already in the sink index; None when the index is
+    absent (HTTP 404) or empty. Only the id column is read: a 1-doc sample
+    picks its name and type, then a narrow sliced scroll fetches just that
+    field (the annotation rows' map-typed fields never round-trip)."""
+    try:
+        sample = EsRestClient(conf).search_page(size=1)
+    except urllib.error.HTTPError as exc:
+        if exc.code == 404:
+            return None
+        raise
+    if not sample:
+        return None
+    for col in (f"meta.{docid_field}", docid_field):
+        if col in sample[0]:
+            typ = T.LongType() if isinstance(sample[0][col], int) else T.StringType()
+            written = read_es_rest(spark, conf, T.StructType([T.StructField(col, typ)]))
+            return sink_doc_ids(written, docid_field)
+    return None
+
+
+def write(
+    df: DataFrame,
+    conf: ConnectorConfig,
+    *,
+    mapping_id: str | None,
+    upsert: bool,
+    split_suffix_field: str | None,
+) -> None:
+    """:func:`write_es_rest` with the default chunk size; an upsert is a
+    ``doc_as_upsert`` update, which for W4 doc rows replaces the stored
+    annotations array like the connector's scripted upsert (the merge
+    already happened engine-side)."""
+    write_es_rest(
+        df, conf, mapping_id=mapping_id, upsert=upsert, split_suffix_field=split_suffix_field
+    )

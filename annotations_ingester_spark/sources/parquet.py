@@ -3,20 +3,69 @@ of the reference's Elasticsearch indices (SURVEY §1.5: index ↔ table).
 
 Scans benefit from Catalyst pushdown automatically: id/range predicates and
 column pruning reach the parquet reader (S1/S3/S4/P1 for free). At 100 TB,
-``maxPartitionBytes`` (session.py) sizes scan tasks; date/type-partitioned
-layouts (sinks/writers.py) give partition pruning.
+``maxPartitionBytes`` (session.py) sizes scan tasks; a W2 split sink is
+``partitionBy``-laid out, so readers of one type prune the rest.
 """
 
 from __future__ import annotations
 
+from typing import Any
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+
+from annotations_ingester_spark.config import ConnectorConfig
+from annotations_ingester_spark.operators.antijoin import sink_doc_ids
 
 
-def read_table(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
+def _is_path_missing(exc: Exception) -> bool:
+    """True only for the 'sink has never been written' AnalysisException.
+    Anything else (corrupt footer, FS hiccup, permission error) must
+    propagate — treating it as a first run would silently reprocess (and,
+    on an append sink, duplicate) the whole corpus."""
+    msg = str(exc)
+    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+
+
+def check(conf: ConnectorConfig) -> None:
+    """No endpoint to reach: a missing path fails the read itself."""
+
+
+def read(
+    spark: SparkSession, conf: ConnectorConfig, query: dict[str, Any] | None = None
 ) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    """The table at ``conf.index_name``. ``query`` (Elasticsearch DSL) has
+    no parquet form; the caller scopes the frame Spark-side instead (the
+    CLI's ``range_filter``)."""
+    return spark.read.parquet(conf.index_name)
+
+
+def done_ids(spark: SparkSession, conf: ConnectorConfig, docid_field: str) -> DataFrame | None:
+    """Distinct doc ids already in the sink; None when the path was never
+    written."""
+    try:
+        written = spark.read.parquet(conf.index_name)
+    except AnalysisException as exc:
+        if _is_path_missing(exc):
+            return None
+        raise
+    return sink_doc_ids(written, docid_field)
+
+
+def write(
+    df: DataFrame,
+    conf: ConnectorConfig,
+    *,
+    mapping_id: str | None,
+    upsert: bool,
+    split_suffix_field: str | None,
+) -> None:
+    """W1/W4: append. W2: ``partitionBy(split_suffix_field)``, the parquet
+    twin of the ES dynamic resource ``sink-{type}``. Files carry no
+    document ids, so ``mapping_id`` and ``upsert`` have no parquet form: a
+    re-run avoids duplicates only through the J1 resume read
+    (``skip-processed-doc-check``)."""
+    writer = df.write.mode("append")
+    if split_suffix_field:
+        writer = writer.partitionBy(split_suffix_field)
+    writer.parquet(conf.index_name)

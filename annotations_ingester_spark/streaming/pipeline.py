@@ -27,19 +27,14 @@ from annotations_ingester_spark.annotator.service import Annotator
 from annotations_ingester_spark.plans.pipeline import flat_annotations
 
 
-def stream_annotations(
+def file_stream(
     spark: SparkSession,
     source_path: str,
     source_schema: T.StructType,
-    annotator_factory: Callable[[], Annotator],
-    text_field: str = "text",
-    docid_field: str = "doc_id",
-    mode: str = "medcat",
-    ann_fields: list[str] | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Build the streaming W1 plan: a file-source stream through the same
-    filter → annotate → explode → project plan as batch."""
+    """A parquet file-source stream over a directory or a single
+    ``.parquet`` file."""
     reader = spark.readStream.schema(source_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -51,10 +46,27 @@ def stream_annotations(
         # a bare relative filename ('docs.parquet') has no separator —
         # its parent is the working directory, not the empty string
         source_path = base or "."
+    return reader.parquet(source_path)
 
-    stream = reader.parquet(source_path)
+
+def stream_annotations(
+    spark: SparkSession,
+    source_path: str,
+    source_schema: T.StructType,
+    annotator_factory: Callable[[], Annotator],
+    text_field: str = "text",
+    docid_field: str = "doc_id",
+    mode: str = "medcat",
+    ann_fields: list[str] | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The streaming W1 plan with underscore column names (``meta_doc_id``,
+    ``nlp_*``): a file-source stream through the same filter → annotate →
+    explode → project plan as batch. The CLI's ``--stream`` instead runs
+    its configured ``AnnotationPipeline.flat`` over :func:`file_stream`, so
+    its rows match a batch run's."""
     return flat_annotations(
-        stream,
+        file_stream(spark, source_path, source_schema, max_files_per_trigger),
         annotator_factory,
         text_field=text_field,
         docid_field=docid_field,

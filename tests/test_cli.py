@@ -232,3 +232,66 @@ def test_skip_processed_corrupt_sink_propagates(spark, tmp_path):
     p.write_text(_yaml.safe_dump(cfg))
     with pytest.raises(Exception):
         main(["--config", str(p)])
+
+
+def test_stream_writes_batch_row_shape_and_resumes(spark, tmp_path):
+    """--stream runs the batch flat plan: the same columns as a batch run
+    (persist-fields as ``meta.*``), so a skip-processed batch re-run over
+    the stream's sink finds every doc and adds no row."""
+    src = _corpus(spark, tmp_path)
+    batch_sink, stream_sink = str(tmp_path / "shape_b"), str(tmp_path / "shape_s")
+
+    def cfg_for(sink, skip=False):
+        cfg = yaml.safe_load(open(_cfg(tmp_path, src, sink, dated=False)))
+        cfg["mapping"]["source"]["persist-fields"] = ["doc_id", "dct"]
+        cfg["mapping"]["source"]["skip-processed-doc-check"] = skip
+        p = tmp_path / f"cfg_shape_{len(sink)}_{skip}.yml"
+        p.write_text(yaml.safe_dump(cfg))
+        return str(p)
+
+    assert main(["--config", cfg_for(batch_sink)]) == 0
+    assert main(["--config", cfg_for(stream_sink), "--stream"]) == 0
+    batch_cols = spark.read.parquet(batch_sink).columns
+    assert {"meta.doc_id", "meta.dct"} <= set(batch_cols)
+    assert sorted(spark.read.parquet(stream_sink).columns) == sorted(batch_cols)
+    n = spark.read.parquet(stream_sink).count()
+    assert main(["--config", cfg_for(stream_sink, skip=True)]) == 0
+    assert spark.read.parquet(stream_sink).count() == n
+
+
+def test_unknown_backend_refused(tmp_path):
+    import pytest
+
+    from annotations_ingester_spark.config import PipelineConfig
+
+    cfg = yaml.safe_load(open(_cfg(tmp_path, "src", "sink")))
+    cfg["sink"]["backend"] = "parquett"
+    with pytest.raises(ValueError, match="parquett") as exc:
+        PipelineConfig.from_dict(cfg)
+    for name in ("parquet", "elasticsearch", "elasticsearch-rest"):
+        assert repr(name) in str(exc.value)
+
+
+def test_stream_refuses_non_file_source(spark, tmp_path, capsys):
+    """--stream reads a file stream: an Elasticsearch REST source exits 2
+    (it used to fall through to a parquet read of the index name)."""
+    from annotations_ingester_spark.config import ConnectorConfig
+    from annotations_ingester_spark.sources.es_rest import EsRestClient
+    from tests.es_stub import start_es_stub
+
+    server, _, url = start_es_stub()
+    try:
+        EsRestClient(ConnectorConfig(hosts=[url], index_name="stream-src")).bulk(
+            [{"_id": "1", "doc_id": 1, "text": "a rest source document body!"}]
+        )
+        cfg = yaml.safe_load(open(_cfg(tmp_path, "unused", str(tmp_path / "s"), dated=False)))
+        cfg["source"] = {
+            "backend": "elasticsearch-rest",
+            "es": {"hosts": [url], "index-name": "stream-src"},
+        }
+        p = tmp_path / "cfg_rest_stream.yml"
+        p.write_text(yaml.safe_dump(cfg))
+        assert main(["--config", str(p), "--stream"]) == 2
+    finally:
+        server.shutdown()
+    assert "--stream requires a file-based" in capsys.readouterr().err

@@ -63,7 +63,7 @@ CONF = ConnectorConfig(
 
 def test_w2_split_sink_writer_contract(spark, captured):
     df = spark.createDataFrame([("r1", "type1")], "row_id string, index_suffix string")
-    es.write_es(df, CONF, split_suffix_field="index_suffix")
+    es.write(df, CONF, mapping_id="row_id", upsert=False, split_suffix_field="index_suffix")
     assert captured.saved and captured.fmt == es.ES_FORMAT
     assert captured.write_mode == "append"
     o = captured.opts
@@ -79,29 +79,114 @@ def test_w2_split_sink_writer_contract(spark, captured):
 
 def test_w3_upsert_writer_contract(spark, captured):
     df = spark.createDataFrame([("r1",)], "row_id string")
-    es.write_es(df, CONF, upsert=True)
+    es.write(df, CONF, mapping_id="row_id", upsert=True, split_suffix_field=None)
     o = captured.opts
     assert o["es.write.operation"] == "upsert"  # W3 same-index merge
     assert o["es.resource"] == "annotations"
     assert o["es.mapping.id"] == "row_id"
+    assert "es.update.script.inline" not in o  # flat rows: a plain upsert
 
 
-def test_s7_streaming_foreach_batch_uses_same_contract(spark, captured):
-    df = spark.createDataFrame([("r1",)], "row_id string")
-    fn = es.es_foreach_batch(CONF, upsert=True)
-    fn(df, epoch_id=7)
-    assert captured.saved and captured.opts["es.write.operation"] == "upsert"
-    assert captured.opts["es.batch.size.entries"] == "10000"
+def test_s7_streaming_foreach_batch_uses_same_contract(spark, request, tmp_path):
+    """The CLI's --stream hands each micro-batch to the same connector
+    ``write`` as a batch run: bulk tuning, deterministic ids and the W3
+    upsert, with the batch run's ``meta.*``/``nlp.*`` row shape."""
+    import yaml
+
+    from annotations_ingester_spark.__main__ import main
+
+    src = str(tmp_path / "s7_src")
+    spark.createDataFrame(
+        [(1, "streamed connector document one!"), (2, "streamed connector document two!!")],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    sink = {"es": {"hosts": CONF.hosts, "index-name": "annotations",
+                   "credentials": {"username": "u", "password": "p"}}}
+    cfg = {
+        "source": {"backend": "parquet", "path": src},
+        "sink": sink,
+        "nlp-service": {"endpoints-url": ["fake://medcat"], "protocol-mode": "medcat"},
+        "mapping": {
+            "source": {"text-field": "text", "docid-field": "doc_id",
+                       "persist-fields": ["doc_id"]},
+            "sink": {"ingest-mode": "same-index"},
+        },
+    }
+    p = tmp_path / "cfg_s7.yml"
+    p.write_text(yaml.safe_dump(cfg))
+    captured = request.getfixturevalue("captured")  # after the source write
+    assert main(["--config", str(p), "--stream"]) == 0
+    assert captured.saved and captured.write_mode == "append"
+    assert captured.opts == _BASE | _BULK | {
+        "es.resource": "annotations",
+        "es.mapping.id": "row_id",
+        "es.write.operation": "upsert",
+    }
 
 
 def test_w3_scripted_upsert_writer_contract(spark, captured):
-    df = spark.createDataFrame([("doc_1",)], "ann_doc_id string")
-    es.write_es(df, CONF, mapping_id="ann_doc_id", scripted_upsert=True)
+    df = spark.createDataFrame([("doc_1", [])], "ann_doc_id string, annotations array<string>")
+    es.write(df, CONF, mapping_id="ann_doc_id", upsert=True, split_suffix_field=None)
     o = captured.opts
     assert o["es.write.operation"] == "upsert"
     assert o["es.update.script.lang"] == "painless"
     assert "params.annotations" in o["es.update.script.inline"]
     assert o["es.update.script.params"] == "annotations:annotations"
+
+
+class FakeReader:
+    def __init__(self, frame):
+        self.frame = frame
+        self.opts = {}
+
+    def format(self, fmt):
+        self.fmt = fmt
+        return self
+
+    def options(self, **kw):
+        self.opts.update(kw)
+        return self
+
+    def option(self, key, value):
+        self.opts[key] = value
+        return self
+
+    def load(self):
+        return self.frame
+
+
+@pytest.fixture
+def reading(monkeypatch):
+    """Route spark.read through a recorder returning ``reading.frame``."""
+    from pyspark.sql import SparkSession
+
+    reader = FakeReader(None)
+    monkeypatch.setattr(SparkSession, "read", property(lambda self: reader))
+    monkeypatch.setattr(es, "_require_format", lambda spark: None)
+    return reader
+
+
+def test_read_pushes_query_down(spark, reading):
+    reading.frame = spark.range(1)
+    span = {"range": {"dct": {"gte": "2020-01-01", "lte": "2020-03-15"}}}
+    es.read(spark, CONF, query=span)
+    assert reading.fmt == es.ES_FORMAT
+    assert reading.opts == _BASE | {
+        "es.resource": "annotations",
+        "es.read.metadata": "true",
+        "es.query": '{"query": {"range": {"dct": {"gte": "2020-01-01", "lte": "2020-03-15"}}}}',
+    }
+
+
+def test_done_ids_missing_index_is_first_run(spark, reading):
+    """The resume read asks the connector for an empty frame on a missing
+    index; a frame without an id column is a first run."""
+    reading.frame = spark.range(0).select()  # no columns, like a missing index
+    assert es.done_ids(spark, CONF, "doc_id") is None
+    assert reading.opts["es.index.read.missing.as.empty"] == "true"
+    reading.frame = spark.createDataFrame([(1,), (1,), (2,)], "`meta.doc_id` long")
+    ids = es.done_ids(spark, CONF, "doc_id")
+    assert sorted(r["doc_id"] for r in ids.collect()) == [1, 2]
 
 
 def test_client_key_without_keystore_fails_loudly():
@@ -177,7 +262,7 @@ def test_contract_snapshot_write_variants(spark, monkeypatch):
     out = flat_annotations(
         docs, lambda: DeterministicFakeAnnotator("medcat"), split_by_field="types"
     )
-    es.write_es(out, CONF, split_suffix_field="index_suffix")
+    es.write(out, CONF, mapping_id="row_id", upsert=False, split_suffix_field="index_suffix")
     assert writer.source_schema == W1_SINK_SCHEMA
     assert writer.fmt == "org.elasticsearch.spark.sql" and writer.write_mode == "append"
     assert writer.opts == _BASE | _BULK | {
@@ -187,10 +272,10 @@ def test_contract_snapshot_write_variants(spark, monkeypatch):
 
     # W3 scripted upsert (nested per-doc path)
     writer.opts = {}
-    es.write_es(
+    es.write(
         spark.createDataFrame([("doc_1", [])],
                               "ann_doc_id string, annotations array<string>"),
-        CONF, mapping_id="ann_doc_id", scripted_upsert=True,
+        CONF, mapping_id="ann_doc_id", upsert=True, split_suffix_field=None,
     )
     assert writer.source_schema == "struct<ann_doc_id:string,annotations:array<string>>"
     assert writer.opts == _BASE | _BULK | {

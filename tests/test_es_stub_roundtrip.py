@@ -474,3 +474,26 @@ def test_read_fetches_only_the_schema_fields(spark, es_stub):
     assert sorted(r["n"] for r in narrow) == list(range(10))
     assert sorted((r["n"], r["tag"]) for r in wide) == [(i, f"t{i}") for i in range(10)]
     assert b1 - b0 < (b2 - b1) / 4
+
+
+def test_done_ids_treats_missing_sink_index_as_first_run(spark, monkeypatch):
+    """A real cluster answers a search on an absent index with HTTP 404
+    (``str()`` of urllib's error carries no ``index_not_found``): the
+    resume read is a first run, not a crash. Other HTTP errors propagate."""
+    import urllib.error
+
+    from annotations_ingester_spark.sources import es_rest
+
+    status = {"code": 404}
+
+    def search_page(self, *args, **kwargs):
+        raise urllib.error.HTTPError(
+            f"{self.url}/{self.index}/_search", status["code"], "Not Found", {}, None
+        )
+
+    monkeypatch.setattr(EsRestClient, "search_page", search_page)
+    conf = _conf("http://127.0.0.1:9", "never-written")
+    assert es_rest.done_ids(spark, conf, "doc_id") is None
+    status["code"] = 500
+    with pytest.raises(urllib.error.HTTPError):
+        es_rest.done_ids(spark, conf, "doc_id")

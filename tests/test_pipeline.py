@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
 from annotations_ingester_spark.operators.antijoin import skip_processed
+from annotations_ingester_spark.operators.filters import range_filter
 from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
 
 
@@ -96,8 +97,8 @@ def test_windowed_pipeline_scopes_dates(spark):
          (2, "second window document text", "2020-03-05")],
         "doc_id long, text string, dct string",
     )
-    pipe = AnnotationPipeline(fake, date_field="dct")
-    out = pipe.windowed(docs, "2020-01-01", "2020-01-31").toPandas()
+    pipe = AnnotationPipeline(fake)
+    out = pipe.flat(range_filter(docs, "dct", "2020-01-01", "2020-01-31")).toPandas()
     assert set(out["meta.doc_id"]) == {1}
 
 

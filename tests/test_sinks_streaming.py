@@ -1,17 +1,16 @@
-"""Sink writers (W1/W2/W4 parquet + W3 merge) and the Structured
-Streaming variant (stream == batch result; checkpointed foreachBatch)."""
+"""Sink writes (the parquet backend's W1/W2/W4 ``write`` + the W3 merge)
+and the Structured Streaming variant (stream == batch result;
+checkpointed foreachBatch)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
+from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
-from annotations_ingester_spark.sinks.writers import (
-    merge_annotation_sets,
-    write_flat,
-    write_partitioned,
-)
+from annotations_ingester_spark.sinks.writers import merge_annotation_sets
+from annotations_ingester_spark.sources import parquet
 from annotations_ingester_spark.streaming.pipeline import (
     run_stream_foreach_batch,
     run_stream_to_memory,
@@ -26,20 +25,35 @@ MEDCAT_FIELDS = ["id", "cui", "types", "start", "end"]
 fake = lambda: DeterministicFakeAnnotator("medcat")  # noqa: E731
 
 
+def _write(df, path, split_suffix_field=None):
+    parquet.write(
+        df,
+        ConnectorConfig(index_name=path),
+        mapping_id="row_id",
+        upsert=False,
+        split_suffix_field=split_suffix_field,
+    )
+
+
 def test_write_flat_roundtrip(docs_df, spark, tmp_path):
     out = flat_annotations(docs_df, fake, ann_fields=MEDCAT_FIELDS, dedup=False, dotted=False)
     path = str(tmp_path / "flat")
-    write_flat(out, path)
+    _write(out, path)
     assert spark.read.parquet(path).count() == out.count()
+    _write(out, path)  # W1 appends
+    assert spark.read.parquet(path).count() == 2 * out.count()
 
 
 def test_write_partitioned_prunes(docs_df, spark, tmp_path):
+    import os
+
     out = flat_annotations(
         docs_df, fake, ann_fields=["cui", "types"], split_by_field="types",
         dedup=False, dotted=False,
     )
     path = str(tmp_path / "split")
-    write_partitioned(out, path)
+    _write(out, path, split_suffix_field="index_suffix")
+    assert any(d.startswith("index_suffix=") for d in os.listdir(path))
     back = spark.read.parquet(path)
     one_type = back.filter(F.col("index_suffix") == "type1")
     # partition pruning: the physical scan only lists the matching directory
@@ -194,7 +208,10 @@ def test_nested_mode_writer(docs_df, spark, tmp_path):
     pipe = AnnotationPipeline(fake)
     nested = pipe.nested(docs_df)
     path = str(tmp_path / "nested")
-    nested.write.parquet(path)
+    parquet.write(
+        nested, ConnectorConfig(index_name=path),
+        mapping_id="ann_doc_id", upsert=True, split_suffix_field=None,
+    )
     back = spark.read.parquet(path)
     assert back.filter(F.size("annotations") > 0).count() == nested.count()
 
