@@ -177,11 +177,12 @@ def main(argv: list[str] | None = None) -> int:
         run_stream_foreach_batch(out, lambda batch, epoch_id: write(batch), ckpt)
         return 0
 
-    processed = (
+    done = (
         sink.done_ids(spark, cfg.sink, cfg.docid_field)
         if cfg.skip_processed_doc_check
         else None
     )
+    processed = done
     segments = [(date_start, date_end)]
     if args.segmented and dated:
         # B1 reference driver-loop parity (annotations_indexer.py:847-861):
@@ -204,8 +205,11 @@ def main(argv: list[str] | None = None) -> int:
         # everything up to this segment's end is now in the sink; only the
         # shared boundary date overlaps the next segment, and the J1
         # anti-join absorbs it — so segmented == whole-span (certified in
-        # tests/test_cli.py)
+        # tests/test_cli.py). What the sink held before this run stays
+        # skipped in every later segment.
         processed = scope(docs, date_start, seg_end).select(cfg.docid_field)
+        if done is not None:
+            processed = done.unionByName(processed)
     return 0
 
 

@@ -16,6 +16,8 @@ action over the scope's frames: a freed checkpoint cannot be recomputed.
 Iterative loops keep an unclosed scope: :meth:`Scope.checkpoint` tracks
 each round's generation and :meth:`Scope.retire_previous` frees all but
 the newest, so at most two are live and the caller's scope frees the last.
+A loop whose result no longer reads its checkpoints (connected components
+finished on the driver) calls :meth:`Scope.close` itself.
 """
 
 from __future__ import annotations
@@ -51,6 +53,10 @@ class Scope:
         return self
 
     def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
+        """Release every persistent RDD created since the scope opened."""
         release(self._spark, live_rdd_ids(self._spark) - self._before)
 
     def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:

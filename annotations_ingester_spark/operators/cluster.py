@@ -1,37 +1,63 @@
 """Connected components over candidate-pair graphs — duplicate clustering.
 
 Dedup pipelines end with: candidate pairs (LSH) → connected components →
-one survivor per component. Spark has no native CC; this implements the
-alternating **large-star / small-star** contraction (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14):
+one survivor per component. Spark has no native CC. The canonical edge set
+(larger→smaller, self-loops dropped, distinct) is checkpointed once, and
+one ``limit(LOCAL_MAX_EDGES + 1).collect()`` both probes its size and
+fetches it. Two regimes follow, one code path each:
+
+- **≤ LOCAL_MAX_EDGES edges** (every catalog query up to sf0.1): the
+  driver labels the nodes by union-find with min-id roots and returns the
+  labels as a local frame. The canonical checkpoint is released, since the
+  local frame does not read it. Per-round Spark jobs would pay the fixed
+  per-job cost for a graph of a few kilobytes.
+- **more edges**: the alternating **large-star / small-star** contraction
+  (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SoCC'14) runs distributed, seeded from the same checkpoint, so the
+  labels never leave the cluster:
 
     large-star: every neighbor LARGER than a node re-links to the node's
                 minimum neighborhood member;
     small-star: every neighbor SMALLER than a node (and the node itself)
                 re-links to that minimum.
 
-Each round is two join+agg passes (shuffles keyed on node id) and
-contracts path lengths multiplicatively, so the fixpoint — every node
-linked directly to its component minimum — arrives in **O(log n)** rounds
-regardless of component diameter. Plain min-label propagation (the r2
-implementation) needs O(diameter) rounds: a 1000-link chain takes 1000
-iterations there but ~10 here (pytest pins this on a chain graph).
+  Each round is two join+agg passes (shuffles keyed on node id) and
+  contracts path lengths multiplicatively, so the fixpoint — every node
+  linked directly to its component minimum — arrives in **O(log n)**
+  rounds regardless of component diameter. Plain min-label propagation
+  (the r2 implementation) needs O(diameter) rounds: a 1000-link chain
+  takes 1000 iterations there but ~10 here (pytest pins this on a chain
+  graph).
 
-Convergence is detected by an actual edge-set fixpoint (small-star output
-unchanged), not a "did the last pass write anything" heuristic — so a
-graph that converges exactly on the final permitted round is reported
-converged, and the non-convergence error can't fire spuriously (r2 advice).
-The driver loop holds only scalar counts; labels never leave the cluster.
-This is the engine's "iterative algorithm" template (PageRank, label
-propagation, … share the shape).
+  Convergence is detected by an actual edge-set fixpoint (small-star
+  output unchanged), not a "did the last pass write anything" heuristic —
+  so a graph that converges exactly on the final permitted round is
+  reported converged, and the non-convergence error can't fire spuriously
+  (r2 advice). The driver loop holds only scalar counts. This is the
+  engine's "iterative algorithm" template (PageRank, label propagation, …
+  share the shape).
+
+Both regimes return the same rows: cluster_id is the component's minimum
+node id either way.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from annotations_ingester_spark.materialize import Scope
+
+# Largest canonical edge set whose components are finished on the driver.
+# Sized in driver Python memory, not rows: a collected Row of two ids is
+# ~400 B (the Row tuple, its per-row field list, two int objects), and the
+# union-find dict plus the label tuples add ~200 B per edge (≤ 2 new nodes
+# per edge) — ~600 B/edge at peak, measured with tracemalloc on random
+# 64-bit ids. 2^16 edges ≈ 40 MB, inside a ~64 MB budget; 2^17 would not
+# be. The pandas/Arrow hand-off of the labels is 2 × 8 B per node on top.
+LOCAL_MAX_EDGES = 1 << 16
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -80,6 +106,27 @@ def _small_star(s: DataFrame) -> DataFrame:
     return relink.unionByName(self_link).distinct()
 
 
+def _union_find_labels(edges) -> list[tuple]:
+    """(node, min node id of its component) for every node of ``edges``.
+    Union always hangs the larger root under the smaller, so every root is
+    its component's minimum; path halving keeps finds short."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(n, find(n)) for n in parent]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -91,13 +138,33 @@ def connected_components(
     id in the component. Undirected; only nodes appearing in edges emerge
     (singletons need no clustering; a degenerate self-loop ``u—u`` carries
     no clustering information and is likewise ignored — every caller here
-    generates ``src < dst`` pairs, so none exist)."""
+    generates ``src < dst`` pairs, so none exist). ``return_rounds`` adds
+    the number of distributed rounds run: 0 when the driver finished it."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # the scope frees each round's checkpoint blocks once the next round is
     # materialized — ≤2 edge-set generations live instead of max_iterations;
-    # it is never closed: the caller's scope frees the final generation
-    scope = Scope(edges.sparkSession)
+    # it is never closed on the distributed path: the caller's scope frees
+    # the final generation
+    spark = edges.sparkSession
+    scope = Scope(spark)
     e = scope.checkpoint(_canonical(raw))
+    # one job both probes the size and fetches a small edge set
+    local = e.limit(LOCAL_MAX_EDGES + 1).collect()
+    if len(local) <= LOCAL_MAX_EDGES:
+        labels = _union_find_labels(local)
+        schema = StructType(
+            [
+                StructField("node", e.schema["u"].dataType, False),
+                StructField("cluster_id", e.schema["v"].dataType, False),
+            ]
+        )
+        # the local frame does not read the checkpoint: free it now
+        scope.close()
+        # with Arrow enabled (session.py) a pandas frame becomes a local
+        # relation in the JVM: the caller's action starts no Python worker
+        out = spark.createDataFrame(pd.DataFrame(labels, columns=schema.names), schema)
+        return (out, 0) if return_rounds else out
+    del local
     rounds = 0
     converged = False
     # termination: the algorithm converges exactly to star forests

@@ -571,8 +571,9 @@ _REG["graph_triangle_count"].oracle = f"""WITH {_lsh_edges_sql()},
               min(c_custkey)::BIGINT AS min_member, max(c_custkey)::BIGINT AS max_member
        FROM cc GROUP BY entity_id""",
     doc="Entity resolution end-to-end: blocked levenshtein ≤ 1 match pairs "
-    "→ connected components (large-star/small-star, O(log n) rounds, "
-    "checkpoint-cycled) → canonical entity id (min member) with member "
+    "→ connected components (union-find on the driver for ≤ 2^16 "
+    "canonical edges, else large-star/small-star, O(log n) checkpoint-"
+    "cycled rounds) → canonical entity id (min member) with member "
     "stats. The composition a master-data pipeline runs: match, then "
     "transitively close, then pick survivors. Oracle: recursive-CTE "
     "closure over the same pair set.",

@@ -712,9 +712,10 @@ def q_multiprobe(spark: SparkSession, sf: str):
        SELECT u AS doc_id, least(u, min(v))::BIGINT AS cluster_id
        FROM reach GROUP BY u""",
     doc="Duplicate clustering: connected components over MinHash-LSH "
-    "candidate pairs via iterative min-label propagation (join+agg per "
-    "round, O(cluster diameter) rounds — near-dup clusters are "
-    "near-cliques, so it converges in 2-3). Oracle: recursive-CTE "
+    "candidate pairs — union-find on the driver when the canonical edge "
+    "set has ≤ 2^16 edges (one collect), else large-star/small-star "
+    "contraction (two join+agg passes per round, O(log n) rounds). "
+    "Cluster id = min member either way. Oracle: recursive-CTE "
     "transitive closure.",
 )
 def q_clusters(spark: SparkSession, sf: str):

@@ -145,6 +145,27 @@ def test_skip_processed_resume(spark, tmp_path):
     assert set(second) > set(first)  # new docs landed
 
 
+def test_segmented_skip_processed_rerun_adds_nothing(spark, tmp_path):
+    """A --segmented skip-processed re-run over a sink that already holds
+    the whole span must write nothing: every segment after the first still
+    skips the docs the sink held before the run, not only the docs this
+    run wrote."""
+    import yaml as _yaml
+
+    src = _corpus(spark, tmp_path)
+    sink = str(tmp_path / "seg_resume_sink")
+    cfg = _yaml.safe_load(open(_cfg(tmp_path, src, sink)))
+    cfg["mapping"]["source"]["skip-processed-doc-check"] = True
+    p = tmp_path / "cfg_seg_resume.yml"
+    p.write_text(_yaml.safe_dump(cfg))
+
+    assert main(["--config", str(p)]) == 0
+    first = _row_ids(spark, sink)
+    assert first and len(first) == len(set(first))
+    assert main(["--config", str(p), "--segmented"]) == 0
+    assert _row_ids(spark, sink) == first
+
+
 def test_nested_skip_processed_resume(spark, tmp_path):
     """nested ingest + skip-processed-doc-check: a rerun over a grown
     corpus must only append the NEW docs' rows — previously the nested

@@ -3,6 +3,7 @@ similarity search — small hand-checkable cases."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from annotations_ingester_spark.operators.dedup import (
@@ -256,11 +257,20 @@ def test_connected_components_and_survivors(spark):
     assert kept == [1, 5, 7]  # one survivor per cluster + the singleton
 
 
-def test_connected_components_chain_converges_in_log_rounds(spark):
+def _distributed_only(monkeypatch):
+    """Force every edge set onto the distributed star-contraction loop."""
+    from annotations_ingester_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
+
+
+def test_connected_components_chain_converges_in_log_rounds(spark, monkeypatch):
     """Star contraction beats min-label propagation on high-diameter graphs:
     a 64-link chain (diameter 64, which label propagation would need ~64
     rounds for) reaches the fixpoint in O(log n) rounds."""
     from annotations_ingester_spark.operators.cluster import connected_components
+
+    _distributed_only(monkeypatch)
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
@@ -289,7 +299,15 @@ def _union_find_components(rows):
     return {(n, find(n)) for n in parent}
 
 
-def test_connected_components_matches_union_find(spark):
+_CC_CASES = [
+    ([(1, 2), (2, 3), (3, 4), (7, 9)], 2),      # chain + separate pair
+    ([(1, 2), (1, 3), (1, 4)], 1),               # already a star
+    ([(i, i + 1) for i in range(32)], 5),        # high-diameter chain
+    ([(1, 2), (3, 4), (2, 3), (10, 11)], 2),     # merge mid-stream
+]
+
+
+def test_connected_components_matches_union_find(spark, monkeypatch):
     """The one-job-per-round loop (lazy checkpoint materialized by the
     star-forest flag aggregate) against a pure-Python union-find oracle,
     over chain, already-a-star, high-diameter and merge-mid-stream
@@ -297,13 +315,8 @@ def test_connected_components_matches_union_find(spark):
     that costs or skips a contraction round shows up here."""
     from annotations_ingester_spark.operators.cluster import connected_components
 
-    cases = [
-        ([(1, 2), (2, 3), (3, 4), (7, 9)], 2),      # chain + separate pair
-        ([(1, 2), (1, 3), (1, 4)], 1),               # already a star
-        ([(i, i + 1) for i in range(32)], 5),        # high-diameter chain
-        ([(1, 2), (3, 4), (2, 3), (10, 11)], 2),     # merge mid-stream
-    ]
-    for rows, want_rounds in cases:
+    _distributed_only(monkeypatch)
+    for rows, want_rounds in _CC_CASES:
         edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
         labels, rounds = connected_components(edges, return_rounds=True)
         got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
@@ -311,11 +324,10 @@ def test_connected_components_matches_union_find(spark):
         assert rounds == want_rounds, (rows, rounds)
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    import pytest
-
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     from annotations_ingester_spark.operators.cluster import connected_components
 
+    _distributed_only(monkeypatch)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
     )
@@ -326,6 +338,86 @@ def test_connected_components_raises_on_non_convergence(spark):
     _, rounds = connected_components(edges, return_rounds=True)
     labels = connected_components(edges, max_iterations=rounds)
     assert labels.count() == 31
+
+
+def test_connected_components_local_matches_union_find(spark):
+    """Edge sets up to LOCAL_MAX_EDGES finish on the driver: the same
+    labels as the oracle, in 0 distributed rounds, over the loop's four
+    shapes plus a seeded random graph."""
+    import random
+
+    from annotations_ingester_spark.operators.cluster import connected_components
+
+    rng = random.Random(7)
+    random_graph = [(rng.randrange(300), rng.randrange(300)) for _ in range(400)]
+    for rows in [r for r, _ in _CC_CASES] + [random_graph]:
+        edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+        labels, rounds = connected_components(edges, return_rounds=True)
+        got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
+        # self-loops carry no clustering information and emerge from neither path
+        assert got == _union_find_components([(u, v) for u, v in rows if u != v]), rows
+        assert rounds == 0
+        assert labels.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+
+
+def test_connected_components_local_threshold_is_inclusive(spark, monkeypatch):
+    """Exactly LOCAL_MAX_EDGES canonical edges run on the driver; one more
+    runs the distributed loop. Both agree with the oracle."""
+    from annotations_ingester_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 8)
+    for n_edges, local in ((8, True), (9, False)):
+        rows = [(i, i + 1) for i in range(n_edges)]
+        edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+        labels, rounds = cluster.connected_components(edges, return_rounds=True)
+        got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
+        assert got == _union_find_components(rows)
+        assert (rounds == 0) == local, (n_edges, rounds)
+
+
+def test_connected_components_local_leaves_no_persistent_rdd(spark):
+    """The driver branch releases the canonical checkpoint itself: with no
+    enclosing scope, no persistent RDD outlives the call."""
+    from annotations_ingester_spark.materialize import live_rdd_ids
+    from annotations_ingester_spark.operators.cluster import connected_components
+
+    before = live_rdd_ids(spark)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    labels, rounds = connected_components(edges, return_rounds=True)
+    assert labels.count() == 5 and rounds == 0
+    assert live_rdd_ids(spark) == before
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "er_entity_clusters",
+        "dedup_duplicate_clusters",
+        "dedup_corpus_survivors",
+        "dedup_quality_survivors",
+        "media_phash_clusters",
+    ],
+)
+def test_cc_queries_same_rows_on_both_regimes(spark, sf_dir, monkeypatch, name):
+    """Every registry query built on connected_components returns the same
+    rows whether its components finish on the driver (the default at
+    sf0.001) or in the distributed loop (LOCAL_MAX_EDGES forced to 0)."""
+    from annotations_ingester_spark.materialize import Scope
+    from annotations_ingester_spark.operators import cluster
+    from annotations_ingester_spark.plans.queries import REGISTRY
+
+    def rows():
+        with Scope(spark):
+            return sorted(map(tuple, REGISTRY[name].spark(spark, sf_dir).collect()))
+
+    local = rows()
+
+    def _unreachable(edges):  # pragma: no cover - fails the test if reached
+        raise AssertionError("driver branch taken with LOCAL_MAX_EDGES = 0")
+
+    _distributed_only(monkeypatch)
+    monkeypatch.setattr(cluster, "_union_find_labels", _unreachable)
+    assert local and rows() == local
 
 
 def test_hash_split_stable_under_corpus_growth(spark):
@@ -415,12 +507,13 @@ def test_kmeans_fit_keeps_empty_clusters_and_rejects_empty_init(spark):
         kmeans_fit(emb, init.filter(F.col("centroid_id") < 0), max_iterations=3)
 
 
-def test_iterative_loops_bound_checkpoint_storage(spark):
+def test_iterative_loops_bound_checkpoint_storage(spark, monkeypatch):
     """The loop's Scope must keep ≤2 generations of localCheckpoint blocks
     live — not one per round (round-3 advice: cluster.py accumulation)."""
     from annotations_ingester_spark.materialize import live_rdd_ids
     from annotations_ingester_spark.operators.cluster import connected_components
 
+    _distributed_only(monkeypatch)
     before = len(live_rdd_ids(spark))
     # 64-node chain: ~6 star-contraction rounds, each one a checkpoint
     edges = spark.createDataFrame(
