@@ -35,7 +35,10 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--dry-run", action="store_true", help="build + explain the plan, don't execute")
     args = parser.parse_args(argv)
 
-    from annotations_ingester_spark.annotator.service import HttpNlpClient
+    from annotations_ingester_spark.annotator.registry import (
+        annotator_factory,
+        fake_endpoints,
+    )
     from annotations_ingester_spark.config import PipelineConfig
     from annotations_ingester_spark.operators.filters import range_filter
     from annotations_ingester_spark.plans.pipeline import AnnotationPipeline
@@ -79,11 +82,13 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     nlp = cfg.nlp
-    fake_mode = bool(nlp.endpoints) and nlp.endpoints[0].startswith("fake://")
-
     # S11 pre-flight: refuse to start against a dead NLP service or a dead
     # (or incompatible) source/sink before the Spark session starts
-    if nlp.endpoints and not fake_mode and not check_url_available(nlp.endpoints):
+    if (
+        nlp.endpoints
+        and not fake_endpoints(nlp.endpoints)
+        and not check_url_available(nlp.endpoints)
+    ):
         print("NLP endpoints unavailable", file=sys.stderr)
         return 2
     for backend, conf in ((source, cfg.source), (sink, cfg.sink)):
@@ -95,25 +100,15 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("annotations_ingester_spark")
 
-    if fake_mode:  # hermetic runs: fake:// resolves via the registry
-        from annotations_ingester_spark.annotator.registry import get_annotator
-
-        annotator = get_annotator(
-            "fake-gate" if nlp.mode == "gate-nlp" else "fake-medcat"
-        )
-    else:
-
-        def annotator():
-            return HttpNlpClient(
-                nlp.endpoints,
-                mode=nlp.mode,
-                auth=(nlp.username, nlp.password) if nlp.username else None,
-                max_retries=nlp.max_retries_on_failure,
-                application_params=nlp.application_params,
-                threads=cfg.threads,  # reference threads-count, per partition
-                max_in_flight=nlp.max_in_flight,
-                rate_limit_per_sec=nlp.rate_limit_per_sec,
-            )
+    annotator = annotator_factory(
+        nlp.endpoints,
+        nlp.mode,
+        params=nlp.application_params,
+        retries=nlp.max_retries_on_failure,
+        auth=(nlp.username, nlp.password) if nlp.username else None,
+        threads=cfg.threads,  # reference threads-count, per task
+        max_in_flight=nlp.max_in_flight,
+    )
 
     pipe = AnnotationPipeline(
         annotator,

@@ -21,6 +21,10 @@ Malformed envelopes (missing ``result``/``annotations``/``entities``)
 normalize to ``None`` → the row is skipped without failing the job
 (reference guards: ingester/annotations_indexer.py:266-289; failed docs
 stay eligible for reprocessing, nlp_service.py:89-92).
+
+``HttpNlpClient`` is built once per Spark task, and its thread pool is the
+one bound on that task's calls in flight (the reference's single bound is
+its executor's thread count, annotations_indexer.py:311, config.yml:64).
 """
 
 from __future__ import annotations
@@ -198,11 +202,17 @@ class Annotator(Protocol):
 class HttpNlpClient:
     """REST annotator client (reference: ingester/nlp_service.py:40-136).
 
-    Per-batch concurrency via a thread pool (the reference's 128-thread
-    executor, annotations_indexer.py:311, becomes per-partition threads
-    here — Spark tasks provide the cross-node parallelism), bounded retry
-    (nlp_service.py:75-80), multi-endpoint fan-out + merge
-    (nlp_service.py:32-33,127-132). Transport is injectable for tests.
+    Per-batch concurrency via a thread pool of ``threads`` workers (the
+    reference's 128-thread executor, annotations_indexer.py:311, becomes
+    one pool per Spark task here — tasks provide the cross-node
+    parallelism), bounded retry (nlp_service.py:75-80), multi-endpoint
+    fan-out + merge (nlp_service.py:32-33,127-132). Transport is
+    injectable for tests.
+
+    The pool is the only bound on calls in flight: each running task has
+    its own Python worker process and its own client, so one task never
+    has more than ``threads`` requests open. ``max_in_flight``, when set,
+    caps the pool (``threads = min(threads, max_in_flight)``).
     """
 
     def __init__(
@@ -216,9 +226,11 @@ class HttpNlpClient:
         timeout: float = 30.0,
         transport=None,
         max_in_flight: int | None = None,
-        rate_limit_per_sec: float | None = None,
-        rate_limit_burst: float | None = None,
     ) -> None:
+        if max_in_flight is not None:
+            if max_in_flight < 1:
+                raise ValueError(f"max_in_flight must be >= 1, got {max_in_flight}")
+            threads = min(threads, max_in_flight)
         self.endpoints = endpoints
         self.mode = "gate" if mode == "gate-nlp" else (mode or "medcat")
         self.auth = auth
@@ -227,23 +239,6 @@ class HttpNlpClient:
         self.threads = threads
         self.timeout = timeout
         self._transport = transport or self._http_post
-        # Back-pressure (r10 verdict item 4): the gate is interned per
-        # Python worker PROCESS keyed by the endpoint set + knobs, so
-        # concurrent partitions on a reused worker share one in-flight
-        # cap / token bucket — the per-executor bound the reference gets
-        # implicitly from its single 128-thread node (config.yml:64).
-        from annotations_ingester_spark.annotator.backpressure import executor_gate
-
-        self._gate = (
-            executor_gate(
-                "|".join(sorted(endpoints)),
-                max_in_flight,
-                rate_limit_per_sec,
-                rate_limit_burst,
-            )
-            if (max_in_flight or rate_limit_per_sec)
-            else None
-        )
 
     def _http_post(self, url: str, text: str) -> dict[str, Any] | None:
         """POST one document (JSON envelope for MedCAT, text/plain for
@@ -282,11 +277,7 @@ class HttpNlpClient:
         for url in self.endpoints:
             envelope = None
             for _ in range(self.max_retries + 1):  # nlp_service.py:75-80
-                if self._gate is not None:
-                    with self._gate:  # each attempt is one request
-                        envelope = self._transport(url, text)
-                else:
-                    envelope = self._transport(url, text)
+                envelope = self._transport(url, text)
                 if envelope is not None:
                     break
             if self.mode == "gate":

@@ -18,6 +18,7 @@ except Exception:  # pragma: no cover
     yaml = None
 
 REQUIRED_TOP_LEVEL = ("source", "nlp-service", "sink", "mapping")
+PROTOCOL_MODES = ("", "medcat", "gate-nlp")  # config.yml:37
 
 
 @dataclass
@@ -53,11 +54,9 @@ class NlpServiceConfig:
     password: str | None = None
     max_retries_on_failure: int = 1  # config.yml:39
     application_params: dict[str, Any] = field(default_factory=dict)
-    # Back-pressure knobs (engine extension; the reference's implicit
-    # bound is one 128-thread node, config.yml:64 — a cluster needs it
-    # explicit). None = uncapped, the reference-parity default.
-    max_in_flight: int | None = None  # per-executor-process concurrent calls
-    rate_limit_per_sec: float | None = None  # per-executor-process req/s
+    # caps PipelineConfig.threads, the per-task call pool (engine
+    # extension); None = the pool alone bounds calls in flight
+    max_in_flight: int | None = None
 
 
 @dataclass
@@ -79,7 +78,7 @@ class PipelineConfig:
     batch_interval_days: int = 30  # config.yml:61, annotations_indexer.py:46
     date_start: str = ""  # config.yml:62
     date_end: str = ""  # config.yml:63
-    threads: int = 4  # annotations_indexer.py:40 (Spark: a parallelism hint)
+    threads: int = 4  # annotations_indexer.py:40; per-task NLP call pool size
     split_index_by_field: str = ""  # config.yml:66 → W2 partitioned sink
     skip_processed_doc_check: bool = False  # config.yml:68 → J1 anti-join
     use_bulk_indexing: bool = True
@@ -139,6 +138,25 @@ class PipelineConfig:
                 ),
             )
 
+        if "rate-limit-per-sec" in nlp:
+            raise ValueError(
+                "nlp-service.rate-limit-per-sec is not supported; bound NLP "
+                "traffic with mapping.source.batch.threads (the per-task call "
+                "pool) or nlp-service.max-in-flight"
+            )
+        protocol_mode = (
+            nlp.get("protocol-mode", nlp.get("endpoint-request-mode", "")) or ""
+        )
+        if protocol_mode not in PROTOCOL_MODES:
+            raise ValueError(
+                f"unknown protocol-mode {protocol_mode!r}; expected one of "
+                f"{list(PROTOCOL_MODES)}"
+            )
+        max_in_flight = nlp.get("max-in-flight")
+        if max_in_flight is not None and int(max_in_flight) < 1:
+            raise ValueError(
+                f"nlp-service.max-in-flight must be >= 1, got {max_in_flight!r}"
+            )
         nlp_creds = nlp.get("credentials", nlp.get("security", {})) or {}
         # reference canonical: mapping.index-ingest-mode.{same-index,
         # use-nested-objects, es-nested-object-schema-mapping}
@@ -157,24 +175,12 @@ class PipelineConfig:
             sink=conn(params.get("sink", {})),
             nlp=NlpServiceConfig(
                 endpoints=nlp.get("endpoints-url", nlp.get("endpoint-url", [])) or [],
-                mode=(
-                    nlp.get("protocol-mode", nlp.get("endpoint-request-mode", ""))
-                    or "medcat"
-                ),
+                mode=protocol_mode or "medcat",
                 username=nlp_creds.get("username", nlp_creds.get("user")) or None,
                 password=nlp_creds.get("password") or None,
                 max_retries_on_failure=int(nlp.get("max-retries-on-failure", 1)),
                 application_params=nlp.get("application-params", {}) or {},
-                max_in_flight=(
-                    int(nlp["max-in-flight"])
-                    if nlp.get("max-in-flight") is not None
-                    else None
-                ),
-                rate_limit_per_sec=(
-                    float(nlp["rate-limit-per-sec"])
-                    if nlp.get("rate-limit-per-sec") is not None
-                    else None
-                ),
+                max_in_flight=None if max_in_flight is None else int(max_in_flight),
             ),
             text_field=src_map.get("text-field", "document"),
             docid_field=src_map.get("docid-field", "_id"),

@@ -44,8 +44,3 @@ def seeded_hash64(col: Column | str, seed: Column | int, fast: bool = False) -> 
 def md5_hash64_sql(expr: str) -> str:
     """DuckDB-SQL rendering of :func:`md5_hash64` for oracle queries."""
     return f"(('0x' || substr(md5({expr}), 1, {HASH_HEX_CHARS}))::BIGINT)"
-
-
-def seeded_hash64_sql(expr: str, seed_expr: str) -> str:
-    """DuckDB-SQL rendering of :func:`seeded_hash64`."""
-    return md5_hash64_sql(f"({seed_expr})::VARCHAR || ':' || ({expr})")

@@ -160,11 +160,6 @@ def bag_fingerprint(col: Column | str) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def bag_fingerprint_sql(expr: str) -> str:
-    toks = tokens_sql(expr)
-    return f"md5(array_to_string(list_sort(list_distinct({toks})), ' '))"
-
-
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as an array<string>; empty when < n tokens.
     The shingle unit for MinHash/Jaccard dedup.

@@ -123,7 +123,7 @@ def test_annotation_outcome_counts(spark):
         [(i, "a reasonably long document body") for i in range(10)],
         "doc_id long, text string",
     )
-    ann = annotate(docs, HalfFailing, parallelism=None)
+    ann = annotate(docs, HalfFailing)
     [m] = annotation_outcome_counts(ann).collect()
     # A4 failure accounting: 5 failed (B3 retry population), 5 annotated
     assert (m["n_docs"], m["n_annotated"], m["n_failed"]) == (10, 5, 5)

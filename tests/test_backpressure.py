@@ -1,10 +1,11 @@
-"""Annotate-stage back-pressure (r10 verdict item 4): at 100 TB the
-stage runs executors × threads concurrent HTTP calls; the reference
-bounds this implicitly at one 128-thread node (reference: config.yml:64,
-ingester/annotations_indexer.py:311) — a distributed engine needs the
-bound explicit. These tests prove the per-process max-in-flight cap and
-token-bucket rate limit hold, including under a real local[32]
-mapInPandas run with an injectable transport counting concurrency."""
+"""Annotate-stage concurrency bound: at 100 TB the stage runs
+running tasks × threads concurrent HTTP calls; the reference bounds this
+at one 128-thread node (reference: config.yml:64,
+ingester/annotations_indexer.py:311). Here each running task has its own
+Python worker process and its own client, so the client's pool
+(``threads``, capped by ``max_in_flight``) is the one bound. These tests
+prove the cap holds, including under a real local mapInPandas run with an
+injectable transport counting concurrency per worker process."""
 
 from __future__ import annotations
 
@@ -14,110 +15,39 @@ import time
 
 import pytest
 
-from annotations_ingester_spark.annotator.backpressure import (
-    ExecutorGate,
-    TokenBucket,
-    executor_gate,
-)
 from annotations_ingester_spark.annotator.service import HttpNlpClient
 
 
-def test_token_bucket_paces_sustained_rate():
-    """15 acquisitions at rate=100/s, burst=1 must take >= 14/100 s —
-    self-pacing, not erroring — even when hammered from 8 threads."""
-    bucket = TokenBucket(rate=100.0, burst=1.0)
-    t0 = time.monotonic()
-    threads = [threading.Thread(target=bucket.acquire) for _ in range(15)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    elapsed = time.monotonic() - t0
-    assert elapsed >= 0.14 * 0.9  # 14 refills at 100/s, 10% clock slack
-    assert elapsed < 5.0
-
-
-def test_token_bucket_burst_allows_initial_spike():
-    bucket = TokenBucket(rate=5.0, burst=10.0)
-    t0 = time.monotonic()
-    for _ in range(10):
-        bucket.acquire()
-    assert time.monotonic() - t0 < 0.5  # the burst is free
-
-    with pytest.raises(ValueError):
-        TokenBucket(rate=0)
-    with pytest.raises(ValueError):
-        TokenBucket(rate=5, burst=0.5)
-
-
 def test_gate_caps_in_flight_across_threads():
-    """ExecutorGate(max_in_flight=3) under a 16-thread stampede: observed
-    peak concurrency inside the gate is exactly 3."""
-    gate = ExecutorGate(max_in_flight=3)
+    """HttpNlpClient(threads=16, max_in_flight=3) over 16 docs: observed
+    peak concurrency inside the transport is exactly 3."""
     lock = threading.Lock()
     state = {"now": 0, "peak": 0}
 
-    def work():
-        with gate:
-            with lock:
-                state["now"] += 1
-                state["peak"] = max(state["peak"], state["now"])
-            time.sleep(0.03)
-            with lock:
-                state["now"] -= 1
+    def transport(url, text):
+        with lock:
+            state["now"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+        time.sleep(0.03)
+        with lock:
+            state["now"] -= 1
+        return {"result": {"annotations": {"entities": {}}}}
 
-    threads = [threading.Thread(target=work) for _ in range(16)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    client = HttpNlpClient(["ep"], threads=16, transport=transport, max_in_flight=3)
+    out = client.annotate_batch(list(range(16)), ["text"] * 16)
+    assert out == [[]] * 16
     assert state["peak"] == 3
     with pytest.raises(ValueError):
-        ExecutorGate(max_in_flight=0)
-
-
-def test_executor_gate_interned_per_endpoint():
-    """Same key → same gate object regardless of who asks (what makes
-    the cap per-executor-process AND per-endpoint: interning by
-    (key, knobs) would let two annotators with different knob values
-    each get their own semaphore and jointly exceed both bounds).
-    Conflicting knobs for one endpoint are a configuration error."""
-    a = executor_gate("ep1", max_in_flight=4)
-    b = executor_gate("ep1", max_in_flight=4)
-    d = executor_gate("ep2", max_in_flight=4)
-    assert a is b
-    assert a is not d
-    with pytest.raises(ValueError, match="conflicting back-pressure knobs"):
-        executor_gate("ep1", max_in_flight=5)
-
-
-def test_http_client_rate_limit_self_paces():
-    """HttpNlpClient with rate_limit_per_sec wires the bucket around the
-    transport: 12 docs at rate=50/s, burst=1 take >= 11/50 s."""
-    calls = []
-    client = HttpNlpClient(
-        ["ep"],
-        mode="medcat",
-        threads=8,
-        transport=lambda u, t: (calls.append(time.monotonic()), {"result": {"annotations": {"entities": {}}}})[1],
-        rate_limit_per_sec=50.0,
-        rate_limit_burst=1.0,
-    )
-    t0 = time.monotonic()
-    out = client.annotate_batch(list(range(12)), ["text"] * 12)
-    elapsed = time.monotonic() - t0
-    assert len(out) == 12 and all(e == [] for e in out)
-    assert len(calls) == 12
-    assert elapsed >= (11 / 50) * 0.9
+        HttpNlpClient(["ep"], max_in_flight=0)
 
 
 def test_annotate_cap_holds_under_local32(spark, tmp_path):
-    """The verdict's acceptance bar: under a real local[32] mapInPandas
-    run, the in-flight cap holds in every Python worker process. The
-    injectable transport appends enter/leave records (pid, monotonic ts)
-    with O_APPEND atomic writes; post-hoc we recompute per-pid peak
-    concurrency. The gate is per-process (Spark reuses workers across
-    tasks), so the invariant is: peak <= cap within each pid."""
+    """Under a real local mapInPandas run, the in-flight cap holds in
+    every Python worker process. The injectable transport appends
+    enter/leave records (pid, monotonic ts) with O_APPEND atomic writes;
+    post-hoc we recompute per-pid peak concurrency. A reused worker runs
+    one task at a time, so the invariant is: peak <= cap within each
+    pid."""
     from annotations_ingester_spark.annotator.udf import annotate
 
     trace = str(tmp_path / "inflight.log")
@@ -146,7 +76,7 @@ def test_annotate_cap_holds_under_local32(spark, tmp_path):
         [(i, "a reasonably long document body") for i in range(48)],
         "doc_id long, text string",
     ).repartition(8)
-    ann = annotate(docs, factory, parallelism=None)
+    ann = annotate(docs, factory)
     rows = ann.select("doc_id", "entities").collect()
     assert len(rows) == 48
     assert all(r.entities is not None and len(r.entities) == 1 for r in rows)
@@ -175,43 +105,38 @@ def test_annotate_cap_holds_under_local32(spark, tmp_path):
 def test_config_parses_backpressure_knobs():
     from annotations_ingester_spark.config import PipelineConfig
 
-    cfg = PipelineConfig.from_dict(
-        {
-            "source": {"index-name": "src"},
-            "sink": {"index-name": "dst"},
-            "nlp-service": {
-                "endpoints-url": ["http://nlp:5000"],
-                "max-in-flight": "16",
-                "rate-limit-per-sec": 250,
-            },
-            "mapping": {},
-        }
-    )
-    assert cfg.nlp.max_in_flight == 16
-    assert cfg.nlp.rate_limit_per_sec == 250.0
-    # absent → None (reference-parity default: uncapped)
-    cfg2 = PipelineConfig.from_dict(
-        {
-            "source": {"index-name": "src"},
-            "sink": {"index-name": "dst"},
-            "nlp-service": {"endpoints-url": ["http://nlp:5000"]},
-            "mapping": {},
-        }
-    )
-    assert cfg2.nlp.max_in_flight is None and cfg2.nlp.rate_limit_per_sec is None
+    def cfg(**nlp):
+        return PipelineConfig.from_dict(
+            {
+                "source": {"index-name": "src"},
+                "sink": {"index-name": "dst"},
+                "nlp-service": {"endpoints-url": ["http://nlp:5000"], **nlp},
+                "mapping": {},
+            }
+        )
+
+    assert cfg(**{"max-in-flight": "16"}).nlp.max_in_flight == 16
+    # absent → None: the call pool alone bounds calls in flight
+    assert cfg().nlp.max_in_flight is None
+    with pytest.raises(ValueError, match="max-in-flight must be >= 1"):
+        cfg(**{"max-in-flight": 0})
+    # the removed rate limiter is refused, not silently ignored
+    with pytest.raises(ValueError, match="rate-limit-per-sec"):
+        cfg(**{"max-in-flight": 16, "rate-limit-per-sec": 250})
 
 
 def test_pipeline_w1_backpressure_knobs_from_yaml(spark, tmp_path):
-    """VERDICT r11 item 5: the back-pressure knobs travel the FULL config
-    path — YAML file → PipelineConfig → HttpNlpClient (constructed the
-    way __main__.py:91-100 constructs it) → executor_gate — inside a real
-    W1 flat pipeline run (valid_text_filter → annotate mapInPandas →
-    explode → meta./nlp. projection → dedup), and the gate is provably
-    ENGAGED: the injectable transport counts per-pid in-flight
-    concurrency and the observed peak must EQUAL the YAML cap (8 in-batch
-    threads would exceed it if the plumbing rotted anywhere)."""
+    """The concurrency knobs travel the FULL config path — YAML file →
+    PipelineConfig → the CLI's ``annotator_factory`` → HttpNlpClient —
+    inside a real W1 flat pipeline run (valid_text_filter → annotate
+    mapInPandas → explode → meta./nlp. projection → dedup), and the cap
+    is provably ENGAGED: the injectable transport counts per-pid in-flight
+    concurrency and the observed peak must EQUAL the YAML cap (the 8
+    in-batch threads the YAML asks for would exceed it if the plumbing
+    rotted anywhere)."""
     import yaml
 
+    from annotations_ingester_spark.annotator.registry import annotator_factory
     from annotations_ingester_spark.config import PipelineConfig
     from annotations_ingester_spark.plans.pipeline import AnnotationPipeline
 
@@ -219,28 +144,43 @@ def test_pipeline_w1_backpressure_knobs_from_yaml(spark, tmp_path):
     cfg_path.write_text(
         yaml.safe_dump(
             {
-                "source": {"index-name": "src_docs", "text-field": "text",
-                           "docid-field": "doc_id"},
+                "source": {"index-name": "src_docs"},
                 "sink": {"index-name": "ann_flat"},
                 "nlp-service": {
                     "endpoints-url": ["http://nlp-e2e-bp:5000"],
                     "protocol-mode": "medcat",
                     "max-in-flight": 2,
-                    "rate-limit-per-sec": 10000,
                 },
-                "batch": {"threads": 8},
-                "mapping": {},
+                "mapping": {
+                    "source": {
+                        "text-field": "text",
+                        "docid-field": "doc_id",
+                        "persist-fields": ["doc_id"],
+                        "batch": {"threads": 8},
+                    },
+                },
             }
         )
     )
     cfg = PipelineConfig.from_yaml(str(cfg_path))
     assert cfg.nlp.max_in_flight == 2
-    assert cfg.nlp.rate_limit_per_sec == 10000.0
+    assert cfg.threads == 8
+    assert (cfg.text_field, cfg.docid_field) == ("text", "doc_id")
 
     trace = str(tmp_path / "inflight_w1.log")
     nlp = cfg.nlp
+    # built the way __main__.py builds it
+    factory = annotator_factory(
+        nlp.endpoints,
+        nlp.mode,
+        params=nlp.application_params,
+        retries=nlp.max_retries_on_failure,
+        auth=(nlp.username, nlp.password) if nlp.username else None,
+        threads=cfg.threads,
+        max_in_flight=nlp.max_in_flight,
+    )
 
-    def annotator():  # mirrors __main__.py:90-100 minus the live socket
+    def annotator():  # the CLI's client minus the live socket
         def transport(url, text):
             pid = os.getpid()
             fd = os.open(trace, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
@@ -255,17 +195,9 @@ def test_pipeline_w1_backpressure_knobs_from_yaml(spark, tmp_path):
                       "pretty_name": "thing"}
             }}}}
 
-        return HttpNlpClient(
-            nlp.endpoints,
-            mode=nlp.mode,
-            auth=(nlp.username, nlp.password) if nlp.username else None,
-            max_retries=nlp.max_retries_on_failure,
-            application_params=nlp.application_params,
-            threads=cfg.threads,
-            transport=transport,
-            max_in_flight=nlp.max_in_flight,
-            rate_limit_per_sec=nlp.rate_limit_per_sec,
-        )
+        client = factory()
+        client._transport = transport
+        return client
 
     pipe = AnnotationPipeline(
         annotator,

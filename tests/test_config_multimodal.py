@@ -48,6 +48,26 @@ def test_pipeline_config_missing_keys():
         PipelineConfig.from_dict({"source": {}})
 
 
+def test_pipeline_config_refuses_unknown_protocol_mode():
+    """``gate`` is not a reference protocol-mode: the client would post
+    text/plain with GATE normalization while the pipeline builds a MedCAT
+    schema. Every accepted spelling loads; anything else is refused with
+    the accepted list, like an unknown backend."""
+    import copy
+
+    for mode, want in (("", "medcat"), (None, "medcat"), ("medcat", "medcat"),
+                       ("gate-nlp", "gate-nlp")):
+        d = copy.deepcopy(REFERENCE_STYLE_CONFIG)
+        d["nlp-service"]["protocol-mode"] = mode
+        assert PipelineConfig.from_dict(d).nlp.mode == want
+    for bad in ("gate", "GATE-NLP", "medcat "):
+        d = copy.deepcopy(REFERENCE_STYLE_CONFIG)
+        d["nlp-service"]["protocol-mode"] = bad
+        with pytest.raises(ValueError, match="unknown protocol-mode") as err:
+            PipelineConfig.from_dict(d)
+        assert all(repr(m) in str(err.value) for m in ("", "medcat", "gate-nlp"))
+
+
 def test_es_option_mapping():
     conf = ConnectorConfig(
         backend="elasticsearch", hosts=["http://es1:9200", "es2:9200"],
