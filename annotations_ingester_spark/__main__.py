@@ -46,20 +46,15 @@ def main(argv: list[str] | None = None) -> int:
     from annotations_ingester_spark.sources import BACKENDS, parquet
     from annotations_ingester_spark.utils import check_url_available
 
-    cfg = PipelineConfig.from_yaml(args.config)
+    try:
+        cfg = PipelineConfig.from_yaml(args.config)
+    except ValueError as exc:
+        print(f"config {args.config}: {exc}", file=sys.stderr)
+        return 2
     logging.basicConfig(
         level=cfg.logging_level,  # reference logging-level, config.yml:73
         format="%(asctime)s %(levelname)s %(message)s",
     )
-    if cfg.es_date_format != "yyyy-MM-dd" or cfg.python_date_format != "%Y-%m-%d":
-        # range_filter/date_windows operate on ISO date strings; a custom
-        # format would silently mis-scope every range scan — refuse loudly
-        print(
-            "only ISO date formats (yyyy-MM-dd / %Y-%m-%d) are supported; "
-            f"got {cfg.es_date_format!r} / {cfg.python_date_format!r}",
-            file=sys.stderr,
-        )
-        return 2
     date_start = args.date_start or cfg.date_start
     date_end = args.date_end or cfg.date_end
     dated = bool(date_start and date_end)
@@ -68,8 +63,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if nested and (args.segmented or args.stream):
         # both write flat rows; silently running nested any other way would
-        # betray the flag — refuse loudly (same philosophy as the
-        # date-format refusal above)
+        # betray the flag — refuse loudly
         print(
             "--segmented and --stream are not supported with ingest-mode=nested; "
             "run the whole span (the J1 skip-processed anti-join makes reruns "

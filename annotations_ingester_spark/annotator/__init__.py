@@ -4,23 +4,3 @@ This formalizes the reference's only extension point — the NLP REST call
 (reference: ingester/nlp_service.py:40-136) — as a typed interface with a
 ``mapInPandas``-backed Spark operator (SURVEY §2.9).
 """
-
-from annotations_ingester_spark.annotator.service import (
-    Annotator,
-    BioyodieClient,
-    HttpNlpClient,
-    normalize_gate,
-    normalize_medcat,
-)
-from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
-from annotations_ingester_spark.annotator.udf import annotate
-
-__all__ = [
-    "Annotator",
-    "HttpNlpClient",
-    "BioyodieClient",
-    "DeterministicFakeAnnotator",
-    "normalize_medcat",
-    "normalize_gate",
-    "annotate",
-]

@@ -13,6 +13,11 @@ Response-envelope semantics follow the reference
   ``pipeline_url``, ``timestamp``, and ``source_value`` = the text
   substring covered by ``indices`` (nlp_service.py:112-125).
 
+Both modes coerce each entity against its declared struct,
+``types.MEDCAT_ENTITY`` or ``types.GATE_ENTITY`` (the reference's ES
+mappings, annotations_indexer.py:359-833), with :func:`coerce`: the struct
+is the one list of entity fields and their types.
+
 Conscious fix vs the reference: GATE id reassignment iterates entity
 types in *sorted* order (the reference relies on dict insertion order,
 nlp_service.py:113) so output is deterministic and oracle-checkable.
@@ -34,75 +39,40 @@ import logging
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Protocol
 
+from pyspark.sql import types as T
+
+from annotations_ingester_spark.types import GATE_ENTITY, MEDCAT_ENTITY
+
 log = logging.getLogger(__name__)
 
-MEDCAT_ENTITY_KEYS = (
-    "id",
-    "cui",
-    "tuis",
-    "types",
-    "pretty_name",
-    "detected_name",
-    "source_value",
-    "start",
-    "end",
-    "acc",
-    "context_similarity",
-    "meta_anns",
-    "timestamp",
-)
-
-GATE_ENTITY_KEYS = (
-    "id",
-    "type",
-    "indices",
-    "source_value",
-    "kind",
-    "rule",
-    "ruleFinal",
-    "NMRule",
-    "firstName",
-    "surname",
-    "initials",
-    "title",
-    "gender",
-    "orgType",
-    "matchedWithLonger",
-    "matches",
-    "pipeline_url",
-    "timestamp",
-)
-
-_LONG_FIELDS = {"id", "start", "end", "matches"}
-_DOUBLE_FIELDS = {"acc", "context_similarity"}
-
-
-def _coerce_medcat(entity: dict[str, Any]) -> dict[str, Any]:
-    """Project onto the typed MedCAT schema (drop unknown keys, coerce
-    numerics). Unknown keys such as the merged ``medcat_info`` fields
-    (nlp_service.py:105-107) are intentionally not part of the declared
-    mapping (annotations_indexer.py:593-687) and are dropped."""
-    out: dict[str, Any] = {}
-    for k in MEDCAT_ENTITY_KEYS:
-        v = entity.get(k)
-        if v is not None and k in _LONG_FIELDS:
-            v = int(v)
-        elif v is not None and k in _DOUBLE_FIELDS:
-            v = float(v)
-        elif k == "meta_anns" and isinstance(v, dict):
-            v = {
-                str(mk): {
-                    "confidence": (
-                        float(mv.get("confidence")) if mv.get("confidence") is not None else None
-                    ),
-                    "name": mv.get("name"),
-                    "value": mv.get("value"),
-                }
-                for mk, mv in v.items()
-                if isinstance(mv, dict)
-            }
-        out[k] = v
-    return out
+def coerce(value: Any, dtype: T.DataType) -> Any:
+    """``value`` in the Python shape of ``dtype``: Long → ``int``, Double →
+    ``float``, Boolean → ``bool``; a struct → its declared fields (undeclared
+    keys such as the merged ``medcat_info``, nlp_service.py:105-107, are not
+    in the declared mapping, annotations_indexer.py:593-687, and drop out);
+    a map of structs → its dict values, coerced. ``None`` and every other
+    type pass through unchanged."""
+    if value is None:
+        return None
+    if isinstance(dtype, T.LongType):
+        return int(value)
+    if isinstance(dtype, T.DoubleType):
+        return float(value)
+    if isinstance(dtype, T.BooleanType):
+        return bool(value)
+    if isinstance(dtype, T.StructType) and isinstance(value, dict):
+        return {f.name: coerce(value.get(f.name), f.dataType) for f in dtype.fields}
+    if (
+        isinstance(dtype, T.MapType)
+        and isinstance(dtype.valueType, T.StructType)
+        and isinstance(value, dict)
+    ):
+        return {
+            str(k): coerce(v, dtype.valueType)
+            for k, v in value.items()
+            if isinstance(v, dict)
+        }
+    return value
 
 
 def normalize_medcat(envelope: dict[str, Any] | None) -> list[dict[str, Any]] | None:
@@ -132,7 +102,7 @@ def normalize_medcat(envelope: dict[str, Any] | None) -> list[dict[str, Any]] | 
             continue
         ent = dict(ent)
         ent.setdefault("timestamp", ts)  # nlp_service.py:108
-        out.append(_coerce_medcat(ent))
+        out.append(coerce(ent, MEDCAT_ENTITY))
     return out
 
 
@@ -172,15 +142,7 @@ def normalize_gate(
                 ent["source_value"] = text[indices[0] : indices[1]]
             ent.setdefault("pipeline_url", pipeline_url)
             ent.setdefault("timestamp", timestamp)
-            coerced: dict[str, Any] = {}
-            for k in GATE_ENTITY_KEYS:
-                v = ent.get(k)
-                if v is not None and k in _LONG_FIELDS:
-                    v = int(v)
-                elif k == "matchedWithLonger" and v is not None:
-                    v = bool(v)
-                coerced[k] = v
-            out.append(coerced)
+            out.append(coerce(ent, GATE_ENTITY))
     return out
 
 

@@ -5,10 +5,19 @@ Mirrors the reference's config dataclass
 and config/config.yml keys) so a user of the reference can bring their
 config file unchanged. Wiring/validation mirrors ingester/__main__.py:34-45
 (requires ``source``, ``nlp-service``, ``sink``, ``mapping``).
+
+Only keys that change what the engine does become fields. A reference key
+the engine has no use for (``use-bulk-indexing``: every Spark write is a
+bulk write; ``use-nested-objects``, ``es-nested-object-schema-mapping``,
+``annotation-response``, ``ca-file-path``) loads and draws a warning, as
+does any misplaced or misspelt key. The date formats must be ISO
+(``yyyy-MM-dd`` / ``%Y-%m-%d``): range scans compare ISO date strings, so
+``from_dict`` refuses any other format rather than mis-scope them.
 """
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -16,6 +25,8 @@ try:  # YAML is optional — dict-based construction always works.
     import yaml  # type: ignore
 except Exception:  # pragma: no cover
     yaml = None
+
+log = logging.getLogger(__name__)
 
 REQUIRED_TOP_LEVEL = ("source", "nlp-service", "sink", "mapping")
 PROTOCOL_MODES = ("", "medcat", "gate-nlp")  # config.yml:37
@@ -59,10 +70,45 @@ class NlpServiceConfig:
     max_in_flight: int | None = None
 
 
+class _Section:
+    """One mapping of the YAML config that records which of its keys the
+    parser looks up. :meth:`section` opens a nested mapping the same way;
+    :meth:`get` hands a value back as it is, so free-form values such as
+    ``application-params`` are never walked."""
+
+    def __init__(self, data: Any, path: str = "") -> None:
+        if not isinstance(data, dict):
+            raise ValueError(f"config section {path or '<top>'!r} must be a mapping")
+        self.data, self.path = data, path
+        self.read: set[str] = set()
+        self.opened: list[_Section] = []
+
+    def get(self, key: str, default: Any = None) -> Any:
+        self.read.add(key)
+        return self.data.get(key, default)
+
+    def __contains__(self, key: str) -> bool:
+        self.read.add(key)
+        return key in self.data
+
+    def section(self, key: str) -> "_Section":
+        sub = _Section(self.get(key) or {}, f"{self.path}{key}.")
+        self.opened.append(sub)
+        return sub
+
+    def unread(self) -> list[str]:
+        """Dotted paths of the keys no lookup read, here and in every
+        section opened from this one."""
+        return [f"{self.path}{k}" for k in self.data if k not in self.read] + [
+            key for sub in self.opened for key in sub.unread()
+        ]
+
+
 @dataclass
 class PipelineConfig:
     """The logical plan as configuration — 1:1 with the reference's
-    ``AnnotationIndexerConfig`` fields (ingester/annotations_indexer.py:18-49).
+    ``AnnotationIndexerConfig`` fields (ingester/annotations_indexer.py:18-49)
+    that change what the engine does.
     """
 
     source: ConnectorConfig = field(default_factory=ConnectorConfig)
@@ -73,50 +119,49 @@ class PipelineConfig:
     docid_field: str = "_id"  # config.yml:53
     persist_fields: list[str] = field(default_factory=lambda: ["_id"])  # :54-56
     date_field: str = "dct"  # config.yml:59
-    es_date_format: str = "yyyy-MM-dd"  # config.yml:59
-    python_date_format: str = "%Y-%m-%d"  # config.yml:60
     batch_interval_days: int = 30  # config.yml:61, annotations_indexer.py:46
     date_start: str = ""  # config.yml:62
     date_end: str = ""  # config.yml:63
     threads: int = 4  # annotations_indexer.py:40; per-task NLP call pool size
     split_index_by_field: str = ""  # config.yml:66 → W2 partitioned sink
     skip_processed_doc_check: bool = False  # config.yml:68 → J1 anti-join
-    use_bulk_indexing: bool = True
-    use_nested_objects: bool = False  # README.md:66 → same-index nested|flattened
     ingest_mode: str = "separate-index"  # W1 | "same-index" (W3) | "nested" (W4)
-    schema_mapping: str = "medcat-separate-index"  # config.yml:51
     annotation_id_field: str = "id"  # config.yml:69 mapping.nlp.annotation-id-field
     logging_level: int = 20  # config.yml:73 (INFO)
 
     @classmethod
     def from_dict(cls, params: dict[str, Any]) -> "PipelineConfig":
-        """Build from the reference's YAML dict shape (ingester/__main__.py:100-117)."""
+        """Build from the reference's YAML dict shape (ingester/__main__.py:100-117).
+
+        Logs a warning for each key of a section this parser opens that no
+        lookup below reads: a misplaced or misspelt key would otherwise
+        fall back to its default without a word."""
         missing = [k for k in REQUIRED_TOP_LEVEL if k not in params]
         if missing:
             raise ValueError(f"config missing required keys: {missing}")
-        mapping = params.get("mapping", {}) or {}
-        src_map = mapping.get("source", {}) or {}
-        batch = src_map.get("batch", {}) or {}
-        nlp = params.get("nlp-service", {}) or {}
+        top = _Section(params)
+        mapping = top.section("mapping")
+        src_map = mapping.section("source")
+        batch = src_map.section("batch")
+        nlp = top.section("nlp-service")
 
         # imported here: the backend modules import this one
         from annotations_ingester_spark.sources import BACKENDS
 
-        def conn(section: dict[str, Any]) -> ConnectorConfig:
+        def conn(sec: _Section) -> ConnectorConfig:
             """Accepts BOTH the reference's canonical config.yml shape
             (``es.credentials`` / ``es.extra-params`` — config/config.yml:1-33)
             and this engine's flattened ``security`` block, so a reference
             config file loads unchanged."""
-            sec = section or {}
             backend = sec.get("backend", "elasticsearch" if "es" in sec else "parquet")
             if backend not in BACKENDS:
                 raise ValueError(
                     f"unknown backend {backend!r}; expected one of {sorted(BACKENDS)}"
                 )
-            es = sec.get("es", sec)
-            security = es.get("security", {}) or {}
-            creds = es.get("credentials", {}) or {}
-            extra = es.get("extra-params", {}) or {}
+            es = sec.section("es") if "es" in sec else sec
+            security = es.section("security")
+            creds = es.section("credentials")
+            extra = es.section("extra-params")
             api_key = creds.get("api-key") or security.get("elastic-api-key")
             if not creds.get("use-api-key", True):
                 api_key = None  # reference flag: basic auth wins
@@ -157,22 +202,34 @@ class PipelineConfig:
             raise ValueError(
                 f"nlp-service.max-in-flight must be >= 1, got {max_in_flight!r}"
             )
-        nlp_creds = nlp.get("credentials", nlp.get("security", {})) or {}
-        # reference canonical: mapping.index-ingest-mode.{same-index,
-        # use-nested-objects, es-nested-object-schema-mapping}
-        # (config/config.yml:48-51); engine shorthand: mapping.sink.*
-        ingest = mapping.get("index-ingest-mode", {}) or {}
-        sink_map = mapping.get("sink", {}) or {}
-        nlp_map = mapping.get("nlp", {}) or {}
+        # range_filter/date_windows compare ISO date strings; any other
+        # format would silently mis-scope every range scan
+        for key, iso in (
+            ("date-format", "yyyy-MM-dd"),
+            ("es-date-format", "yyyy-MM-dd"),
+            ("python-date-format", "%Y-%m-%d"),
+        ):
+            value = batch.get(key, iso)
+            if value != iso:
+                raise ValueError(
+                    f"mapping.source.batch.{key} {value!r} is not supported; "
+                    f"only the ISO format {iso!r} is"
+                )
+        nlp_creds = nlp.section("credentials" if "credentials" in nlp else "security")
+        # reference canonical: mapping.index-ingest-mode.same-index
+        # (config/config.yml:48-51); engine shorthand: mapping.sink.ingest-mode
+        ingest = mapping.section("index-ingest-mode")
+        sink_map = mapping.section("sink")
+        nlp_map = mapping.section("nlp")
         if "ingest-mode" in sink_map:
-            ingest_mode = sink_map["ingest-mode"]
+            ingest_mode = sink_map.get("ingest-mode")
         elif ingest.get("same-index", False):
             ingest_mode = "same-index"
         else:
             ingest_mode = "separate-index"
-        return cls(
-            source=conn(params.get("source", {})),
-            sink=conn(params.get("sink", {})),
+        cfg = cls(
+            source=conn(top.section("source")),
+            sink=conn(top.section("sink")),
             nlp=NlpServiceConfig(
                 endpoints=nlp.get("endpoints-url", nlp.get("endpoint-url", [])) or [],
                 mode=protocol_mode or "medcat",
@@ -186,10 +243,6 @@ class PipelineConfig:
             docid_field=src_map.get("docid-field", "_id"),
             persist_fields=src_map.get("persist-fields", ["_id"]) or [],
             date_field=batch.get("date-field", "dct"),
-            es_date_format=batch.get(
-                "date-format", batch.get("es-date-format", "yyyy-MM-dd")
-            ),
-            python_date_format=batch.get("python-date-format", "%Y-%m-%d"),
             batch_interval_days=int(batch.get("interval", 30)),
             date_start=str(batch.get("date-start", "")),
             date_end=str(batch.get("date-end", "")),
@@ -201,22 +254,13 @@ class PipelineConfig:
                     src_map.get("skip-processed-doc-check", False),
                 )
             ),
-            use_bulk_indexing=bool(
-                nlp.get("use-bulk-indexing", sink_map.get("use-bulk-indexing", True))
-            ),
-            use_nested_objects=bool(
-                ingest.get(
-                    "use-nested-objects", sink_map.get("use-nested-objects", False)
-                )
-            ),
             ingest_mode=ingest_mode,
-            schema_mapping=ingest.get(
-                "es-nested-object-schema-mapping",
-                sink_map.get("es-nested-object-schema-mapping", "medcat-separate-index"),
-            ),
             annotation_id_field=nlp_map.get("annotation-id-field", "id") or "id",
-            logging_level=int(params.get("logging-level", 20) or 20),
+            logging_level=int(top.get("logging-level", 20) or 20),
         )
+        for key in top.unread():
+            log.warning("config key %s is not read by this engine; ignored", key)
+        return cfg
 
     @classmethod
     def from_yaml(cls, path: str) -> "PipelineConfig":

@@ -1,36 +1,1 @@
 """Scalar function library (SURVEY §2.6) + portable hashing + text/vector ops."""
-
-from annotations_ingester_spark.functions.names import (
-    format_index_name,
-    index_name,
-    normalize_index_name,
-    synth_row_id,
-)
-from annotations_ingester_spark.functions.hashing import md5_hash64, seeded_hash64
-from annotations_ingester_spark.functions.text import (
-    bag_fingerprint,
-    punct_ratio,
-    quality_score,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from annotations_ingester_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
-
-__all__ = [
-    "format_index_name",
-    "index_name",
-    "normalize_index_name",
-    "synth_row_id",
-    "md5_hash64",
-    "seeded_hash64",
-    "tokens",
-    "token_count",
-    "punct_ratio",
-    "quality_score",
-    "bag_fingerprint",
-    "word_shingles",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-]

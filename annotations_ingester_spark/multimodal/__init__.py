@@ -6,19 +6,3 @@ shape, partitioning, UDF signatures) is real and tested; the actual codec
 work is stubbed (``decode_fn`` injectable; the container has no
 image/audio libraries) behind deterministic fakes.
 """
-
-from annotations_ingester_spark.multimodal.media import (
-    MEDIA_META,
-    MEDIA_SCHEMA,
-    extract_features,
-    fake_decode,
-    media_table_schema,
-)
-
-__all__ = [
-    "MEDIA_META",
-    "MEDIA_SCHEMA",
-    "media_table_schema",
-    "extract_features",
-    "fake_decode",
-]

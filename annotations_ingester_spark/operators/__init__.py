@@ -1,59 +1,1 @@
 """Relational + pipeline operators (SURVEY §2) and north-star extensions."""
-
-from annotations_ingester_spark.operators.filters import (
-    exists,
-    match_predicate,
-    range_filter,
-    response_shape_guard,
-    valid_text_filter,
-)
-from annotations_ingester_spark.operators.antijoin import skip_processed
-from annotations_ingester_spark.operators.asof import asof_join, bucketized_range_join
-from annotations_ingester_spark.operators.dedup import (
-    bag_fingerprints,
-    dedup_exact,
-    exact_duplicate_groups,
-    lsh_band_keys,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash_signatures,
-)
-from annotations_ingester_spark.operators.explode import (
-    explode_entities,
-    prefix_project,
-    split_index_suffix,
-)
-from annotations_ingester_spark.operators.similarity import (
-    brute_force_topk,
-    bucketed_topk,
-    embedding_near_duplicates,
-)
-from annotations_ingester_spark.operators.windows import date_windows, window_segment
-
-__all__ = [
-    "valid_text_filter",
-    "range_filter",
-    "match_predicate",
-    "exists",
-    "response_shape_guard",
-    "skip_processed",
-    "asof_join",
-    "bucketized_range_join",
-    "explode_entities",
-    "prefix_project",
-    "split_index_suffix",
-    "date_windows",
-    "window_segment",
-    "exact_duplicate_groups",
-    "dedup_exact",
-    "bag_fingerprints",
-    "minhash_signatures",
-    "lsh_band_keys",
-    "lsh_candidate_pairs",
-    "simhash_signatures",
-    "ngram_jaccard_pairs",
-    "brute_force_topk",
-    "bucketed_topk",
-    "embedding_near_duplicates",
-]

@@ -18,9 +18,7 @@ def skip_processed(
     source: DataFrame,
     processed_ids: DataFrame | None = None,
     docid_field: str = "doc_id",
-    processed_id_field: str | None = None,
     annotations_col: str | None = None,
-    broadcast_threshold_rows: int | None = None,
 ) -> DataFrame:
     """Drop source docs that were already processed.
 
@@ -42,17 +40,7 @@ def skip_processed(
         return source.filter(c.isNull() | (F.size(c) == 0))
     if processed_ids is None:
         return source
-    pid = processed_id_field or docid_field
-    keys = processed_ids.select(F.col(pid).alias(docid_field)).distinct()
-    if broadcast_threshold_rows:
-        # an actual threshold, not a boolean: only hint the broadcast when
-        # the distinct id set really fits (a billion-row processed table
-        # at continuous-ingest scale must fall back to the shuffle
-        # anti-join, not OOM the driver). limit(n+1).count() bounds the
-        # probe cost by the threshold itself.
-        probe = keys.limit(broadcast_threshold_rows + 1).count()
-        if probe <= broadcast_threshold_rows:
-            keys = F.broadcast(keys)
+    keys = processed_ids.select(docid_field).distinct()
     return source.join(keys, on=docid_field, how="left_anti")
 
 

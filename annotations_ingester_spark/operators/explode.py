@@ -20,24 +20,18 @@ from annotations_ingester_spark.functions.names import normalize_index_name, syn
 from annotations_ingester_spark.types import FIELD_ANN_PREFIX, FIELD_META_PREFIX
 
 
-def explode_entities(
-    df: DataFrame,
-    entities_col: str = "entities",
-    entity_alias: str = "entity",
-) -> DataFrame:
+def explode_entities(df: DataFrame) -> DataFrame:
     """One output row per entity; rows with NULL/empty entities drop out
     (inner explode — P6 guard composes with this)."""
-    return df.withColumn(entity_alias, F.explode(F.col(entities_col))).drop(entities_col)
+    return df.withColumn("entity", F.explode("entities")).drop("entities")
 
 
 def prefix_project(
     df: DataFrame,
     persist_fields: list[str],
     docid_field: str = "doc_id",
-    entity_alias: str = "entity",
     ann_fields: list[str] | None = None,
     dotted: bool = True,
-    with_row_id: bool = True,
     extra_cols: list[str] | None = None,
     ann_id_field: str = "id",
 ) -> DataFrame:
@@ -50,13 +44,11 @@ def prefix_project(
     underscores for SQL-friendly downstream use.
     """
     sep = "." if dotted else "_"
-    ent = F.col(entity_alias)
-    fields = ann_fields or [f.name for f in df.schema[entity_alias].dataType.fields]
-    cols: list[Column] = []
-    if with_row_id:
-        cols.append(
-            synth_row_id(F.col(docid_field), ent.getField(ann_id_field)).alias("row_id")
-        )
+    ent = F.col("entity")
+    fields = ann_fields or [f.name for f in df.schema["entity"].dataType.fields]
+    cols: list[Column] = [
+        synth_row_id(F.col(docid_field), ent.getField(ann_id_field)).alias("row_id")
+    ]
     for p in persist_fields:
         cols.append(F.col(p).alias(f"{FIELD_META_PREFIX}{sep}{p}"))
     for f in fields:
@@ -66,16 +58,11 @@ def prefix_project(
     return df.select(*cols)
 
 
-def split_index_suffix(
-    df: DataFrame,
-    split_by_field: str,
-    entity_alias: str = "entity",
-    out_col: str = "index_suffix",
-) -> DataFrame:
+def split_index_suffix(df: DataFrame, split_by_field: str) -> DataFrame:
     """W2: per-row sink partition from an entity field's normalized value
     (reference: annotations_indexer.py:214-218; name rules es_common.py:
     116-131). Feeds ``partitionBy`` (parquet) or the ES dynamic resource
     pattern ``sink-{suffix}``."""
     return df.withColumn(
-        out_col, normalize_index_name(F.col(entity_alias).getField(split_by_field))
+        "index_suffix", normalize_index_name(F.col("entity").getField(split_by_field))
     )

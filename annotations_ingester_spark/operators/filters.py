@@ -51,9 +51,9 @@ def exists(df: DataFrame, criteria: dict[str, object]) -> bool:
     return match_predicate(df, criteria).limit(1).count() > 0
 
 
-def response_shape_guard(df: DataFrame, entities_col: str = "entities") -> DataFrame:
+def response_shape_guard(df: DataFrame) -> DataFrame:
     """P6: drop rows whose enrichment produced no well-formed payload
     (NULL entities — reference guards ingester/annotations_indexer.py:266-289).
     Rows dropped here stay unprocessed and are retried by the next run's
     anti-join (B3)."""
-    return df.filter(F.col(entities_col).isNotNull())
+    return df.filter(F.col("entities").isNotNull())

@@ -1,5 +1,1 @@
 """End-to-end pipeline plans (SURVEY §3.4)."""
-
-from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
-
-__all__ = ["AnnotationPipeline", "flat_annotations"]

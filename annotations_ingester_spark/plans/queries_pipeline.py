@@ -11,27 +11,18 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
 from annotations_ingester_spark.plans.catalog import register, table
 from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
 from annotations_ingester_spark.sinks.writers import merge_annotation_sets
+from annotations_ingester_spark.types import MEDCAT_ENTITY
 
 # MedCAT flat fields projected in oracle-checked queries (meta_anns is a map —
 # kept in the engine schema, omitted from hash-compared projections).
 MEDCAT_FLAT_FIELDS = [
-    "id",
-    "cui",
-    "tuis",
-    "types",
-    "pretty_name",
-    "detected_name",
-    "source_value",
-    "start",
-    "end",
-    "acc",
-    "context_similarity",
-    "timestamp",
+    f.name for f in MEDCAT_ENTITY.fields if not isinstance(f.dataType, T.MapType)
 ]
 
 # Shared oracle CTEs: valid docs + recomputed fake-MedCAT entities.

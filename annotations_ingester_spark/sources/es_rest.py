@@ -24,14 +24,18 @@ bulk-posts its own partition — nothing funnels through the driver); reads
 run ``mapInPandas`` over one slice per partition, as many slices as task
 slots, so the whole source is read in one wave with no shuffle. Auth mirrors
 ``es_common_options``: basic auth or ApiKey header, from the same
-``ConnectorConfig``.
+``ConnectorConfig``. So does TLS for an ``https://`` host: the config's CA
+file, client certificate/key and ``check_certificate`` (``verify-certs``)
+set up the context, as they do the connector's ``es.net.ssl*`` options.
 """
 
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import logging
+import ssl
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
@@ -87,23 +91,20 @@ def _base_url(conf: ConnectorConfig) -> str:
     return host.rstrip("/")
 
 
-def _request(
-    url: str,
-    headers: dict[str, str],
-    body: bytes | None = None,
-    method: str = "GET",
-    content_type: str | None = None,
-    with_headers: bool = False,
-) -> dict[str, Any] | tuple[dict[str, Any], dict[str, str]]:
-    hdrs = dict(headers)
-    if content_type:
-        hdrs["Content-Type"] = content_type
-    req = urllib.request.Request(url, data=body, headers=hdrs, method=method)
-    with urllib.request.urlopen(req, timeout=BULK_REQUEST_TIMEOUT_S) as resp:
-        payload = resp.read()
-        resp_headers = {k.lower(): v for k, v in resp.headers.items()}
-    parsed = json.loads(payload) if payload else {}
-    return (parsed, resp_headers) if with_headers else parsed
+@functools.lru_cache(maxsize=None)
+def _ssl_context(
+    ca_certs: str | None, client_cert: str | None, client_key: str | None, verify: bool
+) -> ssl.SSLContext:
+    """The TLS context for one set of ``ConnectorConfig`` settings, built
+    once per process: a context does not pickle, so a client carries the
+    settings into its tasks and each process builds its own."""
+    ctx = ssl.create_default_context(cafile=ca_certs)
+    if not verify:
+        ctx.check_hostname = False
+        ctx.verify_mode = ssl.CERT_NONE
+    if client_cert:
+        ctx.load_cert_chain(client_cert, client_key)
+    return ctx
 
 
 def _hit_doc(hit: dict[str, Any]) -> dict[str, Any]:
@@ -116,18 +117,40 @@ def _hit_doc(hit: dict[str, Any]) -> dict[str, Any]:
 
 class EsRestClient:
     """Driver- or executor-side client for the REST subset above. Plain
-    picklable state (url + headers) so executors can construct requests
-    inside ``foreachPartition``/``mapInPandas`` closures."""
+    picklable state (url, headers, TLS settings) so executors can construct
+    requests inside ``foreachPartition``/``mapInPandas`` closures."""
 
     def __init__(self, conf: ConnectorConfig):
         self.url = _base_url(conf)
         self.headers = _headers(conf)
         self.index = format_index_name(conf.index_name) if conf.index_name else ""
+        self.tls = (conf.ca_certs, conf.client_cert, conf.client_key, conf.check_certificate)
+
+    def _request(
+        self,
+        path: str,
+        body: bytes | None = None,
+        method: str = "GET",
+        content_type: str | None = None,
+        with_headers: bool = False,
+    ) -> dict[str, Any] | tuple[dict[str, Any], dict[str, str]]:
+        hdrs = dict(self.headers)
+        if content_type:
+            hdrs["Content-Type"] = content_type
+        req = urllib.request.Request(self.url + path, data=body, headers=hdrs, method=method)
+        context = _ssl_context(*self.tls) if self.url.startswith("https://") else None
+        with urllib.request.urlopen(
+            req, timeout=BULK_REQUEST_TIMEOUT_S, context=context
+        ) as resp:
+            payload = resp.read()
+            resp_headers = {k.lower(): v for k, v in resp.headers.items()}
+        parsed = json.loads(payload) if payload else {}
+        return (parsed, resp_headers) if with_headers else parsed
 
     # -- compat handshake -------------------------------------------------
     def info(self) -> dict[str, Any]:
         """GET / — cluster name + version (the public root endpoint)."""
-        return _request(f"{self.url}/", self.headers)
+        return self._request("/")
 
     def verify_compat(self) -> int:
         """The version handshake official 8.x clients perform: read the
@@ -139,9 +162,7 @@ class EsRestClient:
         REST subset this backend speaks (typeless mappings, untyped
         ``_doc`` endpoints, ndjson bulk) is valid wire traffic on both
         7.x and 8.x, so no request shape changes with the version."""
-        body, resp_headers = _request(
-            f"{self.url}/", self.headers, with_headers=True
-        )
+        body, resp_headers = self._request("/", with_headers=True)
         number = str(body.get("version", {}).get("number", ""))
         major = int(number.split(".")[0]) if number.split(".")[0].isdigit() else 0
         if major >= 8 and resp_headers.get("x-elastic-product") != "Elasticsearch":
@@ -156,7 +177,7 @@ class EsRestClient:
     # -- admin -----------------------------------------------------------
     def create_index(self, index: str | None = None) -> None:
         try:
-            _request(f"{self.url}/{index or self.index}", self.headers, b"{}", "PUT")
+            self._request(f"/{index or self.index}", b"{}", "PUT")
         except urllib.error.HTTPError as e:
             if e.code != 400:  # already exists
                 raise
@@ -164,15 +185,14 @@ class EsRestClient:
     def drop_index(self, index: str | None = None) -> None:
         # reference: es_common.py:162-167 (errors logged, not raised)
         try:
-            _request(f"{self.url}/{index or self.index}", self.headers, method="DELETE")
+            self._request(f"/{index or self.index}", method="DELETE")
         except urllib.error.HTTPError as e:
             log.warning("drop_index(%s): %s", index or self.index, e)
 
     def put_mapping(self, mapping: dict[str, Any], index: str | None = None) -> None:
         # reference: annotations_indexer.py:835-840
-        _request(
-            f"{self.url}/{index or self.index}/_mapping",
-            self.headers,
+        self._request(
+            f"/{index or self.index}/_mapping",
             json.dumps(mapping).encode(),
             "PUT",
         )
@@ -181,9 +201,7 @@ class EsRestClient:
     def get_doc(self, doc_id: str, index: str | None = None) -> dict[str, Any] | None:
         # reference: es_common.py:212-231 — merge _id/_index into the source
         try:
-            r = _request(
-                f"{self.url}/{index or self.index}/_doc/{doc_id}", self.headers
-            )
+            r = self._request(f"/{index or self.index}/_doc/{doc_id}")
         except urllib.error.HTTPError as e:
             if e.code == 404:
                 return None
@@ -196,7 +214,7 @@ class EsRestClient:
     def count(self, query: dict[str, Any] | None = None, index: str | None = None) -> int:
         # reference: es_common.py:153-160
         body = json.dumps({"query": query} if query else {}).encode()
-        r = _request(f"{self.url}/{index or self.index}/_count", self.headers, body, "POST")
+        r = self._request(f"/{index or self.index}/_count", body, "POST")
         return int(r.get("count", 0))
 
     def doc_exists(self, criteria: dict[str, Any], index: str | None = None) -> bool:
@@ -230,9 +248,8 @@ class EsRestClient:
             body["_source"] = source or False
         if max_slices > 1:
             body["slice"] = {"id": slice_id, "max": max_slices}
-        r = _request(
-            f"{self.url}/{index or self.index}/_search?scroll=1m",
-            self.headers,
+        r = self._request(
+            f"/{index or self.index}/_search?scroll=1m",
             json.dumps(body).encode(),
             "POST",
         )
@@ -242,9 +259,8 @@ class EsRestClient:
                 yield [_hit_doc(h) for h in hits]
                 if not sid:
                     return
-                r = _request(
-                    f"{self.url}/_search/scroll",
-                    self.headers,
+                r = self._request(
+                    "/_search/scroll",
                     json.dumps({"scroll": "1m", "scroll_id": sid}).encode(),
                     "POST",
                 )
@@ -254,9 +270,8 @@ class EsRestClient:
                 # best-effort: an open context only lingers until its 1m
                 # keep-alive runs out
                 try:
-                    _request(
-                        f"{self.url}/_search/scroll",
-                        self.headers,
+                    self._request(
+                        "/_search/scroll",
                         json.dumps({"scroll_id": [sid]}).encode(),
                         "DELETE",
                     )
@@ -293,9 +308,8 @@ class EsRestClient:
         from using exactly this where a scroll was needed; scans go
         through :meth:`scroll_slice`."""
         body = {"size": size, "query": query or {"match_all": {}}}
-        r = _request(
-            f"{self.url}/{index or self.index}/_search",
-            self.headers,
+        r = self._request(
+            f"/{index or self.index}/_search",
             json.dumps(body).encode(),
             "POST",
         )
@@ -345,9 +359,8 @@ class EsRestClient:
                 else:
                     lines.append(json.dumps(src).encode())
             body = b"\n".join(lines) + b"\n"
-            r = _request(
-                f"{self.url}/_bulk",
-                self.headers,
+            r = self._request(
+                "/_bulk",
                 body,
                 "POST",
                 content_type="application/x-ndjson",

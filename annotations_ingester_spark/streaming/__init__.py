@@ -1,8 +1,1 @@
 """Structured Streaming variant of the annotation pipeline (SURVEY §7.2.6)."""
-
-from annotations_ingester_spark.streaming.pipeline import (
-    run_stream_to_memory,
-    stream_annotations,
-)
-
-__all__ = ["stream_annotations", "run_stream_to_memory"]

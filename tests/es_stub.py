@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import json
 import re
+import ssl
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -300,12 +301,21 @@ class _Handler(BaseHTTPRequestHandler):
         self._reply({"succeeded": True, "num_freed": freed})
 
 
-def start_es_stub(mode: str = "8") -> tuple[ThreadingHTTPServer, EsStubState, str]:
+def start_es_stub(
+    mode: str = "8", certfile: str | None = None, keyfile: str | None = None
+) -> tuple[ThreadingHTTPServer, EsStubState, str]:
     """Start the stub on an ephemeral localhost port; returns
     (server, state, base_url). Call ``server.shutdown()`` when done.
-    ``mode`` picks the 7.x or 8.x wire dialect (see EsStubState)."""
+    ``mode`` picks the 7.x or 8.x wire dialect (see EsStubState). With a
+    ``certfile`` (and its ``keyfile``) the stub speaks HTTPS."""
     state = EsStubState(mode=mode)
     handler = type("Handler", (_Handler,), {"state": state})
     server = ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    scheme = "http"
+    if certfile:
+        ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
+        ctx.load_cert_chain(certfile, keyfile)
+        server.socket = ctx.wrap_socket(server.socket, server_side=True)
+        scheme = "https"
     threading.Thread(target=server.serve_forever, daemon=True).start()
-    return server, state, f"http://127.0.0.1:{server.server_address[1]}"
+    return server, state, f"{scheme}://127.0.0.1:{server.server_address[1]}"

@@ -133,3 +133,88 @@ def test_annotator_registry():
 
     with pytest.raises(KeyError, match="no annotator registered"):
         get_annotator("missing")
+
+
+def test_normalized_keys_are_the_declared_struct_fields():
+    from annotations_ingester_spark.types import GATE_ENTITY, MEDCAT_ENTITY, MEDCAT_META_ANN
+
+    env = medcat_envelope(7, "value key sort customer joined")
+    env["result"]["annotations"]["entities"]["0"]["meta_anns"] = {
+        "Presence": {"name": "Presence", "value": "True", "confidence": 0.9, "extra": 1}
+    }
+    ents = normalize_medcat(env)
+    assert all(list(e) == MEDCAT_ENTITY.fieldNames() for e in ents)
+    assert list(ents[0]["meta_anns"]["Presence"]) == MEDCAT_META_ANN.fieldNames()
+    text = "abcdefghij"
+    gates = normalize_gate(gate_envelope(3, text), text, pipeline_url="u")
+    assert gates and all(list(e) == GATE_ENTITY.fieldNames() for e in gates)
+
+
+def test_entity_coercion_characterization():
+    """Each entity is projected onto its declared struct: Long → int,
+    Double → float, Boolean → bool, other types as they came, None kept,
+    undeclared keys dropped; ``meta_anns`` keeps only its dict values, and
+    a ``meta_anns`` that is not a dict passes through unchanged."""
+    import pytest
+
+    raw = {
+        "0": {
+            "id": "3", "cui": "C1", "tuis": ["T1"], "types": None, "start": 2.9,
+            "end": True, "acc": "0.25", "context_similarity": 1, "source_value": 5,
+            "medcat_info": {"model": "m"}, "other": 1,
+            "meta_anns": {
+                1: {"confidence": "0.5", "name": 7, "value": None, "x": 1},
+                "Skip": "not a dict",
+                "Bare": {},
+            },
+        },
+        "1": {"id": 4, "cui": "C2", "start": 0, "end": 1, "meta_anns": ["a", "b"]},
+        "2": {"id": 5, "cui": "C3", "start": 0, "end": 1, "meta_anns": "text",
+              "acc": False, "timestamp": "own"},
+    }
+    env = {"result": {"annotations": {"entities": raw}, "timestamp": "ts"}}
+    none_fields = dict.fromkeys(
+        ["tuis", "types", "pretty_name", "detected_name", "source_value", "acc",
+         "context_similarity", "meta_anns"]
+    )
+    assert normalize_medcat(env) == [
+        {
+            "id": 3, "cui": "C1", "tuis": ["T1"], "types": None, "pretty_name": None,
+            "detected_name": None, "source_value": 5, "start": 2, "end": 1,
+            "acc": 0.25, "context_similarity": 1.0,
+            "meta_anns": {
+                "1": {"confidence": 0.5, "name": 7, "value": None},
+                "Bare": {"confidence": None, "name": None, "value": None},
+            },
+            "timestamp": "ts",
+        },
+        {**none_fields, "id": 4, "cui": "C2", "start": 0, "end": 1,
+         "meta_anns": ["a", "b"], "timestamp": "ts"},
+        {**none_fields, "id": 5, "cui": "C3", "start": 0, "end": 1, "acc": 0.0,
+         "meta_anns": "text", "timestamp": "own"},
+    ]
+    for bad in ({"id": "x"}, {"acc": "high"}, {"meta_anns": {"m": {"confidence": "?"}}}):
+        with pytest.raises(ValueError):
+            normalize_medcat({"result": {"annotations": {"entities": {"0": bad}}}})
+
+    text = "abcdefghij"
+    env = {
+        "entities": {
+            "Org": [
+                {"indices": ["1", 3.0], "matches": "2", "matchedWithLonger": "no",
+                 "kind": 4, "extra": "dropped", "pipeline_url": "own"},
+                {"indices": None, "matchedWithLonger": 0, "matches": None},
+            ]
+        }
+    }
+    gate_none = dict.fromkeys(
+        ["kind", "rule", "ruleFinal", "NMRule", "firstName", "surname", "initials",
+         "title", "gender", "orgType", "matchedWithLonger", "matches"]
+    )
+    assert normalize_gate(env, text, pipeline_url="u", timestamp="t") == [
+        {"id": 0, "type": "Org", "indices": [1, 3], "source_value": "bc",
+         **gate_none, "kind": 4, "matchedWithLonger": True, "matches": 2,
+         "pipeline_url": "own", "timestamp": "t"},
+        {"id": 1, "type": "Org", "indices": [], "source_value": None,
+         **gate_none, "matchedWithLonger": False, "pipeline_url": "u", "timestamp": "t"},
+    ]

@@ -269,14 +269,68 @@ def test_reference_config_yml_loads_unchanged():
     assert cfg.nlp.max_retries_on_failure == 1
     assert cfg.text_field == "document" and cfg.docid_field == "_id"
     assert cfg.date_field == "dct" and cfg.batch_interval_days == 30
-    assert cfg.es_date_format == "yyyy-MM-dd"
     assert cfg.date_start == "1999-01-01" and cfg.date_end == "2021-02-01"
     assert cfg.threads == 128
     assert cfg.ingest_mode == "separate-index"  # same-index: False
-    assert cfg.use_nested_objects is False
-    assert cfg.schema_mapping == "medcat-separate-index"
     assert cfg.skip_processed_doc_check is False
     assert cfg.split_index_by_field == ""
+
+
+def test_reference_config_yml_warns_on_each_unread_key(caplog):
+    """The reference's shipped config names five keys this engine does not
+    read; each draws one warning, and no other key does."""
+    import logging
+
+    import yaml as _yaml
+
+    with caplog.at_level(logging.WARNING, logger="annotations_ingester_spark.config"):
+        PipelineConfig.from_dict(_yaml.safe_load(REFERENCE_CONFIG_YML))
+    warned = [r.getMessage().split()[2] for r in caplog.records]
+    assert sorted(warned) == sorted([
+        "source.es.security.ca-file-path",
+        "nlp-service.use-bulk-indexing",
+        "nlp-service.annotation-response",
+        "mapping.index-ingest-mode.use-nested-objects",
+        "mapping.index-ingest-mode.es-nested-object-schema-mapping",
+    ])
+
+
+def test_misplaced_keys_are_named(caplog):
+    """``batch`` at the top level and ``text-field`` under ``source`` load
+    with their defaults, so each is named in a warning. Free-form values
+    (``application-params``) are not walked."""
+    import logging
+
+    d = {
+        "source": {"backend": "parquet", "path": "src", "text-field": "text"},
+        "sink": {"backend": "parquet", "path": "dst"},
+        "nlp-service": {"endpoints-url": ["fake://medcat"],
+                        "application-params": {"anything": {"nested": 1}}},
+        "mapping": {},
+        "batch": {"threads": 8},
+    }
+    with caplog.at_level(logging.WARNING, logger="annotations_ingester_spark.config"):
+        cfg = PipelineConfig.from_dict(d)
+    assert cfg.threads == 4 and cfg.text_field == "document"
+    assert cfg.nlp.application_params == {"anything": {"nested": 1}}
+    warned = [r.getMessage() for r in caplog.records]
+    assert len(warned) == 2
+    assert any(" batch " in m for m in warned)
+    assert any(" source.text-field " in m for m in warned)
+
+
+def test_non_iso_date_format_refused_by_key():
+    import copy
+
+    for key in ("date-format", "es-date-format", "python-date-format"):
+        d = copy.deepcopy(REFERENCE_STYLE_CONFIG)
+        d["mapping"]["source"]["batch"][key] = "dd/MM/yyyy"
+        with pytest.raises(ValueError, match=f"mapping.source.batch.{key} 'dd/MM/yyyy'"):
+            PipelineConfig.from_dict(d)
+    d = copy.deepcopy(REFERENCE_STYLE_CONFIG)
+    d["mapping"]["source"]["batch"] |= {"date-format": "yyyy-MM-dd",
+                                        "python-date-format": "%Y-%m-%d"}
+    assert PipelineConfig.from_dict(d).date_field == "dct"
 
 
 def test_reference_config_same_index_and_skip_variants():
@@ -291,7 +345,6 @@ def test_reference_config_same_index_and_skip_variants():
     d["nlp-service"]["endpoint-request-mode"] = "gate-nlp"
     cfg = PipelineConfig.from_dict(d)
     assert cfg.ingest_mode == "same-index"
-    assert cfg.use_nested_objects is True
     assert cfg.skip_processed_doc_check is True
     assert cfg.nlp.mode == "gate-nlp"
 

@@ -497,3 +497,48 @@ def test_done_ids_treats_missing_sink_index_as_first_run(spark, monkeypatch):
     status["code"] = 500
     with pytest.raises(urllib.error.HTTPError):
         es_rest.done_ids(spark, conf, "doc_id")
+
+
+def test_https_stub_honours_tls_settings(spark, tmp_path):
+    """The REST backend takes its TLS settings from the config: with
+    ``verify-certs: false`` or the stub's self-signed certificate as
+    ``ca-certs-path`` the handshake passes, with neither it fails. The
+    client still pickles, so Spark tasks read over the same TLS."""
+    import pickle
+    import shutil
+    import subprocess
+    import urllib.error
+
+    from annotations_ingester_spark.config import PipelineConfig
+    from annotations_ingester_spark.sources import es_rest
+
+    if shutil.which("openssl") is None:
+        pytest.skip("needs the openssl CLI to make a certificate")
+    cert, key = tmp_path / "cert.pem", tmp_path / "key.pem"
+    subprocess.run(
+        ["openssl", "req", "-x509", "-newkey", "rsa:2048", "-nodes", "-days", "1",
+         "-keyout", str(key), "-out", str(cert), "-subj", "/CN=127.0.0.1",
+         "-addext", "subjectAltName=IP:127.0.0.1"],
+        check=True, capture_output=True,
+    )
+    server, state, url = start_es_stub(certfile=str(cert), keyfile=str(key))
+    try:
+        def conf(**es) -> ConnectorConfig:
+            section = {"backend": "elasticsearch-rest",
+                       "es": {"hosts": [url], "index-name": "tls", **es}}
+            return PipelineConfig.from_dict(
+                {"source": section, "sink": section, "nlp-service": {}, "mapping": {}}
+            ).source
+
+        assert url.startswith("https://")
+        with pytest.raises(urllib.error.URLError, match="CERTIFICATE_VERIFY_FAILED"):
+            es_rest.check(conf())
+        es_rest.check(conf(**{"extra-params": {"verify-certs": False}}))
+        trusted = conf(security={"ca-certs-path": str(cert)})
+        es_rest.check(trusted)
+        client = pickle.loads(pickle.dumps(EsRestClient(trusted)))
+        assert client.bulk([{"_id": f"d{i}", "n": i} for i in range(5)]) == (5, 0)
+        got = read_es_rest(spark, trusted, "n long", slices=2).collect()
+        assert sorted(r["n"] for r in got) == list(range(5))
+    finally:
+        server.shutdown()
