@@ -20,6 +20,11 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    """Run the configured pipeline; returns the exit code (2 for a refused
+    config or a failed pre-flight). The log format is set before the config
+    is parsed and its ``logging-level`` applied after, so warnings about
+    the file being parsed (keys nothing reads) show at WARNING, whatever
+    its ``logging-level`` says."""
     parser = argparse.ArgumentParser("annotations_ingester_spark")
     parser.add_argument("--config", required=True, help="YAML pipeline config")
     parser.add_argument("--date-start", default=None, help="override batch date-start")
@@ -46,15 +51,15 @@ def main(argv: list[str] | None = None) -> int:
     from annotations_ingester_spark.sources import BACKENDS, parquet
     from annotations_ingester_spark.utils import check_url_available
 
+    logging.basicConfig(
+        level=logging.WARNING, format="%(asctime)s %(levelname)s %(message)s"
+    )
     try:
         cfg = PipelineConfig.from_yaml(args.config)
     except ValueError as exc:
         print(f"config {args.config}: {exc}", file=sys.stderr)
         return 2
-    logging.basicConfig(
-        level=cfg.logging_level,  # reference logging-level, config.yml:73
-        format="%(asctime)s %(levelname)s %(message)s",
-    )
+    logging.getLogger().setLevel(cfg.logging_level)  # reference logging-level, config.yml:73
     date_start = args.date_start or cfg.date_start
     date_end = args.date_end or cfg.date_end
     dated = bool(date_start and date_end)
@@ -117,16 +122,15 @@ def main(argv: list[str] | None = None) -> int:
     def scope(docs, start, end):
         return range_filter(docs, cfg.date_field, start, end) if dated else docs
 
+    keys = {
+        "mapping_id": "ann_doc_id" if nested else "row_id",
+        "split_suffix_field": "index_suffix" if split and not nested else None,
+    }
+
     def write(out) -> None:
-        sink.write(
-            out,
-            cfg.sink,
-            mapping_id="ann_doc_id" if nested else "row_id",
-            # a W4 doc row replaces the stored one (the merge happened
-            # engine-side); W3 same-index upserts the flat rows
-            upsert=nested or cfg.ingest_mode == "same-index",
-            split_suffix_field="index_suffix" if split and not nested else None,
-        )
+        # a W4 doc row replaces the stored one (the merge happened
+        # engine-side); W3 same-index upserts the flat rows
+        sink.write(out, cfg.sink, upsert=nested or cfg.ingest_mode == "same-index", **keys)
 
     # a configured span is also pushed down into sources that take a query
     # (S3 parity, es_common.py:303-330); range_filter re-applies it, so
@@ -152,7 +156,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         stream = file_stream(spark, cfg.source.index_name, docs.schema)
-        out = pipe.flat(scope(stream, date_start, date_end), split_by_field=split, dedup=False)
+        out = pipe.flat(scope(stream, date_start, date_end), split_by_field=split)
         if args.dry_run:
             out.explain("formatted")
             return 0
@@ -188,7 +192,8 @@ def main(argv: list[str] | None = None) -> int:
         else:
             out = pipe.flat(scoped, split_by_field=split, processed_ids=processed)
         if args.dry_run:
-            out.explain("formatted")
+            # the plan the sink runs: parquet adds its row-id dedup
+            sink.stored(out, **keys).explain("formatted")
             return 0
         write(out)
         # everything up to this segment's end is now in the sink; only the

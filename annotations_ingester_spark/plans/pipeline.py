@@ -2,12 +2,16 @@
 
     source → valid_text_filter (P3) → skip_processed (J1)
            → annotate (mapInPandas UDTF) → response_shape_guard (P6)
-           → explode (W5) → prefix_project (F3/J3) → [dedup (U2)] → sink
+           → explode (W5) → prefix_project (F3/J3)
+           → sink (one row per mapping id: ``_id`` in Elasticsearch,
+                   ``dropDuplicates`` in parquet)
 
 Plan-construction discipline (SURVEY §4): everything above ``annotate`` is a
 Column predicate/join Catalyst can push into the scan; everything below is
 JVM-side projection. The expensive Python stage sees only rows that will
-actually be written.
+actually be written. No Exchange follows the annotate stage: a repeated
+row id (the same doc read twice) is absorbed where it is stored, so each
+annotate task explodes, projects and writes its own rows in the same stage.
 
 Unlike the reference — which collects every doc id into a driver-side list
 (ingester/es_common.py:290-292) and loops a thread pool over point lookups —
@@ -63,7 +67,6 @@ def flat_annotations(
     ann_fields: list[str] | None = None,
     processed_ids: DataFrame | None = None,
     split_by_field: str | None = None,
-    dedup: bool = True,
     dotted: bool = True,
     ann_id_field: str = "id",
 ) -> DataFrame:
@@ -71,9 +74,12 @@ def flat_annotations(
     ``meta.*``/``nlp.*`` columns and deterministic ``row_id``.
 
     With ``split_by_field`` also appends the W2 ``index_suffix`` partition
-    column. ``dedup=True`` applies U2 whole-record distinct (the reference's
-    canonical-JSON set dedup, ingester/utils.py:16-19 — equality over all
-    fields ⇒ ``dropDuplicates()`` over all non-map columns).
+    column. A doc the source holds twice yields its rows twice: every
+    other column is a deterministic function of the (doc, entity-id) pair
+    ``row_id`` encodes (functions/names.py:46, reference
+    annotations_indexer.py:221), so the sink keeps one row per ``row_id``
+    (+ ``index_suffix``) and that is U2 whole-record distinct (the
+    reference's canonical-JSON set dedup, ingester/utils.py:16-19).
     """
     plan = explode_entities(
         annotated_docs(docs, annotator_factory, text_field, docid_field, mode, processed_ids)
@@ -82,7 +88,7 @@ def flat_annotations(
     if split_by_field:
         plan = split_index_suffix(plan, split_by_field)
         extra = ["index_suffix"]
-    out = prefix_project(
+    return prefix_project(
         plan,
         persist_fields=persist_fields or [docid_field],
         docid_field=docid_field,
@@ -91,17 +97,6 @@ def flat_annotations(
         extra_cols=extra,
         ann_id_field=ann_id_field,
     )
-    if dedup:
-        # U2: every other column is a deterministic function of the
-        # (doc, entity-id) pair the synthesized row_id encodes
-        # (functions/names.py:46, reference annotations_indexer.py:221), so
-        # row_id-equality ≡ whole-record-equality — and, unlike the full
-        # column list, it also covers map-typed columns (meta_anns) that
-        # dropDuplicates can't compare. Keying the dedup on row_id (+ the
-        # W2 partition column) makes the exchange carry one short string
-        # per row instead of the entire sink payload.
-        out = out.dropDuplicates(["row_id", *extra])
-    return out
 
 
 class AnnotationPipeline:

@@ -69,7 +69,6 @@ def w1(spark: SparkSession, sf: str):
         table(spark, sf, "documents"),
         lambda: DeterministicFakeAnnotator("medcat"),
         ann_fields=MEDCAT_FLAT_FIELDS,
-        dedup=False,
         dotted=True,
     )
 
@@ -92,7 +91,6 @@ def w2(spark: SparkSession, sf: str):
         lambda: DeterministicFakeAnnotator("medcat"),
         ann_fields=["cui", "types"],
         split_by_field="types",
-        dedup=False,
         dotted=True,
     )
     return out.withColumn(
@@ -126,7 +124,6 @@ def w3(spark: SparkSession, sf: str):
         docs,
         lambda: DeterministicFakeAnnotator("medcat"),
         ann_fields=["cui"],
-        dedup=False,
         dotted=False,
     ).select(F.col("meta_doc_id").alias("doc_id"), F.col("nlp_cui").alias("cui"))
     merged = merge_annotation_sets(existing, new)
@@ -228,9 +225,8 @@ def idempotent(spark: SparkSession, sf: str):
         doubled,
         lambda: DeterministicFakeAnnotator("medcat"),
         ann_fields=MEDCAT_FLAT_FIELDS,
-        dedup=True,
         dotted=True,
-    )
+    ).dropDuplicates(["row_id"])
 
 
 @register(
@@ -265,7 +261,6 @@ def b1_pipeline(spark: SparkSession, sf: str):
         lambda: DeterministicFakeAnnotator("medcat"),
         persist_fields=["doc_id", "seg"],
         ann_fields=["id"],
-        dedup=False,
         dotted=False,
     )
     return out.groupBy(F.col("meta_seg").alias("seg")).agg(

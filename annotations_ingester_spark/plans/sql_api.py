@@ -34,6 +34,6 @@ def register_engine_views(spark: SparkSession, sf_dir: str) -> None:
     docs = table(spark, sf_dir, "documents")
     valid_text_filter(docs, "text").createOrReplaceTempView("valid_documents")
     flat_annotations(
-        docs, lambda: DeterministicFakeAnnotator("medcat"), dedup=False, dotted=False
+        docs, lambda: DeterministicFakeAnnotator("medcat"), dotted=False
     ).createOrReplaceTempView("annotations_flat")
     bag_fingerprints(docs).createOrReplaceTempView("doc_fingerprints")

@@ -7,6 +7,9 @@ with the same signatures:
 - ``done_ids(spark, conf, docid_field)``: the distinct doc ids already in
   the sink, or None on a first run (each backend decides what "never
   written" looks like);
+- ``stored(df, *, mapping_id, split_suffix_field)``: the rows ``write``
+  stores, one per ``(mapping_id, split_suffix_field)`` (Elasticsearch keys
+  each doc on ``_id``, so the frame as given; parquet ``dropDuplicates``);
 - ``write(df, conf, *, mapping_id, upsert, split_suffix_field)``.
 """
 

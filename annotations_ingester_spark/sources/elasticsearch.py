@@ -170,6 +170,15 @@ def done_ids(spark: SparkSession, conf: ConnectorConfig, docid_field: str) -> Da
     return sink_doc_ids(written, docid_field)
 
 
+def stored(
+    df: DataFrame, *, mapping_id: str | None, split_suffix_field: str | None
+) -> DataFrame:
+    """The frame as given: each bulk item carries ``_id`` = ``mapping_id``
+    into its (``split_suffix_field``-routed) index, so a repeated row id
+    overwrites its earlier copy instead of adding a second doc."""
+    return df
+
+
 def write(
     df: DataFrame,
     conf: ConnectorConfig,

@@ -52,9 +52,10 @@ from annotations_ingester_spark.pyfiles import (
     ensure_worker_imports,
     trim_worker_import_cache,
 )
-from annotations_ingester_spark.sources.elasticsearch import (
+from annotations_ingester_spark.sources.elasticsearch import (  # noqa: F401
     BULK_CHUNK_SIZE,
     BULK_REQUEST_TIMEOUT_S,
+    stored,  # the same ``_id`` keying: a repeated row id overwrites its copy
 )
 
 log = logging.getLogger(__name__)
@@ -391,7 +392,15 @@ def write_es_rest(
     thread-pool writers become Spark tasks). Deterministic
     ``mapping_id`` gives idempotent re-runs (B2); ``split_suffix_field``
     implements the W2 per-value index routing ``base-{value}`` with F1 name
-    normalization (es_common.py:133-151)."""
+    normalization (es_common.py:133-151).
+
+    No Exchange precedes the write in the CLI's flat plan, so each
+    ``foreachPartition`` task is an annotate task: it explodes, projects
+    and bulk-posts its own rows, and a row id seen twice overwrites its
+    ``_id``. The cost is the failure mode: a bulk HTTP error (the request
+    itself, not a per-item failure, which is counted and logged) fails the
+    annotate task, so on a cluster a retried task annotates its partition
+    again before it re-posts."""
     client = EsRestClient(conf)
     base = client.index
     op = "update" if upsert else "index"

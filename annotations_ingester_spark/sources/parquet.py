@@ -52,6 +52,22 @@ def done_ids(spark: SparkSession, conf: ConnectorConfig, docid_field: str) -> Da
     return sink_doc_ids(written, docid_field)
 
 
+def stored(
+    df: DataFrame, *, mapping_id: str | None, split_suffix_field: str | None
+) -> DataFrame:
+    """The rows :func:`write` appends: one per ``(mapping_id,
+    split_suffix_field)``. Files carry no document ids, so unlike an
+    Elasticsearch ``_id`` the sink cannot absorb a repeated row id (a doc
+    the source holds twice); the ``dropDuplicates`` Exchange does it
+    (U2). Keyed on the id alone, it carries one short string per row, and
+    it also covers map-typed columns (``meta_anns``) that a whole-record
+    ``dropDuplicates`` cannot compare."""
+    if not mapping_id:
+        return df
+    keys = [mapping_id] + ([split_suffix_field] if split_suffix_field else [])
+    return df.dropDuplicates(keys)
+
+
 def write(
     df: DataFrame,
     conf: ConnectorConfig,
@@ -60,12 +76,14 @@ def write(
     upsert: bool,
     split_suffix_field: str | None,
 ) -> None:
-    """W1/W4: append. W2: ``partitionBy(split_suffix_field)``, the parquet
-    twin of the ES dynamic resource ``sink-{type}``. Files carry no
-    document ids, so ``mapping_id`` and ``upsert`` have no parquet form: a
-    re-run avoids duplicates only through the J1 resume read
+    """W1/W4: append :func:`stored` rows. W2: ``partitionBy(split_suffix_field)``,
+    the parquet twin of the ES dynamic resource ``sink-{type}``. An append
+    cannot replace what an earlier run stored, so ``upsert`` has no parquet
+    form: a re-run avoids duplicates only through the J1 resume read
     (``skip-processed-doc-check``)."""
-    writer = df.write.mode("append")
+    writer = stored(
+        df, mapping_id=mapping_id, split_suffix_field=split_suffix_field
+    ).write.mode("append")
     if split_suffix_field:
         writer = writer.partitionBy(split_suffix_field)
     writer.parquet(conf.index_name)

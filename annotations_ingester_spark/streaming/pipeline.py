@@ -72,7 +72,6 @@ def stream_annotations(
         docid_field=docid_field,
         mode=mode,
         ann_fields=ann_fields,
-        dedup=False,  # streaming dedup needs a watermark — see run helpers
         dotted=False,
     )
 

@@ -8,7 +8,7 @@ import inspect
 
 from annotations_ingester_spark.sources import BACKENDS
 
-FUNCTIONS = ("check", "read", "done_ids", "write")
+FUNCTIONS = ("check", "read", "done_ids", "stored", "write")
 
 
 def test_every_backend_has_the_same_signatures():

@@ -316,3 +316,52 @@ def test_stream_refuses_non_file_source(spark, tmp_path, capsys):
     finally:
         server.shutdown()
     assert "--stream requires a file-based" in capsys.readouterr().err
+
+
+def test_parquet_sink_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
+    """The flat plan has no dedup Exchange; the parquet sink keeps one row
+    per row_id (+ index_suffix), so a source holding doc 2 twice leaves the
+    single-copy run's rows, flat and split by type."""
+    from pyspark.sql import functions as F
+
+    once_src = _corpus(spark, tmp_path)
+    twice_src = str(tmp_path / "docs_twice")
+    spark.createDataFrame(DOCS + [DOCS[1]], "doc_id long, text string, dct string").write.parquet(
+        twice_src
+    )
+
+    def rows(src, tag, split):
+        sink = str(tmp_path / f"{tag}_{split}")
+        assert main(["--config", _cfg(tmp_path, src, sink, split=split)]) == 0
+        back = spark.read.parquet(sink)
+        return sorted(back.select([F.col(f"`{c}`").cast("string") for c in back.columns]).collect())
+
+    for split in (None, "types"):
+        once = rows(once_src, "once", split)
+        assert once and rows(twice_src, "twice", split) == once
+
+
+def test_config_warnings_carry_the_run_log_format(tmp_path):
+    """A key nothing reads is warned about in the run's log format, even
+    with ``logging-level`` above WARNING: the format is set before the
+    config is parsed. (nested + --segmented exits 2 before any session.)"""
+    import re
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    cfg = yaml.safe_load(open(_cfg(tmp_path, "src", str(tmp_path / "sink"))))
+    cfg["batch"] = {"threads": 8}  # misplaced: batch belongs under mapping.source
+    cfg["mapping"]["sink"]["ingest-mode"] = "nested"
+    cfg["logging-level"] = 40
+    p = tmp_path / "cfg_misplaced.yml"
+    p.write_text(yaml.safe_dump(cfg))
+    r = subprocess.run(
+        [sys.executable, "-m", "annotations_ingester_spark", "--config", str(p), "--segmented"],
+        cwd=Path(__file__).resolve().parent.parent, capture_output=True, text=True,
+    )
+    assert r.returncode == 2, r.stderr
+    assert re.search(
+        r"^\d{4}-\d\d-\d\d \d\d:\d\d:\d\d,\d{3} WARNING config key batch is not read",
+        r.stderr, re.M,
+    ), r.stderr

@@ -542,3 +542,64 @@ def test_https_stub_honours_tls_settings(spark, tmp_path):
         assert sorted(r["n"] for r in got) == list(range(5))
     finally:
         server.shutdown()
+
+
+def test_cli_rest_to_rest_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
+    """REST→REST CLI over a source index holding one doc under two ``_id``s:
+    the plan has no dedup Exchange, so each annotate task bulk-posts its
+    own rows (more than one bulk request) and the repeated rows land on
+    the same ``_id``s. The sink ends with the single-copy run's ids."""
+    import threading
+    from http.server import ThreadingHTTPServer
+
+    import yaml
+
+    from annotations_ingester_spark.__main__ import main
+    from tests.es_stub import EsStubState, _Handler
+
+    posts: list[int] = []  # bulk items per request
+
+    class BulkCounting(_Handler):
+        state = EsStubState()
+
+        def _bulk(self, body: bytes) -> None:
+            posts.append(sum(1 for ln in body.split(b"\n") if ln.strip()) // 2)
+            super()._bulk(body)
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), BulkCounting)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{server.server_address[1]}"
+    # text lengths % 4 != 0, so the fake annotator emits 1-3 entities each
+    docs = [
+        {"_id": str(i), "doc_id": i, "text": f"rest twice doc {i} body" + "!" * (i % 3)}
+        for i in range(8)
+    ]
+    twice = docs + [{**docs[2], "_id": "2-copy"}]
+
+    def es(index):
+        return {"backend": "elasticsearch-rest", "hosts": [url], "index-name": index}
+
+    def run(source_docs, tag):
+        EsRestClient(_conf(url, f"src-{tag}")).bulk(source_docs)
+        cfg = {
+            "source": es(f"src-{tag}"),
+            "sink": es(f"sink-{tag}"),
+            "nlp-service": {"endpoints-url": ["fake://medcat"], "protocol-mode": "medcat"},
+            "mapping": {"source": {"text-field": "text", "docid-field": "doc_id",
+                                   "persist-fields": ["doc_id"], "batch": {"threads": 1}}},
+        }
+        path = tmp_path / f"cfg_{tag}.yml"
+        path.write_text(yaml.safe_dump(cfg))
+        before = len(posts)
+        assert main(["--config", str(path)]) == 0
+        return set(EsRestClient(_conf(url, f"sink-{tag}")).scan_doc_ids()), posts[before:]
+
+    try:
+        once_ids, _ = run(docs, "once")
+        twice_ids, twice_posts = run(twice, "twice")
+    finally:
+        server.shutdown()
+    assert once_ids and twice_ids == once_ids
+    assert len(twice_posts) > 1  # written from the annotate tasks, not one bulk stage
+    # doc 2's rows were posted twice and absorbed by their _id
+    assert sum(twice_posts) > len(twice_ids)

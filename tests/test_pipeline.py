@@ -17,7 +17,7 @@ fake = lambda: DeterministicFakeAnnotator("medcat")  # noqa: E731
 
 
 def test_w1_filters_and_explodes(docs_df):
-    out = flat_annotations(docs_df, fake, dedup=False, dotted=False).toPandas()
+    out = flat_annotations(docs_df, fake, dotted=False).toPandas()
     # docs 2 (NULL), 3 (short), 7 (empty) filtered by P3
     assert set(out["meta_doc_id"]) <= {1, 4, 5, 6}
     texts = {
@@ -50,20 +50,33 @@ def test_w1_failed_annotation_skips_row_not_job(spark):
         [(i, "some reasonable document text here") for i in range(10)],
         "doc_id long, text string",
     )
-    out = flat_annotations(docs, HalfFailing, dedup=False, dotted=False).toPandas()
+    out = flat_annotations(docs, HalfFailing, dotted=False).toPandas()
     # P6 guard: failed docs produce no rows but the job succeeds (B3)
     assert set(out["meta_doc_id"]) == {1, 3, 5, 7, 9}
 
 
-def test_idempotent_rerun_dedups(docs_df):
-    once = flat_annotations(docs_df, fake, dedup=True, dotted=False)
-    twice = flat_annotations(docs_df.unionByName(docs_df), fake, dedup=True, dotted=False)
+def test_idempotent_rerun_dedups(docs_df, spark, tmp_path):
+    # the plan writes a doubled corpus's rows twice; the parquet sink keeps
+    # one per row_id (Elasticsearch does it through _id)
+    from annotations_ingester_spark.config import ConnectorConfig
+    from annotations_ingester_spark.sources import parquet
+
+    def sunk(docs, name):
+        conf = ConnectorConfig(index_name=str(tmp_path / name))
+        parquet.write(
+            flat_annotations(docs, fake, dotted=False),
+            conf, mapping_id="row_id", upsert=False, split_suffix_field=None,
+        )
+        return spark.read.parquet(conf.index_name)
+
+    once = sunk(docs_df, "once")
+    twice = sunk(docs_df.unionByName(docs_df), "twice")
     assert once.count() == twice.count()
 
 
 def test_skip_processed_anti_join(docs_df, spark):
     processed = spark.createDataFrame([(1,), (4,)], "doc_id long")
-    out = flat_annotations(docs_df, fake, processed_ids=processed, dedup=False, dotted=False)
+    out = flat_annotations(docs_df, fake, processed_ids=processed, dotted=False)
     assert set(out.toPandas()["meta_doc_id"]) == {5, 6}
 
 
@@ -79,7 +92,7 @@ def test_skip_processed_same_index_mode(spark):
 def test_w2_split_suffix(docs_df):
     out = flat_annotations(
         docs_df, fake, ann_fields=["cui", "types"], split_by_field="types",
-        dedup=False, dotted=False,
+        dotted=False,
     ).toPandas()
     assert (out["index_suffix"] == out["nlp_types"]).all()  # already-normal names
 

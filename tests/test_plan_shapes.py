@@ -56,7 +56,8 @@ def test_aggs_have_partial_phase(spark, name):
 def test_u2_dedup_exchange_keys_on_row_id_only(spark):
     # U2 keys the hot-path dedup on the deterministic row_id, so the dedup
     # exchange hashes one short string — not the full sink payload
-    # (VERDICT r1 #2). pipeline_idempotent_rerun is the dedup=True path.
+    # (VERDICT r1 #2). pipeline_idempotent_rerun applies it explicitly, as
+    # the parquet sink does (parquet.stored).
     import re
 
     p = plan_of(spark, "pipeline_idempotent_rerun")
@@ -229,3 +230,75 @@ def test_survivors_interval_fold_evaluated_once(spark):
         assert p.count("aggregate(_ivs") == 1, (
             f"{name}: fold inlined {p.count('aggregate(_ivs')}x"
         )
+
+
+def _dry_run_plan(capsys, cfg: dict, tmp_path) -> str:
+    import yaml
+
+    from annotations_ingester_spark.__main__ import main
+
+    path = tmp_path / "cfg_plan.yml"
+    path.write_text(yaml.safe_dump(cfg))
+    assert main(["--config", str(path), "--dry-run"]) == 0
+    return capsys.readouterr().out
+
+
+def _plan_cfg(source: dict, sink: dict) -> dict:
+    # the perfbench ingest config's shape, with the fake:// annotator
+    return {
+        "source": source,
+        "sink": sink,
+        "nlp-service": {"endpoints-url": ["fake://medcat"], "protocol-mode": "medcat",
+                        "max-retries-on-failure": 1, "max-in-flight": 1},
+        "mapping": {"source": {"text-field": "text", "docid-field": "doc_id",
+                               "persist-fields": ["doc_id", "dct"], "batch": {"threads": 1}}},
+        "logging-level": 30,
+    }
+
+
+def test_rest_to_rest_plan_writes_from_the_annotate_stage(spark, capsys, tmp_path):
+    """The REST→REST ingest plan has one Exchange, the round-robin one that
+    feeds the annotate MapInPandas, and no aggregate after that node: each
+    annotate task explodes, projects and bulk-writes its own rows (the ES
+    ``_id`` absorbs a repeated row id)."""
+    from annotations_ingester_spark.config import ConnectorConfig
+    from annotations_ingester_spark.sources.es_rest import EsRestClient
+    from tests.es_stub import start_es_stub
+
+    server, _, url = start_es_stub()
+    try:
+        EsRestClient(ConnectorConfig(hosts=[url], index_name="src")).bulk(
+            [{"_id": str(i), "doc_id": i, "text": f"plan doc {i} body!", "dct": "2020-01-01"}
+             for i in range(4)]
+        )
+
+        def es(index):
+            return {"backend": "elasticsearch-rest", "es": {"hosts": [url], "index-name": index}}
+
+        plan = _dry_run_plan(capsys, _plan_cfg(es("src"), es("sink")), tmp_path)
+    finally:
+        server.shutdown()
+    tree = plan.split("\n\n")[0].splitlines()
+    exchanges = [ln for ln in tree if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    annotate = next(i for i, ln in enumerate(tree) if "MapInPandas" in ln)
+    assert "Exchange" in tree[annotate + 1], plan  # round-robin, then annotate
+    assert "RoundRobinPartitioning" in plan
+    assert not any("Aggregate" in ln for ln in tree[:annotate]), plan
+
+
+def test_parquet_flat_plan_keeps_its_row_id_dedup(spark, capsys, tmp_path):
+    """Files carry no ids, so the parquet sink's plan still ends in the
+    ``dropDuplicates(row_id)`` Exchange (``parquet.stored``)."""
+    import re
+
+    src = str(tmp_path / "plan_src")
+    spark.createDataFrame(
+        [(i, f"plan doc {i} body!", "2020-01-01") for i in range(4)],
+        "doc_id long, text string, dct string",
+    ).write.parquet(src)
+    cfg = _plan_cfg({"backend": "parquet", "path": src},
+                    {"backend": "parquet", "path": str(tmp_path / "plan_sink")})
+    plan = _dry_run_plan(capsys, cfg, tmp_path)
+    keys = [m.group(1).split("#")[0] for m in re.finditer(r"hashpartitioning\(([^,)]*)", plan)]
+    assert keys == ["row_id"], plan

@@ -36,7 +36,7 @@ def _write(df, path, split_suffix_field=None):
 
 
 def test_write_flat_roundtrip(docs_df, spark, tmp_path):
-    out = flat_annotations(docs_df, fake, ann_fields=MEDCAT_FIELDS, dedup=False, dotted=False)
+    out = flat_annotations(docs_df, fake, ann_fields=MEDCAT_FIELDS, dotted=False)
     path = str(tmp_path / "flat")
     _write(out, path)
     assert spark.read.parquet(path).count() == out.count()
@@ -49,7 +49,7 @@ def test_write_partitioned_prunes(docs_df, spark, tmp_path):
 
     out = flat_annotations(
         docs_df, fake, ann_fields=["cui", "types"], split_by_field="types",
-        dedup=False, dotted=False,
+        dotted=False,
     )
     path = str(tmp_path / "split")
     _write(out, path, split_suffix_field="index_suffix")
@@ -82,7 +82,7 @@ def test_stream_matches_batch(spark, tmp_path):
     )
     assert out.isStreaming
     got = run_stream_to_memory(out, "t_stream")
-    batch = flat_annotations(docs, fake, ann_fields=MEDCAT_FIELDS, dedup=False, dotted=False)
+    batch = flat_annotations(docs, fake, ann_fields=MEDCAT_FIELDS, dotted=False)
     assert sorted(r["row_id"] for r in got.collect()) == sorted(
         r["row_id"] for r in batch.collect()
     )
@@ -101,7 +101,7 @@ def test_stream_foreach_batch_checkpointed(spark, tmp_path):
         out, lambda df, epoch: df.write.mode("append").parquet(sink), str(tmp_path / "ckpt")
     )
     assert spark.read.parquet(sink).count() == out.sparkSession.read.parquet(src).count() * 0 + \
-        flat_annotations(docs, fake, ann_fields=MEDCAT_FIELDS, dedup=False, dotted=False).count()
+        flat_annotations(docs, fake, ann_fields=MEDCAT_FIELDS, dotted=False).count()
 
 
 def _nested_df(spark, rows):
