@@ -33,9 +33,9 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--segmented",
         action="store_true",
-        help="B1: run one date segment at a time (reference driver-loop parity, "
-        "annotations_indexer.py:847-861; the J1 anti-join absorbs the "
-        "boundary-date overlap between consecutive inclusive segments)",
+        help="B1: run one date segment at a time (the reference driver loop's "
+        "segment ends, annotations_indexer.py:847-861); segments are disjoint "
+        "and each one reads only its own dates from the source",
     )
     parser.add_argument("--dry-run", action="store_true", help="build + explain the plan, don't execute")
     args = parser.parse_args(argv)
@@ -46,6 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     from annotations_ingester_spark.config import PipelineConfig
     from annotations_ingester_spark.operators.filters import range_filter
+    from annotations_ingester_spark.operators.windows import date_windows
     from annotations_ingester_spark.plans.pipeline import AnnotationPipeline
     from annotations_ingester_spark.session import get_spark
     from annotations_ingester_spark.sources import BACKENDS, parquet
@@ -66,15 +67,9 @@ def main(argv: list[str] | None = None) -> int:
     nested = cfg.ingest_mode == "nested"
     source, sink = BACKENDS[cfg.source.backend], BACKENDS[cfg.sink.backend]
 
-    if nested and (args.segmented or args.stream):
-        # both write flat rows; silently running nested any other way would
-        # betray the flag — refuse loudly
-        print(
-            "--segmented and --stream are not supported with ingest-mode=nested; "
-            "run the whole span (the J1 skip-processed anti-join makes reruns "
-            "idempotent)",
-            file=sys.stderr,
-        )
+    if nested and args.stream:
+        # a micro-batch can hold part of a doc's group; refuse, not write flat
+        print("--stream is not supported with ingest-mode=nested", file=sys.stderr)
         return 2
     if args.stream and source is not parquet:
         print("--stream requires a file-based (parquet) source backend", file=sys.stderr)
@@ -132,17 +127,13 @@ def main(argv: list[str] | None = None) -> int:
         # engine-side); W3 same-index upserts the flat rows
         sink.write(out, cfg.sink, upsert=nested or cfg.ingest_mode == "same-index", **keys)
 
-    # a configured span is also pushed down into sources that take a query
-    # (S3 parity, es_common.py:303-330); range_filter re-applies it, so
-    # segments and query-less sources are scoped the same way
-    span = None
-    if dated:
-        span = {
-            "range": {
-                cfg.date_field: {"gte": date_start, "lte": date_end, "format": "yyyy-MM-dd"}
-            }
-        }
-    docs = source.read(spark, cfg.source, query=span)
+    def read(start, end):
+        # the dated range is also pushed down into sources that take a
+        # query (S3 parity, es_common.py:303-330); range_filter re-applies
+        # it, so query-less sources are scoped the same way
+        bounds = {"gte": start, "lte": end, "format": "yyyy-MM-dd"}
+        query = {"range": {cfg.date_field: bounds}} if dated else None
+        return scope(source.read(spark, cfg.source, query=query), start, end)
 
     if args.stream:
         # S7: the batch flat plan over a checkpointed availableNow file
@@ -155,7 +146,7 @@ def main(argv: list[str] | None = None) -> int:
             run_stream_foreach_batch,
         )
 
-        stream = file_stream(spark, cfg.source.index_name, docs.schema)
+        stream = file_stream(spark, cfg.source.index_name, source.read(spark, cfg.source).schema)
         out = pipe.flat(scope(stream, date_start, date_end), split_by_field=split)
         if args.dry_run:
             out.explain("formatted")
@@ -175,35 +166,24 @@ def main(argv: list[str] | None = None) -> int:
         if cfg.skip_processed_doc_check
         else None
     )
-    processed = done
     segments = [(date_start, date_end)]
     if args.segmented and dated:
-        # B1 reference driver-loop parity (annotations_indexer.py:847-861):
-        # one inclusive range scan per segment
-        from annotations_ingester_spark.operators.windows import date_windows
-
+        # B1 (annotations_indexer.py:847-861): one read per disjoint
+        # segment, so each doc lands in one; all skip the same ``done``
         segments = date_windows(date_start, date_end, cfg.batch_interval_days)
     for seg_start, seg_end in segments:
-        scoped = scope(docs, seg_start, seg_end)
+        docs = read(seg_start, seg_end)
         if nested:
             # W4: one row per document with an annotations array (reference
             # doc_{id}_annotations docs, annotations_indexer.py:166-200)
-            out = pipe.nested(scoped, processed_ids=processed)
+            out = pipe.nested(docs, processed_ids=done)
         else:
-            out = pipe.flat(scoped, split_by_field=split, processed_ids=processed)
+            out = pipe.flat(docs, split_by_field=split, processed_ids=done)
         if args.dry_run:
             # the plan the sink runs: parquet adds its row-id dedup
             sink.stored(out, **keys).explain("formatted")
             return 0
         write(out)
-        # everything up to this segment's end is now in the sink; only the
-        # shared boundary date overlaps the next segment, and the J1
-        # anti-join absorbs it — so segmented == whole-span (certified in
-        # tests/test_cli.py). What the sink held before this run stays
-        # skipped in every later segment.
-        processed = scope(docs, date_start, seg_end).select(cfg.docid_field)
-        if done is not None:
-            processed = done.unionByName(processed)
     return 0
 
 

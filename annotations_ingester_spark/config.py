@@ -30,6 +30,7 @@ log = logging.getLogger(__name__)
 
 REQUIRED_TOP_LEVEL = ("source", "nlp-service", "sink", "mapping")
 PROTOCOL_MODES = ("", "medcat", "gate-nlp")  # config.yml:37
+INGEST_MODES = ("separate-index", "same-index", "nested")  # W1 | W3 | W4
 
 
 @dataclass
@@ -202,6 +203,9 @@ class PipelineConfig:
             raise ValueError(
                 f"nlp-service.max-in-flight must be >= 1, got {max_in_flight!r}"
             )
+        interval = int(batch.get("interval", 30))
+        if interval < 1:  # date_windows would never reach date-end
+            raise ValueError(f"mapping.source.batch.interval must be >= 1, got {interval}")
         # range_filter/date_windows compare ISO date strings; any other
         # format would silently mis-scope every range scan
         for key, iso in (
@@ -223,6 +227,9 @@ class PipelineConfig:
         nlp_map = mapping.section("nlp")
         if "ingest-mode" in sink_map:
             ingest_mode = sink_map.get("ingest-mode")
+            if ingest_mode not in INGEST_MODES:
+                raise ValueError(f"unknown mapping.sink.ingest-mode {ingest_mode!r}; "
+                                 f"expected one of {list(INGEST_MODES)}")
         elif ingest.get("same-index", False):
             ingest_mode = "same-index"
         else:
@@ -243,7 +250,7 @@ class PipelineConfig:
             docid_field=src_map.get("docid-field", "_id"),
             persist_fields=src_map.get("persist-fields", ["_id"]) or [],
             date_field=batch.get("date-field", "dct"),
-            batch_interval_days=int(batch.get("interval", 30)),
+            batch_interval_days=interval,
             date_start=str(batch.get("date-start", "")),
             date_end=str(batch.get("date-end", "")),
             threads=int(batch.get("threads", 4)),

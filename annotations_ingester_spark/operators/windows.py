@@ -4,10 +4,11 @@ The reference's driver loop splits [date-start, date-end] into interval-day
 segments, advancing ``seg_start = prev_end`` and clamping the final segment
 (ingester/annotations_indexer.py:842-861). Because its range scan is
 both-ends-inclusive, boundary-date docs are processed twice — an overlap the
-idempotency layer absorbs (SURVEY §7.4.2). Our engine offers both:
+idempotency layer absorbs (SURVEY §7.4.2). Our engine keeps the ends, not
+the overlap:
 
-- ``date_windows``: the reference-parity segment list (inclusive ends),
-  for the windowed batch driver.
+- ``date_windows``: disjoint segments with the reference's ends, each read
+  once by the ``--segmented`` batch driver.
 - ``window_segment``: a *partitioning* column assigning each row to exactly
   one segment — the non-overlapping Spark-first form, computable inside the
   scan (no driver loop, no double processing), usable in batch and
@@ -28,18 +29,19 @@ def date_windows(
     interval_days: int = 30,
     date_format: str = "%Y-%m-%d",
 ) -> list[tuple[str, str]]:
-    """Reference-parity segment list: [(seg_start, seg_end)...], last segment
-    clamped to ``date_end``; consecutive segments share a boundary date
-    (both-inclusive, annotations_indexer.py:847-861)."""
+    """Disjoint inclusive segments [(seg_start, seg_end)...] covering the
+    span: the reference's ends (every ``interval_days``, the last clamped to
+    ``date_end``, annotations_indexer.py:847-861), each later segment
+    starting the day after the previous end. A one-day span is one segment."""
     start = datetime.strptime(date_start, date_format).date()
     end = datetime.strptime(date_end, date_format).date()
-    out: list[tuple[str, str]] = []
-    seg_start = start
-    while seg_start < end:
-        seg_end = min(seg_start + timedelta(days=interval_days), end)
-        out.append((seg_start.strftime(date_format), seg_end.strftime(date_format)))
-        seg_start = seg_end
-    return out
+    step = timedelta(days=interval_days)
+    seg_start, seg_end = start, min(start + step, end)
+    out = [(seg_start, seg_end)]
+    while seg_end < end:
+        seg_start, seg_end = seg_end + timedelta(days=1), min(seg_end + step, end)
+        out.append((seg_start, seg_end))
+    return [(a.strftime(date_format), b.strftime(date_format)) for a, b in out]
 
 
 def window_segment(

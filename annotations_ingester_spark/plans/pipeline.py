@@ -144,18 +144,24 @@ class AnnotationPipeline:
         """W4: one row per document, annotations collected into an array
         (reference: doc_{id}_annotations sink docs,
         annotations_indexer.py:166-200). ``processed_ids`` threads the J1
-        skip-processed anti-join through, same as the flat path — without
-        it a resumed run over an append sink duplicated every doc row."""
-        ann = self.annotated(docs, processed_ids=processed_ids)
-        exploded = explode_entities(ann)
-        keys = [self.docid_field] + [
-            p for p in self.persist_fields if p != self.docid_field
-        ]
+        skip-processed anti-join through, same as the flat path. Grouped
+        on ``ann_doc_id`` alone, so the sink's one row per ``ann_doc_id``
+        adds no Exchange; a doc the source holds twice keeps one entity
+        per ``ann_id_field`` (the pair a flat ``row_id`` encodes)."""
+        ann = self.annotated(docs, processed_ids=processed_ids).withColumn(
+            "ann_doc_id",
+            F.format_string("doc_%s_annotations", F.col(self.docid_field).cast("string")),
+        )
+        keys = list(dict.fromkeys([self.docid_field, *self.persist_fields]))
+        eid = self.ann_id_field
+        # an entity is kept unless an earlier one in the array has its id
+        annotations = F.filter(
+            "entities",
+            lambda e, i: ~F.exists(F.slice("entities", 1, i), lambda p: p[eid].eqNullSafe(e[eid])),
+        )
         return (
-            exploded.groupBy(*keys)
-            .agg(F.collect_list("entity").alias("annotations"))
-            .withColumn(
-                "ann_doc_id",
-                F.format_string("doc_%s_annotations", F.col(self.docid_field).cast("string")),
-            )
+            explode_entities(ann)
+            .groupBy("ann_doc_id")
+            .agg(*[F.first(k).alias(k) for k in keys], F.collect_list("entity").alias("entities"))
+            .select(*keys, annotations.alias("annotations"), "ann_doc_id")
         )

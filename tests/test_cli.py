@@ -1,8 +1,9 @@
 """CLI end-to-end on the parquet backend with the hermetic fake:// NLP
-registry: whole-span vs --segmented (B1 driver-loop parity,
-annotations_indexer.py:847-861) and the --stream variant — all three must
-produce the identical row_id set (B2 idempotency absorbs the segmented
-mode's boundary-date overlap via the J1 anti-join)."""
+registry: whole-span vs --segmented (B1, the reference driver loop's
+segment ends, annotations_indexer.py:847-861) and the --stream variant —
+all three must produce the identical row_id set. Segments are disjoint
+and each reads only its own dates, so a boundary-date doc is read once
+and nested (W4) runs segmented too."""
 
 from __future__ import annotations
 
@@ -11,8 +12,8 @@ import yaml
 from annotations_ingester_spark.__main__ import main
 
 DOCS = [
-    # (doc_id, text, dct) — boundary dates 2020-01-31 / 2020-03-01 appear
-    # in TWO consecutive inclusive segments (the reference's overlap)
+    # (doc_id, text, dct) — 2020-01-31 / 2020-03-01 are segment ends, which
+    # the reference's inclusive segments share with the next one
     (1, "cli corpus document number one body", "2020-01-05"),
     (2, "cli corpus document number two body", "2020-01-31"),
     (3, "cli corpus document number three body", "2020-01-31"),
@@ -194,21 +195,67 @@ def test_nested_skip_processed_resume(spark, tmp_path):
     assert set(second) > set(first)  # new docs landed
 
 
-def test_nested_segmented_refused(spark, tmp_path):
-    """--segmented with ingest-mode=nested must refuse loudly (exit 2),
-    not silently run un-segmented or write flat columns."""
-    import os
-
-    import yaml as _yaml
-
+def test_nested_segmented_equals_nested_whole_span(spark, tmp_path):
+    """ingest-mode=nested runs --segmented: each doc lands in one segment,
+    so every doc row comes out whole and equal to the whole-span run's."""
     src = _corpus(spark, tmp_path)
-    sink = str(tmp_path / "nested_seg_sink")
-    cfg = _yaml.safe_load(open(_cfg(tmp_path, src, sink)))
-    cfg["mapping"]["sink"]["ingest-mode"] = "nested"
-    p = tmp_path / "cfg_nested_seg.yml"
-    p.write_text(_yaml.safe_dump(cfg))
-    assert main(["--config", str(p), "--segmented"]) == 2
-    assert not os.path.exists(sink)  # refused before writing anything
+
+    def rows(tag, *flags):
+        sink = str(tmp_path / f"nested_{tag}")
+        cfg = yaml.safe_load(open(_cfg(tmp_path, src, sink)))
+        cfg["mapping"]["sink"]["ingest-mode"] = "nested"
+        p = tmp_path / f"cfg_nested_{tag}.yml"
+        p.write_text(yaml.safe_dump(cfg))
+        assert main(["--config", str(p), *flags]) == 0
+        return sorted(
+            (r["doc_id"], r["ann_doc_id"], sorted(e["id"] for e in r["annotations"]))
+            for r in spark.read.parquet(sink).collect()
+        )
+
+    whole = rows("whole")
+    assert whole and rows("seg", "--segmented") == whole
+
+
+def test_segmented_one_day_span_writes_the_whole_span_rows(spark, tmp_path):
+    """date-start == date-end is one segment, not none."""
+    src = _corpus(spark, tmp_path)
+    day = ["--date-start", "2020-01-31", "--date-end", "2020-01-31"]
+    whole, seg = str(tmp_path / "day_whole"), str(tmp_path / "day_seg")
+    assert main(["--config", _cfg(tmp_path, src, whole), *day]) == 0
+    assert main(["--config", _cfg(tmp_path, src, seg), "--segmented", *day]) == 0
+    whole_ids = _row_ids(spark, whole)
+    assert {r.split("-")[1] for r in whole_ids} == {"2", "3"}
+    assert _row_ids(spark, seg) == whole_ids
+
+
+def test_unknown_ingest_mode_refused(tmp_path, capsys):
+    """A typo or null ingest-mode is refused at load, naming the key, not
+    run as separate-index; the CLI exits 2."""
+    import pytest
+
+    from annotations_ingester_spark.config import PipelineConfig
+
+    for mode in ("nestd", None):
+        cfg = yaml.safe_load(open(_cfg(tmp_path, "src", "sink")))
+        cfg["mapping"]["sink"]["ingest-mode"] = mode
+        with pytest.raises(ValueError, match="mapping.sink.ingest-mode"):
+            PipelineConfig.from_dict(cfg)
+        p = tmp_path / "cfg_bad_mode.yml"
+        p.write_text(yaml.safe_dump(cfg))
+        assert main(["--config", str(p)]) == 2
+        assert "mapping.sink.ingest-mode" in capsys.readouterr().err
+
+
+def test_batch_interval_below_one_day_refused(tmp_path):
+    """interval 0 would never advance a segment; refused at load."""
+    import pytest
+
+    from annotations_ingester_spark.config import PipelineConfig
+
+    cfg = yaml.safe_load(open(_cfg(tmp_path, "src", "sink")))
+    cfg["mapping"]["source"]["batch"]["interval"] = 0
+    with pytest.raises(ValueError, match="mapping.source.batch.interval"):
+        PipelineConfig.from_dict(cfg)
 
 
 def test_dry_run_segmented(spark, tmp_path, capsys):
@@ -344,7 +391,7 @@ def test_parquet_sink_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
 def test_config_warnings_carry_the_run_log_format(tmp_path):
     """A key nothing reads is warned about in the run's log format, even
     with ``logging-level`` above WARNING: the format is set before the
-    config is parsed. (nested + --segmented exits 2 before any session.)"""
+    config is parsed. (nested + --stream exits 2 before any session.)"""
     import re
     import subprocess
     import sys
@@ -357,7 +404,7 @@ def test_config_warnings_carry_the_run_log_format(tmp_path):
     p = tmp_path / "cfg_misplaced.yml"
     p.write_text(yaml.safe_dump(cfg))
     r = subprocess.run(
-        [sys.executable, "-m", "annotations_ingester_spark", "--config", str(p), "--segmented"],
+        [sys.executable, "-m", "annotations_ingester_spark", "--config", str(p), "--stream"],
         cwd=Path(__file__).resolve().parent.parent, capture_output=True, text=True,
     )
     assert r.returncode == 2, r.stderr

@@ -603,3 +603,82 @@ def test_cli_rest_to_rest_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
     assert len(twice_posts) > 1  # written from the annotate tasks, not one bulk stage
     # doc 2's rows were posted twice and absorbed by their _id
     assert sum(twice_posts) > len(twice_ids)
+
+
+def test_cli_segmented_rest_source_reads_each_segment_once(spark, tmp_path):
+    """REST→REST CLI over a dated span: the whole-span run opens one scroll
+    per slice; ``--segmented`` opens one per slice and segment, each
+    narrowed to its own segment's range, and writes the same sink ids.
+    (The stub compares range bounds as strings, so the dates stay
+    date-only.)"""
+    import threading
+    from collections import Counter
+    from http.server import ThreadingHTTPServer
+
+    import yaml
+
+    from annotations_ingester_spark.__main__ import main
+    from annotations_ingester_spark.operators.windows import date_windows
+    from annotations_ingester_spark.sources.es_rest import MAX_SLICES_PER_SCROLL
+    from tests.es_stub import EsStubState, _Handler
+
+    opens: list[tuple[str, dict]] = []  # (index, query) of each scroll open
+
+    class ScrollCounting(_Handler):
+        state = EsStubState()
+
+        def _search(self, index, body):
+            if "scroll=" in self.path:
+                opens.append((index, body.get("query")))
+            super()._search(index, body)
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), ScrollCounting)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{server.server_address[1]}"
+    # segment ends and starts (01-31, 02-01, 03-01, 03-31) and one doc
+    # out of the span; text lengths % 4 != 0, so each doc has entities
+    dates = ["2020-01-05", "2020-01-31", "2020-02-01", "2020-03-01",
+             "2020-03-31", "2020-04-30", "2021-06-01"]
+    EsRestClient(_conf(url, "seg-src")).bulk(
+        [{"_id": str(i), "doc_id": i, "text": f"rest seg doc {i} body." + "!" * (1 + i % 3),
+          "dct": d}
+         for i, d in enumerate(dates)]
+    )
+    span = ("2020-01-01", "2020-04-30")
+
+    def es(index):
+        return {"backend": "elasticsearch-rest", "hosts": [url], "index-name": index}
+
+    def run(tag, *flags):
+        cfg = {
+            "source": es("seg-src"),
+            "sink": es(f"seg-sink-{tag}"),
+            "nlp-service": {"endpoints-url": ["fake://medcat"], "protocol-mode": "medcat"},
+            "mapping": {"source": {
+                "text-field": "text", "docid-field": "doc_id", "persist-fields": ["doc_id"],
+                "batch": {"date-field": "dct", "interval": 30,
+                          "date-start": span[0], "date-end": span[1]},
+            }},
+        }
+        path = tmp_path / f"cfg_seg_{tag}.yml"
+        path.write_text(yaml.safe_dump(cfg))
+        before = len(opens)
+        assert main(["--config", str(path), *flags]) == 0
+        ranges = Counter(
+            (q["range"]["dct"]["gte"], q["range"]["dct"]["lte"])
+            for index, q in opens[before:] if index == "seg-src"
+        )
+        return set(EsRestClient(_conf(url, f"seg-sink-{tag}")).scan_doc_ids()), ranges
+
+    try:
+        whole_ids, whole_ranges = run("whole")
+        seg_ids, seg_ranges = run("seg", "--segmented")
+    finally:
+        server.shutdown()
+    slices = min(spark.sparkContext.defaultParallelism, MAX_SLICES_PER_SCROLL)
+    segments = date_windows(*span, 30)
+    assert len(segments) == 4
+    assert whole_ranges == {span: slices}
+    assert seg_ranges == {seg: slices for seg in segments}
+    assert whole_ids and seg_ids == whole_ids
+    assert not any(i.startswith("doc-6-") for i in whole_ids)  # out of the span

@@ -83,18 +83,19 @@ def test_format_index_name_invariants(s):
 @settings(max_examples=200, deadline=None)
 def test_date_windows_cover_range_and_clamp(start, span, interval):
     end = start + timedelta(days=span)
-    segs = date_windows(str(start), str(end), interval)
-    if span == 0:
-        assert segs == []
-        return
-    assert segs[0][0] == str(start) and segs[-1][1] == str(end)  # clamped
+    segs = [
+        tuple(map(date.fromisoformat, seg)) for seg in date_windows(str(start), str(end), interval)
+    ]
+    assert segs[0][0] == start and segs[-1][1] == end  # clamped
+    # the reference's ends: every ``interval`` days from start
+    for k, (_, seg_end) in enumerate(segs[:-1]):
+        assert seg_end == start + timedelta(days=interval * (k + 1))
     for (a0, a1), (b0, b1) in zip(segs, segs[1:]):
-        assert a1 == b0  # boundary sharing (reference parity)
-        assert a0 < a1
-    assert all(
-        (date.fromisoformat(s1) - date.fromisoformat(s0)).days <= interval
-        for s0, s1 in segs
-    )
+        assert b0 == a1 + timedelta(days=1)  # disjoint, no gap
+        assert a0 <= a1 and b0 <= b1
+    # every date of the range falls in exactly one segment
+    days = [start + timedelta(days=i) for i in range(span + 1)]
+    assert all(sum(a <= d <= b for a, b in segs) == 1 for d in days)
 
 
 @given(st.integers(0, 10**6), st.text(min_size=5, max_size=200))

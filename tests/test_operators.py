@@ -25,16 +25,16 @@ from annotations_ingester_spark.operators.windows import date_windows, window_se
 
 
 def test_date_windows_reference_parity():
-    # annotations_indexer.py:847-861: advance by interval, clamp final end
+    # annotations_indexer.py:847-861: ends advance by interval, the final
+    # end clamped; each later segment starts the day after the previous end
     segs = date_windows("2020-01-01", "2020-03-15", 30)
     assert segs == [
         ("2020-01-01", "2020-01-31"),
-        ("2020-01-31", "2020-03-01"),
-        ("2020-03-01", "2020-03-15"),  # clamped
+        ("2020-02-01", "2020-03-01"),
+        ("2020-03-02", "2020-03-15"),  # clamped
     ]
-    # consecutive segments share the boundary date (the reference's overlap)
-    assert segs[0][1] == segs[1][0]
-    assert date_windows("2020-01-01", "2020-01-01", 30) == []
+    # a one-day span is one segment
+    assert date_windows("2020-01-01", "2020-01-01", 30) == [("2020-01-01", "2020-01-01")]
 
 
 def test_window_segment_non_overlapping(spark):

@@ -104,6 +104,20 @@ def test_w4_nested_collects_per_doc(docs_df):
     assert len(nested.loc[1, "annotations"]) == 43 % 4
 
 
+def test_w4_nested_doc_held_twice_keeps_its_array(docs_df):
+    """A doc the source holds twice keeps one entity per id: same array
+    size, same ids, still one row."""
+    pipe = AnnotationPipeline(fake)
+    once = pipe.nested(docs_df).toPandas().set_index("doc_id")
+    twice = pipe.nested(docs_df.unionByName(docs_df.filter("doc_id = 1"))).toPandas()
+    assert (twice["doc_id"] == 1).sum() == 1
+    twice = twice.set_index("doc_id")
+    assert len(once.loc[1, "annotations"]) == 43 % 4
+    for doc in once.index:
+        ids = [e["id"] for e in twice.loc[doc, "annotations"]]
+        assert sorted(ids) == sorted(e["id"] for e in once.loc[doc, "annotations"])
+
+
 def test_windowed_pipeline_scopes_dates(spark):
     docs = spark.createDataFrame(
         [(1, "first window document text", "2020-01-05"),

@@ -302,3 +302,22 @@ def test_parquet_flat_plan_keeps_its_row_id_dedup(spark, capsys, tmp_path):
     plan = _dry_run_plan(capsys, cfg, tmp_path)
     keys = [m.group(1).split("#")[0] for m in re.finditer(r"hashpartitioning\(([^,)]*)", plan)]
     assert keys == ["row_id"], plan
+
+
+def test_parquet_nested_plan_has_one_ann_doc_id_exchange(spark, capsys, tmp_path):
+    """W4 groups on ``ann_doc_id``, so the parquet sink's keep-one-row-per-
+    ``ann_doc_id`` (``parquet.stored``) lands on an already clustered child
+    and adds no second Exchange."""
+    import re
+
+    src = str(tmp_path / "nested_plan_src")
+    spark.createDataFrame(
+        [(i, f"plan doc {i} body!", "2020-01-01") for i in range(4)],
+        "doc_id long, text string, dct string",
+    ).write.parquet(src)
+    cfg = _plan_cfg({"backend": "parquet", "path": src},
+                    {"backend": "parquet", "path": str(tmp_path / "nested_plan_sink")})
+    cfg["mapping"]["sink"] = {"ingest-mode": "nested"}
+    plan = _dry_run_plan(capsys, cfg, tmp_path)
+    keys = [m.group(1).split("#")[0] for m in re.finditer(r"hashpartitioning\(([^,)]*)", plan)]
+    assert keys == ["ann_doc_id"], plan
