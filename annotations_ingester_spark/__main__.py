@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import logging
 import sys
+from functools import partial
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -67,10 +68,6 @@ def main(argv: list[str] | None = None) -> int:
     nested = cfg.ingest_mode == "nested"
     source, sink = BACKENDS[cfg.source.backend], BACKENDS[cfg.sink.backend]
 
-    if nested and args.stream:
-        # a micro-batch can hold part of a doc's group; refuse, not write flat
-        print("--stream is not supported with ingest-mode=nested", file=sys.stderr)
-        return 2
     if args.stream and source is not parquet:
         print("--stream requires a file-based (parquet) source backend", file=sys.stderr)
         return 2
@@ -109,7 +106,7 @@ def main(argv: list[str] | None = None) -> int:
         text_field=cfg.text_field,
         docid_field=cfg.docid_field,
         persist_fields=cfg.persist_fields,
-        mode="gate" if cfg.nlp.mode == "gate-nlp" else "medcat",
+        mode=nlp.mode,
         ann_id_field=cfg.annotation_id_field,
     )
     split = cfg.split_index_by_field or None
@@ -121,6 +118,10 @@ def main(argv: list[str] | None = None) -> int:
         "mapping_id": "ann_doc_id" if nested else "row_id",
         "split_suffix_field": "index_suffix" if split and not nested else None,
     }
+
+    # W4: one row per document with an annotations array (reference
+    # doc_{id}_annotations docs, annotations_indexer.py:166-200)
+    plan = pipe.nested if nested else partial(pipe.flat, split_by_field=split)
 
     def write(out) -> None:
         # a W4 doc row replaces the stored one (the merge happened
@@ -136,9 +137,9 @@ def main(argv: list[str] | None = None) -> int:
         return scope(source.read(spark, cfg.source, query=query), start, end)
 
     if args.stream:
-        # S7: the batch flat plan over a checkpointed availableNow file
+        # S7: the batch plan over a checkpointed availableNow file
         # stream. The checkpoint is the stream's resume ledger (no J1
-        # read); deterministic row ids make micro-batch replay an
+        # read); deterministic mapping ids make micro-batch replay an
         # idempotent upsert.
         from annotations_ingester_spark.functions.names import format_index_name
         from annotations_ingester_spark.streaming.pipeline import (
@@ -147,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         stream = file_stream(spark, cfg.source.index_name, source.read(spark, cfg.source).schema)
-        out = pipe.flat(scope(stream, date_start, date_end), split_by_field=split)
+        out = plan(scope(stream, date_start, date_end))
         if args.dry_run:
             out.explain("formatted")
             return 0
@@ -172,15 +173,9 @@ def main(argv: list[str] | None = None) -> int:
         # segment, so each doc lands in one; all skip the same ``done``
         segments = date_windows(date_start, date_end, cfg.batch_interval_days)
     for seg_start, seg_end in segments:
-        docs = read(seg_start, seg_end)
-        if nested:
-            # W4: one row per document with an annotations array (reference
-            # doc_{id}_annotations docs, annotations_indexer.py:166-200)
-            out = pipe.nested(docs, processed_ids=done)
-        else:
-            out = pipe.flat(docs, split_by_field=split, processed_ids=done)
+        out = plan(read(seg_start, seg_end), processed_ids=done)
         if args.dry_run:
-            # the plan the sink runs: parquet adds its row-id dedup
+            # the plan the sink runs: parquet adds its mapping-id dedup
             sink.stored(out, **keys).explain("formatted")
             return 0
         write(out)

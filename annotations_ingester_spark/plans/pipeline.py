@@ -2,16 +2,17 @@
 
     source → valid_text_filter (P3) → skip_processed (J1)
            → annotate (mapInPandas UDTF) → response_shape_guard (P6)
-           → explode (W5) → prefix_project (F3/J3)
-           → sink (one row per mapping id: ``_id`` in Elasticsearch,
-                   ``dropDuplicates`` in parquet)
+           → flat:   explode (W5) → prefix_project (F3/J3)   one row per entity
+             nested: the doc row, its entities as ``annotations`` (W4)
+           → sink (one row per mapping id, ``row_id`` or ``ann_doc_id``:
+                   ``_id`` in Elasticsearch, ``dropDuplicates`` in parquet)
 
 Plan-construction discipline (SURVEY §4): everything above ``annotate`` is a
 Column predicate/join Catalyst can push into the scan; everything below is
 JVM-side projection. The expensive Python stage sees only rows that will
 actually be written. No Exchange follows the annotate stage: a repeated
-row id (the same doc read twice) is absorbed where it is stored, so each
-annotate task explodes, projects and writes its own rows in the same stage.
+mapping id (the same doc read twice) is absorbed where it is stored, so
+each annotate task builds and writes its own rows in the same stage.
 
 Unlike the reference — which collects every doc id into a driver-side list
 (ingester/es_common.py:290-292) and loops a thread pool over point lookups —
@@ -141,18 +142,13 @@ class AnnotationPipeline:
     def nested(
         self, docs: DataFrame, processed_ids: DataFrame | None = None
     ) -> DataFrame:
-        """W4: one row per document, annotations collected into an array
-        (reference: doc_{id}_annotations sink docs,
-        annotations_indexer.py:166-200). ``processed_ids`` threads the J1
-        skip-processed anti-join through, same as the flat path. Grouped
-        on ``ann_doc_id`` alone, so the sink's one row per ``ann_doc_id``
-        adds no Exchange; a doc the source holds twice keeps one entity
-        per ``ann_id_field`` (the pair a flat ``row_id`` encodes)."""
-        ann = self.annotated(docs, processed_ids=processed_ids).withColumn(
-            "ann_doc_id",
-            F.format_string("doc_%s_annotations", F.col(self.docid_field).cast("string")),
-        )
-        keys = list(dict.fromkeys([self.docid_field, *self.persist_fields]))
+        """W4: one row per document with an entity, its ``entities`` as the
+        ``annotations`` array (reference: doc_{id}_annotations sink docs,
+        annotations_indexer.py:166-200); no explode, no group.
+        ``processed_ids`` threads the J1 anti-join through, as in the flat
+        path. The array keeps one entity per ``ann_id_field``; a doc the
+        source holds twice yields two rows with one ``ann_doc_id``, and the
+        sink keeps one."""
         eid = self.ann_id_field
         # an entity is kept unless an earlier one in the array has its id
         annotations = F.filter(
@@ -160,8 +156,13 @@ class AnnotationPipeline:
             lambda e, i: ~F.exists(F.slice("entities", 1, i), lambda p: p[eid].eqNullSafe(e[eid])),
         )
         return (
-            explode_entities(ann)
-            .groupBy("ann_doc_id")
-            .agg(*[F.first(k).alias(k) for k in keys], F.collect_list("entity").alias("entities"))
-            .select(*keys, annotations.alias("annotations"), "ann_doc_id")
+            self.annotated(docs, processed_ids=processed_ids)
+            .filter(F.size("entities") > 0)
+            .select(
+                *dict.fromkeys([self.docid_field, *self.persist_fields]),
+                annotations.alias("annotations"),
+                F.format_string(
+                    "doc_%s_annotations", F.col(self.docid_field).cast("string")
+                ).alias("ann_doc_id"),
+            )
         )

@@ -140,9 +140,9 @@ def w3(spark: SparkSession, sf: str):
            count(*) AS n_annotations,
            string_agg(cui, ',' ORDER BY cui) AS cuis
     FROM ents GROUP BY doc_id""",
-    doc="W4 nested per-doc sink rows: annotations collected into one array "
-    "per document with the doc_{id}_annotations key "
-    "(annotations_indexer.py:166-200) — groupBy + collect_list.",
+    doc="W4 nested per-doc sink rows: each annotated doc row's entities as its "
+    "annotations array, with the doc_{id}_annotations key "
+    "(annotations_indexer.py:166-200) — no explode, no groupBy.",
 )
 def w4(spark: SparkSession, sf: str):
     pipe = AnnotationPipeline(lambda: DeterministicFakeAnnotator("medcat"))

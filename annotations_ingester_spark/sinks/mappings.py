@@ -15,7 +15,7 @@ from typing import Any
 
 from pyspark.sql import types as T
 
-from annotations_ingester_spark.types import GATE_ENTITY, MEDCAT_ENTITY
+from annotations_ingester_spark.types import entity_struct
 
 _ES_TYPES = {
     "string": {"type": "text", "fields": {"keyword": {"type": "keyword", "ignore_above": 256}}},
@@ -42,8 +42,7 @@ def _field_mapping(dt: T.DataType) -> dict[str, Any]:
 
 
 def entity_properties(mode: str = "medcat") -> dict[str, Any]:
-    entity = MEDCAT_ENTITY if mode == "medcat" else GATE_ENTITY
-    return {f.name: _field_mapping(f.dataType) for f in entity.fields}
+    return {f.name: _field_mapping(f.dataType) for f in entity_struct(mode).fields}
 
 
 def nested_object_mapping(mode: str = "medcat") -> dict[str, Any]:

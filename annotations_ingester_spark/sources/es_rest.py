@@ -394,9 +394,9 @@ def write_es_rest(
     implements the W2 per-value index routing ``base-{value}`` with F1 name
     normalization (es_common.py:133-151).
 
-    No Exchange precedes the write in the CLI's flat plan, so each
-    ``foreachPartition`` task is an annotate task: it explodes, projects
-    and bulk-posts its own rows, and a row id seen twice overwrites its
+    No Exchange precedes the write in the CLI's plan (flat or W4), so each
+    ``foreachPartition`` task is an annotate task: it builds and
+    bulk-posts its own rows, and a mapping id seen twice overwrites its
     ``_id``. The cost is the failure mode: a bulk HTTP error (the request
     itself, not a per-item failure, which is counted and logged) fails the
     annotate task, so on a cluster a retried task annotates its partition

@@ -1,19 +1,16 @@
-"""Structured Streaming annotation pipeline.
+"""Structured Streaming twin of the batch pipeline (S7).
 
-The reference's batch-windowed driver loop (B1) + retry-next-run semantics
-(B3) map onto Structured Streaming directly (BASELINE.json approach:
-"Structured Streaming + Elasticsearch sink"):
-
-- source       → ``readStream`` (file source here; Kafka in production)
-- B1 windows   → event-time ``window()`` aggregations with watermarks
-- B2 idempotent→ checkpointing + deterministic row ids + idempotent sink
-  (ES ``es.mapping.id`` upsert / parquet overwrite-by-id in foreachBatch)
-- B3 late data → watermark + ``dropDuplicatesWithinWatermark`` — the
-  *bounded-state* dedup (an unbounded ``dropDuplicates`` would OOM the
-  state store at 100 TB; the watermark gives state TTL, SURVEY §7.4.4)
-
-The same ``flat_annotations`` plan builds the per-batch transformation —
-batch and streaming share one code path, so correctness transfers.
+The CLI's ``--stream`` runs the batch plan (flat or W4, as the config's
+ingest mode says) over :func:`file_stream`, a parquet file-source stream
+read ``availableNow``. :func:`run_stream_foreach_batch` hands each
+micro-batch to the sink backend's ``write``, as a batch run does: an
+Elasticsearch sink writes each row under ``_id`` = its mapping id, so a
+replayed batch overwrites itself; the parquet sink appends the batch's
+``stored`` rows, so a batch replayed after its write but before its
+checkpoint commit is appended again. The checkpoint is the stream's
+resume ledger (no J1 read of the sink). Each sink row comes from one
+source row, so no micro-batch holds part of one, and the stream keeps no
+state (the watermarked operators live in ``streaming/stateful.py``).
 """
 
 from __future__ import annotations
@@ -98,8 +95,8 @@ def run_stream_foreach_batch(
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
 ) -> None:
-    """Production shape: checkpointed ``foreachBatch`` into an idempotent
-    sink (ES upsert with deterministic ids, or parquet merge)."""
+    """Production shape: checkpointed ``foreachBatch``; the CLI's
+    ``batch_fn`` is the sink backend's ``write``."""
     q = (
         out.writeStream.option("checkpointLocation", checkpoint_dir)
         .foreachBatch(batch_fn)

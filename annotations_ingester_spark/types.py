@@ -77,8 +77,18 @@ FIELD_META_PREFIX = "meta"
 MIN_TEXT_LEN = 5
 
 
+def entity_struct(mode: str) -> T.StructType:
+    """The entity struct of a protocol mode: the config's ``""`` and
+    ``medcat`` (config.yml:37) are MedCAT, ``gate`` and ``gate-nlp`` GATE."""
+    if mode in ("", "medcat"):
+        return MEDCAT_ENTITY
+    if mode in ("gate", "gate-nlp"):
+        return GATE_ENTITY
+    raise ValueError(f"unknown protocol mode {mode!r}")
+
+
 def annotated_schema(base: T.StructType, mode: str = "medcat") -> T.StructType:
     """Schema of a document DataFrame after the annotate stage: the input
     columns plus an ``entities`` array column of the mode's entity struct."""
-    entity = MEDCAT_ENTITY if mode == "medcat" else GATE_ENTITY
+    entity = entity_struct(mode)
     return T.StructType(list(base.fields) + [T.StructField("entities", T.ArrayType(entity), True)])

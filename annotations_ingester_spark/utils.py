@@ -1,7 +1,8 @@
-"""Driver-side utilities: service health gate (S11) and admin ops (S9).
+"""Driver-side utility: the service health gate (S11).
 
-Reference: ingester/utils.py:7-14 (``check_url_available``),
-ingester/es_common.py:162-167 (``drop_index``). The duplicate-record
+Reference: ingester/utils.py:7-14 (``check_url_available``). The S9 admin
+op (ingester/es_common.py:162-167, ``drop_index``) is
+``sources.es_rest.EsRestClient.drop_index``. The duplicate-record
 removal util (utils.py:16-19) is subsumed by ``dropDuplicates`` /
 ``sinks.writers.merge_annotation_sets``.
 """
@@ -27,15 +28,3 @@ def check_url_available(urls: list[str], timeout: float = 10.0) -> bool:
             log.warning("endpoint %s unavailable: %s", url, exc)
             return False
     return True
-
-
-def drop_table(spark, path_or_name: str) -> None:
-    """S9 drop-index equivalent for the parquet backend (admin util)."""
-    import shutil
-
-    try:
-        spark.catalog.dropTempView(path_or_name)
-    except Exception:
-        pass
-    if "/" in path_or_name:
-        shutil.rmtree(path_or_name, ignore_errors=True)

@@ -150,6 +150,30 @@ def test_normalized_keys_are_the_declared_struct_fields():
     assert gates and all(list(e) == GATE_ENTITY.fieldNames() for e in gates)
 
 
+def test_protocol_mode_picks_the_entity_struct():
+    """The config's own spelling of MedCAT (``""``, config.yml:37) picks the
+    MedCAT struct for the annotate schema and the sink mapping alike; an
+    unknown mode is refused, not read as GATE."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from annotations_ingester_spark.sinks.mappings import entity_properties
+    from annotations_ingester_spark.types import (
+        GATE_ENTITY,
+        MEDCAT_ENTITY,
+        annotated_schema,
+        entity_struct,
+    )
+
+    base = T.StructType([T.StructField("doc_id", T.LongType())])
+    for mode, struct in [("", MEDCAT_ENTITY), ("medcat", MEDCAT_ENTITY),
+                         ("gate", GATE_ENTITY), ("gate-nlp", GATE_ENTITY)]:
+        assert annotated_schema(base, mode)["entities"].dataType.elementType == struct
+        assert list(entity_properties(mode)) == struct.fieldNames()
+    with pytest.raises(ValueError, match="bogus"):
+        entity_struct("bogus")
+
+
 def test_entity_coercion_characterization():
     """Each entity is projected onto its declared struct: Long → int,
     Double → float, Boolean → bool, other types as they came, None kept,

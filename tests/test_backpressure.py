@@ -204,7 +204,7 @@ def test_pipeline_w1_backpressure_knobs_from_yaml(spark, tmp_path):
         text_field=cfg.text_field,
         docid_field=cfg.docid_field,
         persist_fields=cfg.persist_fields,
-        mode="gate" if cfg.nlp.mode == "gate-nlp" else "medcat",
+        mode=cfg.nlp.mode,
     )
     docs = spark.createDataFrame(
         [(f"d{i}", "a reasonably long document body") for i in range(48)],

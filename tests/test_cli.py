@@ -118,6 +118,28 @@ def test_nested_ingest_mode(spark, tmp_path):
     assert set(rows) == expected and back.count() == len(expected)
 
 
+def test_nested_stream_stores_the_nested_batch_rows(spark, tmp_path):
+    """ingest-mode=nested runs --stream: a W4 doc row comes from one source
+    row, so the micro-batches store the batch run's rows."""
+    from pyspark.sql import functions as F
+
+    src = _corpus(spark, tmp_path)
+
+    def rows(tag, *flags):
+        sink = str(tmp_path / f"nested_{tag}")
+        cfg = yaml.safe_load(open(_cfg(tmp_path, src, sink, dated=False)))
+        cfg["mapping"]["sink"]["ingest-mode"] = "nested"
+        p = tmp_path / f"cfg_nested_{tag}.yml"
+        p.write_text(yaml.safe_dump(cfg))
+        assert main(["--config", str(p), *flags]) == 0
+        back = spark.read.parquet(sink)
+        return sorted(back.select("doc_id", "ann_doc_id", F.to_json("annotations")).collect())
+
+    batch = rows("batch")
+    assert [r["doc_id"] for r in batch] == [1, 2, 3, 6]  # 4, 5 have no entity; 7 is P3-filtered
+    assert rows("stream", "--stream") == batch
+
+
 def test_skip_processed_resume(spark, tmp_path):
     """skip-processed-doc-check (J1 resume): a second run over a grown
     corpus must only write the NEW docs — previously the flag was parsed
@@ -391,7 +413,8 @@ def test_parquet_sink_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
 def test_config_warnings_carry_the_run_log_format(tmp_path):
     """A key nothing reads is warned about in the run's log format, even
     with ``logging-level`` above WARNING: the format is set before the
-    config is parsed. (nested + --stream exits 2 before any session.)"""
+    config is parsed. (--stream over a REST source exits 2 before any
+    session and before any request.)"""
     import re
     import subprocess
     import sys
@@ -399,7 +422,8 @@ def test_config_warnings_carry_the_run_log_format(tmp_path):
 
     cfg = yaml.safe_load(open(_cfg(tmp_path, "src", str(tmp_path / "sink"))))
     cfg["batch"] = {"threads": 8}  # misplaced: batch belongs under mapping.source
-    cfg["mapping"]["sink"]["ingest-mode"] = "nested"
+    cfg["source"] = {"backend": "elasticsearch-rest",
+                     "es": {"hosts": ["http://localhost:9"], "index-name": "src"}}
     cfg["logging-level"] = 40
     p = tmp_path / "cfg_misplaced.yml"
     p.write_text(yaml.safe_dump(cfg))

@@ -326,6 +326,51 @@ def test_cli_stream_mode_rest_sink(spark, es_stub, tmp_path):
     assert not any(i.startswith("doc-3-") for i in ids)  # P3 filtered
 
 
+def test_cli_nested_stream_rest_sink_stores_the_batch_ids(spark, es_stub, tmp_path):
+    """ingest-mode=nested runs --stream: each W4 doc row comes from one
+    source row, so the micro-batches store the batch run's
+    ``doc_{id}_annotations`` ids with the same entity ids, and a doc with
+    no entity stores nothing in either."""
+    import yaml
+
+    from annotations_ingester_spark.__main__ import main
+
+    state, url = es_stub
+    src = str(tmp_path / "nested_stream_src")
+    spark.createDataFrame(
+        [
+            (1, "nested stream document one body!!", "2020-01-05"),
+            (2, "nested stream document two body!!", "2020-02-10"),
+            (3, "nested stream doc three body", "2020-02-11"),  # len % 4 == 0: no entity
+            (4, "nested stream document four body!!!", "2020-03-01"),
+            (5, "x", "2020-02-01"),  # P3-filtered
+        ],
+        "doc_id long, text string, dct string",
+    ).write.parquet(src)
+
+    def stored(tag, *flags):
+        cfg = {
+            "source": {"backend": "parquet", "path": src},
+            "sink": {"backend": "elasticsearch-rest", "hosts": [url],
+                     "index-name": f"nested-{tag}"},
+            "nlp-service": {"endpoints-url": ["fake://medcat"], "protocol-mode": "medcat"},
+            "mapping": {
+                "source": {"text-field": "text", "docid-field": "doc_id",
+                           "persist-fields": ["doc_id"]},
+                "sink": {"ingest-mode": "nested"},
+            },
+        }
+        path = tmp_path / f"cfg_nested_{tag}.yml"
+        path.write_text(yaml.safe_dump(cfg))
+        assert main(["--config", str(path), *flags]) == 0
+        docs = EsRestClient(_conf(url, f"nested-{tag}")).search_page(size=100)
+        return {d["ann_doc_id"]: sorted(e["id"] for e in d["annotations"]) for d in docs}
+
+    batch = stored("batch")
+    assert set(batch) == {"doc_1_annotations", "doc_2_annotations", "doc_4_annotations"}
+    assert stored("stream", "--stream") == batch
+
+
 def test_cli_rest_source_with_range_pushdown(spark, es_stub, tmp_path):
     """CLI with the REST backend as SOURCE: schema inferred from a bounded
     sample, sliced-scroll parallel read, and the configured date span

@@ -106,10 +106,19 @@ def test_w4_nested_collects_per_doc(docs_df):
 
 def test_w4_nested_doc_held_twice_keeps_its_array(docs_df):
     """A doc the source holds twice keeps one entity per id: same array
-    size, same ids, still one row."""
+    size, same ids, still one stored row (the sink keeps one row per
+    ``ann_doc_id``, as ``parquet.stored`` does)."""
+    from annotations_ingester_spark.sources import parquet
+
     pipe = AnnotationPipeline(fake)
-    once = pipe.nested(docs_df).toPandas().set_index("doc_id")
-    twice = pipe.nested(docs_df.unionByName(docs_df.filter("doc_id = 1"))).toPandas()
+
+    def stored(docs):
+        return parquet.stored(
+            pipe.nested(docs), mapping_id="ann_doc_id", split_suffix_field=None
+        ).toPandas()
+
+    once = stored(docs_df).set_index("doc_id")
+    twice = stored(docs_df.unionByName(docs_df.filter("doc_id = 1")))
     assert (twice["doc_id"] == 1).sum() == 1
     twice = twice.set_index("doc_id")
     assert len(once.loc[1, "annotations"]) == 43 % 4

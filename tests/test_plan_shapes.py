@@ -7,6 +7,7 @@ CI, not a 100 TB run."""
 from __future__ import annotations
 
 import pytest
+import yaml
 
 from annotations_ingester_spark.plans.queries import REGISTRY
 
@@ -232,14 +233,12 @@ def test_survivors_interval_fold_evaluated_once(spark):
         )
 
 
-def _dry_run_plan(capsys, cfg: dict, tmp_path) -> str:
-    import yaml
-
+def _dry_run_plan(capsys, cfg: dict, tmp_path, *flags: str) -> str:
     from annotations_ingester_spark.__main__ import main
 
     path = tmp_path / "cfg_plan.yml"
     path.write_text(yaml.safe_dump(cfg))
-    assert main(["--config", str(path), "--dry-run"]) == 0
+    assert main(["--config", str(path), "--dry-run", *flags]) == 0
     return capsys.readouterr().out
 
 
@@ -256,11 +255,7 @@ def _plan_cfg(source: dict, sink: dict) -> dict:
     }
 
 
-def test_rest_to_rest_plan_writes_from_the_annotate_stage(spark, capsys, tmp_path):
-    """The REST→REST ingest plan has one Exchange, the round-robin one that
-    feeds the annotate MapInPandas, and no aggregate after that node: each
-    annotate task explodes, projects and bulk-writes its own rows (the ES
-    ``_id`` absorbs a repeated row id)."""
+def _assert_rest_to_rest_plan_writes_from_the_annotate_stage(capsys, tmp_path, mapping_sink):
     from annotations_ingester_spark.config import ConnectorConfig
     from annotations_ingester_spark.sources.es_rest import EsRestClient
     from tests.es_stub import start_es_stub
@@ -275,7 +270,9 @@ def test_rest_to_rest_plan_writes_from_the_annotate_stage(spark, capsys, tmp_pat
         def es(index):
             return {"backend": "elasticsearch-rest", "es": {"hosts": [url], "index-name": index}}
 
-        plan = _dry_run_plan(capsys, _plan_cfg(es("src"), es("sink")), tmp_path)
+        cfg = _plan_cfg(es("src"), es("sink"))
+        cfg["mapping"]["sink"] = mapping_sink
+        plan = _dry_run_plan(capsys, cfg, tmp_path)
     finally:
         server.shutdown()
     tree = plan.split("\n\n")[0].splitlines()
@@ -285,6 +282,23 @@ def test_rest_to_rest_plan_writes_from_the_annotate_stage(spark, capsys, tmp_pat
     assert "Exchange" in tree[annotate + 1], plan  # round-robin, then annotate
     assert "RoundRobinPartitioning" in plan
     assert not any("Aggregate" in ln for ln in tree[:annotate]), plan
+
+
+def test_rest_to_rest_plan_writes_from_the_annotate_stage(spark, capsys, tmp_path):
+    """The REST→REST ingest plan has one Exchange, the round-robin one that
+    feeds the annotate MapInPandas, and no aggregate after that node: each
+    annotate task explodes, projects and bulk-writes its own rows (the ES
+    ``_id`` absorbs a repeated row id)."""
+    _assert_rest_to_rest_plan_writes_from_the_annotate_stage(capsys, tmp_path, {})
+
+
+def test_rest_to_rest_nested_plan_writes_from_the_annotate_stage(spark, capsys, tmp_path):
+    """W4 too: each annotate task bulk-writes its doc rows, with no
+    explode, no group and no aggregate (the ES ``_id`` absorbs a repeated
+    ``ann_doc_id``)."""
+    _assert_rest_to_rest_plan_writes_from_the_annotate_stage(
+        capsys, tmp_path, {"ingest-mode": "nested"}
+    )
 
 
 def test_parquet_flat_plan_keeps_its_row_id_dedup(spark, capsys, tmp_path):
@@ -305,9 +319,9 @@ def test_parquet_flat_plan_keeps_its_row_id_dedup(spark, capsys, tmp_path):
 
 
 def test_parquet_nested_plan_has_one_ann_doc_id_exchange(spark, capsys, tmp_path):
-    """W4 groups on ``ann_doc_id``, so the parquet sink's keep-one-row-per-
-    ``ann_doc_id`` (``parquet.stored``) lands on an already clustered child
-    and adds no second Exchange."""
+    """W4 rows come from the annotate stage, so the parquet sink's
+    keep-one-row-per-``ann_doc_id`` (``parquet.stored``) is the plan's one
+    hash Exchange."""
     import re
 
     src = str(tmp_path / "nested_plan_src")
@@ -321,3 +335,22 @@ def test_parquet_nested_plan_has_one_ann_doc_id_exchange(spark, capsys, tmp_path
     plan = _dry_run_plan(capsys, cfg, tmp_path)
     keys = [m.group(1).split("#")[0] for m in re.finditer(r"hashpartitioning\(([^,)]*)", plan)]
     assert keys == ["ann_doc_id"], plan
+
+
+@pytest.mark.parametrize("flags", [[], ["--segmented"], ["--stream"]], ids=["batch", "segmented", "stream"])
+@pytest.mark.parametrize("ingest_mode", ["separate-index", "same-index", "nested"])
+def test_dry_run_builds_every_ingest_mode(spark, capsys, tmp_path, ingest_mode, flags):
+    """Batch, ``--segmented`` and ``--stream`` each build the annotate plan
+    for every ingest mode."""
+    src = str(tmp_path / "mode_src")
+    spark.createDataFrame(
+        [(i, f"plan doc {i} body!", f"2020-0{i + 1}-01") for i in range(4)],
+        "doc_id long, text string, dct string",
+    ).write.parquet(src)
+    cfg = _plan_cfg({"backend": "parquet", "path": src},
+                    {"backend": "parquet", "path": str(tmp_path / "mode_sink")})
+    cfg["mapping"]["source"]["batch"] |= {
+        "date-field": "dct", "interval": 30, "date-start": "2020-01-01", "date-end": "2020-04-30"
+    }
+    cfg["mapping"]["sink"] = {"ingest-mode": ingest_mode}
+    assert "MapInPandas" in _dry_run_plan(capsys, cfg, tmp_path, *flags)
