@@ -15,8 +15,8 @@ Layout
 - ``functions``  : scalar function library (names, text analysis, vectors)
 - ``annotator``  : the enrichment UDTF — pluggable NLP client + mapInPandas
 - ``operators``  : filters, anti-join, windows, explode, dedup, similarity
-- ``sources``    : parquet + Elasticsearch readers behind one interface
-- ``sinks``      : flat / partitioned / nested / merge writers (W1-W4)
+- ``sources``    : parquet + Elasticsearch backends (reads, W1-W4 writes)
+- ``sinks``      : mapping DDL, physical layouts, shard export
 - ``plans``      : end-to-end batch pipeline assembly
 - ``streaming``  : Structured Streaming variant
 - ``multimodal`` : binary media columns with typed metadata

@@ -18,6 +18,7 @@ from annotations_ingester_spark.plans.catalog import (
     table_schema,
     utc_label,
 )
+from annotations_ingester_spark.plans.pipeline import flat_annotations
 from annotations_ingester_spark.plans.queries_pipeline import DOCS_CTE, ENTS_CTE, MEDCAT_FLAT_FIELDS
 
 EV_CTE = """ev AS (
@@ -195,7 +196,7 @@ def q_cube(spark: SparkSession, sf: str):
     )
 
 
-# Streaming W1 (underscore column naming — stream_annotations uses
+# Streaming W1 (underscore column naming: flat_annotations with
 # dotted=False), identical output to the batch pipeline by construction.
 _STREAM_FLAT_SELECT = """SELECT
   'doc-' || doc_id::VARCHAR || '-ann-' || i::VARCHAR AS row_id,
@@ -220,17 +221,18 @@ FROM ents"""
 )
 def q_streaming(spark: SparkSession, sf: str):
     from annotations_ingester_spark.streaming.pipeline import (
+        file_stream,
         run_stream_to_memory,
-        stream_annotations,
     )
 
-    schema = table_schema(spark, sf, "documents")
-    out = stream_annotations(
-        spark,
-        f"{sf}/documents.parquet",
-        schema,
+    docs = file_stream(
+        spark, f"{sf}/documents.parquet", table_schema(spark, sf, "documents")
+    )
+    out = flat_annotations(
+        docs,
         lambda: DeterministicFakeAnnotator("medcat"),
         ann_fields=MEDCAT_FLAT_FIELDS,
+        dotted=False,
     )
     return run_stream_to_memory(out, "streaming_w1_out")
 

@@ -16,7 +16,6 @@ from pyspark.sql import types as T
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
 from annotations_ingester_spark.plans.catalog import register, table
 from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
-from annotations_ingester_spark.sinks.writers import merge_annotation_sets
 from annotations_ingester_spark.types import MEDCAT_ENTITY
 
 # MedCAT flat fields projected in oracle-checked queries (meta_anns is a map —
@@ -113,7 +112,7 @@ def w2(spark: SparkSession, sf: str):
     FROM merged GROUP BY doc_id""",
     doc="W3 same-index merge: old ∪ new annotation sets with whole-record "
     "dedup (annotations_indexer.py:148-165; utils.py:16-19), grouped back "
-    "per doc — the foreachBatch upsert merge, batch form.",
+    "per doc: a whole-record union + distinct.",
 )
 def w3(spark: SparkSession, sf: str):
     docs = table(spark, sf, "documents")
@@ -126,7 +125,7 @@ def w3(spark: SparkSession, sf: str):
         ann_fields=["cui"],
         dotted=False,
     ).select(F.col("meta_doc_id").alias("doc_id"), F.col("nlp_cui").alias("cui"))
-    merged = merge_annotation_sets(existing, new)
+    merged = existing.unionByName(new).distinct()
     return merged.groupBy("doc_id").agg(
         F.count("*").alias("n_annotations"),
         F.array_join(F.sort_array(F.collect_list("cui")), ",").alias("cuis"),

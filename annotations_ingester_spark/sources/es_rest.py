@@ -6,18 +6,17 @@ Speaks the same public REST subset the reference uses:
 
 - bulk ndjson writes, chunk 10000 / 30 s timeout, per-item failure
   counting (ingester/es_common.py:98-99, 181-210)
-- scroll scans with ``stored_fields: []`` id-only projection
-  (es_common.py:273-292) — upgraded to the public *sliced* scroll so the
-  read parallelizes one-scroll-per-Spark-task (the same parallel-scan
-  shape the connector gets from one-partition-per-shard; the reference's
-  single scroll is the 1-slice special case). Reads ask only for the
-  ``_source`` fields the schema names, stream one page at a time, and
-  free each scroll context (``DELETE /_search/scroll``) when done
-- range / match queries pushed down in the request body
-  (es_common.py:254-271, 303-330)
-- point get merging ``_id``/``_index`` metadata (es_common.py:212-231)
-- count / exists / delete-index / put-mapping admin calls
-  (es_common.py:153-167, 254-271; annotations_indexer.py:835-840)
+- scroll scans (es_common.py:273-292) — upgraded to the public *sliced*
+  scroll so the read parallelizes one-scroll-per-Spark-task (the same
+  parallel-scan shape the connector gets from one-partition-per-shard;
+  the reference's single scroll is the 1-slice special case). Reads ask
+  only for the ``_source`` fields the schema names (none for an id-only
+  read, the reference's ``stored_fields: []`` projection), stream one
+  page at a time, merge ``_id``/``_index`` into each doc, and free each
+  scroll context (``DELETE /_search/scroll``) when done
+- range queries pushed down in the request body (es_common.py:303-330)
+- create-index / drop-index / put-mapping admin calls
+  (es_common.py:162-167; annotations_indexer.py:835-840)
 
 Distribution discipline: writes run ``df.foreachPartition`` (each task
 bulk-posts its own partition — nothing funnels through the driver); reads
@@ -39,7 +38,7 @@ import ssl
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
-from itertools import chain, islice
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -149,10 +148,6 @@ class EsRestClient:
         return (parsed, resp_headers) if with_headers else parsed
 
     # -- compat handshake -------------------------------------------------
-    def info(self) -> dict[str, Any]:
-        """GET / — cluster name + version (the public root endpoint)."""
-        return self._request("/")
-
     def verify_compat(self) -> int:
         """The version handshake official 8.x clients perform: read the
         server major from GET /; an 8.x+ server MUST also send the
@@ -198,38 +193,12 @@ class EsRestClient:
             "PUT",
         )
 
-    # -- point / aggregate reads ----------------------------------------
-    def get_doc(self, doc_id: str, index: str | None = None) -> dict[str, Any] | None:
-        # reference: es_common.py:212-231 — merge _id/_index into the source
-        try:
-            r = self._request(f"/{index or self.index}/_doc/{doc_id}")
-        except urllib.error.HTTPError as e:
-            if e.code == 404:
-                return None
-            raise
-        doc = dict(r.get("_source", {}))
-        doc["_id"] = r.get("_id")
-        doc["_index"] = r.get("_index")
-        return doc
-
-    def count(self, query: dict[str, Any] | None = None, index: str | None = None) -> int:
-        # reference: es_common.py:153-160
-        body = json.dumps({"query": query} if query else {}).encode()
-        r = self._request(f"/{index or self.index}/_count", body, "POST")
-        return int(r.get("count", 0))
-
-    def doc_exists(self, criteria: dict[str, Any], index: str | None = None) -> bool:
-        # reference: es_common.py:254-271 — match-count > 0
-        return self.count({"match": criteria}, index) > 0
-
     # -- scan ------------------------------------------------------------
     def scroll_pages(
         self,
         slice_id: int,
         max_slices: int,
         query: dict[str, Any] | None = None,
-        stored_fields: list[str] | None = None,
-        index: str | None = None,
         page_size: int = 1000,
         source: list[str] | None = None,
     ) -> Iterator[list[dict[str, Any]]]:
@@ -238,19 +207,17 @@ class EsRestClient:
         holds at most ``page_size`` docs (the scan-API posture of
         es_common.py:286-289 — never the first-page-only ``search`` bug of
         es_common.py:246-252). ``source`` names the ``_source`` fields to
-        fetch (an empty list fetches none); it is ignored when
-        ``stored_fields`` is given. The scroll context is cleared once the
-        slice is exhausted or the generator is closed."""
+        fetch (an empty list fetches none, for an id-only read; ``None``
+        fetches all). The scroll context is cleared once the slice is
+        exhausted or the generator is closed."""
         body: dict[str, Any] = {"size": page_size, "query": query or {"match_all": {}}}
-        if stored_fields is not None:
-            body["stored_fields"] = stored_fields
-        elif source is not None:
+        if source is not None:
             # ES reads an empty include list as "everything"
             body["_source"] = source or False
         if max_slices > 1:
             body["slice"] = {"id": slice_id, "max": max_slices}
         r = self._request(
-            f"/{index or self.index}/_search?scroll=1m",
+            f"/{self.index}/_search?scroll=1m",
             json.dumps(body).encode(),
             "POST",
         )
@@ -279,57 +246,19 @@ class EsRestClient:
                 except (OSError, ValueError) as e:  # HTTPError is an OSError
                     log.debug("clear scroll %s: %s", sid, e)
 
-    def scroll_slice(
-        self,
-        slice_id: int,
-        max_slices: int,
-        query: dict[str, Any] | None = None,
-        stored_fields: list[str] | None = None,
-        index: str | None = None,
-        page_size: int = 1000,
-    ) -> list[dict[str, Any]]:
-        """One slice of a sliced scroll, all pages in one list."""
-        return list(
-            chain.from_iterable(
-                self.scroll_pages(
-                    slice_id, max_slices, query, stored_fields, index, page_size
-                )
-            )
-        )
-
-    def search_page(
-        self,
-        query: dict[str, Any] | None = None,
-        size: int = 100,
-        index: str | None = None,
-    ) -> list[dict[str, Any]]:
+    def search_page(self, size: int = 100) -> list[dict[str, Any]]:
         """One plain (non-scroll) search page of at most ``size`` docs —
         for bounded driver-side samples. NOT a full scan: the reference's
         first-page-only ``get_doc_ids`` bug (es_common.py:246-252) came
         from using exactly this where a scroll was needed; scans go
-        through :meth:`scroll_slice`."""
-        body = {"size": size, "query": query or {"match_all": {}}}
+        through :meth:`scroll_pages`."""
+        body = {"size": size, "query": {"match_all": {}}}
         r = self._request(
-            f"/{index or self.index}/_search",
+            f"/{self.index}/_search",
             json.dumps(body).encode(),
             "POST",
         )
         return [_hit_doc(h) for h in r.get("hits", {}).get("hits", [])]
-
-    def scan_doc_ids(
-        self, query: dict[str, Any] | None = None, index: str | None = None
-    ) -> list[str]:
-        # reference: es_common.py:273-292 (stored_fields=[] → ids only)
-        return [
-            d["_id"]
-            for d in self.scroll_slice(0, 1, query, stored_fields=[], index=index)
-        ]
-
-    def range_query(
-        self, date_field: str, gte: str, lte: str, fmt: str = "yyyy-MM-dd"
-    ) -> dict[str, Any]:
-        # reference: es_common.py:313-323 — both ends inclusive, explicit fmt
-        return {"range": {date_field: {"gte": gte, "lte": lte, "format": fmt}}}
 
     # -- bulk ------------------------------------------------------------
     def bulk(
@@ -401,6 +330,7 @@ def write_es_rest(
     itself, not a per-item failure, which is counted and logged) fails the
     annotate task, so on a cluster a retried task annotates its partition
     again before it re-posts."""
+    ensure_worker_imports(df.sparkSession)
     client = EsRestClient(conf)
     base = client.index
     op = "update" if upsert else "index"

@@ -4,7 +4,7 @@ Reference: ingester/utils.py:7-14 (``check_url_available``). The S9 admin
 op (ingester/es_common.py:162-167, ``drop_index``) is
 ``sources.es_rest.EsRestClient.drop_index``. The duplicate-record
 removal util (utils.py:16-19) is subsumed by ``dropDuplicates`` /
-``sinks.writers.merge_annotation_sets``.
+``distinct`` and by each sink keeping one row per mapping id.
 """
 
 from __future__ import annotations

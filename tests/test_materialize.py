@@ -25,11 +25,19 @@ REPO = Path(__file__).resolve().parents[1]
     ],
 )
 def test_scoped_query_frees_its_blocks_and_keeps_its_rows(spark, sf_dir, name):
+    # Only what the scope promises is compared: blocks an earlier test
+    # leaked may be freed by the ContextCleaner at any time, so the whole
+    # live set is not. A block this test holds stands for the older ones.
     build = REGISTRY[name].spark
     before = live_rdd_ids(spark)
+    held = spark.range(10).localCheckpoint(eager=True)
+    (held_id,) = live_rdd_ids(spark) - before
+    opened = live_rdd_ids(spark)
     with Scope(spark):
         scoped = build(spark, sf_dir).collect()
-    assert live_rdd_ids(spark) == before
+    assert not live_rdd_ids(spark) - opened  # none created inside survives
+    assert held_id in live_rdd_ids(spark)  # an older block is left alone
+    assert held.count() == 10
 
     unscoped = build(spark, sf_dir).collect()
     release(spark, live_rdd_ids(spark) - before)

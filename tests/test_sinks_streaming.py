@@ -1,6 +1,6 @@
-"""Sink writes (the parquet backend's W1/W2/W4 ``write`` + the W3 merge)
-and the Structured Streaming variant (stream == batch result;
-checkpointed foreachBatch)."""
+"""Sink writes (the parquet backend's W1/W2/W4 ``write``) and the
+Structured Streaming variant (stream == batch result; checkpointed
+foreachBatch)."""
 
 from __future__ import annotations
 
@@ -9,12 +9,11 @@ from pyspark.sql import functions as F
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
 from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.plans.pipeline import AnnotationPipeline, flat_annotations
-from annotations_ingester_spark.sinks.writers import merge_annotation_sets
 from annotations_ingester_spark.sources import parquet
 from annotations_ingester_spark.streaming.pipeline import (
+    file_stream,
     run_stream_foreach_batch,
     run_stream_to_memory,
-    stream_annotations,
 )
 
 MEDCAT_FIELDS = ["id", "cui", "types", "start", "end"]
@@ -61,15 +60,6 @@ def test_write_partitioned_prunes(docs_df, spark, tmp_path):
         one_type.count() == out.filter(F.col("index_suffix") == "type1").count()
 
 
-def test_merge_annotation_sets_idempotent(spark):
-    old = spark.createDataFrame([(1, "A"), (1, "B")], "doc_id long, cui string")
-    new = spark.createDataFrame([(1, "B"), (1, "C"), (2, "D")], "doc_id long, cui string")
-    merged = merge_annotation_sets(old, new)
-    assert merged.count() == 4  # A,B,C,D — B deduped
-    again = merge_annotation_sets(merged, new)
-    assert again.count() == 4  # idempotent (W3/B2)
-
-
 def test_stream_matches_batch(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, f"stream document number {i} with text") for i in range(20)],
@@ -77,8 +67,9 @@ def test_stream_matches_batch(spark, tmp_path):
     )
     src = str(tmp_path / "src")
     docs.write.parquet(src)
-    out = stream_annotations(
-        spark, src, docs.schema, fake, ann_fields=MEDCAT_FIELDS
+    out = flat_annotations(
+        file_stream(spark, src, docs.schema), fake, ann_fields=MEDCAT_FIELDS,
+        dotted=False,
     )
     assert out.isStreaming
     got = run_stream_to_memory(out, "t_stream")
@@ -96,112 +87,16 @@ def test_stream_foreach_batch_checkpointed(spark, tmp_path):
     src = str(tmp_path / "src2")
     docs.write.parquet(src)
     sink = str(tmp_path / "sink")
-    out = stream_annotations(spark, src, docs.schema, fake, ann_fields=MEDCAT_FIELDS)
+    out = flat_annotations(
+        file_stream(spark, src, docs.schema), fake, ann_fields=MEDCAT_FIELDS,
+        dotted=False,
+    )
     run_stream_foreach_batch(
         out, lambda df, epoch: df.write.mode("append").parquet(sink), str(tmp_path / "ckpt")
     )
-    assert spark.read.parquet(sink).count() == out.sparkSession.read.parquet(src).count() * 0 + \
-        flat_annotations(docs, fake, ann_fields=MEDCAT_FIELDS, dotted=False).count()
-
-
-def _nested_df(spark, rows):
-    # rows: list of (ann_doc_id, [entity_id, ...])
-    return spark.createDataFrame(
-        [(d, [(e, f"C{e}") for e in ents]) for d, ents in rows],
-        "ann_doc_id string, annotations array<struct<id:long,cui:string>>",
-    )
-
-
-def test_w4_bucketed_upsert_merges_and_rewrites_only_touched_buckets(spark, tmp_path):
-    import os
-
-    from annotations_ingester_spark.sinks.writers import upsert_nested_foreach_batch
-
-    path = str(tmp_path / "nested_sink")
-    fn = upsert_nested_foreach_batch(path, num_buckets=8)
-    fn(_nested_df(spark, [(f"doc_{i}", [1, 2]) for i in range(10)]), 0)
-
-    def bucket_files():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("bucket="):
-                out[d] = sorted(os.listdir(os.path.join(path, d)))
-        return out
-
-    before = bucket_files()
-    assert len(before) > 1  # docs spread over multiple buckets
-    # batch 2: one existing doc gains an entity, one new doc appears
-    fn(_nested_df(spark, [("doc_3", [2, 3]), ("doc_new", [9])]), 1)
-    after = bucket_files()
-    back = {r["ann_doc_id"]: sorted(e["id"] for e in r["annotations"])
-            for r in spark.read.parquet(path).collect()}
-    assert back["doc_3"] == [1, 2, 3]  # merged, (doc, entity-id) deduped
-    assert back["doc_new"] == [9]
-    assert back["doc_0"] == [1, 2]
-    # only the buckets containing doc_3 / doc_new were rewritten
-    touched = {d for d in after if after[d] != before.get(d)}
-    assert 1 <= len(touched) <= 2, (touched, before.keys())
-    untouched = set(before) - touched
-    assert untouched and all(after[d] == before[d] for d in untouched)
-
-
-def test_w4_bucketed_upsert_idempotent(spark, tmp_path):
-    from annotations_ingester_spark.sinks.writers import upsert_nested_foreach_batch
-
-    path = str(tmp_path / "nested_sink_idem")
-    fn = upsert_nested_foreach_batch(path, num_buckets=4)
-    batch = _nested_df(spark, [("doc_a", [1]), ("doc_b", [2, 3])])
-    fn(batch, 0)
-    fn(batch, 1)  # B2: re-applying the same batch is a no-op
-    back = {r["ann_doc_id"]: sorted(e["id"] for e in r["annotations"])
-            for r in spark.read.parquet(path).collect()}
-    assert back == {"doc_a": [1], "doc_b": [2, 3]}
-
-
-def test_w4_upsert_new_wins_on_changed_payload(spark, tmp_path):
-    """An entity re-sent under the same id with a changed payload (annotator
-    or model update) must replace the stored record — not lose to an
-    arbitrary dedup winner."""
-    from annotations_ingester_spark.sinks.writers import upsert_nested_foreach_batch
-
-    path = str(tmp_path / "nested_sink_newwins")
-    fn = upsert_nested_foreach_batch(path, num_buckets=4)
-    fn(spark.createDataFrame(
-        [("doc_a", [(1, "C_old"), (2, "C2")])],
-        "ann_doc_id string, annotations array<struct<id:long,cui:string>>"), 0)
-    fn(spark.createDataFrame(
-        [("doc_a", [(1, "C_new")])],
-        "ann_doc_id string, annotations array<struct<id:long,cui:string>>"), 1)
-    [row] = spark.read.parquet(path).collect()
-    got = {e["id"]: e["cui"] for e in row["annotations"]}
-    assert got == {1: "C_new", 2: "C2"}
-
-
-def test_w4_upsert_legacy_unbucketed_sink_raises_migration_error(spark, tmp_path):
-    import pytest
-
-    from annotations_ingester_spark.sinks.writers import upsert_nested_foreach_batch
-
-    path = str(tmp_path / "legacy_sink")
-    _nested_df(spark, [("doc_a", [1])]).write.parquet(path)  # no bucket column
-    fn = upsert_nested_foreach_batch(path, num_buckets=4)
-    with pytest.raises(ValueError, match="legacy unbucketed layout"):
-        fn(_nested_df(spark, [("doc_b", [2])]), 0)
-
-
-def test_w4_upsert_read_failure_propagates(spark, tmp_path):
-    import pytest
-
-    from annotations_ingester_spark.sinks.writers import upsert_nested_foreach_batch
-
-    # a sink path that exists but holds a corrupt file must NOT be treated
-    # as 'first batch' (that would truncate the sink to the current batch)
-    path = tmp_path / "corrupt_sink"
-    path.mkdir()
-    (path / "part-00000.parquet").write_bytes(b"not parquet at all")
-    fn = upsert_nested_foreach_batch(str(path), num_buckets=4)
-    with pytest.raises(Exception):
-        fn(_nested_df(spark, [("doc_a", [1])]), 0)
+    assert spark.read.parquet(sink).count() == flat_annotations(
+        docs, fake, ann_fields=MEDCAT_FIELDS, dotted=False
+    ).count()
 
 
 def test_nested_mode_writer(docs_df, spark, tmp_path):
