@@ -67,13 +67,14 @@ class Scope:
 
         ``eager=False`` registers the checkpoint RDD (persist happens at
         the localCheckpoint call, so the id is tracked here) but defers
-        materialization to the caller's next FULL-pass action — the CC
-        loop fuses its convergence aggregate with the materialization
-        this way, one job per round instead of two. The caller owns the
-        obligation that its first action over the frame touches EVERY
-        partition (a global aggregate does; a limit/isEmpty probe does
-        not and leaves partitions uncached for later consumers to race
-        on — the measured r12 negative)."""
+        materialization to the caller's next action — the CC loop fuses
+        its convergence aggregate with the materialization this way, one
+        job per round instead of two. A first action that reads only some
+        partitions (a limit probe) is followed by one job of Spark's own
+        that computes the rest, so a later sequential reader finds every
+        block. What the caller must avoid is two legs of one job reading
+        the frame before it is materialized: they race to compute the
+        same partitions (the measured r12 negative)."""
         before = live_rdd_ids(self._spark)
         out = df.localCheckpoint(eager=eager)
         self._gens.append(live_rdd_ids(self._spark) - before)

@@ -1,20 +1,24 @@
 """Connected components over candidate-pair graphs — duplicate clustering.
 
 Dedup pipelines end with: candidate pairs (LSH) → connected components →
-one survivor per component. Spark has no native CC. The canonical edge set
-(larger→smaller, self-loops dropped, distinct) is checkpointed once, and
-one ``limit(LOCAL_MAX_EDGES + 1).collect()`` both probes its size and
-fetches it. Two regimes follow, one code path each:
+one survivor per component. Spark has no native CC. The oriented edges
+(larger→smaller, self-loops dropped, repeats kept) are pinned by a lazy
+checkpoint, and one ``limit(LOCAL_MAX_EDGES + 1).collect()`` both probes
+their count and fetches them, before any shuffle. Two regimes follow, one
+code path each:
 
-- **≤ LOCAL_MAX_EDGES edges** (every catalog query up to sf0.1): the
-  driver labels the nodes by union-find with min-id roots and returns the
-  labels as a local frame. The canonical checkpoint is released, since the
-  local frame does not read it. Per-round Spark jobs would pay the fixed
-  per-job cost for a graph of a few kilobytes.
-- **more edges**: the alternating **large-star / small-star** contraction
+- **≤ LOCAL_MAX_EDGES edge rows** (every catalog query up to sf0.1): the
+  driver labels the nodes by union-find with min-id roots (repeated edges
+  are no-op unions) and returns the labels as a local frame. The
+  checkpoint is released, since the local frame does not read it.
+  Per-round Spark jobs would pay the fixed per-job cost for a graph of a
+  few kilobytes.
+- **more edges**: the pinned edges are deduplicated into the canonical
+  edge set (checkpointed; the caller's pair generation is not re-run),
+  and the alternating **large-star / small-star** contraction
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14) runs distributed, seeded from the same checkpoint, so the
-  labels never leave the cluster:
+  SoCC'14) runs distributed from it, so the labels never leave the
+  cluster:
 
     large-star: every neighbor LARGER than a node re-links to the node's
                 minimum neighborhood member;
@@ -50,26 +54,23 @@ from pyspark.sql.types import StructField, StructType
 
 from annotations_ingester_spark.materialize import Scope
 
-# Largest canonical edge set whose components are finished on the driver.
-# Sized in driver Python memory, not rows: a collected Row of two ids is
-# ~400 B (the Row tuple, its per-row field list, two int objects), and the
-# union-find dict plus the label tuples add ~200 B per edge (≤ 2 new nodes
-# per edge) — ~600 B/edge at peak, measured with tracemalloc on random
-# 64-bit ids. 2^16 edges ≈ 40 MB, inside a ~64 MB budget; 2^17 would not
-# be. The pandas/Arrow hand-off of the labels is 2 × 8 B per node on top.
+# Most oriented edge rows (self-loops dropped, repeats counted) the probe
+# collects for the driver to finish. Sized in driver Python memory, not
+# rows: a collected Row of two ids is ~400 B (the Row tuple, its per-row
+# field list, two int objects), and the union-find dict plus the label
+# tuples add ~200 B per edge (≤ 2 new nodes per edge) — ~600 B/edge at
+# peak, measured with tracemalloc on random 64-bit ids. 2^16 edges ≈ 40 MB,
+# inside a ~64 MB budget; 2^17 would not be. The pandas/Arrow hand-off of
+# the labels is 2 × 8 B per node on top.
 LOCAL_MAX_EDGES = 1 << 16
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Directed larger→smaller edge set, self-loops dropped, distinct."""
-    return (
-        edges.select(
-            F.greatest(F.col("u"), F.col("v")).alias("u"),
-            F.least(F.col("u"), F.col("v")).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+def _oriented(edges: DataFrame) -> DataFrame:
+    """Directed larger→smaller edges, self-loops dropped, repeats kept."""
+    return edges.select(
+        F.greatest(F.col("u"), F.col("v")).alias("u"),
+        F.least(F.col("u"), F.col("v")).alias("v"),
+    ).filter(F.col("u") != F.col("v"))
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -147,15 +148,17 @@ def connected_components(
     # the final generation
     spark = edges.sparkSession
     scope = Scope(spark)
-    e = scope.checkpoint(_canonical(raw))
-    # one job both probes the size and fetches a small edge set
-    local = e.limit(LOCAL_MAX_EDGES + 1).collect()
+    # the lazy checkpoint pins what the probe computes, so the distributed
+    # branch's distinct reads the caller's pair generation from its blocks
+    oriented = scope.checkpoint(_oriented(raw), eager=False)
+    # one sequential probe both counts the edges and fetches a small set
+    local = oriented.limit(LOCAL_MAX_EDGES + 1).collect()
     if len(local) <= LOCAL_MAX_EDGES:
         labels = _union_find_labels(local)
         schema = StructType(
             [
-                StructField("node", e.schema["u"].dataType, False),
-                StructField("cluster_id", e.schema["v"].dataType, False),
+                StructField("node", oriented.schema["u"].dataType, False),
+                StructField("cluster_id", oriented.schema["v"].dataType, False),
             ]
         )
         # the local frame does not read the checkpoint: free it now
@@ -165,6 +168,7 @@ def connected_components(
         out = spark.createDataFrame(pd.DataFrame(labels, columns=schema.names), schema)
         return (out, 0) if return_rounds else out
     del local
+    e = scope.checkpoint(oriented.distinct())
     rounds = 0
     converged = False
     # termination: the algorithm converges exactly to star forests

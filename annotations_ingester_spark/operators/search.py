@@ -12,15 +12,19 @@ the parquet backend too:
 - ``tfidf_top_terms``: per-document top-N characteristic terms
   (tf · ln(N/df)) — the corpus-exploration twin.
 
-Scale shape: tokens explode once; the query-term ``isin`` filter prunes
-before any shuffle (at 100 TB the W2 split-by-term partitioned layout is
-the inverted index — the filter then prunes partitions); corpus stats
-(N, avgdl) are a broadcast 1-row aggregate; document frequencies are a
-broadcast dim for literal query sets. All arithmetic happens on exact
-integer counts JVM-side; one rounding point keeps ranks engine-portable.
+Scale shape (BM25): one narrow projection per document holds its length
+and one term count per query term (a ``filter`` over its token array, no
+explode), so tf needs no shuffle; corpus stats (N, avgdl) and the
+document frequencies are one 1-row global aggregate over that projection,
+broadcast back onto the documents that contain a query term. All
+arithmetic happens on exact integer counts JVM-side; one rounding point
+keeps ranks engine-portable.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,6 +41,12 @@ def _doc_terms(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _equals(term: str):
+    """``x -> x = term`` for ``F.filter``; a factory, since a lambda with a
+    default argument would be read as ``(x, index)``."""
+    return lambda x: x == F.lit(term)
+
+
 def bm25_rank(
     df: DataFrame,
     query_terms: list[str],
@@ -47,56 +57,44 @@ def bm25_rank(
     b: float = BM25_B,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 score for ``query_terms`` →
-    (doc_id, score, rank). Deterministic total order: rounded score desc,
-    id asc. The top-k itself is ``orderBy(...).limit(k)`` which Spark
+    (doc_id, score, rank). ``id_col`` must be a key of ``df``: each row is
+    scored as its own document. Repeated query terms count once; an empty
+    term list returns no rows. Deterministic total order: rounded score
+    desc, id asc. The top-k itself is ``orderBy(...).limit(k)`` which Spark
     compiles to ``TakeOrderedAndProject`` — a per-partition partial top-k
     plus a tiny k-row merge, so no partition ever holds more than k rows
     no matter how many documents match a term. ``rank`` is then derived by
     a window over only the ≤k surviving rows."""
-    base = _doc_terms(df, text_col, id_col)
-    dl = base.select(F.col(id_col), F.size("_tk").cast("double").alias("dl"))
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"), F.sum("dl").alias("sum_dl")
+    terms = list(dict.fromkeys(query_terms))
+    tfs = [F.col(f"_tf{i}") for i in range(len(terms))]
+    # one narrow row per doc: its length and one count per query term
+    counts = _doc_terms(df, text_col, id_col).select(
+        F.col(id_col),
+        F.size("_tk").cast("double").alias("dl"),
+        *(
+            F.size(F.filter("_tk", _equals(t))).cast("double").alias(f"_tf{i}")
+            for i, t in enumerate(terms)
+        ),
     )
-    # tf feeds dfreq AND the score join — without a materialization point
-    # the dfreq leg re-runs the full tokenize pass for a |terms|-row count
-    # (runtime plan before r13: 0 ReusedExchange, 4 corpus scans). The
-    # post-filter tf frame is <= docs x |query_terms| narrow rows, so a
-    # lazy localCheckpoint pins it for ~free (r13 variant ABBA: med 0.826
-    # vs 0.838 none; a dl checkpoint additionally measured strictly worse
-    # — 0.908 med — and stays out: its stats leg's re-tokenize is the
-    # honest remaining second pass).
-    tf = (
-        base.select(F.col(id_col), F.explode("_tk").alias("term"))
-        .filter(F.col("term").isin(query_terms))
-        .groupBy(id_col, "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    ).localCheckpoint(eager=False)
-    dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = (
-        tf.join(dl, id_col)
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
+    stats = counts.agg(
+        F.count("*").cast("double").alias("n_docs"),
+        F.sum("dl").alias("sum_dl"),
+        *(F.count_if(tf > 0).cast("double").alias(f"_df{i}") for i, tf in enumerate(tfs)),
     )
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     avgdl = F.col("sum_dl") / F.col("n_docs")
-    tfn = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl)
-    )
     # per-term contributions round to 9 dp and sum as DECIMAL(20,9) (the
-    # lm_perplexity float discipline): shuffled double accumulation order
-    # would otherwise make a last-ulp rounding tie flip top-k membership
-    # across runs/engines — the one raw-double sum this module had
+    # lm_perplexity float discipline): a double sum's rounding would make
+    # a last-ulp tie flip top-k membership across engines
+    total = F.lit(0).cast("decimal(20,9)")
+    for i, tf in enumerate(tfs):
+        df_i = F.col(f"_df{i}")
+        idf = F.log(F.lit(1.0) + (F.col("n_docs") - df_i + 0.5) / (df_i + 0.5))
+        tfn = (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * F.col("dl") / avgdl))
+        total = total + F.when(tf > 0, F.round(idf * tfn, 9).cast("decimal(20,9)")).otherwise(0)
     scored = (
-        j.groupBy(id_col)
-        .agg(
-            F.round(
-                F.sum(F.round(idf * tfn, 9).cast("decimal(20,9)")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("score")
-        )
+        counts.filter(reduce(operator.or_, (tf > 0 for tf in tfs), F.lit(False)))
+        .crossJoin(F.broadcast(stats))
+        .select(F.col(id_col), F.round(total.cast("double"), 6).alias("score"))
     )
     # Distributed partial top-k (TakeOrderedAndProject), NOT a global
     # window: a window with no partitionBy would move every matching doc
@@ -123,7 +121,7 @@ def tfidf_top_terms(
         .agg(F.count("*").cast("double").alias("tf"))
         # tf feeds dfreq AND the score join — lazy checkpoint so the
         # tokenize+explode pass runs once (same re-derivation class and
-        # measured mode as bm25_rank above / dsir in the r13 log)
+        # measured mode as dsir in the r13 log)
         .localCheckpoint(eager=False)
     )
     # every doc with >= 1 token owns >= 1 tf row, so N derives from the

@@ -572,11 +572,11 @@ _REG["graph_triangle_count"].oracle = f"""WITH {_lsh_edges_sql()},
        FROM cc GROUP BY entity_id""",
     doc="Entity resolution end-to-end: blocked levenshtein ≤ 1 match pairs "
     "→ connected components (union-find on the driver for ≤ 2^16 "
-    "canonical edges, else large-star/small-star, O(log n) checkpoint-"
-    "cycled rounds) → canonical entity id (min member) with member "
-    "stats. The composition a master-data pipeline runs: match, then "
-    "transitively close, then pick survivors. Oracle: recursive-CTE "
-    "closure over the same pair set.",
+    "oriented edge rows, probed before any shuffle; else large-star/"
+    "small-star, O(log n) checkpoint-cycled rounds) → canonical entity "
+    "id (min member) with member stats. The composition a master-data "
+    "pipeline runs: match, then transitively close, then pick survivors. "
+    "Oracle: recursive-CTE closure over the same pair set.",
 )
 def q_er_clusters(spark: SparkSession, sf: str):
     from annotations_ingester_spark.operators.cluster import connected_components

@@ -712,8 +712,8 @@ def q_multiprobe(spark: SparkSession, sf: str):
        SELECT u AS doc_id, least(u, min(v))::BIGINT AS cluster_id
        FROM reach GROUP BY u""",
     doc="Duplicate clustering: connected components over MinHash-LSH "
-    "candidate pairs — union-find on the driver when the canonical edge "
-    "set has ≤ 2^16 edges (one collect), else large-star/small-star "
+    "candidate pairs — union-find on the driver when the oriented edge "
+    "rows number ≤ 2^16 (one collect), else large-star/small-star "
     "contraction (two join+agg passes per round, O(log n) rounds). "
     "Cluster id = min member either way. Oracle: recursive-CTE "
     "transitive closure.",

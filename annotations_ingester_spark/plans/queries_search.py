@@ -50,8 +50,9 @@ _BM25_CTE = f"""base AS (
     f"""WITH {_BM25_CTE}
        SELECT doc_id, score, rank FROM ranked WHERE rank <= 20""",
     doc="BM25 top-20 for a literal term set (Lucene/ES scoring parity, "
-    "k1=1.2 b=0.75): tf/df/dl as distributed integer aggregates, corpus "
-    "stats broadcast, one rounding point before the bounded global rank.",
+    "k1=1.2 b=0.75): one per-doc projection of dl and a tf count per query "
+    "term, corpus stats and df as one broadcast 1-row aggregate over it, "
+    "one rounding point before the bounded global rank.",
 )
 def q_bm25(spark: SparkSession, sf: str):
     return bm25_rank(table(spark, sf, "documents"), QUERY_TERMS, k=20)

@@ -301,6 +301,13 @@ class _Handler(BaseHTTPRequestHandler):
         self._reply({"succeeded": True, "num_freed": freed})
 
 
+class _StubServer(ThreadingHTTPServer):
+    # one stage of a local[32] session opens up to 32 connections at once;
+    # socketserver's default listen backlog of 5 overflows the accept queue
+    # and the surplus connections are reset
+    request_queue_size = 128
+
+
 def start_es_stub(
     mode: str = "8", certfile: str | None = None, keyfile: str | None = None
 ) -> tuple[ThreadingHTTPServer, EsStubState, str]:
@@ -310,7 +317,7 @@ def start_es_stub(
     ``certfile`` (and its ``keyfile``) the stub speaks HTTPS."""
     state = EsStubState(mode=mode)
     handler = type("Handler", (_Handler,), {"state": state})
-    server = ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    server = _StubServer(("127.0.0.1", 0), handler)
     scheme = "http"
     if certfile:
         ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)

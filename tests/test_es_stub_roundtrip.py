@@ -627,12 +627,11 @@ def test_cli_rest_to_rest_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
     own rows (more than one bulk request) and the repeated rows land on
     the same ``_id``s. The sink ends with the single-copy run's ids."""
     import threading
-    from http.server import ThreadingHTTPServer
 
     import yaml
 
     from annotations_ingester_spark.__main__ import main
-    from tests.es_stub import EsStubState, _Handler
+    from tests.es_stub import EsStubState, _Handler, _StubServer
 
     posts: list[int] = []  # bulk items per request
 
@@ -643,7 +642,7 @@ def test_cli_rest_to_rest_absorbs_a_doc_the_source_holds_twice(spark, tmp_path):
             posts.append(sum(1 for ln in body.split(b"\n") if ln.strip()) // 2)
             super()._bulk(body)
 
-    server = ThreadingHTTPServer(("127.0.0.1", 0), BulkCounting)
+    server = _StubServer(("127.0.0.1", 0), BulkCounting)
     threading.Thread(target=server.serve_forever, daemon=True).start()
     url = f"http://127.0.0.1:{server.server_address[1]}"
     # text lengths % 4 != 0, so the fake annotator emits 1-3 entities each
@@ -690,14 +689,13 @@ def test_cli_segmented_rest_source_reads_each_segment_once(spark, tmp_path):
     date-only.)"""
     import threading
     from collections import Counter
-    from http.server import ThreadingHTTPServer
 
     import yaml
 
     from annotations_ingester_spark.__main__ import main
     from annotations_ingester_spark.operators.windows import date_windows
     from annotations_ingester_spark.sources.es_rest import MAX_SLICES_PER_SCROLL
-    from tests.es_stub import EsStubState, _Handler
+    from tests.es_stub import EsStubState, _Handler, _StubServer
 
     opens: list[tuple[str, dict]] = []  # (index, query) of each scroll open
 
@@ -709,7 +707,7 @@ def test_cli_segmented_rest_source_reads_each_segment_once(spark, tmp_path):
                 opens.append((index, body.get("query")))
             super()._search(index, body)
 
-    server = ThreadingHTTPServer(("127.0.0.1", 0), ScrollCounting)
+    server = _StubServer(("127.0.0.1", 0), ScrollCounting)
     threading.Thread(target=server.serve_forever, daemon=True).start()
     url = f"http://127.0.0.1:{server.server_address[1]}"
     # segment ends and starts (01-31, 02-01, 03-01, 03-31) and one doc

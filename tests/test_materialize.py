@@ -44,6 +44,34 @@ def test_scoped_query_frees_its_blocks_and_keeps_its_rows(spark, sf_dir, name):
     assert sorted(map(repr, scoped)) == sorted(map(repr, unscoped))
 
 
+@pytest.mark.parametrize(
+    "name, tables, max_jobs",
+    [("er_entity_clusters", ["customer"], 2), ("bm25_match_ranking", ["documents"], 0)],
+)
+def test_builder_starts_few_jobs_and_leaves_no_blocks(spark, sf_dir, name, tables, max_jobs):
+    """Building the query starts at most ``max_jobs`` Spark jobs: the
+    connected-components probe's pair-generation shuffle and its collect;
+    none for BM25, whose scores come from one projection. With no scope,
+    build + action pin no block."""
+    from annotations_ingester_spark.plans.catalog import table_schema
+
+    for t in tables:  # a table's first read infers its schema in a job
+        table_schema(spark, sf_dir, t)
+    sc = spark.sparkContext
+    group = f"build.{name}"
+    before = live_rdd_ids(spark)
+    sc.setJobGroup(group, group)
+    try:
+        df = REGISTRY[name].spark(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    df.write.format("noop").mode("overwrite").save()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+    assert not live_rdd_ids(spark) - before
+
+
 def test_checkpoint_from_before_an_inner_scope_survives_it(spark):
     before = live_rdd_ids(spark)
     with Scope(spark):

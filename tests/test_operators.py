@@ -361,22 +361,52 @@ def test_connected_components_local_matches_union_find(spark):
 
 
 def test_connected_components_local_threshold_is_inclusive(spark, monkeypatch):
-    """Exactly LOCAL_MAX_EDGES canonical edges run on the driver; one more
-    runs the distributed loop. Both agree with the oracle."""
+    """The threshold counts the oriented edge rows the probe collects (what
+    the ~600 B/edge driver budget measures), repeats included: exactly
+    LOCAL_MAX_EDGES rows run on the driver; one more, even a repeated
+    edge, runs the distributed loop. Both agree with the oracle."""
     from annotations_ingester_spark.operators import cluster
 
     monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 8)
-    for n_edges, local in ((8, True), (9, False)):
-        rows = [(i, i + 1) for i in range(n_edges)]
+    chain = [(i, i + 1) for i in range(9)]
+    for rows, local in ((chain[:8], True), (chain, False), (chain[:8] + [(1, 0)], False)):
         edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
         labels, rounds = cluster.connected_components(edges, return_rounds=True)
         got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
         assert got == _union_find_components(rows)
-        assert (rounds == 0) == local, (n_edges, rounds)
+        assert (rounds == 0) == local, (rows, rounds)
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_connected_components_reads_each_edge_row_once(spark, monkeypatch, local):
+    """Each input edge row is evaluated once on either branch (an
+    accumulator inside the edge plan counts them): the probe pins the
+    oriented edges, and the distributed branch's dedup reads those blocks
+    instead of re-running the caller's pair generation. Repeated edges,
+    in either orientation, and self-loops give the union-find labels."""
+    from annotations_ingester_spark.operators import cluster
+
+    if not local:
+        monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 4)
+    rows = [(i, i + 1) for i in range(0, 40, 2)] + [(3, 2), (2, 3), (5, 5), (41, 41), (1, 7)] * 2
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            evaluated.add(len(pdf))
+            yield pdf
+
+    schema = "doc_a long, doc_b long"
+    edges = spark.createDataFrame(rows, schema).mapInPandas(count_rows, schema)
+    labels, rounds = cluster.connected_components(edges, return_rounds=True)
+    got = {(r["node"], r["cluster_id"]) for r in labels.collect()}
+    assert got == _union_find_components([(u, v) for u, v in rows if u != v])
+    assert (rounds == 0) == local, rounds
+    assert evaluated.value == len(rows)
 
 
 def test_connected_components_local_leaves_no_persistent_rdd(spark):
-    """The driver branch releases the canonical checkpoint itself: with no
+    """The driver branch releases the edge checkpoint itself: with no
     enclosing scope, no persistent RDD outlives the call."""
     from annotations_ingester_spark.materialize import live_rdd_ids
     from annotations_ingester_spark.operators.cluster import connected_components
@@ -418,6 +448,65 @@ def test_cc_queries_same_rows_on_both_regimes(spark, sf_dir, monkeypatch, name):
     _distributed_only(monkeypatch)
     monkeypatch.setattr(cluster, "_union_find_labels", _unreachable)
     assert local and rows() == local
+
+
+def _bm25_oracle(docs, query_terms, k, k1=1.2, b=0.75):
+    """Brute-force BM25 top-k: [(doc_id, score, rank)], each term's
+    contribution rounded to 9 dp and summed exactly, score to 6 dp."""
+    import math
+    import re
+    from decimal import Decimal
+
+    from annotations_ingester_spark.functions.text import TOKEN_SPLIT_RE
+
+    toks = {d: [t for t in re.split(TOKEN_SPLIT_RE, (text or "").lower()) if t]
+            for d, text in docs}
+    toks = {d: t for d, t in toks.items() if t}
+    n = float(len(toks))
+    avgdl = sum(len(t) for t in toks.values()) / n
+    scores = {}
+    for d, t in toks.items():
+        parts = []
+        for term in set(query_terms):
+            tf = float(t.count(term))
+            if tf:
+                df = sum(term in other for other in toks.values())
+                idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+                tfn = tf * (k1 + 1) / (tf + k1 * ((1 - b) + b * len(t) / avgdl))
+                parts.append(Decimal(repr(round(idf * tfn, 9))))
+        if parts:
+            scores[d] = round(float(sum(parts)), 6)
+    top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    return [(d, s, r) for r, (d, s) in enumerate(top, start=1)]
+
+
+def test_bm25_rank_matches_brute_force_oracle(spark):
+    """bm25_rank against a brute-force Python BM25: an absent and a
+    repeated query term, a doc without any query term, empty-token docs,
+    and a score tie (docs 5 and 7) broken by doc_id."""
+    from annotations_ingester_spark.operators.search import bm25_rank
+
+    docs = [
+        (1, "Spark join: spark!"),
+        (2, "window spark data pipeline with a long tail of other words"),
+        (3, "nothing relevant here at all"),
+        (4, ""),
+        (6, "join the window, then JOIN the Window again"),
+        (7, "spark window join"),
+        (8, "--- !!!"),
+        (9, None),
+        (5, "join window spark"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    terms = ["spark", "join", "absent", "spark", "window"]
+    want = _bm25_oracle(docs, terms, k=10)
+    assert [d for d, _, _ in want] == [5, 7, 1, 6, 2]
+    assert want[0][1] == want[1][1]
+    for k in (10, 1):  # k = 1 keeps 5, not its tied twin 7
+        got = bm25_rank(df, terms, k=k)
+        assert [tuple(r) for r in got.collect()] == want[:k], k
+    none = bm25_rank(df, [], k=10)
+    assert none.collect() == [] and none.schema == got.schema
 
 
 def test_hash_split_stable_under_corpus_growth(spark):
@@ -524,7 +613,7 @@ def test_iterative_loops_bound_checkpoint_storage(spark, monkeypatch):
     assert rounds >= 3  # the loop really iterated (several checkpoints made)
     after = len(live_rdd_ids(spark))
     # only the final generation may remain live (+1 slack for the initial
-    # canonical checkpoint of a concurrent session user)
+    # edge checkpoint of a concurrent session user)
     assert after - before <= 2, f"checkpoint generations leaked: {after - before}"
 
 

@@ -785,9 +785,10 @@ SCAN_MULTIPLICITY_ALLOW = {
     "ann_multiprobe_topk": 3,
     "ann_ivf_topk": 5,             # coarse quantizer + assignment + probes
     "table_profile": 4,            # one branch per profiled statistic class
-    "bm25_match_ranking": 4,       # postings + df stats + doclen + corpus avg
+    # bm25_match_ranking / hybrid_rrf_retrieval: one per-doc term-count
+    # projection feeds both the scored rows and the 1-row stats aggregate
+    # — two documents scans, under the default cap (4 was declared)
     "tfidf_top_terms": 3,
-    "hybrid_rrf_retrieval": 4,     # composes bm25's branches
     "q21_waiting_suppliers": 3,    # TPC-H exists + not-exists l2/l3 branches
     "kmeans_lloyd_step": 5,        # assign pair/rejoin branches + mean explode
     # kmeans_two_round_assign: round-1 centroids localCheckpoint'ed (r6)
