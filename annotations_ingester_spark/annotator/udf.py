@@ -29,10 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from annotations_ingester_spark.annotator.service import Annotator
-from annotations_ingester_spark.pyfiles import (
-    ensure_worker_imports,
-    trim_worker_import_cache,
-)
+from annotations_ingester_spark.pyfiles import map_in_pandas
 from annotations_ingester_spark.types import annotated_schema
 
 
@@ -55,12 +52,10 @@ def annotate(
     parquet corpus reads as ONE partition → one core). The shuffle is
     trivially cheap next to per-row Python/HTTP work.
     """
-    ensure_worker_imports(df.sparkSession)
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     out_schema = annotated_schema(df.schema, mode=mode)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        trim_worker_import_cache()
         client = annotator_factory()
         for pdf in batches:
             if len(pdf) == 0:
@@ -73,4 +68,4 @@ def annotate(
             out["entities"] = pd.Series(ents, index=pdf.index, dtype=object)
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, out_schema)

@@ -106,10 +106,10 @@ def normalize_sql(expr: str) -> str:
 
 
 def bpe_encode_sql(expr: str) -> str:
-    enc = f"regexp_replace({normalize_sql(expr)}, '(.)', chr(31) || '\\1' || chr(31), 'g')"
+    enc = f"regexp_replace({normalize_sql(expr)}, '(.)', {SEP_SQL} || '\\1' || {SEP_SQL}, 'g')"
     for a, b in BPE_MERGES:
-        pat = f"chr(31) || '{a}' || chr(31) || chr(31) || '{b}' || chr(31)"
-        rep = f"chr(31) || '{a}{b}' || chr(31)"
+        pat = f"{SEP_SQL} || '{a}' || {SEP_SQL} || {SEP_SQL} || '{b}' || {SEP_SQL}"
+        rep = f"{SEP_SQL} || '{a}{b}' || {SEP_SQL}"
         enc = f"replace({enc}, {pat}, {rep})"
     return enc
 
@@ -118,7 +118,7 @@ def bpe_token_count_sql(expr: str) -> str:
     norm = normalize_sql(expr)
     enc = bpe_encode_sql(expr)
     return (
-        f"(((length({enc}) - length(replace({enc}, chr(31), ''))) // 2)"
+        f"(((length({enc}) - length(replace({enc}, {SEP_SQL}, ''))) // 2)"
         f" - (length({norm}) - length(replace({norm}, ' ', ''))))::BIGINT"
     )
 
@@ -130,6 +130,6 @@ def bpe_tokens_sql(expr: str) -> str:
         f" THEN substr({enc}, 2, length({enc}) - 2) ELSE '' END"
     )
     return (
-        f"list_filter(string_split({stripped}, chr(31) || chr(31)),"
+        f"list_filter(string_split({stripped}, {SEP_SQL} || {SEP_SQL}),"
         f" t -> t <> '' AND t <> ' ')"
     )

@@ -12,7 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
-PUNCT_RE = r"[^\w\s]"
 
 # Tiny built-in stopword lexicons for the language-ID heuristic: a few
 # high-frequency function words per language. Deterministic and portable.

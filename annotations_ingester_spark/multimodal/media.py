@@ -20,17 +20,21 @@ PIL/ffmpeg/librosa behind the same ``decode_fn(payload, kind)`` contract;
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 import io
 import struct
 import wave
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from annotations_ingester_spark.pyfiles import map_in_pandas
 
 MEDIA_META = T.StructType(
     [
@@ -59,10 +63,6 @@ FEATURE_FIELDS = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def media_table_schema(extra: list[T.StructField] | None = None) -> T.StructType:
-    return T.StructType(list(MEDIA_SCHEMA.fields) + list(extra or []))
 
 
 def fake_decode(payload: bytes, kind: str) -> dict[str, Any]:
@@ -139,8 +139,6 @@ def pil_available() -> bool:
     """True when Pillow is importable — gates the content-level decode
     path for non-PNG formats (JPEG); PNG pixel decode is vendored below
     and needs nothing beyond the stdlib."""
-    import importlib.util
-
     return importlib.util.find_spec("PIL") is not None
 
 
@@ -338,8 +336,6 @@ def gray8_png(pattern: int) -> bytes:
     which is what lets an oracle PREDICT the phash of a synthesized
     image arithmetically and certify the whole decode→phash→band
     pipeline end to end."""
-    import zlib
-
     u = pattern & 0xFFFFFFFFFFFFFFFF
     raw = b"".join(
         b"\x00" + bytes(255 if (u >> (y * 8 + x)) & 1 else 0 for x in range(8))
@@ -363,6 +359,67 @@ def gray8_png(pattern: int) -> bytes:
     )
 
 
+def _pandas_dtype(field: T.StructField) -> str:
+    """The pandas dtype that carries ``field`` to Arrow unchanged. A
+    nullable BIGINT stays a masked ``Int64``: a ``None`` in a plain column
+    would turn it into float64 and corrupt 64-bit hashes above 2^53."""
+    if isinstance(field.dataType, T.LongType):
+        return "Int64" if field.nullable else "int64"
+    if isinstance(field.dataType, T.IntegerType):
+        return "Int32"
+    return "object"
+
+
+def _per_blob(
+    df: DataFrame,
+    cols: list[str],
+    row_fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """The Arrow-batched stage behind every operator here: select ``cols``,
+    call ``row_fn(*values)`` once per input row, and collect the tuples it
+    yields (zero or more, in ``schema``'s field order) into columns typed
+    from ``schema``. Blobs never leave their partition, and Arrow batch
+    size (``spark.sql.execution.arrow.maxRecordsPerBatch``) bounds memory."""
+    names = schema.fieldNames()
+    dtypes = [_pandas_dtype(f) for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for args in pdf.itertuples(index=False, name=None)
+                for out in row_fn(*args)
+            ]
+            columns = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=d) for n, c, d in zip(names, columns, dtypes)}
+            )
+
+    slim = df.select(*[F.col(c).alias(f"_{i}") for i, c in enumerate(cols)])
+    return map_in_pandas(slim, run, schema)
+
+
+def _blob(payload: bytes | None) -> bytes:
+    return b"" if payload is None else bytes(payload)
+
+
+SYNTH_FIELDS = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+        T.StructField("kind", T.StringType(), False),
+    ]
+)
+
+
+def _synthesized(df: DataFrame, cols: list[str], row_fn) -> DataFrame:
+    """Payload rows ``(media_id, payload, meta)`` from a ``row_fn`` that
+    yields ``(media_id, payload, kind)``."""
+    out = _per_blob(df, cols, row_fn, SYNTH_FIELDS)
+    return out.select("media_id", "payload", F.struct("kind").alias("meta"))
+
+
 def synth_pattern_images(
     df: DataFrame, id_col: str = "media_id", pattern_col: str = "pattern"
 ) -> DataFrame:
@@ -371,36 +428,10 @@ def synth_pattern_images(
     for a crawler's image fetch — payload bytes are produced inside the
     row's own partition (no shuffle, no driver loop), so the downstream
     decode path is exercised on genuine PNG bytes at any scale."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_id"].to_numpy(),
-                    "payload": [gray8_png(int(p)) for p in pdf["_pattern"]],
-                    "kind": "image",
-                }
-            )
-
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"), F.col(pattern_col).alias("_pattern")
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-            T.StructField("kind", T.StringType(), False),
-        ]
-    )
-    return slim.mapInPandas(run, schema=out_schema).select(
-        "media_id",
-        "payload",
-        F.struct(F.col("kind")).alias("meta"),
+    return _synthesized(
+        df,
+        [id_col, pattern_col],
+        lambda mid, pattern: [(mid, gray8_png(int(pattern)), "image")],
     )
 
 
@@ -411,6 +442,25 @@ PIXEL_FIELDS = T.StructType(
         T.StructField("phash", T.LongType(), True),
     ]
 )
+
+
+def _decoded(
+    df: DataFrame,
+    decode_fn: Callable[[bytes, str], dict[str, Any]],
+    schema: T.StructType,
+    cols: list[str],
+) -> DataFrame:
+    """One row of ``schema`` per blob: its ``media_id`` and ``n_bytes``,
+    and the other fields read by name from ``decode_fn(payload, kind)``
+    (absent keys are null)."""
+    names = schema.fieldNames()
+
+    def row(mid, payload, kind):
+        blob = _blob(payload)
+        d = {**decode_fn(blob, kind), "media_id": mid, "n_bytes": len(blob)}
+        yield tuple(d.get(n) for n in names)
+
+    return _per_blob(df, cols, row, schema)
 
 
 def decode_content(
@@ -426,41 +476,7 @@ def decode_content(
     stdlib path); non-PNG rows need Pillow on driver and executors and
     degrade to the header/digest row without it — gate on
     :func:`pil_available` when JPEG content is required."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [b"" if p is None else bytes(p) for p in pdf["_payload"]]
-            decoded = [decode_pixels(p, k) for p, k in zip(payloads, pdf["_kind"])]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_id"].to_numpy(),
-                    "format": [d.get("format") for d in decoded],
-                    "width": pd.array([d.get("width") for d in decoded], dtype="Int32"),
-                    "height": pd.array([d.get("height") for d in decoded], dtype="Int32"),
-                    "duration_ms": pd.array(
-                        [d.get("duration_ms") for d in decoded], dtype="Int64"
-                    ),
-                    "sample_rate": pd.array(
-                        [d.get("sample_rate") for d in decoded], dtype="Int32"
-                    ),
-                    "n_bytes": pd.Series([len(p) for p in payloads], dtype="int64"),
-                    "digest": [d.get("digest") for d in decoded],
-                    "mode": [d.get("mode") for d in decoded],
-                    "phash": pd.array([d.get("phash") for d in decoded], dtype="Int64"),
-                }
-            )
-
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(payload_col).alias("_payload"),
-        F.col(kind_col).alias("_kind"),
-    )
-    return slim.mapInPandas(run, schema=PIXEL_FIELDS)
+    return _decoded(df, decode_pixels, PIXEL_FIELDS, [id_col, payload_col, kind_col])
 
 
 def decode_metadata(
@@ -474,39 +490,7 @@ def decode_metadata(
     (format/width/height/duration_ms/sample_rate) + n_bytes/digest.
     The write-side twin of filtering on ``meta``: run once at ingest, store
     the struct, and every later filter prunes without touching payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [b"" if p is None else bytes(p) for p in pdf["_payload"]]
-            decoded = [decode_fn(p, k) for p, k in zip(payloads, pdf["_kind"])]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_id"].to_numpy(),
-                    "format": [d.get("format") for d in decoded],
-                    "width": pd.array([d.get("width") for d in decoded], dtype="Int32"),
-                    "height": pd.array([d.get("height") for d in decoded], dtype="Int32"),
-                    "duration_ms": pd.array(
-                        [d.get("duration_ms") for d in decoded], dtype="Int64"
-                    ),
-                    "sample_rate": pd.array(
-                        [d.get("sample_rate") for d in decoded], dtype="Int32"
-                    ),
-                    "n_bytes": pd.Series([len(p) for p in payloads], dtype="int64"),
-                    "digest": [d.get("digest") for d in decoded],
-                }
-            )
-
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(payload_col).alias("_payload"),
-        F.col(kind_col).alias("_kind"),
-    )
-    return slim.mapInPandas(run, schema=DECODED_FIELDS)
+    return _decoded(df, decode_fn, DECODED_FIELDS, [id_col, payload_col, kind_col])
 
 
 FRAME_FIELDS = T.StructType(
@@ -547,44 +531,15 @@ def sample_frames(
     if frame_len <= 0 or stride <= 0:
         raise ValueError("frame_len and stride must be positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            offs: list[int] = []
-            totals: list[int] = []
-            digests: list[str] = []
-            for mid, p in zip(pdf["_id"], pdf["_payload"]):
-                blob = b"" if p is None else bytes(p)
-                n_frames = len(blob) // frame_len
-                for fi in range(0, n_frames, stride):
-                    off = fi * frame_len
-                    ids.append(int(mid))
-                    idxs.append(fi)
-                    offs.append(off)
-                    totals.append(n_frames)
-                    digests.append(
-                        hashlib.md5(blob[off : off + frame_len]).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "byte_offset": pd.Series(offs, dtype="int64"),
-                    "n_frames": pd.Series(totals, dtype="int64"),
-                    "frame_digest": pd.Series(digests, dtype="object"),
-                }
-            )
+    def row(mid, payload):
+        blob = _blob(payload)
+        n_frames = len(blob) // frame_len
+        for fi in range(0, n_frames, stride):
+            off = fi * frame_len
+            frame = blob[off : off + frame_len]
+            yield mid, fi, off, n_frames, hashlib.md5(frame).hexdigest()
 
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return slim.mapInPandas(run, schema=FRAME_FIELDS)
+    return _per_blob(df, [id_col, payload_col], row, FRAME_FIELDS)
 
 
 def extract_features(
@@ -597,33 +552,7 @@ def extract_features(
     """Per-partition Arrow-batched decode → (media_id, n_bytes, digest,
     feature). Filters on metadata should be applied by the caller *before*
     this stage — Catalyst can't push predicates through the UDF."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # vectorized bookkeeping; only the decode itself is per-blob
-            # (inherently per-row — each payload is one opaque object)
-            payloads = [b"" if p is None else bytes(p) for p in pdf["_payload"]]
-            decoded = [decode_fn(p, k) for p, k in zip(payloads, pdf["_kind"])]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_id"].to_numpy(),
-                    "n_bytes": pd.Series([len(p) for p in payloads], dtype="int64"),
-                    "digest": [d.get("digest") for d in decoded],
-                    "feature": [d.get("feature") for d in decoded],
-                }
-            )
-
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(payload_col).alias("_payload"),
-        F.col(kind_col).alias("_kind"),
-    )
-    return slim.mapInPandas(run, schema=FEATURE_FIELDS)
+    return _decoded(df, decode_fn, FEATURE_FIELDS, [id_col, payload_col, kind_col])
 
 
 def synth_pcm_wav(media_id: int, n_samples: int = 256, rate: int = 8000) -> bytes:
@@ -633,19 +562,36 @@ def synth_pcm_wav(media_id: int, n_samples: int = 256, rate: int = 8000) -> byte
     through a genuine RIFF/WAVE container (the ``wave`` module both
     writes and re-parses it, so the decode path is exercised on real
     bytes, not a stub)."""
+    return _pcm16_wav((_pseudo_signal(media_id, i) for i in range(n_samples)), rate)
+
+
+def _pseudo_signal(media_id: int, i: int) -> int:
+    return ((media_id * 31 + i * 17) % 4096) - 2048
+
+
+def _pcm16_wav(samples: Iterable[int], rate: int = 8000) -> bytes:
+    """A mono 16-bit PCM WAV holding ``samples``."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wf:
         wf.setnchannels(1)
         wf.setsampwidth(2)
         wf.setframerate(rate)
-        frames = b"".join(
-            struct.pack(
-                "<h", ((media_id * 31 + i * 17) % 4096) - 2048
-            )
-            for i in range(n_samples)
-        )
-        wf.writeframes(frames)
+        wf.writeframes(b"".join(struct.pack("<h", s) for s in samples))
     return buf.getvalue()
+
+
+def _pcm16_mono(payload: bytes | None) -> tuple[int, ...]:
+    """The samples of a mono 16-bit PCM WAV payload; none for a corrupt or
+    non-PCM one (the 100 TB degradation rule: one bad blob must not fail
+    a task)."""
+    try:
+        with wave.open(io.BytesIO(_blob(payload))) as wf:
+            if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
+                return ()
+            raw = wf.readframes(wf.getnframes())
+        return struct.unpack(f"<{len(raw) // 2}h", raw[: len(raw) // 2 * 2])
+    except (wave.Error, EOFError, struct.error):
+        return ()
 
 
 AUDIO_FRAME_FIELDS = T.StructType(
@@ -679,89 +625,23 @@ def audio_frame_energy(
     payloads contribute no rows (the 100 TB degradation rule: one bad
     blob must not fail a task)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            ns: list[int] = []
-            energies: list[int] = []
-            zcs: list[int] = []
-            for mid, p in zip(pdf["_id"], pdf["_payload"]):
-                blob = b"" if p is None else bytes(p)
-                try:
-                    with wave.open(io.BytesIO(blob)) as wf:
-                        if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
-                            continue
-                        raw = wf.readframes(wf.getnframes())
-                    raw = raw[: (len(raw) // 2) * 2]
-                    samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-                except (wave.Error, EOFError, struct.error):
-                    continue
-                n_frames = len(samples) // frame_samples
-                for fi in range(n_frames):
-                    seg = samples[fi * frame_samples : (fi + 1) * frame_samples]
-                    ids.append(int(mid))
-                    idxs.append(fi)
-                    ns.append(frame_samples)
-                    energies.append(sum(s * s for s in seg))
-                    zcs.append(
-                        sum(
-                            1
-                            for a, b in zip(seg, seg[1:])
-                            if (a >= 0) != (b >= 0)
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "energy": pd.Series(energies, dtype="int64"),
-                    "zero_crossings": pd.Series(zcs, dtype="int64"),
-                }
-            )
+    def row(mid, payload):
+        samples = _pcm16_mono(payload)
+        for fi in range(len(samples) // frame_samples):
+            seg = samples[fi * frame_samples : (fi + 1) * frame_samples]
+            energy = sum(s * s for s in seg)
+            crossings = sum((a >= 0) != (b >= 0) for a, b in zip(seg, seg[1:]))
+            yield mid, fi, frame_samples, energy, crossings
 
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return slim.mapInPandas(run, schema=AUDIO_FRAME_FIELDS)
+    return _per_blob(df, [id_col, payload_col], row, AUDIO_FRAME_FIELDS)
 
 
 def _synth_wav(df: DataFrame, synth_fn, id_col: str = "media_id") -> DataFrame:
-    """Shared mapInPandas WAV-synthesizer scaffolding: id → real PCM WAV
-    payload rows (``media_id, payload, meta``) with ``synth_fn(media_id)``
-    producing the RIFF bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_id"].to_numpy(),
-                    "payload": [synth_fn(int(i)) for i in pdf["_id"]],
-                    "kind": "audio",
-                }
-            )
-
-    from pyspark.sql import functions as F
-
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(F.col(id_col).alias("_id"))
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-            T.StructField("kind", T.StringType(), False),
-        ]
-    )
-    return slim.mapInPandas(run, schema=out_schema).select(
-        "media_id", "payload", F.struct(F.col("kind")).alias("meta")
+    """Shared WAV-synthesizer stage: id → real PCM WAV payload rows
+    (``media_id, payload, meta``) with ``synth_fn(media_id)`` producing
+    the RIFF bytes."""
+    return _synthesized(
+        df, [id_col], lambda mid: [(mid, synth_fn(int(mid)), "audio")]
     )
 
 
@@ -780,20 +660,12 @@ def synth_pcm_wav_gated(
     (3-frame silent blocks whose position varies by id), other samples
     follow the base pseudo-signal. Gives every synthetic clip predictable
     silence runs so a segment detector can be certified arithmetically."""
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        out = []
-        for i in range(n_samples):
-            f = i // frame_samples
-            if ((f // 3) + media_id) % 3 == 0:
-                out.append(0)
-            else:
-                out.append(((media_id * 31 + i * 17) % 4096) - 2048)
-        wf.writeframes(b"".join(struct.pack("<h", s) for s in out))
-    return buf.getvalue()
+    return _pcm16_wav(
+        0
+        if ((i // frame_samples // 3) + media_id) % 3 == 0
+        else _pseudo_signal(media_id, i)
+        for i in range(n_samples)
+    )
 
 
 def synth_wav_gated_images(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -802,8 +674,11 @@ def synth_wav_gated_images(df: DataFrame, id_col: str = "media_id") -> DataFrame
     return _synth_wav(df, synth_pcm_wav_gated, id_col)
 
 
-SIG_FIELDS = (
-    "media_id long, frame_idx long, n_frames long, sig long"
+SIG_FIELDS = T.StructType(
+    [
+        T.StructField(name, T.LongType(), True)
+        for name in ("media_id", "frame_idx", "n_frames", "sig")
+    ]
 )
 
 
@@ -828,44 +703,24 @@ def frame_signatures(
     if frame_len <= 0 or frame_len > 63:
         raise ValueError("frame_len must be in 1..63 (sig is a BIGINT bitmap)")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            totals: list[int] = []
-            sigs: list[int] = []
-            for mid, p in zip(pdf["_id"], pdf["_payload"]):
-                blob = b"" if p is None else bytes(p)
-                n_frames = len(blob) // frame_len
-                for fi in range(n_frames):
-                    fr = blob[fi * frame_len : (fi + 1) * frame_len]
-                    mean = sum(fr) // frame_len
-                    sig = 0
-                    for i, by in enumerate(fr):
-                        if by >= mean:
-                            sig |= 1 << i
-                    ids.append(int(mid))
-                    idxs.append(fi)
-                    totals.append(n_frames)
-                    sigs.append(sig)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "n_frames": pd.Series(totals, dtype="int64"),
-                    "sig": pd.Series(sigs, dtype="int64"),
-                }
-            )
+    def row(mid, payload):
+        blob = _blob(payload)
+        n_frames = len(blob) // frame_len
+        for fi in range(n_frames):
+            frame = blob[fi * frame_len : (fi + 1) * frame_len]
+            mean = sum(frame) // frame_len
+            sig = sum(1 << i for i, by in enumerate(frame) if by >= mean)
+            yield mid, fi, n_frames, sig
 
-    from pyspark.sql import functions as F
+    return _per_blob(df, [id_col, payload_col], row, SIG_FIELDS)
 
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
 
-    ensure_worker_imports(df.sparkSession)
-    slim = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return slim.mapInPandas(run, schema=SIG_FIELDS)
+CLIP_FIELDS = T.StructType(
+    [
+        T.StructField(name, T.LongType(), False)
+        for name in ("media_id", "n_samples", "peak_amplitude", "n_clipped")
+    ]
+)
 
 
 def audio_clipping_stats(
@@ -887,54 +742,21 @@ def audio_clipping_stats(
     non-PCM payloads contribute no rows (the 100 TB degradation rule:
     one bad blob must not fail a task)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            ns: list[int] = []
-            peaks: list[int] = []
-            clipped: list[int] = []
-            for mid, p in zip(pdf["_id"], pdf["_payload"]):
-                blob = b"" if p is None else bytes(p)
-                try:
-                    with wave.open(io.BytesIO(blob)) as wf:
-                        if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
-                            continue
-                        raw = wf.readframes(wf.getnframes())
-                    raw = raw[: (len(raw) // 2) * 2]
-                    samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-                except (wave.Error, EOFError, struct.error):
-                    continue
-                if not samples:
-                    continue
-                ids.append(int(mid))
-                ns.append(len(samples))
-                peaks.append(max(abs(s) for s in samples))
-                clipped.append(
-                    sum(1 for s in samples if abs(s) >= clip_threshold)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak_amplitude": pd.Series(peaks, dtype="int64"),
-                    "n_clipped": pd.Series(clipped, dtype="int64"),
-                }
-            )
+    def row(mid, payload):
+        if samples := _pcm16_mono(payload):
+            peak = max(abs(s) for s in samples)
+            clipped = sum(abs(s) >= clip_threshold for s in samples)
+            yield mid, len(samples), peak, clipped
 
-    from pyspark.sql import functions as F
+    return _per_blob(df, [id_col, payload_col], row, CLIP_FIELDS)
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("n_samples", T.LongType(), False),
-            T.StructField("peak_amplitude", T.LongType(), False),
-            T.StructField("n_clipped", T.LongType(), False),
-        ]
-    )
-    return src.mapInPandas(run, schema)
+
+HISTOGRAM_FIELDS = T.StructType(
+    [
+        T.StructField(name, T.LongType(), False)
+        for name in ("media_id", "n_pixels", "n_bright")
+    ]
+)
 
 
 def image_gray_histogram_stats(
@@ -953,41 +775,12 @@ def image_gray_histogram_stats(
     unsupported payloads contribute no rows (the 100 TB degradation
     rule)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            ns: list[int] = []
-            bright: list[int] = []
-            for mid, p in zip(pdf["_id"], pdf["_payload"]):
-                blob = b"" if p is None else bytes(p)
-                try:
-                    _w, _h, _mode, rows = png_decode_gray(blob)
-                except (ValueError, struct.error, zlib.error):
-                    continue
-                n = sum(len(r) for r in rows)
-                if n == 0:
-                    continue
-                ids.append(int(mid))
-                ns.append(n)
-                bright.append(sum(1 for r in rows for px in r if px >= 128))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "n_pixels": pd.Series(ns, dtype="int64"),
-                    "n_bright": pd.Series(bright, dtype="int64"),
-                }
-            )
+    def row(mid, payload):
+        try:
+            _w, _h, _mode, rows = png_decode_gray(_blob(payload))
+        except (ValueError, struct.error, zlib.error):
+            return
+        if n_pixels := sum(len(r) for r in rows):
+            yield mid, n_pixels, sum(px >= 128 for r in rows for px in r)
 
-    from pyspark.sql import functions as F
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("n_pixels", T.LongType(), False),
-            T.StructField("n_bright", T.LongType(), False),
-        ]
-    )
-    return src.mapInPandas(run, schema)
+    return _per_blob(df, [id_col, payload_col], row, HISTOGRAM_FIELDS)

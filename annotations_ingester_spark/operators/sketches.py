@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from annotations_ingester_spark.pyfiles import map_in_pandas
+
 MG_FIELDS = T.StructType(
     [
         T.StructField("item", T.LongType(), False),
@@ -104,11 +106,8 @@ def misra_gries_summaries(
 
     from pyspark.sql import functions as F
 
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
     slim = df.select(F.col(item_col).alias("_item"))
-    partial = slim.mapInPandas(run, schema=MG_FIELDS)
+    partial = map_in_pandas(slim, run, MG_FIELDS)
     return partial.groupBy("item").agg(
         F.sum("mg_count").cast("long").alias("mg_count")
     )

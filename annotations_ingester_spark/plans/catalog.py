@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from annotations_ingester_spark.streaming.pipeline import file_stream
+
 
 @dataclass
 class QuerySpec:
@@ -229,6 +231,16 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     adapting to either historical ``ts`` parquet encoding."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = table(spark, sf_dir, "events")
+    return df.withColumn("ts_s", events_ts_seconds(dict(df.dtypes)["ts"]))
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming twin of :func:`events_table`: a file-source stream
+    over the events parquet (read with the cached schema, which the same
+    ``nanosAsLong`` conf populates), with the same ``ts_s`` column."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = table_schema(spark, sf_dir, "events")
+    df = file_stream(spark, f"{sf_dir}/events.parquet", schema)
     return df.withColumn("ts_s", events_ts_seconds(dict(df.dtypes)["ts"]))
 
 

@@ -21,10 +21,10 @@ from annotations_ingester_spark.plans.catalog import (
     ckpt,
     daily_cents,
     daily_type_counts,
+    events_stream,
     events_table,
     register,
     table,
-    table_schema,
     utc_label,
 )
 
@@ -485,18 +485,7 @@ def q_key_skew(spark: SparkSession, sf: str):
     "session_window_events oracle.",
 )
 def q_streaming_sessions(spark: SparkSession, sf: str):
-    from annotations_ingester_spark.plans.catalog import events_ts_seconds
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    ev = stream.withColumn(
-        "ts_t", F.timestamp_seconds(events_ts_seconds(dict(stream.dtypes)["ts"]))
-    )
+    ev = events_stream(spark, sf).withColumn("ts_t", F.timestamp_seconds("ts_s"))
     agg = (
         ev.groupBy(F.session_window("ts_t", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))

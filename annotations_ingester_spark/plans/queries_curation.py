@@ -15,7 +15,7 @@ from annotations_ingester_spark.functions.vectors import (
     cosine_similarity_sql,
     sign_bucket_sql,
 )
-from annotations_ingester_spark.plans.catalog import ckpt, events_ts_seconds, register, table, table_schema
+from annotations_ingester_spark.plans.catalog import ckpt, events_stream, register, table
 
 _SPLIT_HASH = md5_hash64_sql("'split:' || doc_id::VARCHAR")
 _SAMPLE_HASH = md5_hash64_sql("'sample:' || doc_id::VARCHAR")
@@ -294,18 +294,10 @@ def q_weighted_downsample(spark: SparkSession, sf: str):
 def q_streaming_dedup(spark: SparkSession, sf: str):
     from annotations_ingester_spark.streaming.stateful import watermarked_dedup
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-
     def one_stream():
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
+        return events_stream(spark, sf).select(
+            "event_id", F.timestamp_seconds("ts_s").alias("ts_t")
         )
-        return raw.withColumn(
-            "ts_t", F.timestamp_seconds(events_ts_seconds(dict(raw.dtypes)["ts"]))
-        ).select("event_id", "ts_t")
 
     doubled = one_stream().unionByName(one_stream())
     deduped = watermarked_dedup(doubled, ["event_id"], "ts_t").select("event_id")
@@ -332,18 +324,9 @@ def q_streaming_dedup(spark: SparkSession, sf: str):
     "(test_running_user_totals_accumulates_across_batches).",
 )
 def q_streaming_totals(spark: SparkSession, sf: str):
-    from annotations_ingester_spark.pyfiles import ensure_worker_imports
     from annotations_ingester_spark.streaming.stateful import running_user_totals
 
-    ensure_worker_imports(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-        .select("user_id")
-    )
+    stream = events_stream(spark, sf).select("user_id")
     totals = running_user_totals(stream).select("user_id", "total_events")
     q = (
         totals.writeStream.outputMode("append")

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from annotations_ingester_spark.annotator.fake import DeterministicFakeAnnotator
 from annotations_ingester_spark.operators.asof import asof_join, bucketized_range_join
 from annotations_ingester_spark.plans.catalog import (
+    events_stream,
     events_table,
-    events_ts_seconds,
     register,
     table,
     table_schema,
@@ -395,16 +395,7 @@ def q_grouped_map(spark: SparkSession, sf: str):
     "window aggregation (same oracle as window_tumbling_events).",
 )
 def q_streaming_agg(spark: SparkSession, sf: str):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    ev = stream.withColumn(
-        "ts_t", F.timestamp_seconds(events_ts_seconds(dict(stream.dtypes)["ts"]))
-    )
+    ev = events_stream(spark, sf).withColumn("ts_t", F.timestamp_seconds("ts_s"))
     agg = (
         ev.groupBy(F.window("ts_t", "1 hour"), "event_type")
         .agg(
@@ -448,28 +439,14 @@ def q_streaming_agg(spark: SparkSession, sf: str):
     "self-join oracle exactly.",
 )
 def q_streaming_join(spark: SparkSession, sf: str):
-    # events schema lookups must populate the shared cache under the same
-    # conf events_table uses (nanosAsLong=true): the first caller in a
-    # process governs the cached ts dtype, and this builder must not make
-    # that order-dependent (r12 advice).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-
     def side(event_type: str, alias: str):
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
         return (
-            raw.withColumn(
-                "ts_t", F.timestamp_seconds(events_ts_seconds(dict(raw.dtypes)["ts"]))
-            )
+            events_stream(spark, sf)
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{alias}_id"),
                 F.col("user_id").alias(f"{alias}_user"),
-                F.col("ts_t").alias(f"{alias}_ts"),
+                F.timestamp_seconds("ts_s").alias(f"{alias}_ts"),
             )
             .withWatermark(f"{alias}_ts", "2 hours")
         )
@@ -530,15 +507,7 @@ def q_streaming_join(spark: SparkSession, sf: str):
     "sink, availableNow, exact group-sum oracle.",
 )
 def q_streaming_static_join(spark: SparkSession, sf: str):
-    # same cache-population conf as events_table — see q_streaming_join
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-        .select("user_id", "value")
-    )
+    stream = events_stream(spark, sf).select("user_id", "value")
     dim = F.broadcast(
         table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     )

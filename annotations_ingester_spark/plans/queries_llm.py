@@ -9,7 +9,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from annotations_ingester_spark.functions import text as tx
-from annotations_ingester_spark.plans.catalog import ckpt, events_table, register, table, table_schema, utc_label
+from annotations_ingester_spark.plans.catalog import ckpt, events_stream, events_table, register, table, utc_label
 
 TOKS = tx.tokens_sql("text")
 HASH = "('0x' || substr(md5({e}), 1, 15))::BIGINT"
@@ -400,18 +400,7 @@ def q_funnel_conversion(spark: SparkSession, sf: str):
     "the dashboard query over the continuously-maintained state).",
 )
 def q_streaming_funnel(spark: SparkSession, sf: str):
-    from annotations_ingester_spark.plans.catalog import events_ts_seconds
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = table_schema(spark, sf, "events")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    ev = raw.withColumn(
-        "ts_s", events_ts_seconds(dict(raw.dtypes)["ts"])
-    ).select("user_id", "event_type", "ts_s")
+    ev = events_stream(spark, sf).select("user_id", "event_type", "ts_s")
 
     def tmin(t: str):
         return F.min(F.when(F.col("event_type") == t, F.col("ts_s"))).alias(f"t_{t}")

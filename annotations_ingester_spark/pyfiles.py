@@ -1,5 +1,7 @@
-"""Self-distribution of the engine package to Spark Python workers, and the
-import-cache trim that keeps a reused worker's per-task set-up cheap.
+"""The engine's one ``mapInPandas`` kernel: it ships the package to Spark's
+Python workers and trims a reused worker's import cache before the first
+batch. Every ``mapInPandas`` in the package goes through
+:func:`map_in_pandas`.
 
 Factories/classes referenced inside mapInPandas closures are pickled *by
 reference* to this package, so executor Python workers must be able to
@@ -35,9 +37,13 @@ import sys
 import tempfile
 import zipfile
 import zipimport
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 
 from pyspark import TaskContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _SENT_APP_IDS: set[str] = set()
 
@@ -77,10 +83,11 @@ def trim_worker_import_cache() -> None:
     sub-package zipimporter from ``sys.path_importer_cache``, and drop
     archives that hold no Python module from the cache and ``sys.path``.
 
-    Call it first in every hot-path worker function. It runs on every call
-    — the loop costs microseconds and also prunes importers that the
-    task's own imports re-created — and does nothing on the driver or on
-    CPython ≥ 3.13. Delete it once ``requires-python`` is ≥ 3.13.
+    :func:`map_in_pandas` calls it first in every worker function, and
+    ``write_es_rest`` first in its ``foreachPartition`` one. It runs on
+    every call — the loop costs microseconds and also prunes importers
+    that the task's own imports re-created — and does nothing on the
+    driver or on CPython ≥ 3.13. Delete it once ``requires-python`` is ≥ 3.13.
     """
     if sys.version_info >= (3, 13) or TaskContext.get() is None:
         return
@@ -94,3 +101,21 @@ def trim_worker_import_cache() -> None:
             del cache[path]
             while path in sys.path:
                 sys.path.remove(path)
+
+
+def map_in_pandas(
+    df: DataFrame,
+    fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
+    schema: T.StructType,
+) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` with the worker set-up done once, here:
+    the package is shipped to the workers (once per application), and each
+    worker trims its import cache before ``fn`` sees the first batch."""
+    ensure_worker_imports(df.sparkSession)
+
+    @functools.wraps(fn)  # plans name the worker function, not the wrapper
+    def trimmed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_worker_import_cache()
+        yield from fn(batches)
+
+    return df.mapInPandas(trimmed, schema=schema)

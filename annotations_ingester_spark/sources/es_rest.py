@@ -49,6 +49,7 @@ from annotations_ingester_spark.functions.names import format_index_name
 from annotations_ingester_spark.operators.antijoin import sink_doc_ids
 from annotations_ingester_spark.pyfiles import (
     ensure_worker_imports,
+    map_in_pandas,
     trim_worker_import_cache,
 )
 from annotations_ingester_spark.sources.elasticsearch import (  # noqa: F401
@@ -392,7 +393,6 @@ def read_es_rest(
     schema asks for them (S4 metadata parity)."""
     import pandas as pd
 
-    ensure_worker_imports(spark)
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     client = EsRestClient(conf)
@@ -403,7 +403,6 @@ def read_es_rest(
     n = max(1, slices)
 
     def fetch(batches):
-        trim_worker_import_cache()
         for pdf in batches:
             for sid in pdf["slice_id"]:
                 for docs in client.scroll_pages(int(sid), n, query, source=source):
@@ -412,7 +411,7 @@ def read_es_rest(
                     )
 
     slice_df = spark.range(0, n, 1, n).toDF("slice_id")
-    return slice_df.mapInPandas(fetch, schema=schema)
+    return map_in_pandas(slice_df, fetch, schema)
 
 
 def check(conf: ConnectorConfig) -> None:

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from annotations_ingester_spark.pyfiles import ensure_worker_imports
+
 RUNNING_TOTALS_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -57,7 +59,10 @@ def _accumulate(
 
 
 def running_user_totals(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-key running event counts across micro-batches."""
+    """Per-key running event counts across micro-batches. The workers
+    unpickle ``_accumulate`` by reference, so the package is shipped to
+    them first."""
+    ensure_worker_imports(events.sparkSession)
     return events.groupBy(key_col).applyInPandasWithState(
         _accumulate,
         outputStructType=RUNNING_TOTALS_SCHEMA,

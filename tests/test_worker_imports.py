@@ -1,5 +1,5 @@
 """``trim_worker_import_cache``: what it leaves on the driver and in a Python
-worker, and that the ingest path's worker functions call it first.
+worker, and that every worker function the package runs calls it first.
 
 Structure, not timings: the per-task cost it removes is measured by
 ``perfbench`` (``es_rest.scroll_s``, ``annotator.stage_s``,
@@ -8,10 +8,13 @@ Structure, not timings: the per-task cost it removes is measured by
 from __future__ import annotations
 
 import ast
+import os
+import subprocess
 import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 from annotations_ingester_spark.pyfiles import (
     ensure_worker_imports,
@@ -102,22 +105,106 @@ def test_worker_task_keeps_only_archive_roots_and_still_imports(spark):
         assert ".zip/annotations_ingester_spark/" in r.engine_mod, r
 
 
-def _first_statement_calls(path: Path, fn_name: str) -> str:
-    tree = ast.parse(path.read_text())
-    fns = [
-        n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == fn_name
-    ]
-    assert len(fns) == 1, f"{path.name}: expected one {fn_name}()"
-    first = fns[0].body[0]
+def _first_statement_calls(fn: ast.FunctionDef) -> str:
+    first = fn.body[0]
     assert isinstance(first, ast.Expr) and isinstance(first.value, ast.Call)
     return ast.unparse(first.value.func)
 
 
-def test_ingest_worker_functions_trim_first():
-    for module, fn_name in (
-        ("sources/es_rest.py", "fetch"),
-        ("annotator/udf.py", "run"),
-        ("sources/es_rest.py", "write_partition"),
-    ):
-        called = _first_statement_calls(PKG / module, fn_name)
-        assert called == "trim_worker_import_cache", f"{module}:{fn_name}"
+def _functions(tree: ast.AST, name: str) -> list[ast.FunctionDef]:
+    return [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == name]
+
+
+def test_worker_setup_lives_in_the_kernel():
+    """Every ``mapInPandas`` in the package goes through
+    ``pyfiles.map_in_pandas``, whose worker wrapper trims the import cache
+    before the first batch; the one other worker entry point,
+    ``write_es_rest``'s ``foreachPartition`` function, trims first too."""
+    map_sites, trim_sites = set(), set()
+    for path in PKG.rglob("*.py"):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            called = ast.unparse(node.func)
+            if called.endswith(".mapInPandas"):
+                map_sites.add(rel)
+            if called.split(".")[-1] == "trim_worker_import_cache":
+                trim_sites.add(rel)
+    assert map_sites == {"pyfiles.py"}, map_sites
+    assert trim_sites == {"pyfiles.py", "sources/es_rest.py"}, trim_sites
+
+    kernel = _functions(ast.parse((PKG / "pyfiles.py").read_text()), "map_in_pandas")
+    assert len(kernel) == 1
+    wrappers = [n for n in kernel[0].body if isinstance(n, ast.FunctionDef)]
+    assert len(wrappers) == 1
+    assert _first_statement_calls(wrappers[0]) == "trim_worker_import_cache"
+
+    writer = _functions(ast.parse((PKG / "sources/es_rest.py").read_text()), "write_partition")
+    assert len(writer) == 1
+    assert _first_statement_calls(writer[0]) == "trim_worker_import_cache"
+
+
+_AUDIO_SAMPLES = [((31 + i * 17) % 4096) - 2048 for i in range(256)]
+
+FRESH_WORKER_CASES = {
+    "image_gray_histogram_stats": (
+        "from annotations_ingester_spark.multimodal.media import (\n"
+        "    gray8_png, image_gray_histogram_stats)\n"
+        "df = spark.createDataFrame([(1, bytearray(gray8_png(0xFF)))],\n"
+        "                           'media_id long, payload binary')\n"
+        "out = image_gray_histogram_stats(df)\n",
+        [(1, 64, 8)],
+    ),
+    "audio_clipping_stats": (
+        "from annotations_ingester_spark.multimodal.media import (\n"
+        "    audio_clipping_stats, synth_pcm_wav)\n"
+        "df = spark.createDataFrame([(1, bytearray(synth_pcm_wav(1)))],\n"
+        "                           'media_id long, payload binary')\n"
+        "out = audio_clipping_stats(df)\n",
+        [
+            (
+                1,
+                len(_AUDIO_SAMPLES),
+                max(abs(s) for s in _AUDIO_SAMPLES),
+                sum(abs(s) >= 2000 for s in _AUDIO_SAMPLES),
+            )
+        ],
+    ),
+    "running_user_totals": (
+        "from annotations_ingester_spark.streaming.pipeline import (\n"
+        "    file_stream, run_stream_to_memory)\n"
+        "from annotations_ingester_spark.streaming.stateful import running_user_totals\n"
+        "df = spark.createDataFrame([(1,), (1,), (2,)], 'user_id long')\n"
+        "df.write.parquet('events')\n"
+        "totals = running_user_totals(file_stream(spark, 'events', df.schema))\n"
+        "out = run_stream_to_memory(totals, 'fresh_totals')\n",
+        [(1, 2, 2), (2, 1, 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FRESH_WORKER_CASES))
+def test_operators_ship_the_package_to_fresh_workers(case, tmp_path):
+    """A library caller runs the operator from a fresh interpreter, where
+    the package is neither installed nor in the workers' working
+    directory: the operator ships the package itself, so the workers can
+    unpickle the package functions its worker function calls."""
+    code, expected = FRESH_WORKER_CASES[case]
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(PKG.parent)!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        f"{code}"
+        "print(sorted(tuple(r) for r in out.collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.splitlines()[-1] == str(expected)
