@@ -38,12 +38,16 @@ import tempfile
 import zipfile
 import zipimport
 from collections.abc import Callable, Iterator
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    # annotations only: ``write_es_rest``'s row-based workers import this
+    # module too, and would otherwise load pandas for nothing
+    import pandas as pd
 
 _SENT_APP_IDS: set[str] = set()
 
