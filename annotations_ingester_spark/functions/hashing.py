@@ -6,8 +6,7 @@ that any ANSI-SQL engine can recompute so results are oracle-checkable:
 the first 15 hex chars of md5 (60 bits, always fits a signed int64).
 
 Cost note for 100 TB: md5 is a JVM-side codegen'd expression — no Python
-boundary. A production deployment can swap in ``F.xxhash64`` via
-``fast=True`` everywhere the result doesn't need cross-engine parity.
+boundary.
 """
 
 from __future__ import annotations
@@ -18,18 +17,16 @@ from pyspark.sql import functions as F
 HASH_HEX_CHARS = 15  # 60 bits < 2^63
 
 
-def md5_hash64(col: Column | str, fast: bool = False) -> Column:
+def md5_hash64(col: Column | str) -> Column:
     """Portable 60-bit hash of a string column.
 
     DuckDB equivalent: ``('0x' || substr(md5(x), 1, 15))::BIGINT``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if fast:
-        return F.xxhash64(c)
     return F.conv(F.substring(F.md5(c), 1, HASH_HEX_CHARS), 16, 10).cast("long")
 
 
-def seeded_hash64(col: Column | str, seed: Column | int, fast: bool = False) -> Column:
+def seeded_hash64(col: Column | str, seed: Column | int) -> Column:
     """Seeded portable hash: hash of ``"{seed}:{value}"`` — the MinHash
     family {h_seed} (one permutation per seed).
 
@@ -38,7 +35,7 @@ def seeded_hash64(col: Column | str, seed: Column | int, fast: bool = False) -> 
     """
     c = F.col(col) if isinstance(col, str) else col
     s = F.lit(seed) if isinstance(seed, int) else seed
-    return md5_hash64(F.concat_ws(":", s.cast("string"), c), fast=fast)
+    return md5_hash64(F.concat_ws(":", s.cast("string"), c))
 
 
 def md5_hash64_sql(expr: str) -> str:

@@ -313,11 +313,12 @@ def kmeans_assign(
     phase 2. (The one-row ``first()`` peek reads the dimensionality at
     plan-build time.)
 
-    Cheap regime: when the caller knows N·k (``n_pairs_hint``, e.g. from
-    a fit-scoped count) and it is under ``CHEAP_ARGMIN_MAX_PAIRS``, the
-    two-phase machinery is skipped for a single-pass exact decimal fold
-    over all pairs — same argmin bit-for-bit, a fraction of the plan
-    depth. Without a hint the two-phase (scale-safe) path runs."""
+    Cheap regime: when the caller knows N·k (``n_pairs_hint``, e.g.
+    ``kmeans_fit``'s N times its collected k) and it is under
+    ``CHEAP_ARGMIN_MAX_PAIRS``, the two-phase machinery is skipped for a
+    single-pass exact decimal fold over all pairs — same argmin
+    bit-for-bit, a fraction of the plan depth. Without a hint the
+    two-phase (scale-safe) path runs."""
     d2_sql = (
         "aggregate("
         " zip_with(_v, _cv, (a, b) ->"
@@ -382,9 +383,9 @@ def kmeans_lloyd_step(
     """One Lloyd iteration: assign + recompute per-dimension means →
     (centroid_id, dim, mean, n_members). Means sum exact decimals and
     divide once (rounded 6 dp) so iterations are reproducible across
-    engines. The full k-means loop is this step under the driver-side
-    convergence loop (same template as operators/cluster.py — the scalar
-    shift, not the data, reaches the driver)."""
+    engines. The full k-means loop (``kmeans_fit``) collects this step's
+    k·d rows each round — the centroid table, never the data, reaches the
+    driver."""
     assign = kmeans_assign(
         embeddings, centroids, id_col, vec_col, centroid_id_col,
         dims=dims, n_pairs_hint=n_pairs_hint,
@@ -415,29 +416,22 @@ def kmeans_fit(
     """Full k-means: Lloyd steps under a driver-side convergence loop.
     Returns (final (vec_id, centroid_id) assignment, iterations run).
 
-    Two loop regimes, branch on N·k (both yield bit-identical results):
-    under ``CHEAP_ARGMIN_MAX_PAIRS`` the k·d centroid means round-trip
-    through the driver each iteration (MLlib's own posture — driver
-    payload bounded by k·d, one Spark action per iteration); above it,
-    only one SCALAR (the max per-dimension centroid shift) reaches the
-    driver and centroids are rebuilt executor-side via localCheckpoint —
-    the same iterative template as operators/cluster.connected_components
-    (a ``materialize.Scope`` keeps ≤2 centroid generations in executor
-    storage; the caller's scope frees the last one).
-    Stops when every centroid coordinate moved < ``tol``.
+    MLlib's own posture: each round collects the Lloyd step's k·d
+    centroid means (driver payload bounded by the centroid table, never
+    by N — one Spark action per round), the next centroid frame is a
+    literal ``createDataFrame``, and the shift is exact double arithmetic
+    in Python. Stops when every centroid coordinate moved < ``tol``.
 
     An emptied cluster does NOT silently shrink ``k`` (round-3 advice):
-    its centroid carries over unchanged (left join + coalesce), so every
-    one of the initial k centroid ids survives to the final assignment and
-    can re-acquire members in a later round. ``shift`` can then only be
-    NULL when the centroid set itself is empty — raised loudly."""
+    its centroid carries over unchanged, so every one of the initial k
+    centroid ids survives to the final assignment and can re-acquire
+    members in a later round. An empty initial centroid set raises."""
     from pyspark import StorageLevel
-
-    from annotations_ingester_spark.materialize import Scope
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     # Persist the projected double vectors for the duration of the fit —
     # the iterative-ML posture MLlib itself takes: every iteration reads
-    # the vectors 2-3× (phase-1 pairs, phase-2 rejoin, mean posexplode),
+    # the vectors 2-3× (assign pairs, phase-2 rejoin, mean posexplode),
     # and without a persist each read re-runs the caller's projection
     # lineage (often an interpreted per-element transform) plus the source
     # scan. MEMORY_AND_DISK spills instead of recomputing when executors
@@ -446,179 +440,59 @@ def kmeans_fit(
     emb = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cent0 = initial_centroids.select(
+    cent_df = initial_centroids.select(
         F.col(centroid_id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+    )
+    # centroid frames are rebuilt with the caller's ACTUAL id type —
+    # string centroid ids are as valid as long ones
+    schema = StructType(
+        [
+            StructField(centroid_id_col, cent_df.schema[centroid_id_col].dataType),
+            StructField(vec_col, ArrayType(DoubleType())),
+        ]
     )
     try:
         # one fused job on the persisted frame: materializes the persist
         # and reads N plus the dimensionality (constant across rows, so
         # max(size) IS the peek — no separate one-row first() job)
         n, dims = emb.agg(F.count("*"), F.max(F.size(vec_col))).first()
-        n_pairs = n * cent0.count()
-        if n_pairs < CHEAP_ARGMIN_MAX_PAIRS:
-            # MLlib's own posture for ordinary k: the k·d centroid means
-            # (driver payload bounded by k·d, never by N) come back to the
-            # driver each iteration, the next centroid frame is a literal
-            # createDataFrame, and the shift is exact double arithmetic in
-            # Python — identical values, about half the Spark actions of
-            # the checkpoint loop (no eager centroid checkpoint, no
-            # shift-join job — the driver loop collects straight off the
-            # projected initial centroids; no checkpoint generation to leak).
-            assign, iterations = _fit_loop_driver(
-                emb, cent0, max_iterations, tol,
-                id_col, vec_col, centroid_id_col, dims, n_pairs,
+        cent_local = {r[0]: list(r[1]) for r in cent_df.collect()}
+        if not cent_local:
+            raise ValueError(
+                "kmeans_fit: centroid set is empty — initial_centroids had no rows"
             )
-        else:
-            scope = Scope(embeddings.sparkSession)
-            assign, iterations = _fit_loop(
-                emb, scope.checkpoint(cent0), scope, max_iterations, tol,
-                id_col, vec_col, centroid_id_col, dims, n_pairs,
+        n_pairs = n * len(cent_local)
+        iterations = 0
+        for _ in range(max_iterations):
+            iterations += 1
+            step = kmeans_lloyd_step(
+                emb, cent_df, id_col, vec_col, centroid_id_col,
+                dims=dims, n_pairs_hint=n_pairs,
             )
+            by_cid: dict = {}
+            for r in step.collect():  # k·d rows, bounded by the centroid table
+                by_cid.setdefault(r[0], {})[r[1]] = r[2]
+            shift = 0.0
+            for cid, old_vec in cent_local.items():
+                dim_means = by_cid.get(cid)
+                if dim_means is None:  # empty cluster keeps its previous centroid
+                    continue
+                new_vec = [dim_means[i] for i in range(len(old_vec))]
+                shift = max(shift, max(abs(a - b) for a, b in zip(old_vec, new_vec)))
+                cent_local[cid] = new_vec
+            cent_df = emb.sparkSession.createDataFrame(
+                sorted(cent_local.items()), schema=schema
+            )
+            if shift < tol:
+                break
+        assign = kmeans_assign(
+            emb, cent_df, id_col, vec_col, centroid_id_col,
+            dims=dims, n_pairs_hint=n_pairs,
+        )
     finally:
         emb.unpersist()
     global LAST_FIT_ITERATIONS
     LAST_FIT_ITERATIONS = iterations  # observability for bench/driver logs
-    return assign, iterations
-
-
-def _fit_loop_driver(
-    embeddings: DataFrame,
-    cent: DataFrame,
-    max_iterations: int,
-    tol: float,
-    id_col: str,
-    vec_col: str,
-    centroid_id_col: str,
-    dims: int,
-    n_pairs: int,
-) -> tuple[DataFrame, int]:
-    """Cheap-regime fit loop: one Spark action per iteration (the Lloyd
-    step collect); centroids round-trip through the driver as k·d rounded
-    means. Produces bit-identical centroids/assignments to ``_fit_loop``:
-    the per-dimension means are already rounded to 6 dp doubles by
-    ``kmeans_lloyd_step`` on both paths, empty clusters carry their old
-    vector over, and the max-|Δ| shift over IEEE doubles is the same
-    number whether folded in Spark or in Python."""
-    spark = embeddings.sparkSession
-    cent_local = {
-        r[0]: list(r[1])
-        for r in cent.select(centroid_id_col, vec_col).collect()
-    }
-    if not cent_local:
-        raise ValueError(
-            "kmeans_fit: centroid set is empty — initial_centroids had no rows"
-        )
-    # Rebuild centroid frames with the caller's ACTUAL id type (string
-    # centroid ids are as valid here as in the checkpoint regime — the
-    # cheap path must not narrow the API to long ids).
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField(centroid_id_col, cent.schema[centroid_id_col].dataType),
-            StructField(vec_col, ArrayType(DoubleType())),
-        ]
-    )
-    iterations = 0
-    cent_df = cent
-    for _ in range(max_iterations):
-        iterations += 1
-        step = kmeans_lloyd_step(
-            embeddings, cent_df, id_col, vec_col, centroid_id_col,
-            dims=dims, n_pairs_hint=n_pairs,
-        )
-        by_cid: dict = {}
-        for r in step.collect():  # k·d rows, bounded by the centroid table
-            by_cid.setdefault(r[0], {})[r[1]] = r[2]
-        shift = 0.0
-        new_local = {}
-        for cid, old_vec in cent_local.items():
-            dim_means = by_cid.get(cid)
-            if dim_means is None:  # empty cluster keeps its previous centroid
-                new_local[cid] = old_vec
-                continue
-            new_vec = [dim_means[i] for i in range(len(old_vec))]
-            shift = max(
-                shift, max(abs(a - b) for a, b in zip(old_vec, new_vec))
-            )
-            new_local[cid] = new_vec
-        cent_local = new_local
-        cent_df = spark.createDataFrame(
-            sorted(cent_local.items()), schema=schema
-        )
-        if shift < tol:
-            break
-    assign = kmeans_assign(
-        embeddings, cent_df, id_col, vec_col, centroid_id_col,
-        dims=dims, n_pairs_hint=n_pairs,
-    )
-    return assign, iterations
-
-
-def _fit_loop(
-    embeddings: DataFrame,
-    cent: DataFrame,
-    scope,
-    max_iterations: int,
-    tol: float,
-    id_col: str,
-    vec_col: str,
-    centroid_id_col: str,
-    dims: int,
-    n_pairs: int,
-) -> tuple[DataFrame, int]:
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        step = kmeans_lloyd_step(
-            embeddings, cent, id_col, vec_col, centroid_id_col,
-            dims=dims, n_pairs_hint=n_pairs,
-        )
-        new_means = (
-            step.groupBy(centroid_id_col)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("mean")))
-                ).alias("_dm")
-            )
-            .select(
-                centroid_id_col,
-                F.transform("_dm", lambda s: s["mean"]).alias("_new_vec"),
-            )
-        )
-        # empty clusters keep their previous centroid — k never shrinks
-        new_cent = scope.checkpoint(
-            cent.join(new_means, centroid_id_col, "left").select(
-                centroid_id_col,
-                F.coalesce("_new_vec", vec_col).alias(vec_col),
-            )
-        )
-        shift = (
-            cent.alias("o")
-            .join(new_cent.alias("n"), centroid_id_col)
-            .select(
-                F.aggregate(
-                    F.zip_with(f"o.{vec_col}", f"n.{vec_col}", lambda a, b: F.abs(a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: F.greatest(acc, x),
-                ).alias("s")
-            )
-            .agg(F.max("s"))
-            .first()[0]
-        )
-        if shift is None:
-            raise ValueError(
-                "kmeans_fit: centroid set is empty — initial_centroids had no rows"
-            )
-        # shift (the last reader of the old generation) has executed
-        scope.retire_previous()
-        cent = new_cent
-        if shift < tol:
-            break
-    assign = kmeans_assign(
-        embeddings, cent, id_col, vec_col, centroid_id_col,
-        dims=dims, n_pairs_hint=n_pairs,
-    )
     return assign, iterations
 
 

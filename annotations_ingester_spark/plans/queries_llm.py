@@ -170,8 +170,9 @@ def q_sliding(spark: SparkSession, sf: str):
     "or the N*k assignment goes quadratic at scale): "
     "broadcast-centroid assignment by exact-decimal L2² (deterministic "
     "argmin, id tie-break) + per-dimension decimal-exact mean update. The "
-    "full loop is this step under a driver-side scalar convergence check — "
-    "the iterative-ML template (same shape as connected components).",
+    "full loop (kmeans_fit) collects this step's k·d means each round and "
+    "checks convergence on the driver — MLlib's iterative posture: the "
+    "centroid table, never the data, reaches the driver.",
 )
 def q_kmeans(spark: SparkSession, sf: str):
     from annotations_ingester_spark.operators.similarity import kmeans_lloyd_step
@@ -276,8 +277,8 @@ def q_kmeans_two_rounds(spark: SparkSession, sf: str):
     "intra-cluster distance² (≤ 64·1), so Lloyd seeded with one member per "
     "cluster provably converges to the planted partition — the oracle is "
     "the ground truth itself, independent of iteration mechanics. "
-    "Certifies kmeans_fit's driver loop end-to-end (only scalar shifts "
-    "reach the driver; ≤2 centroid checkpoint generations live; empty "
+    "Certifies kmeans_fit's driver loop end-to-end (one Spark action per "
+    "round, whose k·d centroid means are all that reach the driver; empty "
     "clusters carry over instead of shrinking k).",
 )
 def q_kmeans_fit_converged(spark: SparkSession, sf: str):

@@ -31,6 +31,7 @@ from annotations_ingester_spark.plans.catalog import (
     table,
     table_schema,
 )
+from annotations_ingester_spark.sinks.layout import write_bucketed
 
 # ---- shared DuckDB fragments ------------------------------------------------
 
@@ -1567,23 +1568,17 @@ def q_layout_bucketed_join_cert(spark: SparkSession, sf: str):
     # identical to the sequential form (distinct table names, distinct
     # paths). The writes run INSIDE the try so a failed write still drops
     # the other thread's table and removes run_dir (r12 advice).
-
-    def _write_orders():
-        (
-            orders.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-            .option("path", f"{run_dir}/orders")
-            .mode("overwrite").format("parquet").saveAsTable(t_orders)
-        )
-
-    def _write_li():
-        (
-            li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-            .option("path", f"{run_dir}/lineitem")
-            .mode("overwrite").format("parquet").saveAsTable(t_li)
-        )
-
     try:
-        run_concurrently(_write_orders, _write_li)
+        run_concurrently(
+            lambda: write_bucketed(
+                orders, t_orders, f"{run_dir}/orders", "o_orderkey", 8,
+                sort_col="o_orderkey",
+            ),
+            lambda: write_bucketed(
+                li, t_li, f"{run_dir}/lineitem", "l_orderkey", 8,
+                sort_col="l_orderkey",
+            ),
+        )
         o = spark.table(t_orders).hint("merge")  # force SMJ (no broadcast)
         l = spark.table(t_li)
         joined = o.join(l, o.o_orderkey == l.l_orderkey)

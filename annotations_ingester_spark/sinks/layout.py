@@ -40,22 +40,19 @@ def write_date_partitioned(
 def write_bucketed(
     df: DataFrame,
     table_name: str,
+    path: str,
     bucket_col: str,
     num_buckets: int = 16,
     sort_col: str | None = None,
     mode: str = "overwrite",
 ) -> None:
+    """Write ``df`` as an EXTERNAL parquet table at ``path``, bucketed by
+    ``bucket_col``: the bucket metadata lives in the session catalog, the
+    bytes at ``path`` — never in the current directory's warehouse."""
     writer = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables — shuffle-free when bucket specs match."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+    writer.option("path", path).format("parquet").saveAsTable(table_name)
 
 
 def _spread_bits16(col):

@@ -13,11 +13,7 @@ from annotations_ingester_spark.annotator.fake import entity_count, medcat_envel
 from annotations_ingester_spark.annotator.service import normalize_gate, normalize_medcat
 from annotations_ingester_spark.functions.names import format_index_name
 from annotations_ingester_spark.operators.windows import date_windows
-from annotations_ingester_spark.sinks.layout import (
-    bucketed_join,
-    write_bucketed,
-    write_date_partitioned,
-)
+from annotations_ingester_spark.sinks.layout import write_bucketed, write_date_partitioned
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
@@ -32,9 +28,9 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         # force a sort-merge join (tiny test tables would broadcast) to show
         # the bucket co-location property that matters at scale
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(docs, "b_docs", "doc_id", 8)
-        write_bucketed(anns, "b_anns", "doc_id", 8)
-        joined = bucketed_join(spark, "b_docs", "b_anns", on="doc_id")
+        write_bucketed(docs, "b_docs", str(tmp_path / "docs"), "doc_id", 8)
+        write_bucketed(anns, "b_anns", str(tmp_path / "anns"), "doc_id", 8)
+        joined = spark.table("b_docs").join(spark.table("b_anns"), "doc_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # co-located buckets: sort-merge join with NO shuffle Exchange
         assert "SortMergeJoin" in plan

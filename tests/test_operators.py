@@ -618,37 +618,42 @@ def test_iterative_loops_bound_checkpoint_storage(spark, monkeypatch):
 
 
 def test_kmeans_fit_never_bulk_collects(spark, monkeypatch):
-    """The fit loop may move only scalars to the driver (the 1-row shift
-    aggregate via first()) — never the data or the assignment."""
-    from pyspark.sql import DataFrame
-
+    """No action inside kmeans_fit returns more rows than the k·d centroid
+    table: the fit collects its centroids and each Lloyd step's k·d means,
+    never the embeddings or the assignment (N ≫ k·d here). The actions are
+    patched on the class the frames really are — ``pyspark.sql.DataFrame``
+    is the abstract base, whose ``collect`` the classic class overrides."""
     from annotations_ingester_spark.operators.similarity import kmeans_fit
 
-    def _forbidden(self, *a, **k):  # pragma: no cover - should never run
-        raise AssertionError("bulk driver-side collection inside kmeans_fit")
-
-    orig_collect = DataFrame.collect
-
-    def _scalar_only(self):
-        rows = orig_collect(self)
-        # first()/head(1) funnel through collect via limit(1) — a scalar
-        # fetch is exactly a ≤1-row result; anything larger is bulk
-        assert len(rows) <= 1, f"kmeans_fit collected {len(rows)} rows"
-        return rows
-
+    k, d, n = 3, 2, 120
     emb = spark.createDataFrame(
-        [(i, [float(i % 3) * 10, 0.0]) for i in range(30)],
+        [(i, [float(i % k) * 10, float(i % 5) * 0.1]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    init = emb.filter(F.col("vec_id") < 3).select(
+    init = emb.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    monkeypatch.setattr(DataFrame, "collect", _scalar_only)
-    monkeypatch.setattr(DataFrame, "toPandas", _forbidden)
-    monkeypatch.setattr(DataFrame, "toLocalIterator", _forbidden)
+    cls = type(emb)
+    orig_collect = cls.collect
+    sizes = []
+
+    def _bounded(self):
+        rows = orig_collect(self)
+        sizes.append(len(rows))
+        # first()/head()/take() funnel through collect via limit(n)
+        assert len(rows) <= k * d, f"kmeans_fit collected {len(rows)} rows"
+        return rows
+
+    def _forbidden(self, *a, **kw):  # pragma: no cover - should never run
+        raise AssertionError("bulk driver-side read inside kmeans_fit")
+
+    monkeypatch.setattr(cls, "collect", _bounded)
+    for name in ("toPandas", "toLocalIterator", "toArrow", "tail"):
+        monkeypatch.setattr(cls, name, _forbidden)
     assign, iters = kmeans_fit(emb, init, max_iterations=8)
     monkeypatch.undo()
-    assert assign.count() == 30 and iters <= 8
+    assert max(sizes) == k * d  # the patch saw the Lloyd-step collects
+    assert assign.count() == n and iters <= 8
 
 
 def test_dedup_plan_preserves_existing_excluded_rules(spark):
@@ -757,11 +762,11 @@ def test_duplicate_span_islands_merges_touching_windows(spark):
     }
 
 
-def test_kmeans_fit_large_regime_matches_driver_regime(spark, monkeypatch):
-    """The two fit loops (driver-collect cheap regime vs executor-side
-    checkpoint loop) must be bit-identical. Force the large regime by
-    zeroing the pair threshold and compare against the default path on
-    the same planted data."""
+def test_kmeans_fit_same_under_both_argmin_regimes(spark, monkeypatch):
+    """kmeans_assign's one-pass argmin and its two-phase argmin must drive
+    kmeans_fit to the same assignments in the same number of rounds.
+    Zeroing the pair threshold forces the two-phase argmin; the default
+    takes the one-pass argmin on the same planted data."""
     import numpy as np
 
     from annotations_ingester_spark.operators import similarity as sim
@@ -777,13 +782,13 @@ def test_kmeans_fit_large_regime_matches_driver_regime(spark, monkeypatch):
     init = emb.filter(F.col("vec_id").isin(0, 8, 16)).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    a_cheap, it_cheap = sim.kmeans_fit(emb, init, max_iterations=10, tol=1e-6)
-    cheap = sorted((r["vec_id"], r["centroid_id"]) for r in a_cheap.collect())
+    a_one, it_one = sim.kmeans_fit(emb, init, max_iterations=10, tol=1e-6)
+    one_pass = sorted((r["vec_id"], r["centroid_id"]) for r in a_one.collect())
     monkeypatch.setattr(sim, "CHEAP_ARGMIN_MAX_PAIRS", 0)
-    a_large, it_large = sim.kmeans_fit(emb, init, max_iterations=10, tol=1e-6)
-    large = sorted((r["vec_id"], r["centroid_id"]) for r in a_large.collect())
-    assert cheap == large
-    assert it_cheap == it_large
+    a_two, it_two = sim.kmeans_fit(emb, init, max_iterations=10, tol=1e-6)
+    two_phase = sorted((r["vec_id"], r["centroid_id"]) for r in a_two.collect())
+    assert one_pass == two_phase
+    assert it_one == it_two
 
 
 def test_redact_mixed_case_email(spark):

@@ -125,11 +125,10 @@ def test_apply_changelog_handles_nested_map_columns(spark):
     assert set(rows) == {2} and rows[2] == [{"b": 9}]
 
 
-def test_kmeans_fit_cheap_regime_string_centroid_ids(spark):
-    # Regression (r6 ADVICE): the cheap-regime driver loop hardcoded the
-    # rebuilt-centroid schema as `<id> long`, so string centroid ids
-    # worked in the checkpoint regime but failed in the cheap one — a
-    # regime-dependent API narrowing. Schema is now taken from the input.
+def test_kmeans_fit_string_centroid_ids(spark):
+    # Regression (r6 ADVICE): the driver loop once hardcoded the rebuilt
+    # centroid schema as `<id> long`, so string centroid ids failed. The
+    # id type is now taken from the input.
     from annotations_ingester_spark.operators.similarity import kmeans_fit
 
     emb = spark.createDataFrame(
